@@ -2,7 +2,6 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Temporal bin (`*_history`, CONFIG-KEYS:1419-1432; evaluated per record in
   * `P_eval_historical_acct`, src/plugin_common.c:983-1010). Bins are aligned
@@ -70,9 +69,6 @@ object AggregatePlanner {
     val agged = grouped.agg(aggCols.head, aggCols.tail: _*)
     p.havings.foldLeft(agged)((d, h) => d.filter(h))
   }
-
-  /** Sum each counter as DECIMAL so results are shuffle-order independent. */
-  def dec(c: Column, scale: Int = 4): Column = c.cast(DecimalType(18, scale))
 
   /** DOUBLE counter → integer units of 10^-digits, as LONG.
     *

@@ -33,6 +33,22 @@ object Graft {
     spark
   }
 
+  /** Run `body` with the session conf `settings` applied, then put every
+    * touched key back as it was — also when `body` throws. A key that was
+    * not set before is unset again, so it falls back to its default. */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)
+                 (body: => T): T = {
+    val before = spark.conf.getAll
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally settings.foreach { case (k, _) =>
+      before.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
+  }
+
   /** Apply the runtime confs graft needs on a session we did not build
     * (the driver's Verify/Bench contract hands us an existing session). */
   def tune(spark: SparkSession): SparkSession = {

@@ -32,15 +32,11 @@ import graft.plans.{Lpm, LpmLookup}
 object GraftFunctions {
 
   private val lpmTables = new ConcurrentHashMap[String, Lpm.Table]()
-  private val lpm6Tables = new ConcurrentHashMap[String, Lpm.Table6]()
 
-  /** Name a prefix table for `graft_lpm(ip, 'name')`. */
+  /** Name a prefix table for `graft_lpm(ip, 'name')`, or for
+    * `graft_lpm6(hi, lo, 'name')` when it is a 128-bit table. */
   def registerLpmTable(name: String, table: Lpm.Table): Unit =
     lpmTables.put(name, table)
-
-  /** Name a v6 prefix table for `graft_lpm6(hi, lo, 'name')`. */
-  def registerLpm6Table(name: String, table: Lpm.Table6): Unit =
-    lpm6Tables.put(name, table)
 
   private val Arg0 = "__graft_arg0"
 
@@ -51,90 +47,72 @@ object GraftFunctions {
     }
   }
 
-  private def lpmBuilder: Seq[Expression] => Expression = { args =>
-    require(args.size == 2, "graft_lpm(ip, 'table_name')")
-    val name = args(1) match {
-      case e if e.foldable => String.valueOf(e.eval(null))
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_lpm table name must be a literal, got $other")
-    }
-    val table = lpmTables.get(name)
-    require(table != null, s"no LPM table registered under '$name'")
-    LpmLookup(args.head, table)
+  /** The value of a literal argument, as text. `what` names the argument
+    * in the error a non-literal or NULL argument raises. */
+  private def litArg(e: Expression, what: String): String = {
+    if (!e.foldable) throw new IllegalArgumentException(
+      s"$what must be a literal, got $e")
+    val v = e.eval(null)
+    if (v == null) throw new IllegalArgumentException(
+      s"$what must not be NULL")
+    v.toString
   }
 
-  private def lpm6Builder: Seq[Expression] => Expression = { args =>
-    require(args.size == 3, "graft_lpm6(hi, lo, 'table_name')")
-    val name = args(2) match {
-      case e if e.foldable => String.valueOf(e.eval(null))
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_lpm6 table name must be a literal, got $other")
-    }
-    val table = lpm6Tables.get(name)
-    require(table != null, s"no v6 LPM table registered under '$name'")
-    graft.plans.LpmLookup6(args(0), args(1), table)
+  private def litInt(e: Expression, what: String): Int =
+    litArg(e, what).toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"$what must be an integer literal, got ${e.sql}"))
+
+  private def litDouble(e: Expression, what: String): Double =
+    litArg(e, what).toDoubleOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"$what must be a numeric literal, got ${e.sql}"))
+
+  /** `graft_lpm(ip, 'table')` and `graft_lpm6(hi, lo, 'table')`: the
+    * table's width decides how many address columns it takes. */
+  private def lpmBuilder: Seq[Expression] => Expression = { args =>
+    require(args.size == 2 || args.size == 3,
+      "graft_lpm(ip, 'table_name') or graft_lpm6(hi, lo, 'table_name')")
+    val name = litArg(args.last, "LPM table name")
+    val table = lpmTables.get(name)
+    require(table != null, s"no LPM table registered under '$name'")
+    LpmLookup(args.init, table)
   }
 
   private def misraGriesBuilder: Seq[Expression] => Expression = { args =>
     require(args.size == 2, "misra_gries(col, k)")
-    val k = args(1) match {
-      case e if e.foldable => String.valueOf(e.eval(null)).toInt
-      case other =>
-        throw new IllegalArgumentException(
-          s"misra_gries k must be a literal, got $other")
-    }
-    graft.plans.MisraGriesAgg(args.head, k).toAggregateExpression()
+    graft.plans.MisraGriesAgg(args.head, litInt(args(1), "misra_gries k"))
+      .toAggregateExpression()
   }
 
   private def qdigestBuilder: Seq[Expression] => Expression = { args =>
     require(args.size == 3 || args.size == 4,
       "qdigest_quantile(col, q, k[, bits])")
-    def lit(e: Expression, what: String): String = e match {
-      case x if x.foldable => String.valueOf(x.eval(null))
-      case other => throw new IllegalArgumentException(
-        s"qdigest_quantile $what must be a literal, got $other")
-    }
     val bits =
-      if (args.size == 4) lit(args(3), "bits").toInt else 20
+      if (args.size == 4) litInt(args(3), "qdigest_quantile bits") else 20
     graft.plans.QDigestAgg(args.head,
-      lit(args(1), "q").toDouble, lit(args(2), "k").toInt, bits)
+      litDouble(args(1), "qdigest_quantile q"),
+      litInt(args(2), "qdigest_quantile k"), bits)
       .toAggregateExpression()
   }
 
   private def tdigestBuilder: Seq[Expression] => Expression = { args =>
     require(args.size == 3, "tdigest_quantile(col, q, delta)")
-    def lit(e: Expression, what: String): String = e match {
-      case x if x.foldable => String.valueOf(x.eval(null))
-      case other => throw new IllegalArgumentException(
-        s"tdigest_quantile $what must be a literal, got $other")
-    }
     graft.plans.TDigestAgg(args.head,
-      lit(args(1), "q").toDouble, lit(args(2), "delta").toInt)
+      litDouble(args(1), "tdigest_quantile q"),
+      litInt(args(2), "tdigest_quantile delta"))
       .toAggregateExpression()
   }
 
   private def kmvBuilder: Seq[Expression] => Expression = { args =>
     require(args.size == 2, "kmv_sketch(col, k)")
-    val k = args(1) match {
-      case e if e.foldable => String.valueOf(e.eval(null)).toInt
-      case other =>
-        throw new IllegalArgumentException(
-          s"kmv_sketch k must be a literal, got $other")
-    }
-    graft.plans.KmvAgg(args.head, k).toAggregateExpression()
+    graft.plans.KmvAgg(args.head, litInt(args(1), "kmv_sketch k"))
+      .toAggregateExpression()
   }
 
   private def hllBuilder: Seq[Expression] => Expression = { args =>
     require(args.size == 2, "hll_distinct(col, p)")
-    val p = args(1) match {
-      case e if e.foldable => String.valueOf(e.eval(null)).toInt
-      case other =>
-        throw new IllegalArgumentException(
-          s"hll_distinct p must be a literal, got $other")
-    }
-    graft.plans.HllAgg(args.head, p).toAggregateExpression()
+    graft.plans.HllAgg(args.head, litInt(args(1), "hll_distinct p"))
+      .toAggregateExpression()
   }
 
   private def toksBuilder: Seq[Expression] => Expression = { args =>
@@ -145,12 +123,6 @@ object GraftFunctions {
   private def hash60Builder: Seq[Expression] => Expression = { args =>
     require(args.size == 1, "graft_hash60(token)")
     graft.plans.Hash60(args.head)
-  }
-
-  private def litInt(e: Expression, what: String): Int = e match {
-    case x if x.foldable => String.valueOf(x.eval(null)).toInt
-    case other => throw new IllegalArgumentException(
-      s"$what must be a literal, got $other")
   }
 
   private def argminL2Builder: Seq[Expression] => Expression = { args =>
@@ -184,7 +156,7 @@ object GraftFunctions {
     "graft_ts_compose" -> fromTemplate(Formatters.tsCompose(Arg0)),
     "graft_mac" -> fromTemplate(Formatters.macFormat(Arg0)),
     "graft_lpm" -> lpmBuilder,
-    "graft_lpm6" -> lpm6Builder,
+    "graft_lpm6" -> lpmBuilder,
     "misra_gries" -> misraGriesBuilder,
     "qdigest_quantile" -> qdigestBuilder,
     "tdigest_quantile" -> tdigestBuilder,

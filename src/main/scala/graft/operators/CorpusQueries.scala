@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Graft, Q, Tables}
 import graft.text.TextOps
 
 /** Corpus-shaping operators for the training-data pipeline (round 5):
@@ -992,12 +992,6 @@ object CorpusQueries {
         // same cache, no recomputation.
         val featsR = s.createDataFrame(feats.rdd, feats.schema)
         var w = Array.fill(dims + 1)(0L) // 1e6-scaled
-        // Lane-local, restored below: each epoch is one no-key partial
-        // +final agg whose shape AQE cannot improve (1-row output), but
-        // AQE turns every epoch action into two scheduled jobs with a
-        // driver round-trip between — 24 extra round-trips per run.
-        val aqePrev = s.conf.get("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
         // r18 (VERDICT r17 #4): the weight vector rides into each epoch
         // as a ONE-ROW broadcast array instead of per-epoch literals.
         // The arithmetic is identical (x_j * wv[j+1] on the same
@@ -1011,18 +1005,23 @@ object CorpusQueries {
         val gSel = (s"CAST(floor(1000000.0 * (y - 1.0 / (1.0 + " +
           s"exp(-($z) / 1000000.0)))) AS BIGINT) AS r") +:
           (0 to dims).map(j => s"x$j")
-        for (_ <- 1 to epochs) {
-          val wdf = Seq(Tuple1(w.toSeq)).toDF("wv")
-          // integer residual: floor(1e6 * (y - sigmoid(z / 1e6)))
-          val g = featsR.crossJoin(broadcast(wdf))
-            .selectExpr(gSel: _*)
-            .selectExpr((0 to dims).map(j =>
-              s"CAST(sum(x$j * r) AS BIGINT) AS g$j"): _*)
-            .head()
-          w = (0 to dims).map(j => w(j) +
-            math.floor(g.getLong(j) / (lr2.toDouble * n)).toLong).toArray
+        // Lane-local: each epoch is one no-key partial+final agg whose
+        // shape AQE cannot improve (1-row output), but AQE turns every
+        // epoch action into two scheduled jobs with a driver round-trip
+        // between — 24 extra round-trips per run.
+        Graft.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
+          for (_ <- 1 to epochs) {
+            val wdf = Seq(Tuple1(w.toSeq)).toDF("wv")
+            // integer residual: floor(1e6 * (y - sigmoid(z / 1e6)))
+            val g = featsR.crossJoin(broadcast(wdf))
+              .selectExpr(gSel: _*)
+              .selectExpr((0 to dims).map(j =>
+                s"CAST(sum(x$j * r) AS BIGINT) AS g$j"): _*)
+              .head()
+            w = (0 to dims).map(j => w(j) +
+              math.floor(g.getLong(j) / (lr2.toDouble * n)).toLong).toArray
+          }
         }
-        s.conf.set("spark.sql.adaptive.enabled", aqePrev)
         val zf = (0 to dims).map(j => s"x$j * ${w(j)}L").mkString(" + ")
         val acc = feats.selectExpr("source", "y",
             s"CASE WHEN ($zf) > 0 THEN 1L ELSE 0L END AS yhat")

@@ -728,7 +728,7 @@ object EnrichQueries {
     // IPv6 LPM flow enrichment: the v6 RIB arrives as REAL MP-BGP wire
     // updates (RFC 4760 MP_REACH, 128-bit truncated-prefix NLRI — the
     // q118 codec), compacts, and loads into the 128-bit plan-resident
-    // LPM table (`plans/Lpm.Table6`, the v6 walk of bgp_srcdst_lookup /
+    // LPM table (`Lpm.Table.v6`, the v6 walk of bgp_srcdst_lookup /
     // src/bgp/bgp_lookup.c). Flows carry two-limb v6 dst addresses;
     // /24s cover every flow and /32s carve out a subset, so the
     // longest-first probe order is load-bearing. The lookup is a
@@ -762,7 +762,7 @@ object EnrichQueries {
         val rib = BgpMsg.decodeStream(wire.toByteArray).flatMap { u =>
           u.nlri6.map(r => (r.hi, r.lo, r.plen, u.asPath.last))
         }
-        val table = new Lpm.Table6(rib)
+        val table = Lpm.Table.v6(rib)
         Tables.events(s, d).select(
             ((col("user_id") % 16) * 1099511627776L + // a << 40
               (col("event_id") % 16) * 4294967296L +  // b << 32

@@ -1219,46 +1219,39 @@ object GoldenReplay {
   }
 
   /** The collector-side LPM structure over one router's end-state RIB —
-    * per (rd-context, safi, family) [[Lpm.Table]]/[[Lpm.Table6]] (the
-    * engine's own LPM classes; ~pmacct's per-peer bgp tables). Lookup
-    * order mirrors bgp_srcdst_lookup for BMP: a VRF-attributed flow
-    * searches SAFI 128 then retries SAFI 1, both requiring
+    * one [[Lpm.Table]] per (rd-context, safi, family) (the engine's own
+    * LPM table; ~pmacct's per-peer bgp tables). Each family keeps its
+    * own table: a left-aligned v4 key would collide with a v6 one.
+    * Lookup order mirrors bgp_srcdst_lookup for BMP: a VRF-attributed
+    * flow searches SAFI 128 then retries SAFI 1, both requiring
     * hdrRd == flow RD; a VRF-less flow does a plain SAFI-1 LPM. */
   final class BmpRibLookup(routes: Seq[RibRoute]) extends Serializable {
     private val idx: IndexedSeq[RibRoute] = routes.toIndexedSeq
     private def tables(sel: RibRoute => Boolean,
                        key: RibRoute => String)
-        : (Map[String, Lpm.Table], Map[String, Lpm.Table6]) = {
-      val picked = idx.zipWithIndex.filter { case (r, _) => sel(r) }
-      val t4 = picked.filter(!_._1.v6).groupBy(p => key(p._1)).map {
-        case (k, rs) => k -> new Lpm.Table(32,
-          rs.map { case (r, i) => (r.lo, r.plen, i.toLong) })
-      }
-      val t6 = picked.filter(_._1.v6).groupBy(p => key(p._1)).map {
-        case (k, rs) => k -> new Lpm.Table6(
-          rs.map { case (r, i) => (r.hi, r.lo, r.plen, i.toLong) })
-      }
-      (t4, t6)
-    }
-    private val (vpn4, vpn6) =
-      tables(r => r.safi == 128 && r.hdrRd.nonEmpty, _.hdrRd)
-    private val (uni4, uni6) =
-      tables(r => r.safi == 1 && r.hdrRd.nonEmpty, _.hdrRd)
-    private val (any4, any6) = tables(_.safi == 1, _ => "")
+        : Map[(String, Boolean), Lpm.Table] =
+      idx.zipWithIndex.filter { case (r, _) => sel(r) }
+        .groupBy { case (r, _) => (key(r), r.v6) }.map {
+          case (k @ (_, true), rs) => k -> Lpm.Table.v6(
+            rs.map { case (r, i) => (r.hi, r.lo, r.plen, i.toLong) })
+          case (k, rs) => k -> new Lpm.Table(32,
+            rs.map { case (r, i) => (r.lo, r.plen, i.toLong) })
+        }
+    private val vpn = tables(r => r.safi == 128 && r.hdrRd.nonEmpty, _.hdrRd)
+    private val uni = tables(r => r.safi == 1 && r.hdrRd.nonEmpty, _.hdrRd)
+    private val any = tables(_.safi == 1, _ => "")
 
-    private def one(t4: Map[String, Lpm.Table],
-        t6: Map[String, Lpm.Table6], key: String, v6: Boolean,
-        hi: Long, lo: Long): Option[RibRoute] = {
-      val v = if (v6) t6.get(key).map(_.lookup(hi, lo))
-        else t4.get(key).map(_.lookup(lo))
-      v.filter(_ != Long.MinValue).map(i => idx(i.toInt))
-    }
+    private def one(t: Map[(String, Boolean), Lpm.Table], key: String,
+        v6: Boolean, hi: Long, lo: Long): Option[RibRoute] =
+      t.get((key, v6))
+        .map(tb => if (v6) tb.lookup(hi, lo) else tb.lookup(lo))
+        .filter(_ != Long.MinValue).map(i => idx(i.toInt))
 
     def lookup(flowRd: String, v6: Boolean, hi: Long, lo: Long)
         : Option[RibRoute] =
-      if (flowRd.isEmpty) one(any4, any6, "", v6, hi, lo)
-      else one(vpn4, vpn6, flowRd, v6, hi, lo)
-        .orElse(one(uni4, uni6, flowRd, v6, hi, lo))
+      if (flowRd.isEmpty) one(any, "", v6, hi, lo)
+      else one(vpn, flowRd, v6, hi, lo)
+        .orElse(one(uni, flowRd, v6, hi, lo))
   }
 
   /** End-state RIB of a RAW BGP session (tests/5xx: bgp_daemon feed).

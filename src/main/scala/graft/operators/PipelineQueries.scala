@@ -941,14 +941,10 @@ object PipelineQueries {
         // restored right after the stream drains.
         val discKey =
           "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        val discPrev = s.conf.get(discKey, "32")
-        s.conf.set(discKey, "100000")
         // batch-loop shuffles move ~1%-increment key sets; 32-task
         // shuffles are pure scheduler overhead at that size (the
         // corpus-scale chain work is mapPartitions over the INPUT
         // partitioning, which this does not touch). Lane-local.
-        val shufPrev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         // evidence integrity: AQE's empty-relation propagation
         // replaces an empty drop-set join with its left input and
         // DROPS the already-executed probe stages from the final
@@ -964,279 +960,275 @@ object PipelineQueries {
         // join pick here — broadcast at increment scale, shuffled at
         // corpus scale — so it stays on.)
         val aqeExclKey = "spark.sql.adaptive.optimizer.excludedRules"
-        val aqeExclPrev = s.conf.getOption(aqeExclKey)
-        s.conf.set(aqeExclKey, "org.apache.spark.sql.execution." +
-          "adaptive.AQEPropagateEmptyRelation")
-        val q = s.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$staged/part-*.parquet")
-          .writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            {
-              // job labels (guide §1.5): phase attribution in the UI /
-              // LaneProfile; zero effect on the computation
-              def lbl(x: String): Unit =
-                s.sparkContext.setJobDescription(
-                  if (x == null) null else s"q327 $x")
-              // emptiness + the monotone-arrival hard check run on
-              // the RAW batch (ADVICE r16: an all-filtered slice must
-              // still count a batch and have its arrival order
-              // checked — on the filtered frame a staging regression
-              // that rejects every row would be silently skipped)
-              lbl("raw:minmax")
-              val r = b.agg(min("doc_id"), max("doc_id")).head()
-              if (!r.isNullAt(0)) {
-              nBatches.incrementAndGet()
-              if (r.getLong(0) <= lastMax.get()) monoOk.set(false)
-              require(r.getLong(0) > lastMax.get(),
-                s"arrival order regressed: ${r.getLong(0)} <= " +
-                  s"${lastMax.get()}")
-              lastMax.set(r.getLong(1))
-              // q320's fused ingest + feature projection (row-local).
-              // repartition FIRST (q320's ingest idiom): a micro-batch
-              // arrives as 1 staged file = 1 scan task, so without
-              // this the WARC/HTML/tokenize chain for the bulk batch
-              // (97% of the corpus) ran single-threaded — measured
-              // 6.9 s in one task at sf0.1 vs ~0.5 s spread over the
-              // session's cores (guide §2.5 input skew: one
-              // unsplittable input, repartition right after the read)
-              val feat = b.select("doc_id", "source", "text")
-                .repartition(s.sparkContext.defaultParallelism)
-                .as[(Long, String, String)]
-                .mapPartitions(_.map { case (id, src, text) =>
-                  ingestDoc(id, src, text)
-                })
-                .toDF("doc_id", "source", "text", "admit")
-                .withColumn("toks", expr(sparkToks))
-                .selectExpr("doc_id", "admit",
-                  s"${sparkQualityOf("toks")} as score",
-                  "md5(text) as ek",
-                  s"transform(toks, t -> ${sparkTokHash("t")}) as th",
-                  s"array_distinct(transform(${sparkShingles("toks")}" +
-                    s", g -> ${sparkTokHash("g")} % $P)) as hs",
-                  "size(toks) as ntok")
-                .withColumn("bks", expr(SigTable.bandExpr))
-                .where(s"admit AND score >= $qualityMin")
-                .persist()
-              if (!stE.baseExists) {
-                // bucket sizing from the bulk batch itself (the
-                // production bootstrap posture): keys/256 per tier,
-                // floor 128, cap 4096 — ek keys ~ docs, band keys ~
-                // 4 x docs, class keys ~ full 32-token windows (the
-                // sizing agg runs ONLY on this bootstrap batch; later
-                // batches pay no feat-wide driver action)
-                lbl("bootstrap:sizing")
-                val rz = feat.agg(count(lit(1)),
-                  sum(expr("greatest(ntok - 31, 0)"))).head()
-                val n = rz.getLong(0)
-                val wins = if (rz.isNullAt(1)) 0L else rz.getLong(1)
-                stE.B = pow2Cap(n / 256 + 1)
-                stB.B = pow2Cap(4L * n / 256 + 1)
-                stC.B = pow2Cap(wins / 256 + 1)
-              }
-              // ---- exact tier: batch mins merged with the pruned
-              // prior owners
-              val featK = feat.withColumn("pb",
-                pmod(hash(col("ek")), lit(stE.B)))
-              lbl("ek:pbs")
-              // one-job probed-bucket harvest: collect_set beats a
-              // distinct+collect (no extra AQE shuffle-stage jobs on
-              // an increment-sized frame). On the BOOTSTRAP batch the
-              // probe short-circuits on !baseExists whatever pbs is
-              // passed, so the collect over the bulk frame is pure
-              // waste — a non-empty sentinel keeps the in-batch
-              // cascade branches identical (r17)
-              val pbsE =
-                if (stE.baseExists) featK.agg(collect_set("pb")).head()
-                  .getSeq[Int](0)
-                else Seq(0)
-              val ownE = featK.groupBy("pb", "ek")
-                .agg(min("doc_id").as("bmin"))
-                .join(stE.probe(pbsE).groupBy("ek")
-                  .agg(min("owner").as("pmin")), Seq("ek"), "left")
-                .selectExpr("pb", "ek",
-                  "least(bmin, coalesce(pmin, bmin)) AS owner")
-                .persist()
-              // append DEFERRED to the end-of-batch concurrent write
-              // round (r17): ownE's cached plan (probe scan included)
-              // is first executed by the band:pbs collect below, so
-              // the evidence harvest needs no dedicated action here
-              val dropE = feat.select("doc_id", "ek")
-                .join(ownE.select("ek", "owner"), "ek")
-                .where("doc_id != owner").select("doc_id")
-              val s1 = feat.join(dropE.withColumnRenamed("doc_id",
-                "de"), col("doc_id") === col("de"), "left_anti")
-              // ---- LSH near tier: batch bands probe pruned prior +
-              // batch bands (every prior exact-survivor stays a
-              // dropper)
-              val b1 = s1.select(col("doc_id"), col("hs"),
-                  explode(col("bks")).as("bk"))
-                .withColumn("pb", pmod(hash(col("bk")), lit(stB.B)))
-                .persist()
-              lbl("band:pbs")
-              val pbsB =
-                if (stB.baseExists) b1.agg(collect_set("pb")).head()
-                  .getSeq[Int](0)
-                else Seq(0)
-              // that collect executed ownE's cached plan (b1's
-              // lineage runs s1 -> dropE -> ownE), ek probe scan
-              // included — harvest is a metrics read, no job; on the
-              // bootstrap batch pending is None and this no-ops. If
-              // the collect was skipped, the post-write harvest below
-              // picks it up instead.
-              if (stB.baseExists) stE.harvestFrom(ownE)
-              // dropN persists so the band probe's scan evidence can
-              // be harvested from ITS cached plan: in s2's plan an
-              // empty dropN lets AQE's empty-relation rule replace
-              // the anti-join with s1 and the probe subtree (scan
-              // included) vanishes from the executed plan — inside
-              // dropN's own plan the probe feeds a join whose inputs
-              // are never empty, so the scan always survives
-              var dropNRef: DataFrame = null
-              var bandAppend: Option[DataFrame] = None
-              val s2 = if (pbsB.isEmpty) s1 else {
-                val xSide = stB.probe(pbsB)
-                  .select("bk", "doc_id", "hs")
-                  .unionByName(b1.select("bk", "doc_id", "hs"))
-                val dropN = b1.alias("y").join(xSide.alias("x"),
-                    col("x.bk") === col("y.bk") &&
-                      col("x.doc_id") < col("y.doc_id"))
-                  .filter(expr(
-                    "10 * size(array_intersect(x.hs, y.hs))" +
-                      " >= 9 * size(array_union(x.hs, y.hs))"))
-                  .select(col("y.doc_id").as("doc_id")).distinct()
-                  .persist()
-                dropNRef = dropN
-                // append deferred to the concurrent write round; the
-                // probe's file list was resolved at probe() time, so
-                // the append's new L0 is invisible to xSide either way
-                bandAppend = Some(b1.select("bk", "doc_id", "hs", "pb"))
-                s1.join(dropN.withColumnRenamed("doc_id", "dn"),
-                  col("doc_id") === col("dn"), "left_anti")
-              }
-              val s2c = s2.persist()
-              // ---- substring tier: window classes vs pruned prior
-              // min owners. Only FULL 32-token windows are kept
-              // (positions i <= ntok-32): a padded window's rank
-              // folds in the doc-unique short-suffix id, so its
-              // class can never match across docs — it owns only
-              // itself and drops nothing, on either engine. Skipping
-              // those rows halves the class-key universe (docs here
-              // average ~54 tokens) without moving the survivor set.
-              val cls = s2c.select("doc_id", "th")
-                .as[(Long, Seq[Long])]
-                .flatMap { case (doc, th) =>
-                  graft.text.SuffixClasses
-                    .probeRanks(doc, th.toArray, Seq(5))
-                    .iterator.flatMap { case (_, ra, rb) =>
-                      val set = scala.collection.mutable
-                        .LinkedHashSet[(Long, Long)]()
-                      val lim = math.max(ra.length - 31, 0)
-                      var p = 0
-                      while (p < lim) {
-                        set += ((ra(p), rb(p))); p += 1
-                      }
-                      set.iterator.map { case (ka, kb) =>
-                        (doc, ka, kb) }
-                    }
-                }.toDF("doc_id", "ka", "kb")
-                .withColumn("pb",
-                  pmod(hash(col("ka"), col("kb")), lit(stC.B)))
-                .persist()
-              lbl("cls:pbs")
-              val pbsC =
-                if (stC.baseExists) cls.agg(collect_set("pb")).head()
-                  .getSeq[Int](0)
-                else Seq(0)
-              // that collect materialized cls AND s2c — dropN's
-              // cached plan (band probe scan included) has executed
-              // (when the collect was skipped on bootstrap, pending is
-              // None and the harvest no-ops)
-              if (dropNRef != null) {
-                stB.harvestFrom(dropNRef); dropNRef.unpersist(); ()
-              }
-              // dropS persists for the same evidence-vs-AQE reason
-              // as dropN above
-              var dropSRef: DataFrame = null
-              var clsAppend: Option[DataFrame] = None
-              val s3 = if (pbsC.isEmpty) s2c else {
-                val ownC = cls.select("ka", "kb", "doc_id")
-                  .unionByName(stC.probe(pbsC)
-                    .select("ka", "kb", "doc_id"))
-                  .groupBy("ka", "kb").agg(min("doc_id").as("own"))
-                val dropS = cls.join(ownC, Seq("ka", "kb"))
-                  .where(col("doc_id") > col("own"))
-                  .select("doc_id").distinct().persist()
-                dropSRef = dropS
-                // L0 append pre-folded batch-locally (min per class)
-                clsAppend = Some(cls.groupBy("pb", "ka", "kb")
-                  .agg(min("doc_id").as("doc_id")))
-                s2c.join(dropS.withColumnRenamed("doc_id", "ds"),
-                  col("doc_id") === col("ds"), "left_anti")
-              }
-              // ---- end-of-batch write round (r17): the three tier
-              // appends and the survivors write are mutually
-              // independent sinks over already-built cached frames,
-              // so they run CONCURRENTLY from driver threads (guide
-              // §2.6 — tail tasks of one write back-fill cores for
-              // the next) instead of as four sequential actions. The
-              // survivors write materializes dropS's cache, class
-              // probe scan included.
+        Graft.withConf(s, discKey -> "100000",
+            "spark.sql.shuffle.partitions" -> "8",
+            aqeExclKey -> ("org.apache.spark.sql.execution." +
+              "adaptive.AQEPropagateEmptyRelation")) {
+          val q = s.readStream.schema(raw.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(s"$staged/part-*.parquet")
+            .writeStream
+            .foreachBatch { (b: DataFrame, _: Long) =>
               {
-                import scala.concurrent.{Await, Future}
-                import scala.concurrent.ExecutionContext.Implicits.global
-                Await.result(Future.sequence(Seq(
-                  Future {
-                    lbl("ek:append"); stE.append(ownE)
-                  },
-                  Future {
-                    bandAppend.foreach { df =>
-                      lbl("band:append"); stB.append(df) }
-                  },
-                  Future {
-                    clsAppend.foreach { df =>
-                      lbl("cls:append"); stC.append(df) }
-                  },
-                  Future {
-                    lbl("survivors:write")
-                    s3.select("doc_id", "ntok")
-                      .write.mode("append").parquet(out)
-                  })),
-                  scala.concurrent.duration.Duration.Inf)
+                // job labels (guide §1.5): phase attribution in the UI /
+                // LaneProfile; zero effect on the computation
+                def lbl(x: String): Unit =
+                  s.sparkContext.setJobDescription(
+                    if (x == null) null else s"q327 $x")
+                // emptiness + the monotone-arrival hard check run on
+                // the RAW batch (ADVICE r16: an all-filtered slice must
+                // still count a batch and have its arrival order
+                // checked — on the filtered frame a staging regression
+                // that rejects every row would be silently skipped)
+                lbl("raw:minmax")
+                val r = b.agg(min("doc_id"), max("doc_id")).head()
+                if (!r.isNullAt(0)) {
+                nBatches.incrementAndGet()
+                if (r.getLong(0) <= lastMax.get()) monoOk.set(false)
+                require(r.getLong(0) > lastMax.get(),
+                  s"arrival order regressed: ${r.getLong(0)} <= " +
+                    s"${lastMax.get()}")
+                lastMax.set(r.getLong(1))
+                // q320's fused ingest + feature projection (row-local).
+                // repartition FIRST (q320's ingest idiom): a micro-batch
+                // arrives as 1 staged file = 1 scan task, so without
+                // this the WARC/HTML/tokenize chain for the bulk batch
+                // (97% of the corpus) ran single-threaded — measured
+                // 6.9 s in one task at sf0.1 vs ~0.5 s spread over the
+                // session's cores (guide §2.5 input skew: one
+                // unsplittable input, repartition right after the read)
+                val feat = b.select("doc_id", "source", "text")
+                  .repartition(s.sparkContext.defaultParallelism)
+                  .as[(Long, String, String)]
+                  .mapPartitions(_.map { case (id, src, text) =>
+                    ingestDoc(id, src, text)
+                  })
+                  .toDF("doc_id", "source", "text", "admit")
+                  .withColumn("toks", expr(sparkToks))
+                  .selectExpr("doc_id", "admit",
+                    s"${sparkQualityOf("toks")} as score",
+                    "md5(text) as ek",
+                    s"transform(toks, t -> ${sparkTokHash("t")}) as th",
+                    s"array_distinct(transform(${sparkShingles("toks")}" +
+                      s", g -> ${sparkTokHash("g")} % $P)) as hs",
+                    "size(toks) as ntok")
+                  .withColumn("bks", expr(SigTable.bandExpr))
+                  .where(s"admit AND score >= $qualityMin")
+                  .persist()
+                if (!stE.baseExists) {
+                  // bucket sizing from the bulk batch itself (the
+                  // production bootstrap posture): keys/256 per tier,
+                  // floor 128, cap 4096 — ek keys ~ docs, band keys ~
+                  // 4 x docs, class keys ~ full 32-token windows (the
+                  // sizing agg runs ONLY on this bootstrap batch; later
+                  // batches pay no feat-wide driver action)
+                  lbl("bootstrap:sizing")
+                  val rz = feat.agg(count(lit(1)),
+                    sum(expr("greatest(ntok - 31, 0)"))).head()
+                  val n = rz.getLong(0)
+                  val wins = if (rz.isNullAt(1)) 0L else rz.getLong(1)
+                  stE.B = pow2Cap(n / 256 + 1)
+                  stB.B = pow2Cap(4L * n / 256 + 1)
+                  stC.B = pow2Cap(wins / 256 + 1)
+                }
+                // ---- exact tier: batch mins merged with the pruned
+                // prior owners
+                val featK = feat.withColumn("pb",
+                  pmod(hash(col("ek")), lit(stE.B)))
+                lbl("ek:pbs")
+                // one-job probed-bucket harvest: collect_set beats a
+                // distinct+collect (no extra AQE shuffle-stage jobs on
+                // an increment-sized frame). On the BOOTSTRAP batch the
+                // probe short-circuits on !baseExists whatever pbs is
+                // passed, so the collect over the bulk frame is pure
+                // waste — a non-empty sentinel keeps the in-batch
+                // cascade branches identical (r17)
+                val pbsE =
+                  if (stE.baseExists) featK.agg(collect_set("pb")).head()
+                    .getSeq[Int](0)
+                  else Seq(0)
+                val ownE = featK.groupBy("pb", "ek")
+                  .agg(min("doc_id").as("bmin"))
+                  .join(stE.probe(pbsE).groupBy("ek")
+                    .agg(min("owner").as("pmin")), Seq("ek"), "left")
+                  .selectExpr("pb", "ek",
+                    "least(bmin, coalesce(pmin, bmin)) AS owner")
+                  .persist()
+                // append DEFERRED to the end-of-batch concurrent write
+                // round (r17): ownE's cached plan (probe scan included)
+                // is first executed by the band:pbs collect below, so
+                // the evidence harvest needs no dedicated action here
+                val dropE = feat.select("doc_id", "ek")
+                  .join(ownE.select("ek", "owner"), "ek")
+                  .where("doc_id != owner").select("doc_id")
+                val s1 = feat.join(dropE.withColumnRenamed("doc_id",
+                  "de"), col("doc_id") === col("de"), "left_anti")
+                // ---- LSH near tier: batch bands probe pruned prior +
+                // batch bands (every prior exact-survivor stays a
+                // dropper)
+                val b1 = s1.select(col("doc_id"), col("hs"),
+                    explode(col("bks")).as("bk"))
+                  .withColumn("pb", pmod(hash(col("bk")), lit(stB.B)))
+                  .persist()
+                lbl("band:pbs")
+                val pbsB =
+                  if (stB.baseExists) b1.agg(collect_set("pb")).head()
+                    .getSeq[Int](0)
+                  else Seq(0)
+                // that collect executed ownE's cached plan (b1's
+                // lineage runs s1 -> dropE -> ownE), ek probe scan
+                // included — harvest is a metrics read, no job; on the
+                // bootstrap batch pending is None and this no-ops. If
+                // the collect was skipped, the post-write harvest below
+                // picks it up instead.
+                if (stB.baseExists) stE.harvestFrom(ownE)
+                // dropN persists so the band probe's scan evidence can
+                // be harvested from ITS cached plan: in s2's plan an
+                // empty dropN lets AQE's empty-relation rule replace
+                // the anti-join with s1 and the probe subtree (scan
+                // included) vanishes from the executed plan — inside
+                // dropN's own plan the probe feeds a join whose inputs
+                // are never empty, so the scan always survives
+                var dropNRef: DataFrame = null
+                var bandAppend: Option[DataFrame] = None
+                val s2 = if (pbsB.isEmpty) s1 else {
+                  val xSide = stB.probe(pbsB)
+                    .select("bk", "doc_id", "hs")
+                    .unionByName(b1.select("bk", "doc_id", "hs"))
+                  val dropN = b1.alias("y").join(xSide.alias("x"),
+                      col("x.bk") === col("y.bk") &&
+                        col("x.doc_id") < col("y.doc_id"))
+                    .filter(expr(
+                      "10 * size(array_intersect(x.hs, y.hs))" +
+                        " >= 9 * size(array_union(x.hs, y.hs))"))
+                    .select(col("y.doc_id").as("doc_id")).distinct()
+                    .persist()
+                  dropNRef = dropN
+                  // append deferred to the concurrent write round; the
+                  // probe's file list was resolved at probe() time, so
+                  // the append's new L0 is invisible to xSide either way
+                  bandAppend = Some(b1.select("bk", "doc_id", "hs", "pb"))
+                  s1.join(dropN.withColumnRenamed("doc_id", "dn"),
+                    col("doc_id") === col("dn"), "left_anti")
+                }
+                val s2c = s2.persist()
+                // ---- substring tier: window classes vs pruned prior
+                // min owners. Only FULL 32-token windows are kept
+                // (positions i <= ntok-32): a padded window's rank
+                // folds in the doc-unique short-suffix id, so its
+                // class can never match across docs — it owns only
+                // itself and drops nothing, on either engine. Skipping
+                // those rows halves the class-key universe (docs here
+                // average ~54 tokens) without moving the survivor set.
+                val cls = s2c.select("doc_id", "th")
+                  .as[(Long, Seq[Long])]
+                  .flatMap { case (doc, th) =>
+                    graft.text.SuffixClasses
+                      .probeRanks(doc, th.toArray, Seq(5))
+                      .iterator.flatMap { case (_, ra, rb) =>
+                        val set = scala.collection.mutable
+                          .LinkedHashSet[(Long, Long)]()
+                        val lim = math.max(ra.length - 31, 0)
+                        var p = 0
+                        while (p < lim) {
+                          set += ((ra(p), rb(p))); p += 1
+                        }
+                        set.iterator.map { case (ka, kb) =>
+                          (doc, ka, kb) }
+                      }
+                  }.toDF("doc_id", "ka", "kb")
+                  .withColumn("pb",
+                    pmod(hash(col("ka"), col("kb")), lit(stC.B)))
+                  .persist()
+                lbl("cls:pbs")
+                val pbsC =
+                  if (stC.baseExists) cls.agg(collect_set("pb")).head()
+                    .getSeq[Int](0)
+                  else Seq(0)
+                // that collect materialized cls AND s2c — dropN's
+                // cached plan (band probe scan included) has executed
+                // (when the collect was skipped on bootstrap, pending is
+                // None and the harvest no-ops)
+                if (dropNRef != null) {
+                  stB.harvestFrom(dropNRef); dropNRef.unpersist(); ()
+                }
+                // dropS persists for the same evidence-vs-AQE reason
+                // as dropN above
+                var dropSRef: DataFrame = null
+                var clsAppend: Option[DataFrame] = None
+                val s3 = if (pbsC.isEmpty) s2c else {
+                  val ownC = cls.select("ka", "kb", "doc_id")
+                    .unionByName(stC.probe(pbsC)
+                      .select("ka", "kb", "doc_id"))
+                    .groupBy("ka", "kb").agg(min("doc_id").as("own"))
+                  val dropS = cls.join(ownC, Seq("ka", "kb"))
+                    .where(col("doc_id") > col("own"))
+                    .select("doc_id").distinct().persist()
+                  dropSRef = dropS
+                  // L0 append pre-folded batch-locally (min per class)
+                  clsAppend = Some(cls.groupBy("pb", "ka", "kb")
+                    .agg(min("doc_id").as("doc_id")))
+                  s2c.join(dropS.withColumnRenamed("doc_id", "ds"),
+                    col("doc_id") === col("ds"), "left_anti")
+                }
+                // ---- end-of-batch write round (r17): the three tier
+                // appends and the survivors write are mutually
+                // independent sinks over already-built cached frames,
+                // so they run CONCURRENTLY from driver threads (guide
+                // §2.6 — tail tasks of one write back-fill cores for
+                // the next) instead of as four sequential actions. The
+                // survivors write materializes dropS's cache, class
+                // probe scan included.
+                {
+                  import scala.concurrent.{Await, Future}
+                  import scala.concurrent.ExecutionContext.Implicits.global
+                  Await.result(Future.sequence(Seq(
+                    Future {
+                      lbl("ek:append"); stE.append(ownE)
+                    },
+                    Future {
+                      bandAppend.foreach { df =>
+                        lbl("band:append"); stB.append(df) }
+                    },
+                    Future {
+                      clsAppend.foreach { df =>
+                        lbl("cls:append"); stC.append(df) }
+                    },
+                    Future {
+                      lbl("survivors:write")
+                      s3.select("doc_id", "ntok")
+                        .write.mode("append").parquet(out)
+                    })),
+                    scala.concurrent.duration.Duration.Inf)
+                }
+                // catch-all for the bootstrap path where no mid-batch
+                // collect ran ownE's plan: by now every cache has been
+                // executed by the write round (no-op when already
+                // harvested — pending clears on first harvest)
+                stE.harvestFrom(ownE)
+                if (dropSRef != null) {
+                  stC.harvestFrom(dropSRef); dropSRef.unpersist(); ()
+                }
+                // the CADENCE: every C batches, fold all three tiers
+                // (concurrently — three driver threads submit disjoint
+                // jobs, so the fold round costs max(tier), not sum)
+                if (nBatches.get() % C == 0) {
+                  import scala.concurrent.{Await, Future}
+                  import scala.concurrent.ExecutionContext.Implicits.global
+                  Await.result(Future.sequence(Seq(
+                    Future(stE.foldNow()), Future(stB.foldNow()),
+                    Future(stC.foldNow()))),
+                    scala.concurrent.duration.Duration.Inf)
+                }
+                cls.unpersist(); s2c.unpersist(); b1.unpersist()
+                ownE.unpersist(); feat.unpersist()
+                lbl(null)
+                }
               }
-              // catch-all for the bootstrap path where no mid-batch
-              // collect ran ownE's plan: by now every cache has been
-              // executed by the write round (no-op when already
-              // harvested — pending clears on first harvest)
-              stE.harvestFrom(ownE)
-              if (dropSRef != null) {
-                stC.harvestFrom(dropSRef); dropSRef.unpersist(); ()
-              }
-              // the CADENCE: every C batches, fold all three tiers
-              // (concurrently — three driver threads submit disjoint
-              // jobs, so the fold round costs max(tier), not sum)
-              if (nBatches.get() % C == 0) {
-                import scala.concurrent.{Await, Future}
-                import scala.concurrent.ExecutionContext.Implicits.global
-                Await.result(Future.sequence(Seq(
-                  Future(stE.foldNow()), Future(stB.foldNow()),
-                  Future(stC.foldNow()))),
-                  scala.concurrent.duration.Duration.Inf)
-              }
-              cls.unpersist(); s2c.unpersist(); b1.unpersist()
-              ownE.unpersist(); feat.unpersist()
-              lbl(null)
-              }
+              ()
             }
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.conf.set(discKey, discPrev)
-        s.conf.set("spark.sql.shuffle.partitions", shufPrev)
-        aqeExclPrev match {
-          case Some(v) => s.conf.set(aqeExclKey, v)
-          case None => s.conf.unset(aqeExclKey)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
         }
         // scratch cleanup (ADVICE r16): folds already deleted every
         // superseded generation; drop the staging dirs and the final
@@ -1340,12 +1332,6 @@ object PipelineQueries {
         import sp.implicits._
         import org.apache.spark.sql.types.StructType
         val qualityMin = 0.6
-        // lane-local 8-task shuffles (the q327 idiom, r17): the claim
-        // joins and the sync-point fold move <= corpus-count keyed
-        // rows; 32-task shuffles on that are pure scheduler overhead.
-        // Restored after the returned frame is built.
-        val shufPrev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val tmp = java.nio.file.Files
           .createTempDirectory("q330_ooo").toString
         val staged = s"$tmp/staged"
@@ -1393,101 +1379,105 @@ object PipelineQueries {
         val prevMax = new java.util.concurrent.atomic
           .AtomicLong(Long.MinValue)
         // ---- stream phase: row-local work only, claims appended,
-        // no verdicts (order-free by construction)
-        val q = s.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$staged/part-*.parquet")
-          .writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            {
-              // ONE driver action covers emptiness and the order
-              // check (was isEmpty + a min/max agg — two jobs per
-              // micro-batch; the q332/q342 fusion, applied here r17)
-              val r = b.agg(min("doc_id"), max("doc_id")).head()
-              if (!r.isNullAt(0)) {
-              nBatches.incrementAndGet()
-              // the gate's premise: arrival really is out of order —
-              // a batch delivering ids BELOW something already seen.
-              // (ADVICE r13: the earlier `batch max > min of prior
-              // batches` form was vacuous — true under perfectly
-              // ascending arrival too, so a regression in the staged
-              // file ordering could never fail this check.)
-              if (r.getLong(0) < prevMax.get()) ooSeen.set(1L)
-              prevMax.set(math.max(prevMax.get(), r.getLong(1)))
-              // repartition FIRST (q320's ingest idiom, r17): a
-              // micro-batch arrives as 2 staged files = 2 scan tasks,
-              // so the WARC/HTML/tokenize chain ran near-serial
-              val feat = b.select("doc_id", "source", "text")
-                .repartition(s.sparkContext.defaultParallelism)
-                .as[(Long, String, String)]
-                .mapPartitions(_.map { case (id, src, text) =>
-                  ingestDoc(id, src, text)
-                })
-                .toDF("doc_id", "source", "text", "admit")
-                .withColumn("toks", expr(sparkToks))
-                .selectExpr("doc_id", "admit",
-                  s"${sparkQualityOf("toks")} as score",
-                  "md5(text) as ek",
-                  s"transform(toks, t -> ${sparkTokHash("t")}) as th",
-                  s"array_distinct(transform(${sparkShingles("toks")}" +
-                    s", g -> ${sparkTokHash("g")} % $P)) as hs",
-                  "size(toks) as ntok")
-                .withColumn("bks", expr(SigTable.bandExpr))
-                .where(s"admit AND score >= $qualityMin")
-                .persist()
-              // the three claim appends are independent sinks over
-              // the one persisted feat frame — run them CONCURRENTLY
-              // from driver threads (guide §2.6; the q327 r17 write
-              // round). Concurrent first-materialization of feat is
-              // block-level deduplicated by the cache manager.
-              val clCDf: DataFrame = feat.select("doc_id", "th")
-                .as[(Long, Seq[Long])]
-                .flatMap { case (doc, th) =>
-                  graft.text.SuffixClasses
-                    .probeRanks(doc, th.toArray, Seq(5))
-                    .iterator.flatMap { case (_, ra, rb) =>
-                      val set = scala.collection.mutable
-                        .LinkedHashSet[(Long, Long)]()
-                      var p = 0
-                      while (p < ra.length) {
-                        set += ((ra(p), rb(p))); p += 1
-                      }
-                      set.iterator.map { case (ka, kb) =>
-                        (ka, kb, doc) }
-                    }
-                }.toDF("ka", "kb", "doc_id")
-              locally {
-                import scala.concurrent.{Await, Future}
-                import scala.concurrent.ExecutionContext.Implicits.global
-                val writes = Seq(
-                  Future {
-                    feat.select("doc_id", "ek", "ntok")
-                      .write.mode("append").parquet(clF)
-                  },
-                  Future {
-                    feat.select(col("doc_id"), col("hs"),
-                        explode(col("bks")).as("bk"))
-                      .select("bk", "doc_id", "hs")
-                      .write.mode("append").parquet(clB)
-                  },
-                  Future {
-                    clCDf.write.mode("append").parquet(clC)
+        // no verdicts (order-free by construction). Lane-local 8-task
+        // shuffles (the q327 idiom, r17): the batch loop's claim joins
+        // move increment-sized keyed rows; 32-task shuffles on that are
+        // pure scheduler overhead.
+        Graft.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+          val q = s.readStream.schema(raw.schema)
+            .option("maxFilesPerTrigger", "2")
+            .parquet(s"$staged/part-*.parquet")
+            .writeStream
+            .foreachBatch { (b: DataFrame, _: Long) =>
+              {
+                // ONE driver action covers emptiness and the order
+                // check (was isEmpty + a min/max agg — two jobs per
+                // micro-batch; the q332/q342 fusion, applied here r17)
+                val r = b.agg(min("doc_id"), max("doc_id")).head()
+                if (!r.isNullAt(0)) {
+                nBatches.incrementAndGet()
+                // the gate's premise: arrival really is out of order —
+                // a batch delivering ids BELOW something already seen.
+                // (ADVICE r13: the earlier `batch max > min of prior
+                // batches` form was vacuous — true under perfectly
+                // ascending arrival too, so a regression in the staged
+                // file ordering could never fail this check.)
+                if (r.getLong(0) < prevMax.get()) ooSeen.set(1L)
+                prevMax.set(math.max(prevMax.get(), r.getLong(1)))
+                // repartition FIRST (q320's ingest idiom, r17): a
+                // micro-batch arrives as 2 staged files = 2 scan tasks,
+                // so the WARC/HTML/tokenize chain ran near-serial
+                val feat = b.select("doc_id", "source", "text")
+                  .repartition(s.sparkContext.defaultParallelism)
+                  .as[(Long, String, String)]
+                  .mapPartitions(_.map { case (id, src, text) =>
+                    ingestDoc(id, src, text)
                   })
-                writes.foreach(Await.result(_,
-                  scala.concurrent.duration.Duration.Inf))
+                  .toDF("doc_id", "source", "text", "admit")
+                  .withColumn("toks", expr(sparkToks))
+                  .selectExpr("doc_id", "admit",
+                    s"${sparkQualityOf("toks")} as score",
+                    "md5(text) as ek",
+                    s"transform(toks, t -> ${sparkTokHash("t")}) as th",
+                    s"array_distinct(transform(${sparkShingles("toks")}" +
+                      s", g -> ${sparkTokHash("g")} % $P)) as hs",
+                    "size(toks) as ntok")
+                  .withColumn("bks", expr(SigTable.bandExpr))
+                  .where(s"admit AND score >= $qualityMin")
+                  .persist()
+                // the three claim appends are independent sinks over
+                // the one persisted feat frame — run them CONCURRENTLY
+                // from driver threads (guide §2.6; the q327 r17 write
+                // round). Concurrent first-materialization of feat is
+                // block-level deduplicated by the cache manager.
+                val clCDf: DataFrame = feat.select("doc_id", "th")
+                  .as[(Long, Seq[Long])]
+                  .flatMap { case (doc, th) =>
+                    graft.text.SuffixClasses
+                      .probeRanks(doc, th.toArray, Seq(5))
+                      .iterator.flatMap { case (_, ra, rb) =>
+                        val set = scala.collection.mutable
+                          .LinkedHashSet[(Long, Long)]()
+                        var p = 0
+                        while (p < ra.length) {
+                          set += ((ra(p), rb(p))); p += 1
+                        }
+                        set.iterator.map { case (ka, kb) =>
+                          (ka, kb, doc) }
+                      }
+                  }.toDF("ka", "kb", "doc_id")
+                locally {
+                  import scala.concurrent.{Await, Future}
+                  import scala.concurrent.ExecutionContext.Implicits.global
+                  val writes = Seq(
+                    Future {
+                      feat.select("doc_id", "ek", "ntok")
+                        .write.mode("append").parquet(clF)
+                    },
+                    Future {
+                      feat.select(col("doc_id"), col("hs"),
+                          explode(col("bks")).as("bk"))
+                        .select("bk", "doc_id", "hs")
+                        .write.mode("append").parquet(clB)
+                    },
+                    Future {
+                      clCDf.write.mode("append").parquet(clC)
+                    })
+                  writes.foreach(Await.result(_,
+                    scala.concurrent.duration.Duration.Inf))
+                }
+                feat.unpersist()
+                }
               }
-              feat.unpersist()
-              }
+              ()
             }
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+        }
         // batch-loop tuning ends with the stream: the sync-point fold
         // below is CORPUS-scale (claim joins, the band self-join), so
         // it gets the session's full shuffle width back — the 8-task
         // conf crammed the fold into a quarter of the box (r17)
-        s.conf.set("spark.sql.shuffle.partitions", shufPrev)
         // ---- sync-point fold: pure min-merges + claim joins, no
         // text — the tiers sequence exactly as the batch cascade.
         // Intermediates persist for the fold's lifetime and the
@@ -1624,10 +1614,6 @@ object PipelineQueries {
         // (increment-sized key sets). Restored after the stream.
         val discKey =
           "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        val discPrev = s.conf.get(discKey, "32")
-        s.conf.set(discKey, "100000")
-        val shufPrev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
         val lastMax = new java.util.concurrent.atomic.AtomicLong(-1L)
         val compacted = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -1640,113 +1626,114 @@ object PipelineQueries {
         // (stateRoot, matching, total) staged per probe, resolved into
         // evid after the consuming batch action ran
         var pendEv: Option[(String, Long, Long)] = None
-        val q = s.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$staged/part-*.parquet")
-          .writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            {
-              def lbl(x: String): Unit =
-                s.sparkContext.setJobDescription(
-                  if (x == null) null else s"q332 $x")
-              val feat = b.selectExpr("doc_id", "md5(text) AS ek",
-                  "CAST(length(text) AS BIGINT) AS L")
-                .withColumn("pb", pmod(hash(col("ek")), lit(B)))
-                .persist()
-              // ONE driver action covers emptiness, the order check
-              // and the probed bucket set (was isEmpty + min/max agg
-              // + a distinct collect — three jobs per micro-batch;
-              // the q342 fusion, applied here r17)
-              lbl("feat:agg")
-              val stRow = feat.agg(min("doc_id"), max("doc_id"),
-                collect_set("pb")).head()
-              if (stRow.isNullAt(0)) feat.unpersist() else {
-              nBatches.incrementAndGet()
-              if (stRow.getLong(0) <= lastMax.get()) monoOk.set(false)
-              require(stRow.getLong(0) > lastMax.get(),
-                s"arrival order regressed: ${stRow.getLong(0)} <= " +
-                  s"${lastMax.get()}")
-              lastMax.set(stRow.getLong(1))
-              val pbs = stRow.getSeq[Int](2)
-              val all = stateFiles(curRoot)
-              val pmin: DataFrame =
-                if (all.isEmpty)
-                  Seq.empty[(String, Long)].toDF("ek", "pmin")
-                else {
-                  val stRead = s.read.parquet(curRoot)
-                    .where(col("pb").isin(pbs: _*))
-                  // evidence bookkeeping only — scan metrics are
-                  // harvested from the consuming job's executed plan
-                  // (the q327 r17 shape: the dedicated per-probe
-                  // count(1) job doubled probe IO)
-                  pendEv = Some((curRoot, all.count(pth =>
-                    pbs.exists(v => pth.contains(s"/pb=$v/"))).toLong,
-                    all.size.toLong))
-                  stRead.groupBy("ek").agg(min("owner").as("pmin"))
+        Graft.withConf(s, discKey -> "100000",
+            "spark.sql.shuffle.partitions" -> "8") {
+          val q = s.readStream.schema(raw.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(s"$staged/part-*.parquet")
+            .writeStream
+            .foreachBatch { (b: DataFrame, _: Long) =>
+              {
+                def lbl(x: String): Unit =
+                  s.sparkContext.setJobDescription(
+                    if (x == null) null else s"q332 $x")
+                val feat = b.selectExpr("doc_id", "md5(text) AS ek",
+                    "CAST(length(text) AS BIGINT) AS L")
+                  .withColumn("pb", pmod(hash(col("ek")), lit(B)))
+                  .persist()
+                // ONE driver action covers emptiness, the order check
+                // and the probed bucket set (was isEmpty + min/max agg
+                // + a distinct collect — three jobs per micro-batch;
+                // the q342 fusion, applied here r17)
+                lbl("feat:agg")
+                val stRow = feat.agg(min("doc_id"), max("doc_id"),
+                  collect_set("pb")).head()
+                if (stRow.isNullAt(0)) feat.unpersist() else {
+                nBatches.incrementAndGet()
+                if (stRow.getLong(0) <= lastMax.get()) monoOk.set(false)
+                require(stRow.getLong(0) > lastMax.get(),
+                  s"arrival order regressed: ${stRow.getLong(0)} <= " +
+                    s"${lastMax.get()}")
+                lastMax.set(stRow.getLong(1))
+                val pbs = stRow.getSeq[Int](2)
+                val all = stateFiles(curRoot)
+                val pmin: DataFrame =
+                  if (all.isEmpty)
+                    Seq.empty[(String, Long)].toDF("ek", "pmin")
+                  else {
+                    val stRead = s.read.parquet(curRoot)
+                      .where(col("pb").isin(pbs: _*))
+                    // evidence bookkeeping only — scan metrics are
+                    // harvested from the consuming job's executed plan
+                    // (the q327 r17 shape: the dedicated per-probe
+                    // count(1) job doubled probe IO)
+                    pendEv = Some((curRoot, all.count(pth =>
+                      pbs.exists(v => pth.contains(s"/pb=$v/"))).toLong,
+                      all.size.toLong))
+                    stRead.groupBy("ek").agg(min("owner").as("pmin"))
+                  }
+                // batch-keys-sized; persisted so the survivors write
+                // and the state append don't EACH re-run the bucket
+                // probe scan (r17: the q342 persist, applied here)
+                val ownE = feat.groupBy("ek")
+                  .agg(min("doc_id").as("bmin"))
+                  .join(pmin, Seq("ek"), "left")
+                  .selectExpr("ek",
+                    "least(bmin, coalesce(pmin, bmin)) AS owner")
+                  .persist()
+                lbl("survivors:write")
+                feat.join(ownE, "ek").where("doc_id = owner")
+                  .select("doc_id", "L")
+                  .write.mode("append").parquet(outDir)
+                // the survivors write just executed ownE's cached plan,
+                // probe scan included — zero-extra-job evidence harvest
+                pendEv.foreach { case (dir, matching, total) =>
+                  val sc = scansDeep(ownE.queryExecution.executedPlan)
+                    .filter(_.relation.location.rootPaths
+                      .exists(_.toString.contains(dir)))
+                  evid += ((sc.map(_.metrics("numFiles").value).sum,
+                    matching, total,
+                    sc.nonEmpty && sc.forall(_.partitionFilters.nonEmpty)))
+                  pendEv = None
                 }
-              // batch-keys-sized; persisted so the survivors write
-              // and the state append don't EACH re-run the bucket
-              // probe scan (r17: the q342 persist, applied here)
-              val ownE = feat.groupBy("ek")
-                .agg(min("doc_id").as("bmin"))
-                .join(pmin, Seq("ek"), "left")
-                .selectExpr("ek",
-                  "least(bmin, coalesce(pmin, bmin)) AS owner")
-                .persist()
-              lbl("survivors:write")
-              feat.join(ownE, "ek").where("doc_id = owner")
-                .select("doc_id", "L")
-                .write.mode("append").parquet(outDir)
-              // the survivors write just executed ownE's cached plan,
-              // probe scan included — zero-extra-job evidence harvest
-              pendEv.foreach { case (dir, matching, total) =>
-                val sc = scansDeep(ownE.queryExecution.executedPlan)
-                  .filter(_.relation.location.rootPaths
-                    .exists(_.toString.contains(dir)))
-                evid += ((sc.map(_.metrics("numFiles").value).sum,
-                  matching, total,
-                  sc.nonEmpty && sc.forall(_.partitionFilters.nonEmpty)))
-                pendEv = None
-              }
-              lbl("state:append")
-              // write width = the session's parallelism, NOT the
-              // 8-task batch-loop shuffle conf: these writes create
-              // one parquet file per touched pb= dir and the
-              // file-create latency is the cost, so spreading the
-              // buckets over every core parallelizes the creates
-              // (r17; file count per append is unchanged — it is the
-              // touched-bucket count either way)
-              ownE.withColumn("pb", pmod(hash(col("ek")), lit(B)))
-                .repartition(s.sparkContext.defaultParallelism,
-                  col("pb"))
-                .write.mode("append").partitionBy("pb")
-                .parquet(curRoot)
-              ownE.unpersist()
-              feat.unpersist()
-              // mid-stream sync point: compact the appends (safe by
-              // min-merge associativity); probes after this read the
-              // compacted generation
-              if (nBatches.get() == 3) {
-                val pre = stateFiles(curRoot).size
-                val nxt = s"$tmp/state_v${nBatches.get()}"
-                s.read.parquet(curRoot).groupBy("pb", "ek")
-                  .agg(min("owner").as("owner"))
+                lbl("state:append")
+                // write width = the session's parallelism, NOT the
+                // 8-task batch-loop shuffle conf: these writes create
+                // one parquet file per touched pb= dir and the
+                // file-create latency is the cost, so spreading the
+                // buckets over every core parallelizes the creates
+                // (r17; file count per append is unchanged — it is the
+                // touched-bucket count either way)
+                ownE.withColumn("pb", pmod(hash(col("ek")), lit(B)))
                   .repartition(s.sparkContext.defaultParallelism,
                     col("pb"))
-                  .write.partitionBy("pb").parquet(nxt)
-                curRoot = nxt
-                val post = stateFiles(curRoot).size
-                if (post < pre && post > 0) compacted.set(1L)
+                  .write.mode("append").partitionBy("pb")
+                  .parquet(curRoot)
+                ownE.unpersist()
+                feat.unpersist()
+                // mid-stream sync point: compact the appends (safe by
+                // min-merge associativity); probes after this read the
+                // compacted generation
+                if (nBatches.get() == 3) {
+                  val pre = stateFiles(curRoot).size
+                  val nxt = s"$tmp/state_v${nBatches.get()}"
+                  s.read.parquet(curRoot).groupBy("pb", "ek")
+                    .agg(min("owner").as("owner"))
+                    .repartition(s.sparkContext.defaultParallelism,
+                      col("pb"))
+                    .write.partitionBy("pb").parquet(nxt)
+                  curRoot = nxt
+                  val post = stateFiles(curRoot).size
+                  if (post < pre && post > 0) compacted.set(1L)
+                }
+                }
+                lbl(null)
               }
-              }
-              lbl(null)
+              ()
             }
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.conf.set(discKey, discPrev)
-        s.conf.set("spark.sql.shuffle.partitions", shufPrev)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+        }
         val evs = evid.toSeq
         // measured pruning, for the scale notes (stderr, not output)
         Console.err.println(s"Q332_PRUNE " + evs.map { case (a, b, c, p)
@@ -1880,10 +1867,6 @@ object PipelineQueries {
         // scheduler overhead. Both restored after the stream drains.
         val discKey =
           "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        val discPrev = s.conf.get(discKey, "32")
-        s.conf.set(discKey, "100000")
-        val shufPrev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
         val nBatches = new java.util.concurrent.atomic.AtomicLong(0L)
         val lastMax = new java.util.concurrent.atomic.AtomicLong(-1L)
         val compactions = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -1897,140 +1880,141 @@ object PipelineQueries {
         // (stateRoot, matching, total) staged per probe, resolved into
         // evid after the consuming batch action ran
         var pendEv: Option[(String, Long, Long)] = None
-        val q = s.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$staged/part-*.parquet")
-          .writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            {
-              def lbl(x: String): Unit =
-                s.sparkContext.setJobDescription(
-                  if (x == null) null else s"q342 $x")
-              val feat = b.selectExpr("doc_id", "md5(text) AS ek",
-                  "CAST(length(text) AS BIGINT) AS L")
-                .withColumn("pb", pmod(hash(col("ek")), lit(B)))
-                .persist()
-              lbl("feat:agg")
-              // ONE driver action covers emptiness, the order check
-              // and the probed bucket set (was isEmpty + min/max agg
-              // + a distinct collect — three jobs per micro-batch)
-              val stRow = feat.agg(min("doc_id"), max("doc_id"),
-                collect_set("pb")).head()
-              if (stRow.isNullAt(0)) feat.unpersist() else {
-              nBatches.incrementAndGet()
-              if (stRow.getLong(0) <= lastMax.get()) monoOk.set(false)
-              require(stRow.getLong(0) > lastMax.get(),
-                s"arrival order regressed: ${stRow.getLong(0)} <= " +
-                  s"${lastMax.get()}")
-              lastMax.set(stRow.getLong(1))
-              val pbs = stRow.getSeq[Int](2)
-              val all = stateFiles(curRoot)
-              val pmin: DataFrame =
-                if (all.isEmpty)
-                  Seq.empty[(String, Long)].toDF("ek", "pmin")
-                else {
-                  // probe-cost observable: files per PROBED bucket in
-                  // the generation this probe will actually read
-                  val fpb = pbs.map(v =>
-                    all.count(_.contains(s"/pb=$v/")).toLong)
-                    .filter(_ > 0)
-                  if (fpb.nonEmpty)
-                    maxFpb.getAndUpdate(m => math.max(m, fpb.max))
-                  val stRead = s.read.parquet(curRoot)
-                    .where(col("pb").isin(pbs: _*))
-                  // evidence bookkeeping only — the SCAN metrics are
-                  // harvested below from the consuming job's own
-                  // executed plan (the q327 r17 shape: the dedicated
-                  // per-probe count(1) job doubled probe IO)
-                  pendEv = Some((curRoot, all.count(pth =>
-                    pbs.exists(v => pth.contains(s"/pb=$v/"))).toLong,
-                    all.size.toLong))
-                  stRead.groupBy("ek").agg(min("owner").as("pmin"))
-                }
-              // batch-keys-sized; persisted so the survivors write
-              // and the state append don't EACH re-run the bucket
-              // probe scan (the third run per batch the meter showed)
-              val ownE = feat.groupBy("ek")
-                .agg(min("doc_id").as("bmin"))
-                .join(pmin, Seq("ek"), "left")
-                .selectExpr("ek",
-                  "least(bmin, coalesce(pmin, bmin)) AS owner")
-                .persist()
-              lbl("survivors:write")
-              feat.join(ownE, "ek").where("doc_id = owner")
-                .select("doc_id", "L")
-                .write.mode("append").parquet(outDir)
-              // the survivors write just executed ownE's cached plan,
-              // probe scan included — harvest its executed-scan
-              // pruning evidence with zero extra jobs
-              pendEv.foreach { case (dir, matching, total) =>
-                val sc = scansDeep(ownE.queryExecution.executedPlan)
-                  .filter(_.relation.location.rootPaths
-                    .exists(_.toString.contains(dir)))
-                evid += ((sc.map(_.metrics("numFiles").value).sum,
-                  matching, total,
-                  sc.nonEmpty && sc.forall(_.partitionFilters.nonEmpty)))
-                pendEv = None
-              }
-              lbl("state:append")
-              // write width = session parallelism, not the 8-task
-              // batch-loop conf: one file per touched pb= dir either
-              // way, and the creates parallelize across cores (r17)
-              ownE.withColumn("pb", pmod(hash(col("ek")), lit(B)))
-                .repartition(s.sparkContext.defaultParallelism,
-                  col("pb"))
-                .write.mode("append").partitionBy("pb")
-                .parquet(curRoot)
-              ownE.unpersist()
-              // the CADENCE: every C batches, fold the accumulated
-              // appends (min-merge, associative) into a fresh
-              // generation — probe cost resets to one file per bucket.
-              // LSM-honest (q327's r16 fold shape): only buckets
-              // holding MORE than one run re-merge; single-run
-              // buckets carry over by filesystem rename — each file
-              // already holds one row per ek (a batch's ownE or a
-              // prior fold output), so a lone run needs no merge
-              if (nBatches.get() % C == 0) {
-                lbl("fold")
-                val nxt = s"$tmp/state_v${nBatches.get()}"
-                val dirs = Option(new java.io.File(curRoot)
-                  .listFiles()).getOrElse(Array.empty[java.io.File])
-                  .filter(f => f.isDirectory &&
-                    f.getName.startsWith("pb="))
-                val multi = dirs.filter(dd => Option(dd.listFiles())
-                  .getOrElse(Array.empty[java.io.File])
-                  .count(_.getName.endsWith(".parquet")) > 1)
-                val touched = multi
-                  .map(_.getName.stripPrefix("pb=").toInt).toSeq
-                if (touched.nonEmpty)
-                  s.read.parquet(curRoot)
-                    .where(col("pb").isin(touched: _*))
-                    .groupBy("pb", "ek")
-                    .agg(min("owner").as("owner"))
-                    .repartition(s.sparkContext.defaultParallelism,
-                      col("pb"))
-                    .write.partitionBy("pb").parquet(nxt)
-                else java.nio.file.Files
-                  .createDirectories(java.nio.file.Paths.get(nxt))
-                val multiSet = multi.map(_.getName).toSet
-                dirs.filter(dd => !multiSet.contains(dd.getName))
-                  .foreach { f =>
-                    java.nio.file.Files.move(f.toPath,
-                      java.nio.file.Paths.get(nxt, f.getName))
+        Graft.withConf(s, discKey -> "100000",
+            "spark.sql.shuffle.partitions" -> "8") {
+          val q = s.readStream.schema(raw.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(s"$staged/part-*.parquet")
+            .writeStream
+            .foreachBatch { (b: DataFrame, _: Long) =>
+              {
+                def lbl(x: String): Unit =
+                  s.sparkContext.setJobDescription(
+                    if (x == null) null else s"q342 $x")
+                val feat = b.selectExpr("doc_id", "md5(text) AS ek",
+                    "CAST(length(text) AS BIGINT) AS L")
+                  .withColumn("pb", pmod(hash(col("ek")), lit(B)))
+                  .persist()
+                lbl("feat:agg")
+                // ONE driver action covers emptiness, the order check
+                // and the probed bucket set (was isEmpty + min/max agg
+                // + a distinct collect — three jobs per micro-batch)
+                val stRow = feat.agg(min("doc_id"), max("doc_id"),
+                  collect_set("pb")).head()
+                if (stRow.isNullAt(0)) feat.unpersist() else {
+                nBatches.incrementAndGet()
+                if (stRow.getLong(0) <= lastMax.get()) monoOk.set(false)
+                require(stRow.getLong(0) > lastMax.get(),
+                  s"arrival order regressed: ${stRow.getLong(0)} <= " +
+                    s"${lastMax.get()}")
+                lastMax.set(stRow.getLong(1))
+                val pbs = stRow.getSeq[Int](2)
+                val all = stateFiles(curRoot)
+                val pmin: DataFrame =
+                  if (all.isEmpty)
+                    Seq.empty[(String, Long)].toDF("ek", "pmin")
+                  else {
+                    // probe-cost observable: files per PROBED bucket in
+                    // the generation this probe will actually read
+                    val fpb = pbs.map(v =>
+                      all.count(_.contains(s"/pb=$v/")).toLong)
+                      .filter(_ > 0)
+                    if (fpb.nonEmpty)
+                      maxFpb.getAndUpdate(m => math.max(m, fpb.max))
+                    val stRead = s.read.parquet(curRoot)
+                      .where(col("pb").isin(pbs: _*))
+                    // evidence bookkeeping only — the SCAN metrics are
+                    // harvested below from the consuming job's own
+                    // executed plan (the q327 r17 shape: the dedicated
+                    // per-probe count(1) job doubled probe IO)
+                    pendEv = Some((curRoot, all.count(pth =>
+                      pbs.exists(v => pth.contains(s"/pb=$v/"))).toLong,
+                      all.size.toLong))
+                    stRead.groupBy("ek").agg(min("owner").as("pmin"))
                   }
-                curRoot = nxt
-                compactions.incrementAndGet()
+                // batch-keys-sized; persisted so the survivors write
+                // and the state append don't EACH re-run the bucket
+                // probe scan (the third run per batch the meter showed)
+                val ownE = feat.groupBy("ek")
+                  .agg(min("doc_id").as("bmin"))
+                  .join(pmin, Seq("ek"), "left")
+                  .selectExpr("ek",
+                    "least(bmin, coalesce(pmin, bmin)) AS owner")
+                  .persist()
+                lbl("survivors:write")
+                feat.join(ownE, "ek").where("doc_id = owner")
+                  .select("doc_id", "L")
+                  .write.mode("append").parquet(outDir)
+                // the survivors write just executed ownE's cached plan,
+                // probe scan included — harvest its executed-scan
+                // pruning evidence with zero extra jobs
+                pendEv.foreach { case (dir, matching, total) =>
+                  val sc = scansDeep(ownE.queryExecution.executedPlan)
+                    .filter(_.relation.location.rootPaths
+                      .exists(_.toString.contains(dir)))
+                  evid += ((sc.map(_.metrics("numFiles").value).sum,
+                    matching, total,
+                    sc.nonEmpty && sc.forall(_.partitionFilters.nonEmpty)))
+                  pendEv = None
+                }
+                lbl("state:append")
+                // write width = session parallelism, not the 8-task
+                // batch-loop conf: one file per touched pb= dir either
+                // way, and the creates parallelize across cores (r17)
+                ownE.withColumn("pb", pmod(hash(col("ek")), lit(B)))
+                  .repartition(s.sparkContext.defaultParallelism,
+                    col("pb"))
+                  .write.mode("append").partitionBy("pb")
+                  .parquet(curRoot)
+                ownE.unpersist()
+                // the CADENCE: every C batches, fold the accumulated
+                // appends (min-merge, associative) into a fresh
+                // generation — probe cost resets to one file per bucket.
+                // LSM-honest (q327's r16 fold shape): only buckets
+                // holding MORE than one run re-merge; single-run
+                // buckets carry over by filesystem rename — each file
+                // already holds one row per ek (a batch's ownE or a
+                // prior fold output), so a lone run needs no merge
+                if (nBatches.get() % C == 0) {
+                  lbl("fold")
+                  val nxt = s"$tmp/state_v${nBatches.get()}"
+                  val dirs = Option(new java.io.File(curRoot)
+                    .listFiles()).getOrElse(Array.empty[java.io.File])
+                    .filter(f => f.isDirectory &&
+                      f.getName.startsWith("pb="))
+                  val multi = dirs.filter(dd => Option(dd.listFiles())
+                    .getOrElse(Array.empty[java.io.File])
+                    .count(_.getName.endsWith(".parquet")) > 1)
+                  val touched = multi
+                    .map(_.getName.stripPrefix("pb=").toInt).toSeq
+                  if (touched.nonEmpty)
+                    s.read.parquet(curRoot)
+                      .where(col("pb").isin(touched: _*))
+                      .groupBy("pb", "ek")
+                      .agg(min("owner").as("owner"))
+                      .repartition(s.sparkContext.defaultParallelism,
+                        col("pb"))
+                      .write.partitionBy("pb").parquet(nxt)
+                  else java.nio.file.Files
+                    .createDirectories(java.nio.file.Paths.get(nxt))
+                  val multiSet = multi.map(_.getName).toSet
+                  dirs.filter(dd => !multiSet.contains(dd.getName))
+                    .foreach { f =>
+                      java.nio.file.Files.move(f.toPath,
+                        java.nio.file.Paths.get(nxt, f.getName))
+                    }
+                  curRoot = nxt
+                  compactions.incrementAndGet()
+                }
+                feat.unpersist()
+                }
+                lbl(null)
               }
-              feat.unpersist()
-              }
-              lbl(null)
+              ()
             }
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.conf.set(discKey, discPrev)
-        s.conf.set("spark.sql.shuffle.partitions", shufPrev)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+        }
         val evs = evid.toSeq
         Console.err.println(s"Q342_CADENCE batches=${nBatches.get()} " +
           s"compactions=${compactions.get()} maxFpb=${maxFpb.get()} " +

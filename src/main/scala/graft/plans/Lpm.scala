@@ -2,8 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -12,96 +14,144 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * src/net_aggr.c:895, `bgp_srcdst_lookup` src/bgp/bgp_lookup.c:33).
   *
   * Spark has no LPM operator, so this is the engine's first custom Catalyst
-  * piece (SURVEY §4 "custom Catalyst inventory"). Two physical strategies:
+  * piece (SURVEY §4 "custom Catalyst inventory"). One [[Lpm.Table]] serves
+  * every address family: keys are 128 bits wide, as two big-endian 64-bit
+  * limbs (hi, lo), and a `width`-bit address (IPv4, or a keyed product
+  * space such as (peer, ip)) is left-aligned into the high limb. Each mask
+  * length holds its keys sorted in primitive `long[]` arrays and is
+  * binary-searched, as pmacct's `binsearch` searches its sorted networks
+  * table (src/net_aggr.c:390-499); lengths are probed longest first.
   *
-  *  1. [[LpmLookup]] — a native `Expression` holding the prefix table
-  *    (per-mask-length hash maps, the same shape as pmacct's `maps_index`
-  *    bitmap-hash). O(#distinct masks) per row, participates in whole-stage
-  *    codegen via `doGenCode`, NO join and NO shuffle: at 100 TB the table
-  *    ships once per executor inside the serialized plan, like a broadcast.
-  *    Right whenever the prefix table fits in memory (networks_file and
-  *    full-internet RIBs — ~1M prefixes ≈ tens of MB — both do).
+  * Two physical strategies:
+  *
+  *  1. [[LpmLookup]] — a native `Expression` holding the prefix table.
+  *    O(#distinct masks × log prefixes) per row, participates in
+  *    whole-stage codegen via `doGenCode`, NO join and NO shuffle: the
+  *    table ships inside the serialized plan, like a broadcast, and its
+  *    primitive arrays (de)serialize in bulk. Right whenever the prefix
+  *    table fits in memory (networks_file and full-internet RIBs — ~1M
+  *    prefixes ≈ tens of MB — both do). `lpm` and `lpm6` are its narrow
+  *    and two-limb spellings.
   *
   *  2. [[Lpm.joinLongestMatch]] — chained broadcast LEFT joins, one per
   *    distinct mask length (longest first), coalesced first-match. Stays
   *    fully declarative (Catalyst sees ordinary joins) for when the dim
-  *    must live as a table (e.g. time-versioned RIB in Delta). Also
-  *    shuffle-free: every join side is broadcast.
+  *    must live as a table (e.g. time-versioned RIB in Delta) or carries
+  *    string or multi-column values. Also shuffle-free: every join side
+  *    is broadcast.
   */
 object Lpm {
 
-  /** Immutable LPM table over a `width`-bit address space. */
-  final class Table(val width: Int,
-                    prefixes: Seq[(Long, Int, Long)]) extends Serializable {
-    val lens: Array[Int] =
-      prefixes.map(_._2).distinct.sorted(Ordering.Int.reverse).toArray
-    private val maps: Array[java.util.HashMap[java.lang.Long, java.lang.Long]] =
-      lens.map { len =>
-        val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        prefixes.filter(_._2 == len).foreach { case (base, _, v) =>
-          m.put(mask(base, len), v)
-        }
-        m
+  /** `bits` leading ones of a 64-bit limb (0 and 64 saturate). */
+  private def ones(bits: Int): Long =
+    if (bits <= 0) 0L else if (bits >= 64) -1L else -1L << (64 - bits)
+
+  /** One mask length's prefixes: the length's (hi, lo) masks, and the
+    * masked keys sorted by (hi, lo) with their values in the same order. */
+  private final class Level(hiMask: Long, loMask: Long, his: Array[Long],
+                            los: Array[Long], values: Array[Long])
+      extends Serializable {
+    /** Value under the masked address, or Long.MinValue. */
+    def get(hi: Long, lo: Long): Long = {
+      val h = hi & hiMask
+      val l = lo & loMask
+      var a = 0
+      var b = his.length - 1
+      while (a <= b) {
+        val m = (a + b) >>> 1
+        val c = if (his(m) != h) java.lang.Long.compare(his(m), h)
+          else java.lang.Long.compare(los(m), l)
+        if (c < 0) a = m + 1
+        else if (c > 0) b = m - 1
+        else return values(m)
       }
-    private def mask(ip: Long, len: Int): Long = {
-      val shift = width - len
-      if (shift >= 64) 0L else (ip >>> shift) << shift
+      Long.MinValue
     }
-    /** Longest-match value or Long.MinValue sentinel on miss. */
-    def lookup(ip: Long): Long = {
+  }
+
+  private def level(len: Int, entries: Seq[(Long, Long, Long)]): Level = {
+    val (hm, lm) = (ones(len), ones(len - 64))
+    // a repeated key keeps its last value, as a map insert would
+    val sorted = entries.reverseIterator
+      .map { case (h, l, v) => (h & hm, l & lm, v) }
+      .toSeq.distinctBy(e => (e._1, e._2)).sortBy(e => (e._1, e._2))
+    new Level(hm, lm, sorted.map(_._1).toArray, sorted.map(_._2).toArray,
+      sorted.map(_._3).toArray)
+  }
+
+  /** Immutable LPM table over a `width`-bit address space: `width` is
+    * 1..64 for a narrow address, 128 for IPv6. Build narrow tables with
+    * `new Table(width, Seq((base, len, value)))` and v6 tables with
+    * [[Table.v6]] (a second `Seq`-of-tuples constructor would erase to the
+    * same signature). Long.MinValue is the miss sentinel, so it cannot be
+    * a value. */
+  final class Table private (val width: Int,
+                             keyed: Array[(Long, Long, Int, Long)])
+      extends Serializable {
+    require(width >= 1 && width <= 64 || width == 128,
+      s"LPM width must be 1..64 or 128, got $width")
+    keyed.foreach { case (_, _, len, v) =>
+      require(len >= 0 && len <= width,
+        s"prefix length $len outside 0..$width")
+      require(v != Long.MinValue, "Long.MinValue is the miss sentinel")
+    }
+    /** One level per distinct mask length, longest first. */
+    private val levels: Array[Level] = keyed.groupBy(_._3).toArray
+      .sortBy(-_._1)
+      .map { case (len, ps) =>
+        level(len, ps.toSeq.map { case (h, l, _, v) => (h, l, v) })
+      }
+
+    /** Narrow table of (base, len, value); every base lies in
+      * [0, 2^width). */
+    def this(width: Int, prefixes: Seq[(Long, Int, Long)]) =
+      this(width, Table.leftAligned(width, prefixes))
+
+    /** Longest-match value for the 128-bit key (hi, lo), or Long.MinValue
+      * on a miss. */
+    def lookup(hi: Long, lo: Long): Long = {
       var i = 0
-      while (i < lens.length) {
-        val v = maps(i).get(mask(ip, lens(i)))
-        if (v != null) return v.longValue()
+      while (i < levels.length) {
+        val v = levels(i).get(hi, lo)
+        if (v != Long.MinValue) return v
         i += 1
       }
       Long.MinValue
     }
+
+    /** Longest-match value for a `width`-bit address (width ≤ 64), or
+      * Long.MinValue on a miss; negative and too-wide addresses miss. */
+    def lookup(ip: Long): Long =
+      if (width < 64 && (ip >>> width) != 0) Long.MinValue
+      else lookup(ip << (64 - width), 0L)
+  }
+
+  object Table {
+    private def leftAligned(width: Int, prefixes: Seq[(Long, Int, Long)])
+        : Array[(Long, Long, Int, Long)] = {
+      require(width <= 64, s"a $width-bit table is built with Table.v6")
+      prefixes.map { case (base, len, v) =>
+        require(width == 64 || (base >>> width) == 0,
+          s"base $base outside the $width-bit address space")
+        (base << (64 - width), 0L, len, v)
+      }.toArray
+    }
+
+    /** 128-bit table of (hi, lo, len, value), the address as two
+      * big-endian limbs — the v6 walk pmacct runs in
+      * `bgp_srcdst_lookup`/`bgp_node_match_ipv6` (src/bgp/bgp_lookup.c). */
+    def v6(prefixes: Seq[(Long, Long, Int, Long)]): Table =
+      new Table(128, prefixes.toArray)
   }
 
   /** Column API: `lpm(col("ip_dst"), table)` → matched value or NULL. */
   def lpm(ip: Column, table: Table): Column =
-    ColumnBridge.column(LpmLookup(ColumnBridge.expression(ip), table))
-
-  /** Immutable 128-bit LPM table: prefixes as (hi, lo, len, value) with
-    * the address as two big-endian 64-bit limbs — the same v6 walk
-    * pmacct runs in `bgp_srcdst_lookup`/`bgp_node_match_ipv6`
-    * (src/bgp/bgp_lookup.c). Per-mask-length hash maps over the masked
-    * limb pair, probed longest-first. */
-  final class Table6(prefixes: Seq[(Long, Long, Int, Long)])
-      extends Serializable {
-    val lens: Array[Int] =
-      prefixes.map(_._3).distinct.sorted(Ordering.Int.reverse).toArray
-    private val maps: Array[java.util.HashMap[(Long, Long), java.lang.Long]] =
-      lens.map { len =>
-        val m = new java.util.HashMap[(Long, Long), java.lang.Long]()
-        prefixes.filter(_._3 == len).foreach { case (hi, lo, _, v) =>
-          m.put(mask6(hi, lo, len), v)
-        }
-        m
-      }
-    private def mask6(hi: Long, lo: Long, len: Int): (Long, Long) =
-      if (len <= 0) (0L, 0L)
-      else if (len < 64) (((hi >>> (64 - len)) << (64 - len)), 0L)
-      else if (len == 64) (hi, 0L)
-      else if (len < 128) (hi, (lo >>> (128 - len)) << (128 - len))
-      else (hi, lo)
-    /** Longest-match value or Long.MinValue sentinel on miss. */
-    def lookup(hi: Long, lo: Long): Long = {
-      var i = 0
-      while (i < lens.length) {
-        val v = maps(i).get(mask6(hi, lo, lens(i)))
-        if (v != null) return v.longValue()
-        i += 1
-      }
-      Long.MinValue
-    }
-  }
+    ColumnBridge.column(LpmLookup(Seq(ColumnBridge.expression(ip)), table))
 
   /** Column API over the two-limb v6 address: matched value or NULL. */
-  def lpm6(hi: Column, lo: Column, table: Table6): Column =
-    ColumnBridge.column(LpmLookup6(ColumnBridge.expression(hi),
-      ColumnBridge.expression(lo), table))
+  def lpm6(hi: Column, lo: Column, table: Table): Column =
+    ColumnBridge.column(LpmLookup(
+      Seq(ColumnBridge.expression(hi), ColumnBridge.expression(lo)), table))
 
   /** Strategy 2: longest-match via one broadcast LEFT join per distinct
     * mask length, coalesced longest-first. `dim` must have columns
@@ -127,82 +177,58 @@ object Lpm {
   }
 }
 
-/** Native LPM expression: `child` (LongType ip) → longest-match value, NULL
-  * on miss. The table rides inside the plan (one copy per executor), and
-  * `doGenCode` keeps the lookup inside whole-stage codegen.
+/** Native LPM expression: the address columns (one LongType column for a
+  * narrow table, (hi, lo) for a 128-bit one) → longest-match value, NULL
+  * on a miss or a NULL address. The table rides inside the plan (one copy
+  * per executor), and `doGenCode` keeps the lookup inside whole-stage
+  * codegen.
   */
-case class LpmLookup(child: Expression, table: Lpm.Table)
-    extends UnaryExpression with ImplicitCastInputTypes {
+case class LpmLookup(children: Seq[Expression], table: Lpm.Table)
+    extends Expression with ImplicitCastInputTypes {
+  require(children.size == (if (table.width > 64) 2 else 1),
+    "a narrow LPM table takes one address column, a 128-bit one (hi, lo);" +
+      s" this ${table.width}-bit table got ${children.size}")
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
+  override def foldable: Boolean = children.forall(_.foldable)
   override def prettyName: String = "lpm_lookup"
   // analyzer casts narrower integral SQL literals/columns up to long
   // (type inferred: AbstractDataType is private[sql])
-  override def inputTypes = Seq(LongType)
+  override def inputTypes = children.map(_ => LongType)
 
-  protected override def nullSafeEval(ip: Any): Any = {
-    val r = table.lookup(ip.asInstanceOf[Long])
-    if (r == Long.MinValue) null else r
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
+  override def eval(input: InternalRow): Any = {
+    val args = children.map(_.eval(input))
+    if (args.contains(null)) null
+    else {
+      val a0 = args(0).asInstanceOf[Long]
+      val r = if (args.size == 1) table.lookup(a0)
+        else table.lookup(a0, args(1).asInstanceOf[Long])
+      if (r == Long.MinValue) null else r
+    }
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val tableRef = ctx.addReferenceObj("lpmTable", table,
       classOf[Lpm.Table].getName)
+    val args = children.map(_.genCode(ctx))
     // fresh local per expression instance — two lookups fused into one
     // whole-stage-codegen scope must not collide on the variable name
     val r = ctx.freshName("lpmR")
-    nullSafeCodeGen(ctx, ev, ip => s"""
-      long $r = $tableRef.lookup($ip);
-      if ($r == Long.MIN_VALUE) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = $r;
-      }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LpmLookup =
-    copy(child = newChild)
-}
-
-/** Native 128-bit LPM expression over (hi, lo) limb columns — same
-  * plan-resident-table design as [[LpmLookup]], codegen'd. */
-case class LpmLookup6(left: Expression, right: Expression,
-    table: Lpm.Table6)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ImplicitCastInputTypes {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "lpm_lookup6"
-  override def inputTypes = Seq(LongType, LongType)
-
-  protected override def nullSafeEval(hi: Any, lo: Any): Any = {
-    val r = table.lookup(hi.asInstanceOf[Long], lo.asInstanceOf[Long])
-    if (r == Long.MinValue) null else r
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("lpm6Table", table,
-      classOf[Lpm.Table6].getName)
-    val r = ctx.freshName("lpm6R")
-    nullSafeCodeGen(ctx, ev, (hi, lo) => s"""
-      long $r = $tableRef.lookup($hi, $lo);
-      if ($r == Long.MIN_VALUE) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = $r;
-      }
-    """)
+    ev.copy(code = code"""
+      ${blocksToBlock(args.map(_.code))}
+      boolean ${ev.isNull} = true;
+      long ${ev.value} = -1L;
+      if (!(${args.map(_.isNull).mkString(" || ")})) {
+        long $r = $tableRef.lookup(${args.map(_.value).mkString(", ")});
+        if ($r != Long.MIN_VALUE) {
+          ${ev.isNull} = false;
+          ${ev.value} = $r;
+        }
+      }""")
   }
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LpmLookup6 =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): LpmLookup =
+    copy(children = newChildren)
 }

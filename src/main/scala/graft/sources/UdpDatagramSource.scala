@@ -102,12 +102,8 @@ private class UdpTable(port: Int, maxBuffered: Int, numPartitions: Int,
     }
 }
 
-private case class UdpOffset(count: Long) extends Offset {
-  override def json(): String = count.toString
-}
-
-/** Per-shard datagram counts (shards > 1). Serialized as `[a,b,...]` —
-  * distinguishable from the single-socket count on deserialize. */
+/** Per-shard datagram counts, one per socket (a one-shard stream has a
+  * one-element offset). Serialized as `[a,b,...]`. */
 private case class UdpShardOffset(counts: Vector[Long]) extends Offset {
   override def json(): String = counts.mkString("[", ",", "]")
   def total: Long = counts.sum
@@ -218,28 +214,20 @@ private[sources] class UdpMicroBatchStream(port: Int, maxBuffered: Int,
   private[sources] def droppedTotal: Long = shardArr.map(_.dropped).sum
   UdpDatagramSource.registerBound(boundPort, shardArr(0).socket)
 
-  private def toCounts(o: Offset): Vector[Long] = o match {
-    case UdpOffset(c) =>
-      require(shards == 1,
-        s"single-count offset $c against a $shards-shard stream")
-      Vector(c)
-    case UdpShardOffset(cs) =>
-      require(cs.size == shards,
-        s"offset has ${cs.size} shard counts, stream has $shards")
-      cs
+  private def toCounts(o: Offset): Vector[Long] = {
+    val cs = o.asInstanceOf[UdpShardOffset].counts
+    require(cs.size == shards,
+      s"offset has ${cs.size} shard counts, stream has $shards")
+    cs
   }
 
   override def initialOffset(): Offset =
-    if (shards == 1) UdpOffset(0L)
-    else UdpShardOffset(Vector.fill(shards)(0L))
+    UdpShardOffset(Vector.fill(shards)(0L))
   override def latestOffset(): Offset =
-    if (shards == 1) UdpOffset(shardArr(0).count)
-    else UdpShardOffset(shardArr.map(_.count).toVector)
+    UdpShardOffset(shardArr.map(_.count).toVector)
   override def deserializeOffset(json: String): Offset =
-    if (json.startsWith("["))
-      UdpShardOffset(json.stripPrefix("[").stripSuffix("]")
-        .split(',').iterator.filter(_.nonEmpty).map(_.trim.toLong).toVector)
-    else UdpOffset(json.toLong)
+    UdpShardOffset(json.stripPrefix("[").stripSuffix("]")
+      .split(',').iterator.filter(_.nonEmpty).map(_.trim.toLong).toVector)
 
   /** Few sockets, many workers (the reference's collector model,
     * `src/nfacctd.c:1525` + `docs/INTERNALS:86-190`): each shard's batch

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.sources.NetFlowV9
 
@@ -9,11 +9,14 @@ import graft.sources.NetFlowV9
   * (SURVEY §3.1 "Spark shape": udpSource → decode(templateState) → ...).
   *
   * Datagrams key by exporter; the per-exporter template cache lives in
-  * `GroupState[String]` using the cache's own save/load persistence —
-  * the `nfacctd_templates_file` semantics (CONFIG-KEYS:2040-2064) land
-  * in Spark's checkpointed state store for free, so templates learned in
-  * one micro-batch decode data in every later one and survive query
-  * restarts. Compose with `UdpDatagramSource` for the live path:
+  * `transformWithState` keyed state using the cache's own save/load
+  * persistence — the `nfacctd_templates_file` semantics
+  * (CONFIG-KEYS:2040-2064) land in Spark's checkpointed state store for
+  * free, so templates learned in one micro-batch decode data in every
+  * later one and survive query restarts. Needs
+  * `spark.sql.streaming.stateStore.providerClass` =
+  * RocksDBStateStoreProvider. Compose with `UdpDatagramSource` for the
+  * live path:
   *
   * {{{
   *   val dgs = spark.readStream
@@ -21,7 +24,7 @@ import graft.sources.NetFlowV9
   *     .option("port", "9995").load()
   *     .selectExpr("exporter", "payload")
   *     .as[NetFlowStream.Datagram]
-  *   NetFlowStream.decode(dgs)   // → typed flows, then aggregate
+  *   NetFlowStream.decodeTws(dgs)   // → typed flows, then aggregate
   * }}}
   */
 object NetFlowStream {
@@ -29,33 +32,13 @@ object NetFlowStream {
   final case class Datagram(exporter: String, payload: Array[Byte])
   final case class Flow(exporter: String, fields: Map[Int, Long])
 
-  def decode(dgs: Dataset[Datagram]): Dataset[Flow] = {
-    implicit val flowEnc = Encoders.product[Flow]
-    implicit val strEnc = Encoders.STRING
-    dgs.groupByKey(_.exporter)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (ex: String, it: Iterator[Datagram], state: GroupState[String]) =>
-          val cache = new NetFlowV9.TemplateCache
-          // load() may RELEASE records: pending data-before-template sets
-          // persist in the state string alongside templates, so data that
-          // arrived in an earlier micro-batch decodes in the batch whose
-          // template finally shows up — same semantics as one long-lived
-          // in-memory TemplateCache
-          val released = state.getOption.map(cache.load).getOrElse(Nil)
-          val out = released.toIndexedSeq ++
-            it.flatMap(d => cache.observe(d.payload))
-          state.update(cache.save())
-          out.iterator.map(m => Flow(ex, m))
-      }
-  }
-
-  /** The Spark-4-native variant: `transformWithState` with the template
-    * cache in RocksDB-backed `ValueState` (requires
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider). Identical semantics to [[decode]];
-    * this is the arbitrary-state API SURVEY §2.6/§2.10 map template
-    * state and option correlation onto going forward. */
+  /** The template cache in RocksDB-backed `ValueState`: the
+    * arbitrary-state API SURVEY §2.6/§2.10 map template state and option
+    * correlation onto. `load()` may RELEASE records: pending
+    * data-before-template sets persist in the state string alongside
+    * templates, so data that arrived in an earlier micro-batch decodes in
+    * the batch whose template finally shows up — same semantics as one
+    * long-lived in-memory TemplateCache. */
   final class TemplateProcessor
       extends StatefulProcessor[String, Datagram, Flow] {
     @transient private var templates: ValueState[String] = _

@@ -528,46 +528,45 @@ object StreamingQueries {
         // maxPartitionBytes — grows with data, so at real volume this
         // widens instead of pinning to a constant), capped at the
         // session's shuffle width; restored after the query.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
         val scanParts =
           s.read.parquet(s"$d/events.parquet").rdd.getNumPartitions
-        s.conf.set("spark.sql.shuffle.partitions",
-          math.max(2, math.min(scanParts, prevParts.toInt)))
-        def src() = Tables.normalizeEventTs(
-          s.readStream.schema(schema).parquet(s"$d/events.*"))
-        // Banded range join: equality on (exporter, 10-min time band)
-        // with the option side exploded into its two candidate bands,
-        // range residual after. With only 8 exporters a bare
-        // equality-plus-range join degenerates to a per-key cross
-        // product (measured 15+ s at sf0.1); banding makes the state
-        // key fine-grained so each bucket holds a handful of rows —
-        // the same shape as the LSH banded self-join (q38). A pair
-        // matches in exactly one band, so no dedup is needed.
-        val fl = src().select(
-          (col("user_id") % 8).as("exporter"), col("ts").as("ta"),
-          expr("unix_micros(ts) div 600000000").as("band"),
-          (expr("CAST(floor(value * 1000) AS BIGINT)") + 40L)
-            .as("bytes"))
-          .withWatermark("ta", "30 minutes")
-        val opt = src().filter(col("event_type") === "signup")
-          .select((col("user_id") % 8).as("o_exporter"),
-            col("ts").as("tb"), (lit(1L) + col("user_id") % 4).as("rate"))
-          .withColumn("o_band", explode(array(
-            expr("unix_micros(tb) div 600000000"),
-            expr("unix_micros(tb) div 600000000 + 1"))))
-          .withWatermark("tb", "30 minutes")
-        val joined = fl.join(opt,
-          col("exporter") === col("o_exporter") &&
-            col("band") === col("o_band") &&
-            col("tb") <= col("ta") &&
-            col("tb") > col("ta") - expr("INTERVAL 10 MINUTES"))
-        try {
-          val q = joined.select("exporter", "bytes", "rate")
+        val parts = math.max(2, math.min(scanParts,
+          s.conf.get("spark.sql.shuffle.partitions").toInt))
+        Graft.withConf(s, "spark.sql.shuffle.partitions" -> parts.toString) {
+          def src() = Tables.normalizeEventTs(
+            s.readStream.schema(schema).parquet(s"$d/events.*"))
+          // Banded range join: equality on (exporter, 10-min time band)
+          // with the option side exploded into its two candidate bands,
+          // range residual after. With only 8 exporters a bare
+          // equality-plus-range join degenerates to a per-key cross
+          // product (measured 15+ s at sf0.1); banding makes the state
+          // key fine-grained so each bucket holds a handful of rows —
+          // the same shape as the LSH banded self-join (q38). A pair
+          // matches in exactly one band, so no dedup is needed.
+          val fl = src().select(
+            (col("user_id") % 8).as("exporter"), col("ts").as("ta"),
+            expr("unix_micros(ts) div 600000000").as("band"),
+            (expr("CAST(floor(value * 1000) AS BIGINT)") + 40L)
+              .as("bytes"))
+            .withWatermark("ta", "30 minutes")
+          val opt = src().filter(col("event_type") === "signup")
+            .select((col("user_id") % 8).as("o_exporter"),
+              col("ts").as("tb"),
+              (lit(1L) + col("user_id") % 4).as("rate"))
+            .withColumn("o_band", explode(array(
+              expr("unix_micros(tb) div 600000000"),
+              expr("unix_micros(tb) div 600000000 + 1"))))
+            .withWatermark("tb", "30 minutes")
+          val joined = fl.join(opt,
+            col("exporter") === col("o_exporter") &&
+              col("band") === col("o_band") &&
+              col("tb") <= col("ta") &&
+              col("tb") > col("ta") - expr("INTERVAL 10 MINUTES"))
+          joined.select("exporter", "bytes", "rate")
             .writeStream.format("memory").queryName(name)
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } finally
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
+            .awaitTermination()
+        }
         s.table(name).groupBy("exporter")
           .agg(count(lit(1)).as("n_pairs"),
             sum(expr("bytes * rate")).as("renorm_bytes"))

@@ -33,7 +33,7 @@ class EnrichSpec extends AnyFunSuite {
 
   test("Table6: masks straddling the 64-bit limb boundary, longest-first") {
     val base = 0x2001L << 48
-    val t6 = new Lpm.Table6(Seq(
+    val t6 = Lpm.Table.v6(Seq(
       (base, 0L, 16, 1L),                       // /16 default-ish
       (base | (5L << 40), 0L, 24, 2L),          // /24 inside hi
       (base | (5L << 40), 0L, 64, 3L),          // exactly one limb
@@ -55,7 +55,7 @@ class EnrichSpec extends AnyFunSuite {
 
   test("LpmLookup6 expression: codegen matches table lookup") {
     val base = 0x2001L << 48
-    val t6 = new Lpm.Table6(Seq(
+    val t6 = Lpm.Table.v6(Seq(
       (base, 0L, 24, 10L), (base, 0xFF00L << 48, 72, 20L)))
     val rows = Seq((base, 0xFF00L << 48), (base | 1L, 0L),
       (0x3001L << 48, 0L))
@@ -81,6 +81,82 @@ class EnrichSpec extends AnyFunSuite {
     val viaExpr = ips.withColumn("asn", Lpm.lpm(col("ip"), t))
       .select("ip", "asn").as[(Long, Option[Long])].collect().toMap
     assert(viaJoin == viaExpr)
+  }
+
+  /** Longest match by linear scan over (key, len, value) with keys as
+    * unsigned `bits`-wide integers: a repeated (key, len) keeps its last
+    * value; None on a miss. */
+  private def bruteForce(bits: Int, table: Seq[(BigInt, Int, Long)],
+                         addr: BigInt): Option[Long] =
+    if (addr < 0 || addr >= (BigInt(1) << bits)) None
+    else table.zipWithIndex
+      .filter { case ((k, len, _), _) =>
+        (k >> (bits - len)) == (addr >> (bits - len)) }
+      .maxByOption { case ((_, len, _), i) => (len, i) }
+      .map(_._1._3)
+
+  test("property: Table equals a brute-force longest-match scan") {
+    val rnd = new java.util.SplittableRandom(20261017L)
+    def u64(x: Long) = BigInt(x) & ((BigInt(1) << 64) - 1)
+    def got(r: Long) = if (r == Long.MinValue) None else Some(r)
+    for (width <- Seq(16, 17, 32); seed <- 0 until 20) {
+      val n = 1 + rnd.nextInt(40)
+      val ps = (0 until n).map { _ =>
+        val len = rnd.nextInt(width + 1)
+        val base = rnd.nextLong(1L << width)
+        (base, len, rnd.nextLong(1000L))
+      }
+      // repeated prefixes with a fresh value: the last one wins
+      val withDups = ps ++ ps.take(3).map { case (b, l, _) => (b, l, 7777L) }
+      val t = new Lpm.Table(width, withDups)
+      val spec = withDups.map { case (b, l, v) => (BigInt(b), l, v) }
+      val near = withDups.map { case (b, l, _) =>
+        b + rnd.nextLong(1L << (width - l)) }
+      val addrs = near ++ Seq.fill(40)(rnd.nextLong(1L << width)) ++
+        Seq(0L, (1L << width) - 1, 1L << width, (1L << width) + near.head,
+          -1L, -near.head - 1, Long.MinValue, Long.MaxValue)
+      addrs.foreach { a =>
+        assert(got(t.lookup(a)) == bruteForce(width, spec, BigInt(a)),
+          s"width $width seed $seed addr $a")
+      }
+    }
+    // 128-bit form: lengths cluster around the limb boundary
+    val lens6 = Seq(0, 1, 16, 24, 48, 63, 64, 65, 72, 96, 127, 128)
+    for (seed <- 0 until 20) {
+      val ps = (0 until 1 + rnd.nextInt(40)).map { _ =>
+        (rnd.nextLong(), rnd.nextLong(),
+          lens6(rnd.nextInt(lens6.size)), rnd.nextLong(1000L))
+      }
+      val t = Lpm.Table.v6(ps)
+      val spec = ps.map { case (h, l, len, v) =>
+        ((u64(h) << 64) | u64(l), len, v) }
+      // flip one bit just past (or inside) a prefix to probe both sides
+      val addrs = ps.flatMap { case (h, l, len, _) =>
+        val bit = math.min(127, len + rnd.nextInt(3) - 1).max(0)
+        val flipped = if (bit < 64) (h ^ (1L << (63 - bit)), l)
+          else (h, l ^ (1L << (127 - bit)))
+        Seq((h, l), flipped)
+      } ++ Seq.fill(20)((rnd.nextLong(), rnd.nextLong()))
+      addrs.foreach { case (h, l) =>
+        assert(got(t.lookup(h, l)) ==
+          bruteForce(128, spec, (u64(h) << 64) | u64(l)),
+          s"v6 seed $seed addr ($h, $l)")
+      }
+    }
+  }
+
+  test("Table rejects prefixes outside its address space") {
+    Seq((1L << 16, 1), (0L, 17), (-1L, 4)).foreach { case (base, len) =>
+      intercept[IllegalArgumentException](
+        new Lpm.Table(16, Seq((base, len, 1L))))
+    }
+    intercept[IllegalArgumentException](
+      Lpm.Table.v6(Seq((0L, 0L, 129, 1L))))
+    // a narrow table takes one address column, a 128-bit one two
+    val t6 = Lpm.Table.v6(Seq((0L, 0L, 0, 1L)))
+    intercept[IllegalArgumentException](Lpm.lpm(col("ip"), t6))
+    intercept[IllegalArgumentException](
+      Lpm.lpm6(col("hi"), col("lo"), new Lpm.Table(16, prefixes)))
   }
 
   test("keyed LPM over (peer, ip) product space isolates peers") {

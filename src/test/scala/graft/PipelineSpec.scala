@@ -66,9 +66,9 @@ class PipelineSpec extends AnyFunSuite {
     val ex = intercept[Exception](
       spark.sql("SELECT graft_lpm(1, 'nope')").collect())
     assert(ex.getMessage.contains("no LPM table registered"))
-    // v6 two-limb variant through SQL
-    GraftFunctions.registerLpm6Table("spec_nets6",
-      new Lpm.Table6(Seq((0x2001L << 48, 0L, 24, 88L))))
+    // v6 two-limb spelling of the same function, one registry
+    GraftFunctions.registerLpmTable("spec_nets6",
+      Lpm.Table.v6(Seq((0x2001L << 48, 0L, 24, 88L))))
     val r6 = spark.sql(
       s"""SELECT graft_lpm6(${(0x2001L << 48) + 5}, 7, 'spec_nets6') AS hit,
           graft_lpm6(${0x3001L << 48}, 0, 'spec_nets6') AS miss""")
@@ -93,6 +93,36 @@ class PipelineSpec extends AnyFunSuite {
       spark.sql("SELECT misra_gries(id, 3) FROM VALUES (1), (2) AS v(id)")
         .collect())
     assert(mistyped.getMessage.toLowerCase.contains("type"))
+  }
+
+  test("literal arguments: NULL or non-integer literals name the argument") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import graft.functions.GraftFunctions
+    val build = GraftFunctions.builders.toMap
+    val v = Literal(1)
+    def rejects(fn: String, args: Expression*)(named: String) = {
+      val ex = intercept[IllegalArgumentException](build(fn)(args))
+      assert(ex.getMessage.contains(named), ex.getMessage)
+    }
+    rejects("graft_pq_codes", v, v, Literal(null))("graft_pq_codes sub")
+    rejects("graft_pq_codes", v, v, Literal(1.5))("graft_pq_codes sub")
+    rejects("graft_opq_codes", v, v, Literal("two"))("graft_opq_codes msub")
+    rejects("hll_distinct", v, Literal(null))("hll_distinct p")
+    rejects("qdigest_quantile", v, Literal("median"), Literal(8))(
+      "qdigest_quantile q")
+    // the LPM table name goes through the same literal helper
+    rejects("graft_lpm", v, Literal(null))("LPM table name")
+    rejects("graft_lpm6", v, v, Literal(null))("LPM table name")
+    // and the SQL surface reports the argument by name
+    val sqlEx = intercept[Exception](
+      spark.sql("SELECT graft_pq_codes(array(1.0D), array(array(1.0D)), " +
+        "CAST(NULL AS INT))").collect())
+    assert(sqlEx.getMessage.contains("graft_pq_codes sub must not be NULL"),
+      sqlEx.getMessage)
+    val nonLit = intercept[Exception](spark.sql(
+      "SELECT graft_lpm(1, name) FROM VALUES ('spec_nets') AS v(name)")
+      .collect())
+    assert(nonLit.getMessage.contains("LPM table name must be a literal"))
   }
 
   test("typed Dataset[FlowRecord] round-trips the flow view") {

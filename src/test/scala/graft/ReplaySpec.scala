@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Graft
+
 /** Replay/savefile source (SURVEY §2.1 `pcap_savefile_replay` /
   * `pcap_savefile_delay`, CONFIG-KEYS:484-524): the engine's replay knob
   * is the file stream source's `maxFilesPerTrigger` — each trigger
@@ -113,6 +115,9 @@ class ReplaySpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   test("streaming template state survives micro-batches (nfacctd shape)") {
     import graft.sources.NetFlowV9
     import graft.streaming.NetFlowStream
@@ -122,25 +127,27 @@ class ReplaySpec extends AnyFunSuite {
     val h = NetFlowV9.V9Header(0L, 0L, 0L, 9L)
     def data(vals: Seq[Long]) = NetFlowV9.encodeData(h, t,
       vals.map(v => Map(IE.Protocol -> 6L, IE.InBytes -> v)))
-    val mem = MemoryStream[NetFlowStream.Datagram](spark)
-    val q = NetFlowStream.decode(mem.toDS())
-      .writeStream.format("memory").queryName("nf_stream")
-      .outputMode("append").start()
-    try {
-      // batch 1: template + first data
-      mem.addData(
-        NetFlowStream.Datagram("ex1", NetFlowV9.encodeTemplate(h, t)),
-        NetFlowStream.Datagram("ex1", data(Seq(10L, 20L))))
-      q.processAllAvailable()
-      // batch 2: DATA ONLY — decodes because the template persisted in
-      // the state store across micro-batches
-      mem.addData(NetFlowStream.Datagram("ex1", data(Seq(30L, 40L))))
-      q.processAllAvailable()
-      val vals = spark.table("nf_stream")
-        .selectExpr(s"fields[${IE.InBytes}] as b")
-        .as[Long].collect().sorted.toSeq
-      assert(vals == Seq(10L, 20L, 30L, 40L))
-    } finally q.stop()
+    Graft.withConf(spark, RocksDb) {
+      val mem = MemoryStream[NetFlowStream.Datagram](spark)
+      val q = NetFlowStream.decodeTws(mem.toDS())
+        .writeStream.format("memory").queryName("nf_stream")
+        .outputMode("append").start()
+      try {
+        // batch 1: template + first data
+        mem.addData(
+          NetFlowStream.Datagram("ex1", NetFlowV9.encodeTemplate(h, t)),
+          NetFlowStream.Datagram("ex1", data(Seq(10L, 20L))))
+        q.processAllAvailable()
+        // batch 2: DATA ONLY — decodes because the template persisted in
+        // the state store across micro-batches
+        mem.addData(NetFlowStream.Datagram("ex1", data(Seq(30L, 40L))))
+        q.processAllAvailable()
+        val vals = spark.table("nf_stream")
+          .selectExpr(s"fields[${IE.InBytes}] as b")
+          .as[Long].collect().sorted.toSeq
+        assert(vals == Seq(10L, 20L, 30L, 40L))
+      } finally q.stop()
+    }
   }
 
   test("transformWithState template decode matches (RocksDB state)") {
@@ -148,11 +155,7 @@ class ReplaySpec extends AnyFunSuite {
     import graft.streaming.NetFlowStream
     import NetFlowV9.IE
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    Graft.withConf(spark, RocksDb) {
       val t = NetFlowV9.Template(511,
         Seq(IE.Protocol -> 1, IE.InBytes -> 4))
       val h = NetFlowV9.V9Header(0L, 0L, 0L, 9L)
@@ -174,11 +177,6 @@ class ReplaySpec extends AnyFunSuite {
           .as[Long].collect().sorted.toSeq
         assert(vals == Seq(5L, 6L, 7L))
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 

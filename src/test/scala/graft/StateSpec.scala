@@ -178,6 +178,31 @@ class StateSpec extends AnyFunSuite {
     assert(t.lookup(40000L) == 999L)  // default route fallback
   }
 
+  test("withConf restores every touched key when the body throws") {
+    import graft.core.Graft
+    val setKey = "spark.sql.shuffle.partitions"
+    val unsetSql = "spark.sql.adaptive.optimizer.excludedRules"
+    val unsetCustom = "spark.graft.test.withConf"
+    spark.conf.set(setKey, spark.conf.get(setKey)) // explicitly set
+    spark.conf.unset(unsetSql)
+    val before = spark.conf.getAll
+    assert(before.contains(setKey))
+    assert(!before.contains(unsetSql) && !before.contains(unsetCustom))
+    val ex = intercept[IllegalStateException] {
+      Graft.withConf(spark, setKey -> "3", unsetSql -> "x.Rule",
+          unsetCustom -> "on") {
+        assert(spark.conf.get(setKey) == "3")
+        assert(spark.conf.get(unsetSql) == "x.Rule")
+        assert(spark.conf.get(unsetCustom) == "on")
+        throw new IllegalStateException("lane failed")
+      }
+    }
+    assert(ex.getMessage == "lane failed")
+    val after = spark.conf.getAll
+    Seq(setKey, unsetSql, unsetCustom).foreach(k =>
+      assert(after.get(k) == before.get(k), k))
+  }
+
   test("ImtStore groups duplicate keys within the very first batch") {
     val store = new ImtStore(spark, "imt_test3", Seq("k"), Seq("n"))
     store.upsert(Seq(("a", 1L), ("a", 2L), ("b", 4L)).toDF("k", "n"))

@@ -22,7 +22,7 @@ class UdpPartitionSpec extends AnyFunSuite {
 
   private def awaitCount(st: UdpMicroBatchStream, n: Long): Unit = {
     val deadline = System.currentTimeMillis() + 15000
-    while (st.latestOffset().asInstanceOf[UdpOffset].count < n &&
+    while (st.latestOffset().asInstanceOf[UdpShardOffset].total < n &&
            System.currentTimeMillis() < deadline) Thread.sleep(20)
   }
 
@@ -37,8 +37,8 @@ class UdpPartitionSpec extends AnyFunSuite {
       socks.foreach(_.close())
       awaitCount(st, 30)
       val end = st.latestOffset()
-      assert(end.asInstanceOf[UdpOffset].count == 30)
-      val parts = st.planInputPartitions(UdpOffset(0), end)
+      assert(end.asInstanceOf[UdpShardOffset].total == 30)
+      val parts = st.planInputPartitions(UdpShardOffset(Vector(0L)), end)
         .map(_.asInstanceOf[UdpPartition])
       assert(parts.length > 1, "batch must fan out across partitions")
       assert(parts.map(_.rows.length).sum == 30)
@@ -94,7 +94,8 @@ class UdpPartitionSpec extends AnyFunSuite {
       // a checkpoint written by a 1-socket incarnation cannot be
       // reinterpreted against a sharded group — fail fast, not guess
       intercept[IllegalArgumentException] {
-        st.planInputPartitions(UdpOffset(0), st.latestOffset())
+        st.planInputPartitions(UdpShardOffset(Vector(0L)),
+          st.latestOffset())
       }
       // and a count-vector of the wrong width is equally fatal
       intercept[IllegalArgumentException] {
@@ -110,10 +111,12 @@ class UdpPartitionSpec extends AnyFunSuite {
       // a checkpoint from a previous incarnation would resume past the
       // fresh stream's empty buffer — that must throw, not return []
       intercept[IllegalStateException] {
-        st.planInputPartitions(UdpOffset(10), UdpOffset(20))
+        st.planInputPartitions(UdpShardOffset(Vector(10L)),
+          UdpShardOffset(Vector(20L)))
       }
       // and the empty [0,0) slice of a fresh stream is legitimately empty
-      assert(st.planInputPartitions(UdpOffset(0), UdpOffset(0)).isEmpty)
+      assert(st.planInputPartitions(UdpShardOffset(Vector(0L)),
+        UdpShardOffset(Vector(0L))).isEmpty)
     } finally st.stop()
   }
 }
