@@ -107,16 +107,16 @@ object PlanAudit {
   }
 
   /** True iff a BNLJ build-side subtree is the model shape: unwraps
-    * exchanges / codegen / AQE wrappers / projections down to the
-    * first substantive node, which must be a global aggregate (the
-    * one-row collect_list codebook), driver literals, or a reuse of
-    * an exchange already built elsewhere in the same plan. */
+    * exchanges (a reused one through to the exchange it re-reads) /
+    * codegen / AQE wrappers / projections down to the first
+    * substantive node, which must be a global aggregate (the one-row
+    * collect_list codebook) or driver literals. */
   def isModelBuild(p: org.apache.spark.sql.execution.SparkPlan)
       : Boolean = {
     import org.apache.spark.sql.execution._
     p match {
       case e: exchange.BroadcastExchangeExec => isModelBuild(e.child)
-      case _: exchange.ReusedExchangeExec => true
+      case r: exchange.ReusedExchangeExec => isModelBuild(r.child)
       case w: WholeStageCodegenExec => isModelBuild(w.child)
       case i: InputAdapter => isModelBuild(i.child)
       case q: adaptive.QueryStageExec => isModelBuild(q.plan)

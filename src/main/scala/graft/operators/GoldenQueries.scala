@@ -1766,9 +1766,10 @@ object GoldenReplay {
 
   /** Decode every `traffic-*.pcap` of a reference test directory. One task
     * per savefile (binaryFile source) — the per-exporter-socket sharding a
-    * real collector has; template state is per (exporter, observation
-    * domain) in arrival order, like the reference's template cache keying
-    * (src/nfv9_template.c); VRF/RD option maps are per exporter. */
+    * real collector has; one template cache per exporter, fed in arrival
+    * order, scopes templates by observation domain like the reference's
+    * template cache keying (src/nfv9_template.c); VRF/RD option maps are
+    * per exporter. */
   def decode(s: SparkSession, testDir: String,
              peerMap: Map[String, String],
              bgpRibs: Map[String, BmpRibLookup] = Map.empty)
@@ -1779,7 +1780,7 @@ object GoldenReplay {
       .select("content").as[Array[Byte]]
       .flatMap { bytes =>
         val sf = Pcap.read(bytes)
-        val caches = mutable.Map[(String, Long), NetFlowV9.TemplateCache]()
+        val caches = mutable.Map[String, NetFlowV9.TemplateCache]()
         val vrf = mutable.Map[String, VrfState]()
         sf.packets.flatMap { p =>
           udpPayload(p.data, sf.linkType) match {
@@ -1789,14 +1790,11 @@ object GoldenReplay {
               if (ver != 9 && ver != 10) Nil
               else {
                 val buf = ByteBuffer.wrap(pay)
-                val (sysUp, unixSecs, domain) =
+                val (sysUp, unixSecs) =
                   if (ver == 9)
-                    (buf.getInt(4) & 0xffffffffL, buf.getInt(8) & 0xffffffffL,
-                      buf.getInt(16) & 0xffffffffL)
-                  else
-                    (0L, buf.getInt(4) & 0xffffffffL,
-                      buf.getInt(12) & 0xffffffffL)
-                val cache = caches.getOrElseUpdate((src, domain),
+                    (buf.getInt(4) & 0xffffffffL, buf.getInt(8) & 0xffffffffL)
+                  else (0L, buf.getInt(4) & 0xffffffffL)
+                val cache = caches.getOrElseUpdate(src,
                   new NetFlowV9.TemplateCache)
                 val st = vrf.getOrElseUpdate(src, new VrfState)
                 val peer = peerMap.getOrElse(src, src)

@@ -1336,7 +1336,8 @@ object ProtocolQueries {
             flushBatch()
             // receiver feed: A re-encodes its cache; B drains on it
             val feed = a.templatesSnapshot.map(t =>
-              NetFlowV9.encodeTemplateIpfixX(h, t))
+              NetFlowV9.encodeTemplateIpfixX(
+                h.copy(sourceId = t.domain), t.template))
             val bAfter = feed.flatMap(b.observeX)
             Iterator((ex, aN, bBefore, bAfter.size.toLong, aBytes,
               bAfter.map(m => m(IE.InBytes.toLong).asInstanceOf[Long]).sum))

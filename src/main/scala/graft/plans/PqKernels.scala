@@ -42,16 +42,22 @@ import org.apache.spark.sql.types._
   *    permutation scatters a subspace's dims across v; distance
   *    gathers v[pos] per carried position.
   *
-  * Parity with the HOF spelling is exact, including the null/shape
-  * edge semantics the lambda forms imply: a codebook entry whose
-  * centroid array mismatches the slice length (zip_with null-pads →
-  * null distance), contains a null cell, or gathers an out-of-range
-  * position contributes a NULL distance in the HOF form, and
+  * Parity with the HOF spelling holds for every non-null vector of the
+  * lane's dimension, including the null/shape edge semantics the
+  * lambda forms imply: a codebook entry whose centroid array
+  * mismatches the slice length (zip_with null-pads → null distance),
+  * contains a null cell, or gathers an out-of-range position
+  * contributes a NULL distance in the HOF form, and
   * `CASE WHEN null THEN … ELSE acc` keeps the accumulator — here such
   * entries are skipped, which is the same outcome. A subspace with no
   * entries returns the init bc (Long.MaxValue) in both spellings.
-  * Proven cell-for-cell by PqKernelsSpec on engineered exact ties plus
-  * a seeded random corpus, and end-to-end by the 343-query oracle.
+  * Two inputs differ: a NULL vector yields NULL (the HOF: its init
+  * sentinel), so a downstream posexplode drops the row; and a vector
+  * shorter than 64 dims yields fewer PqCodes codes (the lanes' HOF
+  * iterated a fixed 64/sub subspaces, padding with the sentinel).
+  * Proven cell-for-cell by PqKernelsSpec (which pins the NULL result)
+  * on engineered exact ties plus a seeded random corpus, and
+  * end-to-end by the 343-query oracle.
   */
 object PqKernels {
 

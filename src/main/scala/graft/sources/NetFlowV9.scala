@@ -6,9 +6,9 @@ import scala.collection.mutable
 /** NetFlow v9 / IPFIX (v10) template-based codec with a per-exporter
   * template cache —
   * the stateful decode the reference keeps in `nfv9_template.c` (learned
-  * per (exporter, template-id) layouts; data arriving before its template
-  * is held, not dropped, mirroring nfacctd's buffering choice;
-  * SURVEY §2.10 "template state", §7 hard part (c)).
+  * per (exporter, observation domain, template id) layouts; data arriving
+  * before its template is held, not dropped, mirroring nfacctd's
+  * buffering choice; SURVEY §2.10 "template state", §7 hard part (c)).
   *
   * Wire formats (public): RFC 3954 v9 — 20-byte header, template flowset
   * id 0; RFC 7011 IPFIX — 16-byte header (version 10, total length),
@@ -18,10 +18,11 @@ import scala.collection.mutable
   * 8 bytes decode big-endian into Long. One cache instance decodes a mixed
   * v9/IPFIX datagram stream (nfacctd accepts both concurrently, §2.8).
   *
-  * In the engine the cache lives inside keyed state (one key per
-  * exporter — `flatMapGroups`/`transformWithState`), so template state
-  * partitions with its exporter and survives checkpointing; q57 drives
-  * exactly that shape in batch.
+  * In the engine the cache lives inside keyed state, one key per
+  * exporter: `NetFlowStream.decodeTws` keeps its [[NetFlowV9.CacheState]]
+  * in a `transformWithState` ValueState, so template state partitions
+  * with its exporter and survives checkpointing; q57 drives exactly that
+  * shape in batch.
   */
 object NetFlowV9 {
   val HeaderLen = 20
@@ -286,28 +287,44 @@ object NetFlowV9 {
   final case class V9Header(sysUptimeMs: Long, unixSecs: Long,
                             sequence: Long, sourceId: Long)
 
-  /** Per-exporter template cache + data-before-template buffer. One
-    * instance per exporter key; feed datagrams in arrival order. */
+  /** Template scope inside one exporter — pmacct's template key minus
+    * the exporter address (`src/nfv9_template.h:311-325`): the header's
+    * observation domain (v9 source id, IPFIX domain id) + template id. */
+  final case class TemplateKey(domain: Long, id: Int)
+  final case class ScopedTemplate(domain: Long, template: TemplateX)
+  /** A data set held until its template arrives, with the record budget
+    * from its datagram header. */
+  final case class PendingSet(key: TemplateKey, budget: Int,
+                              body: Array[Byte])
+  /** One cache's persistent state — the `nfacctd_templates_file` content
+    * (CONFIG-KEYS:2040-2064) plus the data-before-template buffer — as
+    * one `Encoders.product` value. */
+  final case class CacheState(templates: Seq[ScopedTemplate],
+                              pending: Seq[PendingSet])
+
+  /** Fixed-numeric view of a [[DecodedX]] record: standard-IE Long values
+    * only (the API the fixed-template queries consume). */
+  def numeric(m: DecodedX): Decoded =
+    m.collect { case (k, v: Long) if k <= 0xffffL => k.toInt -> v }
+
+  /** Per-exporter template cache + data-before-template buffer, scoped by
+    * [[TemplateKey]]. One instance per exporter; feed datagrams in arrival
+    * order. */
   final class TemplateCache {
-    private val templates = mutable.Map[Int, TemplateX]()
-    /** (set body, record budget from its datagram header) per template. */
+    private val templates = mutable.Map[TemplateKey, TemplateX]()
     private val pending =
-      mutable.Map[Int, mutable.Buffer[(Array[Byte], Int)]]()
+      mutable.Map[TemplateKey, mutable.Buffer[PendingSet]]()
     /** Datagrams discarded (runt / wrong version) or cut short mid-set —
       * the reference's tot_bad_datagrams health counter
-      * (`src/xflow_status.h:106`). Session-local, NOT persisted by
-      * save/load: a restart resets health accounting, matching the
-      * reference's in-memory xflow_status table. */
+      * (`src/xflow_status.h:106`). Session-local, NOT part of [[state]]:
+      * a restart resets health accounting, matching the reference's
+      * in-memory xflow_status table. */
     private var bad = 0L
     def badDatagrams: Long = bad
 
-    /** Fixed-numeric view of [[observeX]]: standard-IE Long values only
-      * (the API the fixed-template queries consume). */
+    /** Fixed-numeric view of [[observeX]]. */
     def observe(datagram: Array[Byte]): Seq[Decoded] =
-      observeX(datagram).map(toNumeric)
-
-    private def toNumeric(m: DecodedX): Decoded =
-      m.collect { case (k, v: Long) if k <= 0xffffL => k.toInt -> v }
+      observeX(datagram).map(numeric)
 
     /** one (PEN-capable) template field spec, 4 or 8 bytes */
     private def readSpec(buf: ByteBuffer, ipfix: Boolean): FieldSpec = {
@@ -334,6 +351,7 @@ object NetFlowV9 {
       // thrown (tot_bad_datagrams accounting, src/xflow_status.h:106 —
       // one bad packet must not fail a collector task)
       if (datagram.length < headerLen) { bad += 1; return Seq.empty }
+      val domain = buf.getInt(if (ipfix) 12 else 16) & 0xffffffffL
       // v9's header count caps decoded records — the only way to tell a
       // trailing 2-byte pad from a phantom 2-byte record (RFC 3954 count
       // covers template + data records in the packet)
@@ -355,7 +373,7 @@ object NetFlowV9 {
             val tid = buf.getShort() & 0xffff
             val n = buf.getShort() & 0xffff
             val fields = (0 until n).map(_ => readSpec(buf, ipfix))
-            register(TemplateX(tid, fields), out)
+            register(domain, TemplateX(tid, fields), out)
             budget -= 1
           }
         } else if (!ipfix && setId == 1) {
@@ -367,7 +385,7 @@ object NetFlowV9 {
             val optBytes = buf.getShort() & 0xffff
             val n = (scopeBytes + optBytes) / 4
             val fields = (0 until n).map(_ => readSpec(buf, ipfix))
-            register(TemplateX(tid, fields, scopeBytes / 4), out)
+            register(domain, TemplateX(tid, fields, scopeBytes / 4), out)
             budget -= 1
           }
         } else if (ipfix && setId == 3) {
@@ -378,21 +396,13 @@ object NetFlowV9 {
             val n = buf.getShort() & 0xffff
             val scopeN = buf.getShort() & 0xffff
             val fields = (0 until n).map(_ => readSpec(buf, ipfix))
-            register(TemplateX(tid, fields, scopeN), out)
+            register(domain, TemplateX(tid, fields, scopeN), out)
           }
         } else if (setId >= 256) {
           val body = new Array[Byte](setEnd - buf.position())
           buf.get(body)
-          templates.get(setId) match {
-            case Some(t) =>
-              val decoded = decodeBody(t, body, budget)
-              budget -= decoded.size
-              out ++= decoded
-            case None =>
-              val q = pending.getOrElseUpdate(setId, mutable.Buffer())
-              q += ((body, budget))
-              if (q.size > MaxPendingPerTemplate) q.remove(0) // drop oldest
-          }
+          budget -= dataSet(PendingSet(TemplateKey(domain, setId), budget,
+            body), out)
         }
         buf.position(setEnd)
         } catch {
@@ -407,13 +417,29 @@ object NetFlowV9 {
       out.toSeq
     }
 
-    private def register(t: TemplateX,
+    private def register(domain: Long, t: TemplateX,
                          out: mutable.Buffer[DecodedX]): Unit = {
-      templates(t.id) = t
-      pending.remove(t.id).foreach(_.foreach { case (b, cap) =>
-        out ++= decodeBody(t, b, cap)
-      })
+      val key = TemplateKey(domain, t.id)
+      templates(key) = t
+      pending.remove(key).foreach(_.foreach(p =>
+        out ++= decodeBody(t, p.body, p.budget)))
     }
+
+    /** Decodes a data set now if its template is known, else buffers it
+      * (oldest dropped past [[MaxPendingPerTemplate]]); returns the
+      * number of records decoded. */
+    private def dataSet(p: PendingSet, out: mutable.Buffer[DecodedX]): Int =
+      templates.get(p.key) match {
+        case Some(t) =>
+          val decoded = decodeBody(t, p.body, p.budget)
+          out ++= decoded
+          decoded.size
+        case None =>
+          val q = pending.getOrElseUpdate(p.key, mutable.Buffer())
+          q += p
+          if (q.size > MaxPendingPerTemplate) q.remove(0)
+          0
+      }
 
     private def decodeBody(t: TemplateX, body: Array[Byte],
                            cap: Int): Seq[DecodedX] = {
@@ -487,73 +513,27 @@ object NetFlowV9 {
       out.toSeq
     }
 
-    def knownTemplates: Set[Int] = templates.keySet.toSet
-
-    /** Snapshot of the registered templates — the export side of
-      * `nfacctd_templates_receiver` (CONFIG-KEYS): a collector
-      * re-encodes its cache as template-only datagrams for other
-      * collectors, so a restarted/template-less peer can decode data
-      * it buffered before any exporter re-sent templates. */
-    def templatesSnapshot: Seq[TemplateX] = templates.values.toSeq
+    /** Snapshot of the registered templates with their domains — the
+      * export side of `nfacctd_templates_receiver` (CONFIG-KEYS): a
+      * collector re-encodes its cache as template-only datagrams for
+      * other collectors, so a restarted/template-less peer can decode
+      * data it buffered before any exporter re-sent templates. */
+    def templatesSnapshot: Seq[ScopedTemplate] =
+      templates.map { case (k, t) => ScopedTemplate(k.domain, t) }.toSeq
     def pendingSets: Int = pending.valuesIterator.map(_.size).sum
 
-    /** Persist learned templates (nfacctd_templates_file,
-      * CONFIG-KEYS:2040-2064): survive a collector restart without
-      * waiting for template refresh. Line format:
-      * `id|scopeCount|type:len:pen,type:len:pen,...`.
-      *
-      * Data-before-template sets still pending are persisted too
-      * (`P|setId|budget|base64(body)` lines AFTER the templates), so a
-      * template arriving in a LATER micro-batch releases data buffered in
-      * an earlier one — streaming state keeps the full in-memory
-      * TemplateCache semantics, not just the template map. */
-    def save(): String = {
-      val ts = templates.values.toSeq.sortBy(_.id).map { t =>
-        s"${t.id}|${t.scopeCount}|${t.fields
-          .map(f => s"${f.tp}:${f.len}:${f.pen}").mkString(",")}"
-      }
-      val b64 = java.util.Base64.getEncoder
-      val ps = pending.toSeq.sortBy(_._1).flatMap { case (sid, q) =>
-        q.map { case (body, cap) =>
-          s"P|$sid|$cap|${b64.encodeToString(body)}"
-        }
-      }
-      (ts ++ ps).mkString("\n")
-    }
+    /** The cache's persistent state; [[restore]] brings it back. */
+    def state: CacheState =
+      CacheState(templatesSnapshot, pending.values.flatten.toSeq)
 
-    /** Returns any buffered data records the loaded templates release
-      * (numeric view; use [[loadX]] for vlen/PEN payloads). */
-    def load(persisted: String): Seq[Decoded] = loadX(persisted).map(toNumeric)
-
-    def loadX(persisted: String): Seq[DecodedX] = {
+    /** Re-registers the templates of `s` (releasing any data this cache
+      * already buffered for them), then replays its pending sets: a set
+      * whose template is now known decodes, the rest buffer again.
+      * Returns the released records. */
+    def restore(s: CacheState): Seq[DecodedX] = {
       val out = mutable.Buffer[DecodedX]()
-      val b64 = java.util.Base64.getDecoder
-      persisted.linesIterator.filter(_.nonEmpty).foreach { line =>
-        if (line.startsWith("P|")) {
-          // buffered data-before-template set: template lines come first
-          // in save() order, so if its template is now known it decodes
-          // immediately; otherwise it re-enters the pending buffer
-          val Array(_, sid, cap, body) = line.split("\\|", 4)
-          val setId = sid.toInt
-          val bytes = b64.decode(body)
-          templates.get(setId) match {
-            case Some(t) => out ++= decodeBody(t, bytes, cap.toInt)
-            case None =>
-              val q = pending.getOrElseUpdate(setId, mutable.Buffer())
-              q += ((bytes, cap.toInt))
-              if (q.size > MaxPendingPerTemplate) q.remove(0)
-          }
-        } else {
-          val Array(id, sc, fields) = line.split("\\|", 3)
-          val t = TemplateX(id.toInt,
-            fields.split(",").toIndexedSeq.map { f =>
-              val parts = f.split(":")
-              FieldSpec(parts(0).toInt, parts(1).toInt,
-                if (parts.length > 2) parts(2).toLong else 0L)
-            }, sc.toInt)
-          register(t, out)
-        }
-      }
+      s.templates.foreach(t => register(t.domain, t.template, out))
+      s.pending.foreach(dataSet(_, out))
       out.toSeq
     }
   }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.sources.NetFlowV9
@@ -9,11 +10,12 @@ import graft.sources.NetFlowV9
   * (SURVEY §3.1 "Spark shape": udpSource → decode(templateState) → ...).
   *
   * Datagrams key by exporter; the per-exporter template cache lives in
-  * `transformWithState` keyed state using the cache's own save/load
-  * persistence — the `nfacctd_templates_file` semantics
+  * `transformWithState` keyed state as one typed
+  * [[NetFlowV9.CacheState]] — the `nfacctd_templates_file` semantics
   * (CONFIG-KEYS:2040-2064) land in Spark's checkpointed state store for
   * free, so templates learned in one micro-batch decode data in every
-  * later one and survive query restarts. Needs
+  * later one and survive query restarts. Templates are scoped by
+  * observation domain inside the exporter. Needs
   * `spark.sql.streaming.stateStore.providerClass` =
   * RocksDBStateStoreProvider. Compose with `UdpDatagramSource` for the
   * live path:
@@ -32,27 +34,33 @@ object NetFlowStream {
   final case class Datagram(exporter: String, payload: Array[Byte])
   final case class Flow(exporter: String, fields: Map[Int, Long])
 
+  /** Derived and resolved once per JVM: `getValueState` in every task's
+    * `init` would otherwise build and resolve the nested encoder again,
+    * which is measurable per micro-batch. */
+  private lazy val stateEncoder: Encoder[NetFlowV9.CacheState] =
+    ExpressionEncoder[NetFlowV9.CacheState]().resolveAndBind()
+
   /** The template cache in RocksDB-backed `ValueState`: the
     * arbitrary-state API SURVEY §2.6/§2.10 map template state and option
-    * correlation onto. `load()` may RELEASE records: pending
-    * data-before-template sets persist in the state string alongside
-    * templates, so data that arrived in an earlier micro-batch decodes in
-    * the batch whose template finally shows up — same semantics as one
-    * long-lived in-memory TemplateCache. */
+    * correlation onto. `restore` may RELEASE records: pending
+    * data-before-template sets persist in the state alongside templates,
+    * so data that arrived in an earlier micro-batch decodes in the batch
+    * whose template finally shows up — same semantics as one long-lived
+    * in-memory TemplateCache. */
   final class TemplateProcessor
       extends StatefulProcessor[String, Datagram, Flow] {
-    @transient private var templates: ValueState[String] = _
+    @transient private var state: ValueState[NetFlowV9.CacheState] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      templates = getHandle.getValueState[String](
-        "templates", Encoders.STRING, TTLConfig.NONE)
+      state = getHandle.getValueState[NetFlowV9.CacheState](
+        "templates", stateEncoder, TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[Datagram],
                                  tv: TimerValues): Iterator[Flow] = {
       val cache = new NetFlowV9.TemplateCache
-      val released = if (templates.exists()) cache.load(templates.get())
+      val released = if (state.exists()) cache.restore(state.get())
                      else Nil
-      val out = released.toIndexedSeq ++
+      val out = released.map(NetFlowV9.numeric).toIndexedSeq ++
         rows.flatMap(d => cache.observe(d.payload))
-      templates.update(cache.save())
+      state.update(cache.state)
       out.iterator.map(m => Flow(key, m))
     }
   }

@@ -567,9 +567,14 @@ object StreamingQueries {
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
             .awaitTermination()
         }
-        s.table(name).groupBy("exporter")
+        val out = s.table(name).groupBy("exporter")
           .agg(count(lit(1)).as("n_pairs"),
             sum(expr("bytes * rate")).as("renorm_bytes"))
+        // one row per exporter: hand the answer back as a local relation
+        // and drop the sink's temp view, so the lane leaves none behind
+        val rows = out.collect()
+        s.catalog.dropTempView(name)
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       },
       Some("""WITH a AS (SELECT user_id % 8 AS exporter,
                 epoch_us(ts) AS ta,

@@ -453,4 +453,27 @@ class PlanSpec extends AnyFunSuite {
       s"scanned ${ev.filesScanned} != matching ${ev.filesMatching}")
     assert(aggRows.nonEmpty && aggRows.map(_._2).sum > 0)
   }
+
+  test("PlanAudit BNLJ pin follows a reused exchange to its build") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ReusedExchangeExec}
+    // the build side a nested loop over `build` broadcasts, re-read
+    // through a ReusedExchange as AQE's exchange reuse would plan it
+    def reused(build: DataFrame): ReusedExchangeExec = {
+      val plan = spark.range(5).toDF("v").crossJoin(broadcast(build))
+        .queryExecution.executedPlan
+      val b = PlanAudit.bnljNodes(plan).head
+      val side = if (b.buildSide == BuildLeft) b.left else b.right
+      val ex = side.collectFirst { case e: BroadcastExchangeExec => e }.get
+      ReusedExchangeExec(ex.output, ex)
+    }
+    val global = spark.range(10).groupBy().count()
+    val keyed = spark.range(10).groupBy(col("id") % 3).count()
+    assert(PlanAudit.isModelBuild(reused(global)),
+      "reuse of a one-row global-agg build must satisfy the pin")
+    assert(!PlanAudit.isModelBuild(reused(keyed)),
+      "reuse of a keyed-aggregate build must NOT satisfy the pin")
+  }
 }

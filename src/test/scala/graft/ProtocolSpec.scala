@@ -49,6 +49,18 @@ class ProtocolSpec extends AnyFunSuite {
     assert(cache.pendingSets == 0)
     assert(cache.observe(data2) == recs.drop(2)) // now decodes immediately
 
+    // a second observation domain behind the same exporter reuses template
+    // id 300 with another layout: its data buffers until ITS template
+    // arrives, and neither domain's layout overwrites the other's
+    val hB = NetFlowV9.V9Header(1L, 2L, 4L, 10L)
+    val tB = NetFlowV9.Template(300, Seq(IE.InBytes -> 8, IE.L4DstPort -> 2))
+    val recsB = Seq(Map(IE.InBytes -> (1L << 40), IE.L4DstPort -> 443L))
+    assert(cache.observe(NetFlowV9.encodeData(hB, tB, recsB)).isEmpty)
+    assert(cache.pendingSets == 1)
+    assert(cache.observe(NetFlowV9.encodeTemplate(hB, tB)) == recsB)
+    assert(cache.observe(data2) == recs.drop(2))
+    assert(cache.observe(NetFlowV9.encodeData(hB, tB, recsB)) == recsB)
+
     // template-first ordering yields the same records
     val cache2 = new NetFlowV9.TemplateCache
     val all2 = Seq(tdg, data1, data2).flatMap(cache2.observe)
@@ -96,12 +108,13 @@ class ProtocolSpec extends AnyFunSuite {
 
     val warm = new NetFlowV9.TemplateCache
     warm.observe(NetFlowV9.encodeTemplate(h, t))
-    val persisted = warm.save()
+    val persisted = warm.state
 
     // restarted collector: data arrives before any template datagram
     val cold = new NetFlowV9.TemplateCache
     assert(cold.observe(NetFlowV9.encodeData(h, t, recs)).isEmpty)
-    assert(cold.load(persisted) == recs) // load releases the buffer
+    // restore releases the buffer
+    assert(cold.restore(persisted).map(NetFlowV9.numeric) == recs)
     assert(cold.observe(NetFlowV9.encodeData(h, t, recs)) == recs)
   }
 
@@ -948,7 +961,7 @@ class ProtocolSpec extends AnyFunSuite {
       Seq[Byte](0x10, 0x20))
   }
 
-  test("vlen template persistence round-trips through save/load") {
+  test("vlen template persistence round-trips through state/restore") {
     import graft.sources.NetFlowV9
     import NetFlowV9.{FieldSpec, IE, TemplateX, VarLen}
     val penF = FieldSpec(5, 2, pen = 9L)
@@ -960,7 +973,7 @@ class ProtocolSpec extends AnyFunSuite {
     val recs: Seq[NetFlowV9.DecodedX] =
       Seq(Map(96L -> "rtsp", penF.key -> 300L))
     assert(cold.observeX(NetFlowV9.encodeDataIpfixX(h, t, recs)).isEmpty)
-    assert(cold.loadX(warm.save()) == recs)
+    assert(cold.restore(warm.state) == recs)
   }
 
   test("IPFIX vlen: truncated/malformed data sets discard, never throw") {
@@ -1043,15 +1056,15 @@ class ProtocolSpec extends AnyFunSuite {
     // micro-batch 1: DATA ONLY — buffers, and the buffer persists
     val b1 = new NetFlowV9.TemplateCache
     assert(b1.observe(NetFlowV9.encodeData(h, t, recs)).isEmpty)
-    val state1 = b1.save()
+    val state1 = b1.state
     // micro-batch 2 (fresh cache from state): template arrives and must
     // release the data buffered in batch 1
     val b2 = new NetFlowV9.TemplateCache
-    assert(b2.load(state1).isEmpty)
+    assert(b2.restore(state1).isEmpty)
     assert(b2.observe(NetFlowV9.encodeTemplate(h, t)) == recs)
     // and the released set does NOT replay in batch 3
     val b3 = new NetFlowV9.TemplateCache
-    assert(b3.load(b2.save()).isEmpty)
+    assert(b3.restore(b2.state).isEmpty)
     assert(b3.pendingSets == 0)
   }
 

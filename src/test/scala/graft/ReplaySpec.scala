@@ -161,6 +161,15 @@ class ReplaySpec extends AnyFunSuite {
       val h = NetFlowV9.V9Header(0L, 0L, 0L, 9L)
       def data(vals: Seq[Long]) = NetFlowV9.encodeData(h, t,
         vals.map(v => Map(IE.Protocol -> 17L, IE.InBytes -> v)))
+      // observation domain 10 behind the same exporter reuses template
+      // id 511 with another layout; its data lands one micro-batch
+      // before its template
+      val tB = NetFlowV9.Template(511,
+        Seq(IE.InBytes -> 8, IE.L4DstPort -> 2, IE.Protocol -> 1))
+      val hB = NetFlowV9.V9Header(0L, 0L, 0L, 10L)
+      val recsB = Seq(
+        Map(IE.InBytes -> (3L << 33), IE.L4DstPort -> 53L, IE.Protocol -> 6L),
+        Map(IE.InBytes -> 8L, IE.L4DstPort -> 80L, IE.Protocol -> 6L))
       val mem = MemoryStream[NetFlowStream.Datagram](spark)
       val q = NetFlowStream.decodeTws(mem.toDS())
         .writeStream.format("memory").queryName("nf_tws")
@@ -168,14 +177,23 @@ class ReplaySpec extends AnyFunSuite {
       try {
         mem.addData(
           NetFlowStream.Datagram("ex2", NetFlowV9.encodeTemplate(h, t)),
-          NetFlowStream.Datagram("ex2", data(Seq(5L))))
+          NetFlowStream.Datagram("ex2", data(Seq(5L))),
+          NetFlowStream.Datagram("ex2", NetFlowV9.encodeData(hB, tB, recsB)))
         q.processAllAvailable()
-        mem.addData(NetFlowStream.Datagram("ex2", data(Seq(6L, 7L))))
+        mem.addData(NetFlowStream.Datagram("ex2", data(Seq(6L, 7L))),
+          NetFlowStream.Datagram("ex2", NetFlowV9.encodeTemplate(hB, tB)))
         q.processAllAvailable()
         val vals = spark.table("nf_tws")
+          .where(s"fields[${IE.Protocol}] = 17")
           .selectExpr(s"fields[${IE.InBytes}] as b")
           .as[Long].collect().sorted.toSeq
         assert(vals == Seq(5L, 6L, 7L))
+        // every record decoded with its own domain's layout
+        val fields = spark.table("nf_tws").as[NetFlowStream.Flow].collect()
+          .map(_.fields)
+        assert(fields.length == 3 + recsB.size)
+        assert(fields.count(_.keySet == Set(IE.Protocol, IE.InBytes)) == 3)
+        assert(recsB.forall(r => fields.count(_ == r) == 1))
       } finally q.stop()
     }
   }

@@ -203,6 +203,30 @@ class StateSpec extends AnyFunSuite {
       assert(after.get(k) == before.get(k), k))
   }
 
+  test("lane hygiene: withConf lanes leave the session as they found it") {
+    val d = "/root/testdata/sf0.001"
+    // every table load applies the engine's session baseline, as the
+    // Verify/Bench mains do before their first lane; the lanes must
+    // leave that baseline exactly as they found it
+    graft.core.Graft.tune(spark)
+    def session() = Map(
+      "conf" -> spark.conf.getAll,
+      "persistent RDDs" -> spark.sparkContext.getPersistentRDDs.keySet,
+      "temp views" -> spark.catalog.listTables().collect()
+        .filter(_.isTemporary).map(_.name).toSet,
+      "active streams" -> spark.streams.active.map(_.id).toSet)
+    Seq("q316_logreg_trainer", "q327_stream_dedup_cascade",
+        "q330_ooo_dedup_reconcile", "q332_bucketed_state_ingest",
+        "q342_compaction_cadence", "q177_stream_stream_join")
+      .foreach { name =>
+        val before = session()
+        assert(SparkEntry.queries(name)(spark, d).collect().nonEmpty, name)
+        val after = session()
+        before.keys.foreach(k =>
+          assert(after(k) == before(k), s"$name changed the session's $k"))
+      }
+  }
+
   test("ImtStore groups duplicate keys within the very first batch") {
     val store = new ImtStore(spark, "imt_test3", Seq("k"), Seq("n"))
     store.upsert(Seq(("a", 1L), ("a", 2L), ("b", 4L)).toDF("k", "n"))
