@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory for the graft engine.
   *
@@ -47,6 +47,16 @@ object Graft {
         case None => spark.conf.unset(k)
       }
     }
+  }
+
+  /** Collect a lane's small answer, run `release` (drop the temp views
+    * or stores the answer was read from) also when the collect throws, and
+    * hand the rows back as a local relation, so the lane leaves no session
+    * state behind. */
+  def collectLocal(out: DataFrame)(release: => Unit): DataFrame = {
+    val rows = try out.collect() finally release
+    out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      out.schema)
   }
 
   /** Apply the runtime confs graft needs on a session we did not build

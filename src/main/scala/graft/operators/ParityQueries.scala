@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{FlowView, ImtStore, Q, Tables}
+import graft.core.{FlowView, Graft, ImtStore, Q, Tables}
 import graft.maps.PreTagMap
 import graft.maps.PreTagMap.TagRule
 
@@ -80,9 +80,14 @@ object ParityQueries {
           Seq("ip_proto", "port_dst"), Seq("bytes", "n"))
         store.upsert(agg(f.filter(col("event_id") % 2 === 0)))
         store.upsert(agg(f.filter(col("event_id") % 2 === 1)))
-        store.query(
+        // the lane's table lives only as long as the lane: collect the
+        // answer, then erase the store and drop its view
+        Graft.collectLocal(store.query(
           "SELECT ip_proto, port_dst, CAST(bytes AS BIGINT) AS bytes, n " +
-            "FROM q83_imt")
+            "FROM q83_imt")) {
+          store.erase()
+          s.catalog.dropTempView("q83_imt")
+        }
       },
       Some(FlowView.cte(
         """SELECT ip_proto, port_dst, CAST(sum(bytes) AS BIGINT) AS bytes,

@@ -40,6 +40,13 @@ object StreamingQueries {
   private def flows(s: SparkSession, d: String) =
     FlowView.fromEvents(Tables.events(s, d))
 
+  /** A memory-sink lane's answer, read from the sink's temp view `name`:
+    * collected, handed back as a local relation, and the view dropped, so
+    * the lane leaves no view behind ([[Graft.collectLocal]]). */
+  private def fromSink(s: SparkSession, name: String)
+                      (out: DataFrame): DataFrame =
+    Graft.collectLocal(out)(s.catalog.dropTempView(name))
+
   /** Idle timeout per protocol, µs (pmacct: per-proto lifetimes,
     * `src/ip_flow.h:27-29` — TCP long, generic short; scaled to the
     * corpus's hour-grained event density). */
@@ -68,9 +75,9 @@ object StreamingQueries {
         val q = agg.writeStream.format("memory").queryName(name)
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.table(name).select(
+        fromSink(s, name)(s.table(name).select(
           expr("unix_micros(window.start)").as("win_start_us"),
-          col("event_type"), col("n"), col("sum_value"))
+          col("event_type"), col("n"), col("sum_value")))
       },
       Some("""SELECT (epoch_us(ts) // 3600000000) * 3600000000
                 AS win_start_us,
@@ -218,8 +225,8 @@ object StreamingQueries {
         q.awaitTermination()
         // which duplicate survives is arrival-order dependent; project to
         // the deduped KEY so the result set is deterministic
-        s.table(name).select("user_id", "event_type").orderBy(
-          "user_id", "event_type")
+        fromSink(s, name)(s.table(name).select("user_id", "event_type")
+          .orderBy("user_id", "event_type"))
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events"""),
       doc = "streaming exact dedup with keyed state"),
@@ -278,11 +285,11 @@ object StreamingQueries {
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
         // a doc is dropped iff ANY of its 4 band buckets flagged it
-        s.table(name)
+        fromSink(s, name)(s.table(name)
           .groupBy("doc_id").agg(max("dup").as("dup"))
           .groupBy().agg(count(lit(1)).as("n_docs"),
             sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup"),
-            sum(when(col("dup"), 0L).otherwise(1L)).as("n_kept"))
+            sum(when(col("dup"), 0L).otherwise(1L)).as("n_kept")))
       },
       Some({
         import graft.text.TextOps._
@@ -415,9 +422,9 @@ object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.table(name).select(
+        fromSink(s, name)(s.table(name).select(
           expr("unix_micros(window.start)").as("win_start_us"),
-          col("event_type"), col("n"))
+          col("event_type"), col("n")))
       },
       Some("""WITH e AS (SELECT epoch_us(ts) AS tu, event_type FROM events)
             SELECT (tu // 86400000000) * 86400000000 AS win_start_us,
@@ -451,9 +458,9 @@ object StreamingQueries {
         val q = agg.writeStream.format("memory").queryName(name)
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.table(name).select(
+        fromSink(s, name)(s.table(name).select(
           expr("unix_micros(window.start) div 1000000").as("bin_start"),
-          col("ip_proto"), col("bytes_w"), col("n"))
+          col("ip_proto"), col("bytes_w"), col("n")))
       },
       Some(s"""WITH flows AS (${FlowView.sql}), exploded AS (
             SELECT f.*, unnest(generate_series(t0u // 300000000,
@@ -494,9 +501,9 @@ object StreamingQueries {
         val q = agg.writeStream.format("memory").queryName(name)
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.table(name).select(
+        fromSink(s, name)(s.table(name).select(
           expr("unix_micros(window.start)").as("win_start_us"),
-          col("dst_as"), col("n"), col("bytes"))
+          col("dst_as"), col("n"), col("bytes")))
       },
       Some(s"""WITH flows AS (${FlowView.sql}),
             ${graft.maps.Dims.networksSql}
@@ -567,14 +574,9 @@ object StreamingQueries {
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
             .awaitTermination()
         }
-        val out = s.table(name).groupBy("exporter")
+        fromSink(s, name)(s.table(name).groupBy("exporter")
           .agg(count(lit(1)).as("n_pairs"),
-            sum(expr("bytes * rate")).as("renorm_bytes"))
-        // one row per exporter: hand the answer back as a local relation
-        // and drop the sink's temp view, so the lane leaves none behind
-        val rows = out.collect()
-        s.catalog.dropTempView(name)
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+            sum(expr("bytes * rate")).as("renorm_bytes")))
       },
       Some("""WITH a AS (SELECT user_id % 8 AS exporter,
                 epoch_us(ts) AS ta,
@@ -658,13 +660,13 @@ object StreamingQueries {
                  System.currentTimeMillis() < deadline)
             Thread.sleep(100)
         } finally q.stop()
-        s.table(name).select("payload").as[Array[Byte]]
+        fromSink(s, name)(s.table(name).select("payload").as[Array[Byte]]
           .mapPartitions(_.flatMap(w => NetFlowV5.decode(w)._2))
           .toDF()
           .groupBy("proto")
           .agg(count(lit(1)).as("n"), sum("octets").as("octets"),
             sum("packets").as("packets"),
-            expr("bit_or(tcpFlags)").as("flags_or"))
+            expr("bit_or(tcpFlags)").as("flags_or")))
       },
       Some(FlowView.cte(
         """SELECT ip_proto AS proto, count(*) AS n,
@@ -1705,9 +1707,10 @@ object StreamingQueries {
         val nonempty = progress.count(_.numInputRows > 0)
         val stateMax = progress.flatMap(_.stateOperators.toSeq)
           .map(_.numRowsTotal).maxOption.getOrElse(0L)
-        val bins = s.table(name).groupBy("bin")
+        val bins = try s.table(name).groupBy("bin")
           .agg(sum("n").as("n"), sum("octets").as("v"))
           .as[(Long, Long, Long)].collect().toSeq
+        finally s.catalog.dropTempView(name)
         val lanes = Seq(
           // `sent` already counts the sentinel (ship() increments it)
           ("cadence", "datagrams_dropped", 1L, sent - inputTotal),
