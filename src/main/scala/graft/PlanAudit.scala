@@ -270,7 +270,15 @@ object PlanAudit {
     names.foreach { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
-        val plan = df.queryExecution.executedPlan.toString()
+        // a lane that collects inside itself hands back a local relation;
+        // audit the plan that computed it, in the form every other lane is
+        // audited in (the collect ran it: read its initial adaptive plan)
+        val executed = graft.core.Graft.collectedPlan(df).map {
+          case a: org.apache.spark.sql.execution.adaptive
+              .AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }.getOrElse(df.queryExecution.executedPlan)
+        val plan = executed.toString()
         val smj = "SortMergeJoin".r.findAllIn(plan).size
         val cart = "CartesianProduct".r.findAllIn(plan).size
         val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
@@ -291,7 +299,7 @@ object PlanAudit {
         // A future corpus-sized BNLJ sneaking into these lanes now
         // flags instead of riding the lane waiver.
         if (bnljGlobalBuildPinned(n)) {
-          val bad = bnljNodes(df.queryExecution.executedPlan)
+          val bad = bnljNodes(executed)
             .filterNot(b => isModelBuild(b.buildSide match {
               case org.apache.spark.sql.catalyst.optimizer.BuildLeft =>
                 b.left
@@ -303,7 +311,7 @@ object PlanAudit {
         if (ex > exchangeCeiling && !iterativeLanes(n) &&
           !multiBranchAllowed(n))
           flags += s"EXCHANGES $ex"
-        val scanMax = scanPaths(df.queryExecution.executedPlan)
+        val scanMax = scanPaths(executed)
           .groupBy(identity).view.mapValues(_.size)
           .maxByOption(_._2).getOrElse(("", 0))
         if (scanMax._2 > scanCeiling && !scanAllowed(n) &&

@@ -1,6 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** Session factory for the graft engine.
   *
@@ -12,6 +15,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - UTC session time zone so temporal binning matches the DuckDB oracle
   *   - nanosAsLong so parquet TIMESTAMP(NANOS) columns (the `events` table)
   *     are readable; [[Tables]] re-normalizes them to TimestampType.
+  *
+  * Streaming state commits the cheap way (pmacct's nfacctd keeps its
+  * templates in memory and writes `nfacctd_templates_file` only when
+  * asked; a micro-batch should not wait on a full state upload either):
+  *   - RocksDB changelog checkpointing: a commit writes one changelog file
+  *     per state partition; the full snapshot is taken every
+  *     `minDeltasForSnapshot` versions and uploaded by the state-store
+  *     maintenance thread, off the micro-batch. Recovery loads the
+  *     newest snapshot and replays the changelogs after it, so the
+  *     exactly-once contract is unchanged. It only applies to queries on
+  *     `RocksDBStateStoreProvider`.
+  *   - `FileSystemBasedCheckpointFileManager`: an atomic checkpoint write
+  *     is a temp file plus one `rename(2)`; the default FileContext
+  *     manager forks `readlink` four times per write when libhadoop is
+  *     missing. It is safe on `file:` checkpoints because a local rename
+  *     is atomic and Spark lets only one run of a query write its
+  *     checkpoint at a time; its rename is not atomic on object stores,
+  *     which are not checkpoint targets here.
+  *   - `fs.file.impl` = [[NioLocalFileSystem]]: the same checksummed local
+  *     filesystem, setting the permission bits Hadoop would set through
+  *     NIO instead of forking `chmod` for each file and directory.
   */
 object Graft {
   def session(appName: String = "graft",
@@ -28,6 +52,12 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled", "true")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[NioLocalFileSystem].getName)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -52,12 +82,24 @@ object Graft {
   /** Collect a lane's small answer, run `release` (drop the temp views
     * or stores the answer was read from) also when the collect throws, and
     * hand the rows back as a local relation, so the lane leaves no session
-    * state behind. */
+    * state behind. The local relation carries the plan that computed the
+    * rows ([[collectedPlan]]). */
   def collectLocal(out: DataFrame)(release: => Unit): DataFrame = {
     val rows = try out.collect() finally release
-    out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      out.schema)
+    val local = out.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), out.schema)
+    local.queryExecution.logical.setTagValue(CollectedFrom,
+      out.queryExecution.executedPlan)
+    local
   }
+
+  private val CollectedFrom = TreeNodeTag[SparkPlan]("graft.collectedFrom")
+
+  /** The physical plan [[collectLocal]] ran to build `df`, if `df` is
+    * its local relation — the plan a plan audit should read, since the
+    * local scan itself shows nothing of the lane's work. */
+  def collectedPlan(df: DataFrame): Option[SparkPlan] =
+    df.queryExecution.logical.getTagValue(CollectedFrom)
 
   /** Apply the runtime confs graft needs on a session we did not build
     * (the driver's Verify/Bench contract hands us an existing session). */

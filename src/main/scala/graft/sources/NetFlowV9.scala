@@ -78,6 +78,18 @@ object NetFlowV9 {
       fields.groupBy(_.key).filter(_._2.size > 1).keySet
     lazy val layers: Seq[Int] = fields.flatMap(f =>
       if (f.key == 8L) Some(4) else if (f.key == 27L) Some(6) else None)
+    private[NetFlowV9] lazy val specs: Array[FieldSpec] = fields.toArray
+    /** Fields whose value lands in the fixed-numeric view: standard
+      * (non-PEN) fixed IEs of at most 8 bytes, each only at its key's LAST
+      * occurrence — the record keeps a repeated key's last value, so a key
+      * whose last occurrence is vlen or wider than 8 bytes has none. */
+    private[NetFlowV9] lazy val numericField: Array[Boolean] = {
+      val last = specs.indices.map(i => specs(i).key -> i).toMap
+      specs.indices.map { i =>
+        val f = specs(i)
+        f.pen == 0L && !f.isVlen && f.len <= 8 && last(f.key) == i
+      }.toArray
+    }
   }
 
   final case class Template(id: Int, fields: Seq[(Int, Int)]) {
@@ -303,9 +315,53 @@ object NetFlowV9 {
                               pending: Seq[PendingSet])
 
   /** Fixed-numeric view of a [[DecodedX]] record: standard-IE Long values
-    * only (the API the fixed-template queries consume). */
+    * only (the API the fixed-template queries consume).
+    * [[TemplateCache.observe]] builds the same view straight from the
+    * wire. */
   def numeric(m: DecodedX): Decoded =
     m.collect { case (k, v: Long) if k <= 0xffffL => k.toInt -> v }
+
+  /** What the cache's one body walker makes of a decoded record: the
+    * walker reads every field's length, materializes the values of the
+    * fields in `wanted`, and hands them to `build` by field position. */
+  private sealed abstract class View[R] {
+    def wanted(t: TemplateX): Array[Boolean]
+    def build(t: TemplateX, vals: Array[Any]): R
+  }
+
+  private object ExtendedView extends View[DecodedX] {
+    def wanted(t: TemplateX): Array[Boolean] = Array.fill(t.specs.length)(true)
+    def build(t: TemplateX, vals: Array[Any]): DecodedX = {
+      val rec = Map.newBuilder[Long, Any]
+      val seen = if (t.repeatedKeys.isEmpty) null else mutable.Set[Long]()
+      var i = 0
+      while (i < vals.length) {
+        val key = t.specs(i).key
+        // repeated IE: first occurrence also lands at key|FirstOccur,
+        // the plain key keeps the last (builder overwrite)
+        if (seen != null && t.repeatedKeys(key) && seen.add(key))
+          rec += (key | FirstOccur) -> vals(i)
+        rec += key -> vals(i)
+        i += 1
+      }
+      if (t.layers.nonEmpty) rec += LayersKey -> t.layers.mkString(",")
+      rec.result()
+    }
+  }
+
+  private object NumericView extends View[Decoded] {
+    def wanted(t: TemplateX): Array[Boolean] = t.numericField
+    def build(t: TemplateX, vals: Array[Any]): Decoded = {
+      val rec = Map.newBuilder[Int, Long]
+      var i = 0
+      while (i < vals.length) {
+        if (t.numericField(i))
+          rec += t.specs(i).tp -> vals(i).asInstanceOf[Long]
+        i += 1
+      }
+      rec.result()
+    }
+  }
 
   /** Per-exporter template cache + data-before-template buffer, scoped by
     * [[TemplateKey]]. One instance per exporter; feed datagrams in arrival
@@ -322,9 +378,15 @@ object NetFlowV9 {
     private var bad = 0L
     def badDatagrams: Long = bad
 
-    /** Fixed-numeric view of [[observeX]]. */
+    /** Fixed-numeric view of [[observeX]] (`observeX(d).map(numeric)`),
+      * built in the decoding pass. */
     def observe(datagram: Array[Byte]): Seq[Decoded] =
-      observeX(datagram).map(numeric)
+      decode(datagram, NumericView)
+
+    /** Decode one datagram; returns records decodable NOW (including any
+      * previously-buffered data whose template just arrived). */
+    def observeX(datagram: Array[Byte]): Seq[DecodedX] =
+      decode(datagram, ExtendedView)
 
     /** one (PEN-capable) template field spec, 4 or 8 bytes */
     private def readSpec(buf: ByteBuffer, ipfix: Boolean): FieldSpec = {
@@ -335,9 +397,7 @@ object NetFlowV9 {
       else FieldSpec(raw, len)
     }
 
-    /** Decode one datagram; returns records decodable NOW (including any
-      * previously-buffered data whose template just arrived). */
-    def observeX(datagram: Array[Byte]): Seq[DecodedX] = {
+    private def decode[R](datagram: Array[Byte], view: View[R]): Seq[R] = {
       if (datagram.length < 4) { bad += 1; return Seq.empty } // runt
       val buf = ByteBuffer.wrap(datagram)
       val version = buf.getShort() & 0xffff
@@ -357,7 +417,7 @@ object NetFlowV9 {
       // covers template + data records in the packet)
       var budget = if (ipfix) Int.MaxValue else buf.getShort() & 0xffff
       buf.position(headerLen) // remaining header fields not needed here
-      val out = mutable.Buffer[DecodedX]()
+      val out = mutable.Buffer[R]()
       var truncatedDg = false
       while (!truncatedDg && buf.remaining() >= 4) {
         val setId = buf.getShort() & 0xffff
@@ -373,7 +433,7 @@ object NetFlowV9 {
             val tid = buf.getShort() & 0xffff
             val n = buf.getShort() & 0xffff
             val fields = (0 until n).map(_ => readSpec(buf, ipfix))
-            register(domain, TemplateX(tid, fields), out)
+            register(domain, TemplateX(tid, fields), out, view)
             budget -= 1
           }
         } else if (!ipfix && setId == 1) {
@@ -385,7 +445,8 @@ object NetFlowV9 {
             val optBytes = buf.getShort() & 0xffff
             val n = (scopeBytes + optBytes) / 4
             val fields = (0 until n).map(_ => readSpec(buf, ipfix))
-            register(domain, TemplateX(tid, fields, scopeBytes / 4), out)
+            register(domain, TemplateX(tid, fields, scopeBytes / 4), out,
+              view)
             budget -= 1
           }
         } else if (ipfix && setId == 3) {
@@ -396,13 +457,13 @@ object NetFlowV9 {
             val n = buf.getShort() & 0xffff
             val scopeN = buf.getShort() & 0xffff
             val fields = (0 until n).map(_ => readSpec(buf, ipfix))
-            register(domain, TemplateX(tid, fields, scopeN), out)
+            register(domain, TemplateX(tid, fields, scopeN), out, view)
           }
         } else if (setId >= 256) {
           val body = new Array[Byte](setEnd - buf.position())
           buf.get(body)
           budget -= dataSet(PendingSet(TemplateKey(domain, setId), budget,
-            body), out)
+            body), out, view)
         }
         buf.position(setEnd)
         } catch {
@@ -417,23 +478,21 @@ object NetFlowV9 {
       out.toSeq
     }
 
-    private def register(domain: Long, t: TemplateX,
-                         out: mutable.Buffer[DecodedX]): Unit = {
+    private def register[R](domain: Long, t: TemplateX,
+                            out: mutable.Buffer[R], view: View[R]): Unit = {
       val key = TemplateKey(domain, t.id)
       templates(key) = t
       pending.remove(key).foreach(_.foreach(p =>
-        out ++= decodeBody(t, p.body, p.budget)))
+        decodeBody(t, p.body, p.budget, view, out)))
     }
 
     /** Decodes a data set now if its template is known, else buffers it
       * (oldest dropped past [[MaxPendingPerTemplate]]); returns the
       * number of records decoded. */
-    private def dataSet(p: PendingSet, out: mutable.Buffer[DecodedX]): Int =
+    private def dataSet[R](p: PendingSet, out: mutable.Buffer[R],
+                           view: View[R]): Int =
       templates.get(p.key) match {
-        case Some(t) =>
-          val decoded = decodeBody(t, p.body, p.budget)
-          out ++= decoded
-          decoded.size
+        case Some(t) => decodeBody(t, p.body, p.budget, view, out)
         case None =>
           val q = pending.getOrElseUpdate(p.key, mutable.Buffer())
           q += p
@@ -441,9 +500,14 @@ object NetFlowV9 {
           0
       }
 
-    private def decodeBody(t: TemplateX, body: Array[Byte],
-                           cap: Int): Seq[DecodedX] = {
-      val out = mutable.Buffer[DecodedX]()
+    /** The one body walker: appends up to `cap` records of `body` laid
+      * out per `t` to `out`, as `view` builds them; returns how many. */
+    private def decodeBody[R](t: TemplateX, body: Array[Byte], cap: Int,
+                              view: View[R], out: mutable.Buffer[R]): Int = {
+      val specs = t.specs
+      val wanted = view.wanted(t)
+      val vals = new Array[Any](specs.length)
+      var n = 0
       var off = 0
       var truncated = false
       // stop when fewer bytes remain than the smallest possible record:
@@ -453,64 +517,51 @@ object NetFlowV9 {
       // malformed set is discarded from the bad record on, never thrown
       // (the reference length-checks and discards in resolve_vlen_template,
       // src/nfv9_template.c; this path eats raw UDP payloads).
-      while (!truncated && out.size < cap &&
-             body.length - off >= t.minRecordLen) {
-        val rec = Map.newBuilder[Long, Any]
-        val occ = if (t.repeatedKeys.isEmpty) null
-          else mutable.Map[Long, Int]()
-        def put(key: Long, v: Any): Unit = {
-          // repeated IE: first occurrence also lands at key|FirstOccur,
-          // the plain key keeps the last (builder overwrite)
-          if (occ != null && t.repeatedKeys(key)) {
-            val n = occ.getOrElse(key, 0); occ(key) = n + 1
-            if (n == 0) rec += (key | FirstOccur) -> v
-          }
-          rec += key -> v
-        }
+      while (!truncated && n < cap && body.length - off >= t.minRecordLen) {
         var ok = true
-        t.fields.foreach { f =>
-          if (ok) {
-            if (f.isVlen) {
-              if (off >= body.length) ok = false
-              else {
-                var l = body(off) & 0xff; off += 1
-                if (l == 255) {
-                  if (off + 2 > body.length) ok = false
-                  else {
-                    l = ((body(off) & 0xff) << 8) | (body(off + 1) & 0xff)
-                    off += 2
-                  }
-                }
-                if (ok && off + l > body.length) ok = false
-                else if (ok) {
-                  put(f.key, new String(body, off, l,
-                    java.nio.charset.StandardCharsets.UTF_8))
-                  off += l
+        var i = 0
+        while (ok && i < specs.length) {
+          val f = specs(i)
+          if (f.isVlen) {
+            if (off >= body.length) ok = false
+            else {
+              var l = body(off) & 0xff; off += 1
+              if (l == 255) {
+                if (off + 2 > body.length) ok = false
+                else {
+                  l = ((body(off) & 0xff) << 8) | (body(off + 1) & 0xff)
+                  off += 2
                 }
               }
-            } else if (off + f.len > body.length) {
-              ok = false
-            } else if (f.len <= 8) {
-              var v = 0L
-              (0 until f.len).foreach { i =>
-                v = (v << 8) | (body(off + i) & 0xffL)
+              if (ok && off + l > body.length) ok = false
+              else if (ok) {
+                if (wanted(i)) vals(i) = new String(body, off, l,
+                  java.nio.charset.StandardCharsets.UTF_8)
+                off += l
               }
-              off += f.len
-              put(f.key, v)
-            } else {
-              // >8-byte fixed IE (e.g. IPv6): canonical hex string
-              put(f.key, body.slice(off, off + f.len)
-                .map(b => f"${b & 0xff}%02x").mkString)
-              off += f.len
             }
+          } else if (off + f.len > body.length) {
+            ok = false
+          } else {
+            if (wanted(i)) vals(i) =
+              if (f.len <= 8) {
+                var v = 0L
+                var j = 0
+                while (j < f.len) { v = (v << 8) | (body(off + j) & 0xffL); j += 1 }
+                v
+              } else {
+                // >8-byte fixed IE (e.g. IPv6): canonical hex string
+                body.slice(off, off + f.len)
+                  .map(b => f"${b & 0xff}%02x").mkString
+              }
+            off += f.len
           }
+          i += 1
         }
-        if (ok) {
-          if (t.layers.nonEmpty) rec += LayersKey -> t.layers.mkString(",")
-          out += rec.result()
-        } else truncated = true
+        if (ok) { out += view.build(t, vals); n += 1 }
+        else truncated = true
       }
-      out.toSeq
+      n
     }
 
     /** Snapshot of the registered templates with their domains — the
@@ -532,8 +583,9 @@ object NetFlowV9 {
       * Returns the released records. */
     def restore(s: CacheState): Seq[DecodedX] = {
       val out = mutable.Buffer[DecodedX]()
-      s.templates.foreach(t => register(t.domain, t.template, out))
-      s.pending.foreach(dataSet(_, out))
+      s.templates.foreach(t =>
+        register(t.domain, t.template, out, ExtendedView))
+      s.pending.foreach(dataSet(_, out, ExtendedView))
       out.toSeq
     }
   }

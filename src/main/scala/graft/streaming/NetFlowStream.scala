@@ -17,8 +17,21 @@ import graft.sources.NetFlowV9
   * later one and survive query restarts. Templates are scoped by
   * observation domain inside the exporter. Needs
   * `spark.sql.streaming.stateStore.providerClass` =
-  * RocksDBStateStoreProvider. Compose with `UdpDatagramSource` for the
-  * live path:
+  * RocksDBStateStoreProvider.
+  *
+  * Commit mode: on a `Graft.session` the RocksDB store checkpoints by
+  * changelog. A micro-batch's commit writes one changelog file per state
+  * partition (the keys its exporters' caches changed); every
+  * `minDeltasForSnapshot` versions a snapshot is taken, and the
+  * state-store maintenance thread uploads it off the micro-batch. A
+  * restart on the same checkpoint loads the newest uploaded snapshot and
+  * replays the changelogs after it, so it resumes with every template and
+  * every pending data-before-template set of the last committed batch: its
+  * data decodes at once, and a pending set is released when its template
+  * arrives after the restart. A batch that did not commit is replayed from
+  * its offsets, as before.
+  *
+  * Compose with `UdpDatagramSource` for the live path:
   *
   * {{{
   *   val dgs = spark.readStream

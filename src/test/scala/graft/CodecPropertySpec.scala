@@ -67,6 +67,65 @@ class CodecPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("NetFlowV9: observe is observeX's numeric view (300 seeds)") {
+    import graft.sources.NetFlowV9
+    import NetFlowV9.{FieldSpec, Template, TemplateX, V9Header, VarLen}
+    // a small IE pool, so templates repeat IEs and carry IE 8/27 layers
+    val pool = Seq(1, 2, 4, 7, 8, 11, 12, 27, 152)
+    for (seed <- 0 until 300) {
+      val r = new Random(seed)
+      def spec(fixedOnly: Boolean): FieldSpec = {
+        val tp = pool(r.nextInt(pool.size))
+        r.nextInt(if (fixedOnly) 2 else 4) match {
+          case 0 => FieldSpec(tp, 1 + r.nextInt(8))
+          case 1 => FieldSpec(tp, 9 + r.nextInt(8))                // > 8 B
+          case 2 => FieldSpec(tp, VarLen)
+          case _ => FieldSpec(tp, if (r.nextBoolean()) VarLen           // PEN
+            else 1 + r.nextInt(12), 1L + r.nextInt(99999))
+        }
+      }
+      def record(fields: Seq[FieldSpec]): NetFlowV9.DecodedX =
+        fields.map { f =>
+          f.key -> (if (f.isVlen)     // 0..299 chars: crosses the 255 escape
+            Seq.fill(r.nextInt(300))(('a' + r.nextInt(26)).toChar).mkString
+          else r.nextLong())
+        }.toMap
+      def truncated(dg: Array[Byte]): Array[Byte] =
+        if (r.nextInt(5) == 0) dg.take(r.nextInt(dg.length + 1)) else dg
+      val dgs = (0 until 2 + r.nextInt(4)).flatMap { i =>
+        val h = V9Header(0L, 0L, i.toLong, r.nextInt(2).toLong)
+        val id = 256 + r.nextInt(3)
+        val (tdg, data) = if (r.nextBoolean()) {
+          val t = Template(id, Seq.fill(1 + r.nextInt(8))(spec(true))
+            .map(f => f.tp -> f.len))
+          val recs = Seq.fill(1 + r.nextInt(4))(t.toX.fields)
+            .map(fs => NetFlowV9.numeric(record(fs)))
+          (NetFlowV9.encodeTemplate(h, t), NetFlowV9.encodeData(h, t, recs))
+        } else {
+          val fields = Seq.fill(1 + r.nextInt(8))(spec(false))
+          val t = TemplateX(id, fields,
+            if (r.nextInt(4) == 0) 1 + r.nextInt(fields.size) else 0)
+          val tdg = if (t.scopeCount > 0)
+            NetFlowV9.encodeOptionsTemplateIpfix(h, t)
+          else NetFlowV9.encodeTemplateIpfixX(h, t)
+          (tdg, NetFlowV9.encodeDataIpfixX(h, t,
+            Seq.fill(1 + r.nextInt(4))(record(fields))))
+        }
+        // data before its template as often as after it
+        val pair = if (r.nextBoolean()) Seq(tdg, data) else Seq(data, tdg)
+        pair.map(truncated)
+      }
+      val numeric, extended = new NetFlowV9.TemplateCache
+      dgs.zipWithIndex.foreach { case (dg, i) =>
+        assert(numeric.observe(dg) ==
+          extended.observeX(dg).map(NetFlowV9.numeric), s"seed $seed dg $i")
+      }
+      assert(numeric.badDatagrams == extended.badDatagrams, s"seed $seed")
+      assert(numeric.state.pending.map(_.key) ==
+        extended.state.pending.map(_.key), s"seed $seed")
+    }
+  }
+
   test("TelemetryGpb: random flat messages round-trip") {
     import graft.sources.TelemetryGpb
     for (seed <- 0 until 50) {

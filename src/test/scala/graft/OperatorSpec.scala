@@ -8,14 +8,11 @@ import graft.maps.PreTagMap
 import graft.maps.PreTagMap.TagRule
 import graft.operators.{Preprocess, ProRating}
 
+/** The engine's own session (`Graft.session`), so every spec — the
+  * streaming ones included — runs under the settings the engine ships. */
 object SparkSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Graft.session("graft-tests", Some("local[4]"), Some(4))
   graft.functions.GraftFunctions.register(spark)
 }
 

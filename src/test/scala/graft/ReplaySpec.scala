@@ -198,6 +198,84 @@ class ReplaySpec extends AnyFunSuite {
     }
   }
 
+  test("decodeTws restarts from snapshot + changelog state") {
+    import graft.sources.NetFlowV9
+    import graft.streaming.NetFlowStream
+    import NetFlowStream.Datagram
+    import NetFlowV9.IE
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val t = NetFlowV9.Template(512, Seq(IE.Protocol -> 1, IE.InBytes -> 4))
+    val h = NetFlowV9.V9Header(0L, 0L, 0L, 11L)
+    def data(vals: Long*) = NetFlowV9.encodeData(h, t,
+      vals.map(v => Map(IE.Protocol -> 6L, IE.InBytes -> v)))
+    // domain 12 sends its data set in the first run and its template
+    // only after the restart
+    val tB = NetFlowV9.Template(512, Seq(IE.InBytes -> 8, IE.Protocol -> 1))
+    val hB = NetFlowV9.V9Header(0L, 0L, 0L, 12L)
+    val dataB = NetFlowV9.encodeData(hB, tB,
+      Seq(Map(IE.InBytes -> (5L << 33), IE.Protocol -> 17L)))
+    val checkpoint = Files.createTempDirectory("graft_tws_restart")
+    Graft.withConf(spark, RocksDb) {
+      val mem = MemoryStream[Datagram](spark)
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      def run(batches: Seq[Datagram]*): Unit = {
+        val q = NetFlowStream.decodeTws(mem.toDS()).toDF().writeStream
+          .option("checkpointLocation", checkpoint.toString)
+          .foreachBatch { (df: DataFrame, _: Long) =>
+            df.selectExpr(s"fields[${IE.InBytes}]").as[Long].collect()
+              .foreach(got.add)
+            ()
+          }.start()
+        try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+        finally { q.stop(); q.awaitTermination() }
+      }
+      run(Seq(Datagram("ex3", NetFlowV9.encodeTemplate(h, t)),
+              Datagram("ex3", data(10L, 20L))),
+          Seq(Datagram("ex3", dataB)),
+          Seq(Datagram("ex3", data(25L))))
+      assert(got.toArray.toSeq == Seq(10L, 20L, 25L))
+      // the commits wrote changelog files: the state the restart reads is
+      // the first snapshot plus the changelogs after it
+      val stateFiles = Files.walk(checkpoint.resolve("state"))
+      val changelogs = try stateFiles.filter(_.toString.endsWith(".changelog"))
+        .count() finally stateFiles.close()
+      assert(changelogs > 0)
+      got.clear()
+      run(Seq(Datagram("ex3", data(30L, 40L))),
+          Seq(Datagram("ex3", NetFlowV9.encodeTemplate(hB, tB))))
+      assert(got.toArray.toSeq == Seq(30L, 40L, 5L << 33))
+    }
+  }
+
+  test("engine session: NIO local filesystem, rename-based checkpoints") {
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new java.net.URI("file:///")
+    val fs = FileSystem.get(root, conf)
+    assert(fs.getClass == classOf[graft.core.NioLocalFileSystem])
+    // Hadoop's own local filesystem, which forks chmod, is the reference
+    val stock = new LocalFileSystem()
+    stock.initialize(root, conf)
+    val dir = Files.createTempDirectory("graft_fs")
+    def mode(p: String): Int =
+      Files.getAttribute(dir.resolve(p), "unix:mode").asInstanceOf[Int] & 0xfff
+    Seq(fs -> "nio", stock -> "hadoop").foreach { case (f, name) =>
+      assert(f.mkdirs(new Path(s"$dir/$name/d")))
+      f.create(new Path(s"$dir/$name/d/f")).close()
+    }
+    // fs.permissions.umask-mode defaults to 022
+    assert(mode("nio/d") == mode("hadoop/d") && mode("nio/d") == 0x1ed)
+    assert(mode("nio/d/f") == mode("hadoop/d/f") && mode("nio/d/f") == 0x1a4)
+    // the sticky bit, which NIO cannot set, still applies
+    fs.setPermission(new Path(s"$dir/nio/d"), new FsPermission(0x3ff.toShort))
+    assert(mode("nio/d") == 0x3ff)
+    assert(CheckpointFileManager.create(new Path(dir.toString), conf)
+      .isInstanceOf[FileSystemBasedCheckpointFileManager])
+  }
+
   test("pcap reader handles little-endian and nanosecond magics") {
     import graft.sources.Pcap
     val pkt = Pcap.frame(Pcap.FlowTuple(1L, 2L, 6, 1, 2, 40L, 5000001L))
