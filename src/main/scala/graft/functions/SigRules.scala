@@ -1310,7 +1310,7 @@ object SigRules {
       case Seq("heur", name) =>
         require(heuristics.contains(name), s"unknown heuristic: $name")
         Heur(name)
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"bad predicate token: $tok")
     }
 

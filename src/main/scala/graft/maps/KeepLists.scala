@@ -3,8 +3,8 @@ package graft.maps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** ports_file / protos_file / tos_file keep-list remapping: values outside
-  * the configured list collapse into the 0 bucket (reference:
+/** ports_file keep-list remapping: ports outside the configured list
+  * collapse into the 0 bucket (reference:
   * `ports_file` CONFIG-KEYS:1114; loaded by `load_ports` in
   * src/plugin_common.c). Compiles to a single `when(isin).otherwise(0)` —
   * a codegen'd projection, the Spark analogue of pmacct's bitmap lookup.
@@ -13,10 +13,4 @@ object KeepLists {
 
   def remapPorts(port: Column, keep: Seq[Long]): Column =
     when(port.isin(keep: _*), port).otherwise(lit(0L))
-
-  def remapProtos(proto: Column, keep: Seq[String]): Column =
-    when(proto.isin(keep: _*), proto).otherwise(lit("0"))
-
-  def remapTos(tos: Column, keep: Seq[Int]): Column =
-    when(tos.isin(keep: _*), tos).otherwise(lit(0))
 }

@@ -69,8 +69,7 @@ object Mp4 {
     if (timescale <= 0) return None
     val tracks = inMoov.collect { case ("trak", f, u) =>
       val inTrak = boxes(b, f, u)
-      val (w, h) = inTrak.collectFirst { case ("tkhd", tf, tu) =>
-        val tver = b(tf) & 0xff
+      val (w, h) = inTrak.collectFirst { case ("tkhd", _, tu) =>
         // width/height are the LAST 8 body bytes (16.16 fixed) in
         // both versions
         ((u32(b, tu - 8) >> 16).toInt, (u32(b, tu - 4) >> 16).toInt)

@@ -444,14 +444,12 @@ object MultimodalQueries {
       doc = "baseline JPEG (T.81) encode/decode to RGB histogram, " +
         "integer-exact via DC-only blocks + fixed-point color"),
 
-    // PNG through the full lossless pipeline (Png.scala: scanline
-    // filters -> fixed-Huffman LZ77 deflate -> zlib -> CRC-guarded
-    // chunks, then the inverse): per document an RGB or RGBA image of
-    // ARBITRARY per-pixel values — lossless means the gate needs no
-    // DC-only structure like q267; every byte must survive — with the
-    // five filter types swept across rows (y % 5), so Sub/Up/Average/
-    // Paeth reconstruction is on the hot path for every image. The
-    // position-weighted checksum pins pixel ORDER, which a filter or
+    // PNG through the full lossless pipeline (Png.scala: ImageIO's
+    // writer -> CRC-validated chunk walk -> ImageIO's reader -> the
+    // Image layout): per document an RGB or RGBA image of ARBITRARY
+    // per-pixel values — lossless means the gate needs no DC-only
+    // structure like q267; every byte must survive. The
+    // position-weighted checksum pins pixel ORDER, which a channel or
     // stride defect scrambles even when value histograms survive.
     Q("q270_png_decode",
       (s, d) => {
@@ -506,8 +504,8 @@ object MultimodalQueries {
               CAST(sum(v) AS BIGINT) AS sum_v,
               CAST(sum(v * wgt) AS BIGINT) AS wsum
             FROM px GROUP BY 1"""),
-      doc = "PNG (RFC 2083) encode/decode: filters + DEFLATE + zlib, " +
-        "bit-exact on arbitrary pixels"),
+      doc = "PNG (RFC 2083) encode/decode through ImageIO behind a " +
+        "CRC-validated chunk walk, bit-exact on arbitrary pixels"),
 
     // GIF through the full LZW pipeline (Gif.scala: palette + variable
     // width codes + clear/EOI + sub-block framing + optional 4-pass

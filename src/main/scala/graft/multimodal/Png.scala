@@ -1,585 +1,45 @@
 package graft.multimodal
 
-import scala.collection.mutable
+import java.awt.Transparency
+import java.awt.color.ColorSpace
+import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer,
+  DataBufferByte, Raster}
+import java.nio.ByteBuffer
+import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import javax.imageio.stream.{MemoryCacheImageInputStream,
+  MemoryCacheImageOutputStream}
 
-/** PNG (W3C/RFC 2083) + DEFLATE (RFC 1951) + zlib (RFC 1950) — pure-spec
-  * codecs, no image or compression libraries: the lossless half of the
-  * multimodal tier next to [[Jpeg]]. Unlike JPEG, PNG roundtrips are
-  * bit-exact for ARBITRARY pixel data, so the q270 gate sweeps every
-  * scanline filter over unconstrained per-pixel arithmetic.
+import scala.util.control.NonFatal
+
+/** PNG (W3C/RFC 2083), the lossless half of the multimodal tier next
+  * to [[Jpeg]]. Pixels go through the JDK's `javax.imageio` PNG reader
+  * and writer (scanline filters, zlib, Adam7); what stays here is the
+  * 8-bit gray / gray+alpha / RGB / RGBA [[Image]] layout and a
+  * validating chunk walk in front of the reader, because ImageIO does
+  * not check chunk CRCs.
   *
-  * Decoder scope: 8-bit gray / RGB / gray+alpha / RGBA, sequential or
-  * Adam7-interlaced (seven reduced images, each its own filter chain),
-  * chunk CRC32 enforced, zlib adler32 enforced, full inflate — stored,
-  * fixed-Huffman, and dynamic-Huffman blocks with the
-  * code-length-code machinery. Encoder (fixture side): real
-  * fixed-Huffman LZ77 compressor (greedy matches, 32 KiB window) +
-  * per-row filter selection + optional Adam7 writing.
+  * Decoder scope: 8-bit colour types 0/2/4/6, sequential or Adam7,
+  * every chunk's CRC32 enforced, IEND required, at most 2^26 samples.
+  * Streams are memory-cached explicitly, so no call spills to a temp
+  * file whatever `ImageIO.getUseCache` says.
   *
-  * Everything bounds-checked: malformed input yields None, never an
-  * exception — the same discipline as the other byte codecs.
+  * Malformed input yields None, never an exception — the same
+  * discipline as the other byte codecs.
   */
 object Png {
 
-  // ------------------------------------------------------------ inflate
-
-  /** Fixed-Huffman literal/length code lengths (RFC 1951 §3.2.6). */
-  private val FixedLitLens: Array[Int] = Array.tabulate(288)(i =>
-    if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8)
-  private val FixedDistLens: Array[Int] = Array.fill(30)(5)
-
-  /** Length-code base values + extra bits (codes 257..285). */
-  private val LenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17,
-    19, 23, 27, 31, 35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195,
-    227, 258)
-  private val LenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2,
-    2, 2, 2, 3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
-  /** Distance-code base values + extra bits (codes 0..29). */
-  private val DistBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49,
-    65, 97, 129, 193, 257, 385, 513, 769, 1025, 1537, 2049, 3073,
-    4097, 6145, 8193, 12289, 16385, 24577)
-  private val DistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5,
-    5, 6, 6, 7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-  /** Code-length-code transmission order (RFC 1951 §3.2.7). */
-  private val ClcOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4,
-    12, 3, 13, 2, 14, 1, 15)
-
-  /** Canonical Huffman decode table from code lengths: per-length
-    * (firstCode, firstSymbolIndex) + symbols sorted by (len, symbol).
-    * Null result = over-subscribed/invalid lengths. */
-  private final class Huff(lens: Array[Int]) {
-    val maxLen = 15
-    val count = new Array[Int](maxLen + 1)
-    lens.foreach(l => if (l > 0) count(l) += 1)
-    val symbols = new Array[Int](lens.count(_ > 0))
-    val firstCode = new Array[Int](maxLen + 1)
-    val firstIdx = new Array[Int](maxLen + 1)
-    var valid = true
-    locally {
-      var code = 0
-      var idx = 0
-      var l = 1
-      while (l <= maxLen) {
-        firstCode(l) = code
-        firstIdx(l) = idx
-        code += count(l)
-        idx += count(l)
-        if (code > (1 << l)) valid = false // over-subscribed
-        code <<= 1
-        l += 1
-      }
-      var k = 0
-      var l2 = 1
-      while (l2 <= maxLen) {
-        var s = 0
-        while (s < lens.length) {
-          if (lens(s) == l2) { symbols(k) = s; k += 1 }
-          s += 1
-        }
-        l2 += 1
-      }
-    }
-  }
-
-  private final class BitIn(b: Array[Byte]) {
-    var pos = 0
-    private var acc = 0
-    private var nbits = 0
-    var bad = false
-    def bit(): Int = {
-      if (nbits == 0) {
-        if (pos >= b.length) { bad = true; return 0 }
-        acc = b(pos) & 0xff; pos += 1; nbits = 8
-      }
-      val v = acc & 1
-      acc >>= 1; nbits -= 1
-      v
-    }
-    /** n LSB-first bits (RFC 1951 packing). */
-    def bits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v |= bit() << i; i += 1 }
-      v
-    }
-    def alignByte(): Unit = { nbits = 0 }
-  }
-
-  private def decodeSym(in: BitIn, h: Huff): Int = {
-    var code = 0
-    var l = 1
-    while (l <= h.maxLen) {
-      code |= in.bit()
-      if (in.bad) return -1
-      val c = h.count(l)
-      if (c > 0 && code - h.firstCode(l) < c)
-        return h.symbols(h.firstIdx(l) + (code - h.firstCode(l)))
-      code <<= 1
-      l += 1
-    }
-    -1
-  }
-
-  /** RFC 1951 inflate. None on any malformed structure; `maxOut` caps
-    * the output (decompression-bomb guard). */
-  def inflate(data: Array[Byte], maxOut: Int = 1 << 26)
-      : Option[Array[Byte]] = inflateFrom(data, 0, maxOut).map(_._1)
-
-  /** RFC 1951 inflate starting at byte `from`, also returning the
-    * offset just past the final block (byte-aligned) — what a
-    * multi-member container (gzip, .warc.gz) walks members with. */
-  def inflateFrom(data: Array[Byte], from: Int, maxOut: Int = 1 << 26)
-      : Option[(Array[Byte], Int)] = {
-    if (from < 0 || from > data.length) return None
-    val in = new BitIn(data)
-    in.pos = from
-    val out = new java.io.ByteArrayOutputStream()
-    val window = new Array[Byte](32768)
-    var wpos = 0
-    var total = 0
-    def emit(byte: Int): Boolean = {
-      if (total >= maxOut) return false
-      out.write(byte)
-      window(wpos) = byte.toByte
-      wpos = (wpos + 1) & 32767
-      total += 1
-      true
-    }
-    var fin = false
-    while (!fin) {
-      fin = in.bit() == 1
-      val btype = in.bits(2)
-      if (in.bad) return None
-      btype match {
-        case 0 => // stored
-          in.alignByte()
-          if (in.pos + 4 > data.length) return None
-          val len = (data(in.pos) & 0xff) | ((data(in.pos + 1) & 0xff) << 8)
-          val nlen = (data(in.pos + 2) & 0xff) |
-            ((data(in.pos + 3) & 0xff) << 8)
-          if ((len ^ 0xffff) != nlen) return None
-          in.pos += 4
-          if (in.pos + len > data.length) return None
-          var i = 0
-          while (i < len) {
-            if (!emit(data(in.pos + i) & 0xff)) return None
-            i += 1
-          }
-          in.pos += len
-        case 1 | 2 =>
-          val (lit, dist) =
-            if (btype == 1) (new Huff(FixedLitLens), new Huff(FixedDistLens))
-            else {
-              val hlit = in.bits(5) + 257
-              val hdist = in.bits(5) + 1
-              val hclen = in.bits(4) + 4
-              if (in.bad || hlit > 286 || hdist > 30) return None
-              val clcLens = new Array[Int](19)
-              var i = 0
-              while (i < hclen) {
-                clcLens(ClcOrder(i)) = in.bits(3); i += 1
-              }
-              val clc = new Huff(clcLens)
-              if (!clc.valid) return None
-              val lens = new Array[Int](hlit + hdist)
-              var k = 0
-              while (k < lens.length) {
-                val sym = decodeSym(in, clc)
-                if (sym < 0) return None
-                sym match {
-                  case s if s < 16 => lens(k) = s; k += 1
-                  case 16 =>
-                    if (k == 0) return None
-                    val rep = 3 + in.bits(2)
-                    if (k + rep > lens.length) return None
-                    (0 until rep).foreach { _ =>
-                      lens(k) = lens(k - 1); k += 1 }
-                  case 17 =>
-                    val rep = 3 + in.bits(3)
-                    if (k + rep > lens.length) return None
-                    k += rep
-                  case _ =>
-                    val rep = 11 + in.bits(7)
-                    if (k + rep > lens.length) return None
-                    k += rep
-                }
-              }
-              val litH = new Huff(lens.take(hlit))
-              val distH = new Huff(lens.drop(hlit))
-              if (!litH.valid || !distH.valid) return None
-              (litH, distH)
-            }
-          var eob = false
-          while (!eob) {
-            val sym = decodeSym(in, lit)
-            if (sym < 0) return None
-            if (sym < 256) { if (!emit(sym)) return None }
-            else if (sym == 256) eob = true
-            else {
-              if (sym > 285) return None
-              val li = sym - 257
-              val len = LenBase(li) + in.bits(LenExtra(li))
-              val dsym = decodeSym(in, dist)
-              if (dsym < 0 || dsym > 29) return None
-              val d = DistBase(dsym) + in.bits(DistExtra(dsym))
-              if (in.bad || d > total) return None
-              var i = 0
-              while (i < len) {
-                val v = window((wpos - d) & 32767) & 0xff
-                if (!emit(v)) return None
-                i += 1
-              }
-            }
-          }
-        case _ => return None
-      }
-    }
-    Some((out.toByteArray, in.pos))
-  }
-
-  // ------------------------------------------------------------ deflate
-
-  /** Real fixed-Huffman DEFLATE compressor (fixture/roundtrip side):
-    * greedy LZ77 with a 3-byte hash head + bounded chain, 32 KiB
-    * window, one fixed block. */
-  def deflateFixed(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var acc = 0
-    var nbits = 0
-    def put(v: Int, n: Int): Unit = { // LSB-first
-      acc |= v << nbits
-      nbits += n
-      while (nbits >= 8) {
-        out.write(acc & 0xff); acc >>= 8; nbits -= 8
-      }
-    }
-    def putHuff(code: Int, len: Int): Unit = { // MSB-first within code
-      var i = len - 1
-      while (i >= 0) { put((code >> i) & 1, 1); i -= 1 }
-    }
-    def litCode(s: Int): (Int, Int) =
-      if (s < 144) (0x30 + s, 8)
-      else if (s < 256) (0x190 + (s - 144), 9)
-      else if (s < 280) (s - 256, 7)
-      else (0xc0 + (s - 280), 8)
-    put(1, 1)       // final block
-    put(1, 2)       // fixed huffman
-    val n = data.length
-    val head = new java.util.HashMap[Integer, Integer]()
-    var i = 0
-    while (i < n) {
-      var bestLen = 0
-      var bestDist = 0
-      if (i + 3 <= n) {
-        val key = ((data(i) & 0xff) << 16) | ((data(i + 1) & 0xff) << 8) |
-          (data(i + 2) & 0xff)
-        val prev = head.get(key)
-        if (prev != null) {
-          val d = i - prev
-          if (d >= 1 && d <= 32768) {
-            var l = 0
-            while (i + l < n && l < 258 && data(prev + l) == data(i + l))
-              l += 1
-            if (l >= 3) { bestLen = l; bestDist = d }
-          }
-        }
-        head.put(key, i)
-      }
-      if (bestLen >= 3) {
-        // length symbol
-        var li = LenBase.length - 1
-        while (LenBase(li) > bestLen) li -= 1
-        val sym = 257 + li
-        val (c, cl) = litCode(sym)
-        putHuff(c, cl)
-        put(bestLen - LenBase(li), LenExtra(li))
-        var di = DistBase.length - 1
-        while (DistBase(di) > bestDist) di -= 1
-        putHuff(di, 5)
-        put(bestDist - DistBase(di), DistExtra(di))
-        i += bestLen
-      } else {
-        val (c, cl) = litCode(data(i) & 0xff)
-        putHuff(c, cl)
-        i += 1
-      }
-    }
-    val (ec, el) = litCode(256)
-    putHuff(ec, el)
-    if (nbits > 0) out.write(acc & 0xff)
-    out.toByteArray
-  }
-
-  /** Optimal code lengths for `freq`, limited to `limit` bits and
-    * COMPLETE (Kraft sum exactly 1 over the used symbols — RFC 1951
-    * decoders, zlib included, reject an incomplete lit/len code):
-    * heap Huffman depths, the zlib `gen_bitlen` overflow fold back
-    * under the limit, then lengths reassigned most-frequent-shortest
-    * (symbol-asc ties) from the adjusted histogram. All-zero when no
-    * symbol is used; a single used symbol gets length 1 (the CALLER
-    * must pad the alphabet if the downstream decoder demands
-    * completeness there too). */
-  private def huffLengths(freq: Array[Int], limit: Int): Array[Int] = {
-    val lens = new Array[Int](freq.length)
-    val active = (0 until freq.length).filter(freq(_) > 0)
-    if (active.isEmpty) return lens
-    if (active.size == 1) { lens(active.head) = 1; return lens }
-    // heap Huffman: (weight, tiebreak seq) — deterministic tree
-    final case class N(w: Long, seq: Int, sym: Int, l: N, r: N)
-    val ord = Ordering.by[N, (Long, Int)](n => (n.w, n.seq))
-    val pq = mutable.PriorityQueue.empty[N](ord.reverse)
-    var seq = 0
-    active.foreach { s =>
-      pq.enqueue(N(freq(s), seq, s, null, null)); seq += 1
-    }
-    while (pq.size > 1) {
-      val a = pq.dequeue(); val b = pq.dequeue()
-      pq.enqueue(N(a.w + b.w, seq, -1, a, b)); seq += 1
-    }
-    val depth = mutable.Map[Int, Int]()
-    def walk(n: N, d: Int): Unit =
-      if (n.sym >= 0) depth(n.sym) = math.max(d, 1)
-      else { walk(n.l, d + 1); walk(n.r, d + 1) }
-    walk(pq.dequeue(), 0)
-    // histogram with the zlib overflow adjustment
-    val blCount = new Array[Int](limit + 1)
-    var overflow = 0
-    active.foreach { s =>
-      val d = depth(s)
-      if (d > limit) { blCount(limit) += 1; overflow += 1 }
-      else blCount(d) += 1
-    }
-    while (overflow > 0) {
-      var bits = limit - 1
-      while (blCount(bits) == 0) bits -= 1
-      blCount(bits) -= 1
-      blCount(bits + 1) += 2
-      blCount(limit) -= 1
-      overflow -= 2
-    }
-    // reassign: most frequent symbols take the shortest lengths
-    val bySym = active.sortBy(s => (-freq(s), s))
-    var len = 1
-    var taken = 0
-    bySym.foreach { s =>
-      while (taken >= blCount(len)) { len += 1; taken = 0 }
-      lens(s) = len
-      taken += 1
-    }
-    lens
-  }
-
-  /** Canonical codes (RFC 1951 §3.2.2) for a length array. */
-  private def canonicalCodes(lens: Array[Int]): Array[Int] = {
-    val maxLen = lens.max
-    val codes = new Array[Int](lens.length)
-    if (maxLen == 0) return codes
-    val blCount = new Array[Int](maxLen + 1)
-    lens.foreach(l => if (l > 0) blCount(l) += 1)
-    val nextCode = new Array[Int](maxLen + 2)
-    var code = 0
-    (1 to maxLen).foreach { bits =>
-      code = (code + blCount(bits - 1)) << 1
-      nextCode(bits) = code
-    }
-    lens.indices.foreach { s =>
-      if (lens(s) > 0) { codes(s) = nextCode(lens(s)); nextCode(lens(s)) += 1 }
-    }
-    codes
-  }
-
-  /** Real DYNAMIC-Huffman DEFLATE compressor: the same greedy LZ77 as
-    * [[deflateFixed]], but with per-block code tables built from the
-    * actual symbol frequencies (canonical, length-limited, complete)
-    * and shipped through the code-length code with the 16/17/18 run
-    * encodings — the block type real compressors emit. Cross-validated
-    * against the JDK's independent inflater (PngSpec/WarcSpec). */
-  def deflateDynamic(data: Array[Byte]): Array[Byte] = {
-    // ---- LZ77 tokenize (packed ints: bit31 = match) ----------------
-    val tokens = new mutable.ArrayBuffer[Int]()
-    val litFreq = new Array[Int](286)
-    val distFreq = new Array[Int](30)
-    val n = data.length
-    val head = new java.util.HashMap[Integer, Integer]()
-    var i = 0
-    while (i < n) {
-      var bestLen = 0
-      var bestDist = 0
-      if (i + 3 <= n) {
-        val key = ((data(i) & 0xff) << 16) | ((data(i + 1) & 0xff) << 8) |
-          (data(i + 2) & 0xff)
-        val prev = head.get(key)
-        if (prev != null) {
-          val d = i - prev
-          if (d >= 1 && d <= 32768) {
-            var l = 0
-            while (i + l < n && l < 258 && data(prev + l) == data(i + l))
-              l += 1
-            if (l >= 3) { bestLen = l; bestDist = d }
-          }
-        }
-        head.put(key, i)
-      }
-      if (bestLen >= 3) {
-        var li = LenBase.length - 1
-        while (LenBase(li) > bestLen) li -= 1
-        var di = DistBase.length - 1
-        while (DistBase(di) > bestDist) di -= 1
-        litFreq(257 + li) += 1
-        distFreq(di) += 1
-        tokens += (0x80000000 | (li << 26) |
-          ((bestLen - LenBase(li)) << 21) | (di << 16) |
-          (bestDist - DistBase(di)))
-        i += bestLen
-      } else {
-        val v = data(i) & 0xff
-        litFreq(v) += 1
-        tokens += v
-        i += 1
-      }
-    }
-    litFreq(256) += 1 // EOB
-    // completeness padding: decoders reject single-code lit or dist
-    // tables, so unused low symbols borrow a 1-count
-    if (litFreq.count(_ > 0) < 2) litFreq(0) += 1
-    var pad = 0
-    while (distFreq.count(_ > 0) < 2) { distFreq(pad) += 1; pad += 1 }
-    val litLens = huffLengths(litFreq, 15)
-    val distLens = huffLengths(distFreq, 15)
-    val litCodes = canonicalCodes(litLens)
-    val distCodes = canonicalCodes(distLens)
-    val hlit = math.max(257, litLens.lastIndexWhere(_ > 0) + 1)
-    val hdist = math.max(1, distLens.lastIndexWhere(_ > 0) + 1)
-    // ---- code-length-code: RLE the joined length array -------------
-    val joined = litLens.take(hlit) ++ distLens.take(hdist)
-    val rle = new mutable.ArrayBuffer[(Int, Int)]() // (sym, extraVal)
-    var j = 0
-    while (j < joined.length) {
-      val v = joined(j)
-      var run = 1
-      while (j + run < joined.length && joined(j + run) == v) run += 1
-      if (v == 0) {
-        var left = run
-        while (left >= 11) {
-          val take = math.min(left, 138); rle += ((18, take - 11))
-          left -= take
-        }
-        if (left >= 3) { rle += ((17, left - 3)); left = 0 }
-        while (left > 0) { rle += ((0, 0)); left -= 1 }
-      } else {
-        rle += ((v, 0))
-        var left = run - 1
-        while (left >= 3) {
-          val take = math.min(left, 6); rle += ((16, take - 3))
-          left -= take
-        }
-        while (left > 0) { rle += ((v, 0)); left -= 1 }
-      }
-      j += run
-    }
-    val clcFreq = new Array[Int](19)
-    rle.foreach { case (s, _) => clcFreq(s) += 1 }
-    val clcLens = huffLengths(clcFreq, 7)
-    val clcCodes = canonicalCodes(clcLens)
-    var hclen = 19
-    while (hclen > 4 && clcLens(ClcOrder(hclen - 1)) == 0) hclen -= 1
-    // ---- emit ------------------------------------------------------
-    val out = new java.io.ByteArrayOutputStream()
-    var acc = 0
-    var nbits = 0
-    def put(v: Int, nb: Int): Unit = {
-      acc |= v << nbits
-      nbits += nb
-      while (nbits >= 8) { out.write(acc & 0xff); acc >>= 8; nbits -= 8 }
-    }
-    def putHuff(code: Int, len: Int): Unit = {
-      var k = len - 1
-      while (k >= 0) { put((code >> k) & 1, 1); k -= 1 }
-    }
-    put(1, 1); put(2, 2) // final block, dynamic
-    put(hlit - 257, 5); put(hdist - 1, 5); put(hclen - 4, 4)
-    (0 until hclen).foreach(k => put(clcLens(ClcOrder(k)), 3))
-    rle.foreach { case (s, extra) =>
-      putHuff(clcCodes(s), clcLens(s))
-      s match {
-        case 16 => put(extra, 2)
-        case 17 => put(extra, 3)
-        case 18 => put(extra, 7)
-        case _ =>
-      }
-    }
-    tokens.foreach { t =>
-      if (t >= 0) putHuff(litCodes(t), litLens(t))
-      else {
-        val li = (t >> 26) & 0x1f
-        val lex = (t >> 21) & 0x1f
-        val di = (t >> 16) & 0x1f
-        val dex = t & 0xffff
-        val sym = 257 + li
-        putHuff(litCodes(sym), litLens(sym))
-        put(lex, LenExtra(li))
-        putHuff(distCodes(di), distLens(di))
-        put(dex, DistExtra(di))
-      }
-    }
-    putHuff(litCodes(256), litLens(256))
-    if (nbits > 0) out.write(acc & 0xff)
-    out.toByteArray
-  }
-
-  // --------------------------------------------------------------- zlib
-
-  def adler32(data: Array[Byte]): Long = {
-    var a = 1L; var b = 0L
-    var i = 0
-    while (i < data.length) {
-      a = (a + (data(i) & 0xff)) % 65521
-      b = (b + a) % 65521
-      i += 1
-    }
-    (b << 16) | a
-  }
-
-  /** The production deflate: dynamic tables once the data can amortize
-    * the table cost, the fixed tables below that. */
-  def deflate(data: Array[Byte]): Array[Byte] =
-    if (data.length < 64) deflateFixed(data) else deflateDynamic(data)
-
-  /** zlib wrap (RFC 1950): CMF/FLG + deflate stream + adler32. */
-  def zlibCompress(data: Array[Byte]): Array[Byte] = {
-    val body = deflate(data)
-    val out = java.nio.ByteBuffer.allocate(2 + body.length + 4)
-    out.put(0x78.toByte)                 // CM=8, CINFO=7
-    out.put(0x01.toByte)                 // FCHECK making 0x7801 % 31 == 0
-    out.put(body)
-    out.putInt(adler32(data).toInt)
-    out.array()
-  }
-
-  /** zlib unwrap + inflate + adler32 verify. */
-  def zlibDecompress(data: Array[Byte], maxOut: Int = 1 << 26)
-      : Option[Array[Byte]] = {
-    if (data.length < 6) return None
-    val cmf = data(0) & 0xff
-    val flg = data(1) & 0xff
-    if ((cmf & 0x0f) != 8) return None   // deflate only
-    if ((cmf * 256 + flg) % 31 != 0) return None
-    if ((flg & 0x20) != 0) return None   // preset dictionary unsupported
-    val raw = java.util.Arrays.copyOfRange(data, 2, data.length - 4)
-    inflate(raw, maxOut).filter { plain =>
-      val want = java.nio.ByteBuffer
-        .wrap(data, data.length - 4, 4).getInt & 0xffffffffL
-      adler32(plain) == want
-    }
-  }
-
-  // ---------------------------------------------------------------- png
+  final case class Image(width: Int, height: Int, channels: Int,
+                         pixels: Array[Byte])
 
   private val Signature =
     Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-  private def crc32(parts: Array[Byte]*): Int = {
+  private val MaxSamples = 1 << 26
+
+  /** CRC32 over a chunk's type and body, which sit at `off`. */
+  private def crc32(b: Array[Byte], off: Int, len: Int): Int = {
     val c = new java.util.zip.CRC32()
-    parts.foreach(c.update)
+    c.update(b, off, len)
     c.getValue.toInt
   }
 
@@ -592,149 +52,40 @@ object Png {
     case _ => -1
   }
 
-  final case class Image(width: Int, height: Int, channels: Int,
-                         pixels: Array[Byte])
-
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a); val pb = math.abs(p - b)
-    val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-  }
-
-  /** Adam7 pass grid: (xStart, yStart, xStep, yStep) per pass. */
-  private val Adam7 = Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-    (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-  /** Filtered scanline serialization of one (sub-)image — each row a
-    * filter byte + filtered samples. */
-  private def filterSub(px: Array[Byte], w: Int, h: Int, bpp: Int,
-                        filterOf: Int => Int): Array[Byte] = {
-    val stride = w * bpp
-    val raw = new Array[Byte]((stride + 1) * h)
-    var y = 0
-    while (y < h) {
-      val f = filterOf(y) % 5
-      raw(y * (stride + 1)) = f.toByte
-      var x = 0
-      while (x < stride) {
-        val cur = px(y * stride + x) & 0xff
-        val left = if (x >= bpp) px(y * stride + x - bpp) & 0xff else 0
-        val up = if (y > 0) px((y - 1) * stride + x) & 0xff else 0
-        val ul = if (y > 0 && x >= bpp)
-          px((y - 1) * stride + x - bpp) & 0xff else 0
-        val v = f match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - up
-          case 3 => cur - ((left + up) / 2)
-          case _ => cur - paeth(left, up, ul)
-        }
-        raw(y * (stride + 1) + 1 + x) = (v & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    raw
-  }
-
-  /** Reconstruct one (sub-)image from filtered scanlines at `off`;
-    * None on a bad filter byte. Returns (pixels, bytes consumed). */
-  private def unfilterSub(raw: Array[Byte], off: Int, w: Int, h: Int,
-                          bpp: Int): Option[Array[Byte]] = {
-    val stride = w * bpp
-    if (off + (stride + 1) * h > raw.length) return None
-    val px = new Array[Byte](stride * h)
-    var y = 0
-    while (y < h) {
-      val f = raw(off + y * (stride + 1)) & 0xff
-      if (f > 4) return None
-      var x = 0
-      while (x < stride) {
-        val v = raw(off + y * (stride + 1) + 1 + x) & 0xff
-        val left = if (x >= bpp) px(y * stride + x - bpp) & 0xff else 0
-        val up = if (y > 0) px((y - 1) * stride + x) & 0xff else 0
-        val ul = if (y > 0 && x >= bpp)
-          px((y - 1) * stride + x - bpp) & 0xff else 0
-        val rec = f match {
-          case 0 => v
-          case 1 => v + left
-          case 2 => v + up
-          case 3 => v + ((left + up) / 2)
-          case _ => v + paeth(left, up, ul)
-        }
-        px(y * stride + x) = (rec & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    Some(px)
-  }
-
-  /** Encode an 8-bit image; `filterOf(y)` picks each row's filter
-    * (0..4) so tests can sweep all five; `interlaced` writes the
-    * seven Adam7 reduced images (each with its own filter chain). */
-  def encode(img: Image, filterOf: Int => Int = _ % 5,
-             interlaced: Boolean = false): Array[Byte] = {
+  /** Encode an 8-bit image; `interlaced` writes Adam7. ImageIO picks
+    * each row's filter. */
+  def encode(img: Image, interlaced: Boolean = false): Array[Byte] = {
     require(Seq(1, 2, 3, 4).contains(img.channels), "1..4 channels")
     require(img.pixels.length == img.width * img.height * img.channels)
-    val colorType = img.channels match {
-      case 1 => 0; case 2 => 4; case 3 => 2; case _ => 6
-    }
-    val bpp = img.channels
-    val raw: Array[Byte] =
-      if (!interlaced) filterSub(img.pixels, img.width, img.height,
-        bpp, filterOf)
-      else {
-        val out = new java.io.ByteArrayOutputStream()
-        Adam7.foreach { case (x0, y0, xs, ys) =>
-          val pw = if (img.width > x0) (img.width - x0 + xs - 1) / xs else 0
-          val ph = if (img.height > y0) (img.height - y0 + ys - 1) / ys else 0
-          if (pw > 0 && ph > 0) {
-            val sub = new Array[Byte](pw * ph * bpp)
-            var sy = 0
-            while (sy < ph) {
-              var sx = 0
-              while (sx < pw) {
-                val gy = y0 + sy * ys
-                val gx = x0 + sx * xs
-                System.arraycopy(img.pixels,
-                  (gy * img.width + gx) * bpp,
-                  sub, (sy * pw + sx) * bpp, bpp)
-                sx += 1
-              }
-              sy += 1
-            }
-            val fr = filterSub(sub, pw, ph, bpp, filterOf)
-            out.write(fr, 0, fr.length)
-          }
-        }
-        out.toByteArray
-      }
-    val idat = zlibCompress(raw)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Signature, 0, Signature.length)
-    def chunk(tag: String, body: Array[Byte]): Unit = {
-      val b = java.nio.ByteBuffer.allocate(8 + body.length + 4)
-      b.putInt(body.length)
-      val t = tag.getBytes("US-ASCII")
-      b.put(t); b.put(body)
-      b.putInt(crc32(t, body))
-      out.write(b.array(), 0, b.capacity())
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-    ihdr.putInt(img.width).putInt(img.height)
-    ihdr.put(8.toByte).put(colorType.toByte)
-    ihdr.put(0.toByte).put(0.toByte)       // deflate / adaptive filters
-    ihdr.put((if (interlaced) 1 else 0).toByte)
-    chunk("IHDR", ihdr.array())
-    chunk("IDAT", idat)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
+    val ch = img.channels
+    val alpha = ch % 2 == 0
+    val cm = new ComponentColorModel(
+      ColorSpace.getInstance(
+        if (ch <= 2) ColorSpace.CS_GRAY else ColorSpace.CS_sRGB),
+      alpha, false,
+      if (alpha) Transparency.TRANSLUCENT else Transparency.OPAQUE,
+      DataBuffer.TYPE_BYTE)
+    val raster = Raster.createInterleavedRaster(
+      new DataBufferByte(img.pixels, img.pixels.length), img.width,
+      img.height, img.width * ch, ch, Array.range(0, ch), null)
+    val writer = ImageIO.getImageWritersByFormatName("png").next()
+    val param = writer.getDefaultWriteParam
+    param.setProgressiveMode(
+      if (interlaced) ImageWriteParam.MODE_DEFAULT
+      else ImageWriteParam.MODE_DISABLED)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(
+        new BufferedImage(cm, raster, false, null), null, null), param)
+    } finally { writer.dispose(); out.close() }
+    bytes.toByteArray
   }
 
   /** Decode a PNG byte stream. None outside the supported profile or on
-    * any malformed structure (bad CRC, bad adler, short scanlines). */
+    * any malformed structure (bad CRC, bad IHDR, missing IEND, short
+    * or corrupt image data). */
   def decode(b: Array[Byte]): Option[Image] = {
     if (b.length < 8 + 25 || !Signature.indices.forall(i =>
       b(i) == Signature(i))) return None
@@ -742,24 +93,19 @@ object Png {
     var width = 0
     var height = 0
     var channels = -1
-    var interlaced = false
-    val idat = new java.io.ByteArrayOutputStream()
     var seenIhdr = false
     var seenIend = false
     while (!seenIend) {
       if (pos + 8 > b.length) return None
-      val len = java.nio.ByteBuffer.wrap(b, pos, 4).getInt
+      val len = ByteBuffer.wrap(b, pos, 4).getInt
       if (len < 0 || pos + 12 + len > b.length) return None
-      val tag = new String(b, pos + 4, 4, "US-ASCII")
-      val body = java.util.Arrays.copyOfRange(b, pos + 8, pos + 8 + len)
-      val want = java.nio.ByteBuffer.wrap(b, pos + 8 + len, 4).getInt
-      if (crc32(java.util.Arrays.copyOfRange(b, pos + 4, pos + 8),
-        body) != want) return None
-      tag match {
+      if (crc32(b, pos + 4, 4 + len) !=
+        ByteBuffer.wrap(b, pos + 8 + len, 4).getInt) return None
+      new String(b, pos + 4, 4, "US-ASCII") match {
         case "IHDR" =>
           if (seenIhdr || len != 13) return None
           seenIhdr = true
-          val h = java.nio.ByteBuffer.wrap(body)
+          val h = ByteBuffer.wrap(b, pos + 8, 13)
           width = h.getInt(); height = h.getInt()
           val depth = h.get() & 0xff
           channels = channelsOf(h.get() & 0xff)
@@ -768,60 +114,45 @@ object Png {
           val interlace = h.get() & 0xff
           if (width <= 0 || height <= 0 || depth != 8 || channels < 0 ||
             comp != 0 || filt != 0 || interlace > 1) return None
-          interlaced = interlace == 1
-          if (width.toLong * height * channels > (1 << 26)) return None
-        case "IDAT" =>
-          if (!seenIhdr) return None
-          idat.write(body, 0, body.length)
+          if (width.toLong * height * channels > MaxSamples) return None
         case "IEND" => seenIend = true
         case _ =>
-          if (!seenIhdr) return None // ancillary before header
+          if (!seenIhdr) return None // IDAT or ancillary before header
       }
       pos += 12 + len
     }
     if (!seenIhdr) return None
-    val bpp = channels
-    val stride = width * bpp
-    zlibDecompress(idat.toByteArray).flatMap { raw =>
-      if (!interlaced) {
-        if (raw.length != (stride + 1) * height) None
-        else unfilterSub(raw, 0, width, height, bpp)
-          .map(px => Image(width, height, channels, px))
-      } else {
-        // Adam7: seven reduced images, each its own filter chain,
-        // concatenated in pass order; scatter back to the full grid
-        val px = new Array[Byte](stride * height)
-        var off = 0
-        var ok = true
-        Adam7.foreach { case (x0, y0, xs, ys) =>
-          if (ok) {
-            val pw = if (width > x0) (width - x0 + xs - 1) / xs else 0
-            val ph = if (height > y0) (height - y0 + ys - 1) / ys else 0
-            if (pw > 0 && ph > 0) {
-              unfilterSub(raw, off, pw, ph, bpp) match {
-                case None => ok = false
-                case Some(sub) =>
-                  off += (pw * bpp + 1) * ph
-                  var sy = 0
-                  while (sy < ph) {
-                    var sx = 0
-                    while (sx < pw) {
-                      System.arraycopy(sub, (sy * pw + sx) * bpp, px,
-                        ((y0 + sy * ys) * width + (x0 + sx * xs)) * bpp,
-                        bpp)
-                      sx += 1
-                    }
-                    sy += 1
-                  }
-              }
-            }
+    val reader = ImageIO.getImageReadersByFormatName("png").next()
+    val in = new MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(b))
+    try {
+      reader.setInput(in, true, true)
+      val r = reader.read(0).getRaster
+      // ImageIO widens gray/RGB with a tRNS chunk to an alpha band;
+      // the image keeps the channels its colour type declares
+      val nb = r.getNumBands
+      if (r.getWidth != width || r.getHeight != height || nb < channels)
+        return None
+      val px = new Array[Byte](width * height * channels)
+      val row = new Array[Int](width * nb)
+      var y = 0
+      while (y < height) {
+        r.getPixels(0, y, width, 1, row)
+        var x = 0
+        while (x < width) {
+          var c = 0
+          while (c < channels) {
+            px((y * width + x) * channels + c) = row(x * nb + c).toByte
+            c += 1
           }
+          x += 1
         }
-        if (ok && off == raw.length)
-          Some(Image(width, height, channels, px))
-        else None
+        y += 1
       }
-    }
+      Some(Image(width, height, channels, px))
+    } catch {
+      case NonFatal(_) => None
+    } finally { reader.dispose(); in.close() }
   }
 
   /** (width, height, channels) from IHDR alone — the metadata probe
@@ -829,13 +160,11 @@ object Png {
   def dims(b: Array[Byte]): Option[(Int, Int, Int)] = {
     if (b.length < 33 || !Signature.indices.forall(i =>
       b(i) == Signature(i))) return None
-    val len = java.nio.ByteBuffer.wrap(b, 8, 4).getInt
+    val len = ByteBuffer.wrap(b, 8, 4).getInt
     if (len != 13 || new String(b, 12, 4, "US-ASCII") != "IHDR")
       return None
-    val body = java.util.Arrays.copyOfRange(b, 16, 29)
-    if (crc32(java.util.Arrays.copyOfRange(b, 12, 4 + 12), body) !=
-      java.nio.ByteBuffer.wrap(b, 29, 4).getInt) return None
-    val h = java.nio.ByteBuffer.wrap(body)
+    if (crc32(b, 12, 17) != ByteBuffer.wrap(b, 29, 4).getInt) return None
+    val h = ByteBuffer.wrap(b, 16, 13)
     val w = h.getInt(); val ht = h.getInt()
     h.get() // depth
     val nc = channelsOf(h.get() & 0xff)

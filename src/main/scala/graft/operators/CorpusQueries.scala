@@ -1597,7 +1597,7 @@ object CorpusQueries {
           ("coc", "n3", 1L, n3c), ("coc", "n4", 1L, n4c),
           ("coc", "m1", 1L, mm1), ("coc", "m2", 1L, mm2),
           ("coc", "m3", 1L, mm3), ("coc", "m4", 1L, mm4))
-        (srcAgg.map { case (src, nd, nk, lt) =>
+        (srcAgg.map { case (src, nd, _, lt) =>
             ("src", src, nd, lt) } ++
           srcAgg.map { case (src, nd, nk, _) =>
             ("keep", src, nd, nk) } ++

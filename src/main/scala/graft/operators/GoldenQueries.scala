@@ -570,7 +570,7 @@ object GoldenReplay {
     * never purges its RIB, so no close deletes are logged. */
   def bmpMsglogRows(stream: Array[Byte], router: String,
                     keepOpen: Boolean = false): Seq[MsglogRow] = {
-    import graft.sources.{BgpMsg, BmpMsg}
+    import graft.sources.BmpMsg
     def peerIpOf(p: BmpMsg.PeerHeader): String =
       if (p.addrHi == 0L && (p.addrLo >>> 32) == 0L) ntop4(p.peerAddr)
       else ntop6(u64bytes(p.addrHi) ++ u64bytes(p.addrLo))

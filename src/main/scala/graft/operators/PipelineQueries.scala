@@ -36,22 +36,9 @@ object PipelineQueries {
     }
   }
 
-  /** Every FileSourceScan in an executed plan (through AQE wrappers) —
-    * the executed-scan pruning-evidence reader shared by the bucketed
-    * ingest-state lanes. */
-  private def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-    p match {
-      case a: org.apache.spark.sql.execution.adaptive
-          .AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-      case qse: org.apache.spark.sql.execution.adaptive
-          .QueryStageExec => scansOf(qse.plan)
-      case f: org.apache.spark.sql.execution
-          .FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scansOf)
-    }
-
-  /** scansOf, but also descending through cached-plan boundaries: a
+  /** Every FileSourceScan in an executed plan, through AQE wrappers
+    * and cached-plan boundaries — the executed-scan pruning-evidence
+    * reader shared by the bucketed ingest-state lanes. A
     * persisted DataFrame's first action executes the shared
     * InMemoryRelation.cachedPlan instance, so the scan metrics of a
     * probe that ran INSIDE a cache materialization are harvested from
@@ -253,20 +240,6 @@ object PipelineQueries {
         }
       gen += 1; nl0 = 0; folds += 1
       deleteRec(oldRoot)
-    }
-    /** Full-state read (base + unfolded L0s) for a sync-point
-      * consumer, and the store-health observable backing its gate:
-      * max parquet files under any one pb bucket (post-fold this is
-      * 1 + appends since, always <= the cadence). */
-    def readAll: DataFrame =
-      if (!baseExists) l0Read
-      else s.read.parquet(baseDir).unionByName(l0Read)
-    def filesPerBucketMax: Long = {
-      val byBucket = (stateFiles(baseDir) ++ l0Files)
-        .flatMap(p => "/pb=(\\d+)/".r.findFirstMatchIn(p)
-          .map(_.group(1)))
-        .groupBy(identity).map(_._2.size)
-      if (byBucket.isEmpty) 0L else byBucket.max.toLong
     }
     /** Lane-end cleanup: the store's current generation is scratch
       * once its evidence is in memory and any sync consumer has

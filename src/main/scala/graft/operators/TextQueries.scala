@@ -593,8 +593,6 @@ object TextQueries {
     // violations plus the exact per-source stats.
     Q("q265_quantile_sketch",
       (s, d) => {
-        val sp = s
-        import sp.implicits._
         val acc = 1000
         val docs = Tables.documents(s, d).select("source", "n_chars")
         val approx = docs.groupBy("source")
@@ -966,7 +964,7 @@ object TextQueries {
     // ships in — each doc renders into its own `.warc.gz` (warcinfo
     // member + HTTP-response member, the Common Crawl per-record-
     // member layout), then the reader walks the concatenated gzip
-    // members (RFC 1952 framing over the repo's own RFC 1951 inflate,
+    // members (RFC 1952 framing over the JDK's raw inflate,
     // CRC32 + ISIZE enforced), parses the WARC record grammar, splits
     // the HTTP header block, and must recover every doc's body, URI
     // doc id and byte counts exactly. mapPartitions, O(doc) memory,

@@ -547,8 +547,6 @@ object SimilarityQueries {
           .filter(col("rn") <= 5).select("qid", "vec_id")
         val hits = exactTop.join(broadcast(adcTop), Seq("qid", "vec_id"))
           .groupBy("qid").agg(count(lit(1)).as("h"))
-        val sp = s
-        import sp.implicits._
         val recall = qs.select("qid").distinct()
           .join(broadcast(hits), Seq("qid"), "left")
           .selectExpr("'recall' AS kind", "CAST(qid AS STRING) AS key",
@@ -989,8 +987,6 @@ object SimilarityQueries {
             "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
               "* 1000) AS BIGINT)) AS v")
           .persist() // reused by R rounds + weights; dropped below
-        val dist = "aggregate(zip_with(v, cv, (a, b) -> " +
-          "(a - b) * (a - b)), 0L, (acc, z) -> acc + z)"
         // ROW-LOCAL nearest-center pass (optimization r17, the q331
         // shape): the center set rides as a ONE-ROW broadcast array
         // and min-distance (and, for weights, the (dist asc, cid asc)

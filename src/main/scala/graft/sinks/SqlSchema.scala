@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sql_table_version v1-v9 legacy column mapping (CONFIG-KEYS:1301-1327;

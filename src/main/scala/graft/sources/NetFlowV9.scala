@@ -73,7 +73,6 @@ object NetFlowV9 {
   final case class TemplateX(id: Int, fields: Seq[FieldSpec],
                              scopeCount: Int = 0) {
     val minRecordLen: Int = fields.map(_.minLen).sum
-    def isFixed: Boolean = fields.forall(!_.isVlen)
     lazy val repeatedKeys: Set[Long] =
       fields.groupBy(_.key).filter(_._2.size > 1).keySet
     lazy val layers: Seq[Int] = fields.flatMap(f =>

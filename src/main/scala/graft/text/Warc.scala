@@ -1,8 +1,8 @@
 package graft.text
 
-import scala.collection.mutable
+import java.util.zip.{DataFormatException, Deflater, Inflater}
 
-import graft.multimodal.Png
+import scala.collection.mutable
 
 /** WARC (ISO 28500 / WARC-1.1) + RFC 1952 gzip members — the container
   * a web-crawl training corpus actually arrives in (Common Crawl ships
@@ -13,8 +13,7 @@ import graft.multimodal.Png
   * in this repo holds (a poisoned crawl shard must not kill a 100 TB
   * scan task).
   *
-  * DEFLATE rides the repo's own RFC 1951 machinery
-  * ([[graft.multimodal.Png.inflateFrom]] / `deflate`), so the
+  * DEFLATE is the JDK's raw (`nowrap`) `Deflater`/`Inflater`, so the
   * gzip layer here is only the RFC 1952 member framing: header with
   * flag walk (FEXTRA/FNAME/FCOMMENT/FHCRC), raw deflate body, CRC32 +
   * ISIZE trailer — both enforced on decode.
@@ -35,15 +34,19 @@ object Warc {
     c.getValue.toInt
   }
 
-  /** One RFC 1952 member: minimal header (no optional fields), the
-    * repo's deflate (dynamic tables past 64 B), CRC32 + ISIZE trailer. */
+  /** One RFC 1952 member: minimal header (no optional fields), a raw
+    * deflate body, CRC32 + ISIZE trailer. */
   def gzip(data: Array[Byte]): Array[Byte] = {
-    val body = Png.deflate(data)
-    val out = new java.io.ByteArrayOutputStream(body.length + 18)
+    val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
     out.write(0x1f); out.write(0x8b); out.write(8); out.write(0)
     (0 until 4).foreach(_ => out.write(0)) // MTIME unknown
     out.write(0); out.write(255)           // XFL, OS unknown
-    out.write(body, 0, body.length)
+    val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    try {
+      d.setInput(data); d.finish()
+      val buf = new Array[Byte](8192)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    } finally d.end()
     val c = crc32(data)
     (0 until 4).foreach(i => out.write((c >>> (8 * i)) & 0xff))
     val n = data.length
@@ -52,7 +55,8 @@ object Warc {
   }
 
   /** Decode ONE member starting at `from`: (data, offset past the
-    * member). None on bad magic/flags/stream/CRC/ISIZE. */
+    * member). None on bad magic/flags/stream/CRC/ISIZE, or once the
+    * member inflates past `maxOut` bytes (decompression-bomb guard). */
   def gunzipMember(b: Array[Byte], from: Int,
                    maxOut: Int = 1 << 26): Option[(Array[Byte], Int)] = {
     if (from + 10 > b.length) return None
@@ -74,13 +78,38 @@ object Warc {
     if ((flg & 8) != 0 && !skipZeroTerminated()) return None  // FNAME
     if ((flg & 16) != 0 && !skipZeroTerminated()) return None // FCOMMENT
     if ((flg & 2) != 0) { at += 2; if (at > b.length) return None }
-    val (data, end) = Png.inflateFrom(b, at, maxOut).getOrElse(return None)
+    val (data, end) = inflateFrom(b, at, maxOut).getOrElse(return None)
     if (end + 8 > b.length) return None
     def u32le(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
       ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
     if (u32le(end) != crc32(data)) return None
     if (u32le(end + 4) != data.length) return None
     Some((data, end + 8))
+  }
+
+  /** Raw inflate of the deflate stream at `from`: (data, offset just
+    * past its final block). None on a corrupt or truncated stream or
+    * past `maxOut` bytes; never inflates more than `maxOut` + 1. */
+  private def inflateFrom(b: Array[Byte], from: Int, maxOut: Int)
+      : Option[(Array[Byte], Int)] = {
+    val inf = new Inflater(true)
+    try {
+      inf.setInput(b, from, b.length - from)
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      var total = 0L
+      while (!inf.finished()) {
+        val n = inf.inflate(buf, 0,
+          math.min(buf.length.toLong, maxOut - total + 1).toInt)
+        if (n == 0 && !inf.finished()) return None // truncated
+        total += n
+        if (total > maxOut) return None
+        out.write(buf, 0, n)
+      }
+      Some((out.toByteArray, b.length - inf.getRemaining))
+    } catch {
+      case _: DataFormatException => None
+    } finally inf.end()
   }
 
   /** Decode ALL concatenated members (the .warc.gz shape). Leniency:

@@ -583,7 +583,7 @@ class DaemonCodecSpec extends AnyFunSuite {
   }
 
   test("RespMiniServer: SETEX keyspace, down/up cycle, severed conns") {
-    import graft.sinks.{Resp, RespMiniServer}
+    import graft.sinks.RespMiniServer
     val server = new RespMiniServer
     val port = server.start()
     try {

@@ -293,13 +293,13 @@ class DatagramFuzzSpec extends AnyFunSuite {
     (0 to db.length).foreach { n =>
       val cut = java.util.Arrays.copyOf(db, n)
       try { val rd = new Mmdb.Reader(cut); probes.foreach(rd.lookup) }
-      catch { case e: Exception => () } // orderly exceptions only
+      catch { case _: Exception => () } // orderly exceptions only
     }
     db.indices.foreach { i =>
       val mut = db.clone()
       mut(i) = (mut(i) ^ (1 << r.nextInt(8))).toByte
       try { val rd = new Mmdb.Reader(mut); probes.foreach(rd.lookup) }
-      catch { case e: Exception => () }
+      catch { case _: Exception => () }
     }
     // and the valid db still resolves after the sweep
     val rd = new Mmdb.Reader(db)

@@ -3,11 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.multimodal.{MediaCodecs, Png}
 
-/** PNG / DEFLATE / zlib gates. The JDK's Deflater/Inflater serve as
-  * INDEPENDENT reference codecs: our inflate must decode the JDK's
-  * dynamic-Huffman output, and the JDK must decode our fixed-Huffman
-  * LZ77 output — cross-validation neither side can fake. PNG roundtrips
-  * are bit-exact for arbitrary pixels across all five scanline filters.
+/** PNG gates. Pixels ride the JDK's ImageIO codec, so what is ours to
+  * pin is the Image layout (every channel count, sequential and Adam7,
+  * bit-exact on arbitrary pixels) and the validating chunk walk in
+  * front of the reader: truncation, CRC, IHDR and size rejections.
   */
 class PngSpec extends AnyFunSuite {
 
@@ -19,117 +18,76 @@ class PngSpec extends AnyFunSuite {
     }
   }
 
-  private def texty(n: Int): Array[Byte] =
-    Iterator.continually("the quick brown fox jumps over the lazy dog ")
-      .flatten.take(n).map(_.toByte).toArray
-
-  test("inflate decodes JDK Deflater output (dynamic + stored + fixed)") {
-    for ((data, label) <- Seq(
-      (texty(5000), "texty"), (noise(4096, 7L), "noise"),
-      (Array.emptyByteArray, "empty"),
-      (Array.fill[Byte](10000)(42), "constant"),
-      (noise(3, 9L), "tiny"))) {
-      for (level <- Seq(java.util.zip.Deflater.BEST_COMPRESSION,
-        java.util.zip.Deflater.NO_COMPRESSION, // stored blocks
-        java.util.zip.Deflater.BEST_SPEED)) {
-        val d = new java.util.zip.Deflater(level, true) // raw deflate
-        d.setInput(data); d.finish()
-        val buf = new Array[Byte](data.length + 1024)
-        val m = d.deflate(buf)
-        d.end()
-        val got = Png.inflate(java.util.Arrays.copyOf(buf, m))
-        assert(got.exists(_.sameElements(data)), s"$label level $level")
+  /** A reference PNG whose every row carries filter type `f`, with
+    * the JDK's zlib for IDAT: ImageIO's writer emits filter 0 on every
+    * row, so the decode side of Sub/Up/Average/Paeth is pinned here. */
+  private def withFilter(img: Png.Image, f: Int,
+                         level: Int = java.util.zip.Deflater.DEFAULT_COMPRESSION)
+      : Array[Byte] = {
+    val bpp = img.channels
+    val stride = img.width * bpp
+    def at(y: Int, x: Int): Int =
+      if (y < 0 || x < 0) 0 else img.pixels(y * stride + x) & 0xff
+    val raw = new java.io.ByteArrayOutputStream()
+    for (y <- 0 until img.height) {
+      raw.write(f)
+      for (x <- 0 until stride) {
+        val (a, b, c) = (at(y, x - bpp), at(y - 1, x), at(y - 1, x - bpp))
+        val p = a + b - c
+        val pred = f match {
+          case 0 => 0
+          case 1 => a
+          case 2 => b
+          case 3 => (a + b) / 2
+          case _ =>
+            val (pa, pb, pc) =
+              (math.abs(p - a), math.abs(p - b), math.abs(p - c))
+            if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
+        }
+        raw.write((at(y, x) - pred) & 0xff)
       }
     }
-  }
-
-  test("JDK Inflater decodes our fixed-Huffman LZ77 output") {
-    for ((data, label) <- Seq(
-      (texty(6000), "texty"), (noise(2048, 3L), "noise"),
-      (Array.emptyByteArray, "empty"),
-      (Array.fill[Byte](70000)(7), "constant-long"))) {
-      val comp = Png.deflateFixed(data)
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(comp)
-      val out = new Array[Byte](data.length + 16)
-      val n = inf.inflate(out)
-      assert(inf.finished(), s"$label not finished")
-      inf.end()
-      assert(n == data.length &&
-        java.util.Arrays.equals(out, 0, n, data, 0, data.length),
-        s"$label roundtrip")
-      // matches actually compress repetitive data
-      if (label == "constant-long") assert(comp.length < data.length / 50)
+    val idat = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.DeflaterOutputStream(idat,
+      new java.util.zip.Deflater(level))
+    z.write(raw.toByteArray); z.close()
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(Array(0x89, 'P', 'N', 'G', 13, 10, 26, 10).map(_.toByte))
+    def chunk(tag: String, body: Array[Byte]): Unit = {
+      val t = tag.getBytes("US-ASCII")
+      val crc = new java.util.zip.CRC32()
+      crc.update(t); crc.update(body)
+      out.write(java.nio.ByteBuffer.allocate(12 + body.length)
+        .putInt(body.length).put(t).put(body).putInt(crc.getValue.toInt)
+        .array())
     }
-  }
-
-  test("JDK Inflater decodes our DYNAMIC-table output; beats fixed") {
-    for ((data, label) <- Seq(
-      (texty(6000), "texty"), (noise(2048, 3L), "noise"),
-      (Array.emptyByteArray, "empty"),
-      (Array[Byte](42), "one-byte"),
-      (Array.fill[Byte](70000)(7), "constant-long"),
-      (Array.tabulate[Byte](300)(i => (i % 2).toByte), "two-symbol"))) {
-      val comp = Png.deflateDynamic(data)
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(comp)
-      val out = new Array[Byte](data.length + 16)
-      val n = inf.inflate(out)
-      assert(inf.finished(), s"$label not finished")
-      inf.end()
-      assert(n == data.length &&
-        java.util.Arrays.equals(out, 0, n, data, 0, data.length),
-        s"$label roundtrip")
-      // our own inflate agrees
-      assert(Png.inflate(comp).exists(_.sameElements(data)), label)
-    }
-    // frequency-tuned tables beat the fixed ones on skewed data
-    val skewed = texty(20000)
-    assert(Png.deflateDynamic(skewed).length <
-      Png.deflateFixed(skewed).length)
-    // seeded sweep: arbitrary content roundtrips through the JDK
-    (0 until 40).foreach { s =>
-      val data = noise(1 + (s * 997) % 5000, s.toLong)
-      val comp = Png.deflateDynamic(data)
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(comp)
-      val out = new Array[Byte](data.length + 16)
-      val n = inf.inflate(out)
-      assert(inf.finished() && n == data.length &&
-        java.util.Arrays.equals(out, 0, n, data, 0, data.length),
-        s"seed $s")
-      inf.end()
-    }
-  }
-
-  test("our inflate decodes our deflate; zlib wrap verifies adler32") {
-    for (data <- Seq(texty(3000), noise(1000, 11L))) {
-      assert(Png.inflate(Png.deflateFixed(data))
-        .exists(_.sameElements(data)))
-      assert(Png.zlibDecompress(Png.zlibCompress(data))
-        .exists(_.sameElements(data)))
-      // corrupt the adler trailer: must reject
-      val z = Png.zlibCompress(data)
-      z(z.length - 1) = (z(z.length - 1) ^ 1).toByte
-      assert(Png.zlibDecompress(z).isEmpty)
-    }
+    val colorType = Array(0, 4, 2, 6)(bpp - 1)
+    chunk("IHDR", java.nio.ByteBuffer.allocate(13).putInt(img.width)
+      .putInt(img.height).put(Array[Byte](8, colorType.toByte, 0, 0, 0))
+      .array())
+    chunk("IDAT", idat.toByteArray)
+    chunk("IEND", Array.emptyByteArray)
+    out.toByteArray
   }
 
   test("PNG roundtrips arbitrary pixels across all five filters") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def cacheFiles: Set[String] = Option(tmp.list()).fold(Set.empty[String])(
+      _.filter(_.startsWith("imageio")).toSet)
+    val before = cacheFiles
     for (ch <- 1 to 4; (w, h) <- Seq((1, 1), (5, 7), (16, 16), (33, 9))) {
       val img = Png.Image(w, h, ch, noise(w * h * ch, ch * 100 + w))
-      // filterOf(y) = y % 5 sweeps None/Sub/Up/Average/Paeth
       val bytes = Png.encode(img)
       val back = Png.decode(bytes).getOrElse(fail(s"decode $ch ${w}x$h"))
       assert(back.width == w && back.height == h && back.channels == ch)
       assert(back.pixels.sameElements(img.pixels), s"$ch ${w}x$h")
-      // each filter individually too
-      for (f <- 0 to 4) {
-        val b2 = Png.encode(img, _ => f)
-        assert(Png.decode(b2).exists(_.pixels.sameElements(img.pixels)),
-          s"filter $f $ch ${w}x$h")
-      }
+      // None/Sub/Up/Average/Paeth each reconstruct exactly on decode
+      for (f <- 0 to 4)
+        assert(Png.decode(withFilter(img, f))
+          .exists(_.pixels.sameElements(img.pixels)), s"filter $f $ch ${w}x$h")
     }
+    // memory-cached ImageIO streams: no round trip leaves a cache file
+    assert(cacheFiles == before)
   }
 
   test("Adam7 interlace roundtrips bit-exact; ImageIO agrees") {
@@ -182,9 +140,8 @@ class PngSpec extends AnyFunSuite {
     for (n <- 0 until good.length)
       assert(Png.decode(good.take(n)).isEmpty, s"truncated at $n decoded")
     // any single-byte corruption either fails cleanly or still decodes
-    // to the exact image (flips in pure padding) — never wrong pixels,
-    // because every chunk is CRC-guarded and the zlib body is
-    // adler-guarded
+    // to the exact image — never wrong pixels, because every chunk is
+    // CRC-guarded (ImageIO's reader checks no CRC; the walk does)
     for (i <- good.indices) {
       val bad = good.clone()
       bad(i) = (bad(i) ^ 0x40).toByte
@@ -192,14 +149,52 @@ class PngSpec extends AnyFunSuite {
       assert(r.isEmpty || r.get.pixels.sameElements(img.pixels),
         s"corruption at $i produced wrong pixels")
     }
+    // ImageIO's reader checks no chunk CRC, so the walk must: a bad
+    // CRC alone is refused on every chunk, and a pixel flipped inside
+    // a stored (uncompressed) IDAT, which ImageIO alone would read
+    // back as a wrong pixel (it checks no adler32 either), is refused
+    var pos = 8
+    while (pos < good.length) {
+      val len = java.nio.ByteBuffer.wrap(good, pos, 4).getInt
+      val bad = good.clone()
+      bad(pos + 8 + len) = (bad(pos + 8 + len) ^ 1).toByte
+      assert(Png.decode(bad).isEmpty, s"bad CRC at chunk $pos decoded")
+      pos += 12 + len
+    }
+    val stored = withFilter(img, 0, java.util.zip.Deflater.NO_COMPRESSION)
+    assert(Png.decode(stored).exists(_.pixels.sameElements(img.pixels)))
+    // IDAT body at 33 + 8; zlib header 2, stored-block header 5, then
+    // row 0's filter byte and its first sample
+    val flipped = stored.clone()
+    flipped(33 + 8 + 2 + 5 + 1) = (flipped(33 + 8 + 2 + 5 + 1) ^ 1).toByte
+    assert(Png.decode(flipped).isEmpty)
     // interlaced (Adam7) is rejected, not mis-decoded: patch IHDR
     val adam = good.clone()
     adam(28) = 1 // interlace byte within IHDR body
     assert(Png.decode(adam).isEmpty) // (CRC now fails — still rejected)
     assert(Png.decode(Array.emptyByteArray).isEmpty)
     assert(Png.decode("not a png at all, really".getBytes).isEmpty)
-    // inflate bomb guard: a tiny stream expanding past maxOut
-    val bomb = Png.deflateFixed(Array.fill[Byte](1 << 20)(0))
-    assert(Png.inflate(bomb, maxOut = 1000).isEmpty)
+    // size guard: an IHDR claiming more than 2^26 samples is refused
+    // by the chunk walk, before any pixel buffer exists
+    def withIhdr(w: Int, h: Int): Array[Byte] = {
+      val b = good.clone()
+      java.nio.ByteBuffer.wrap(b, 16, 8).putInt(w).putInt(h)
+      val c = new java.util.zip.CRC32()
+      c.update(b, 12, 17)
+      java.nio.ByteBuffer.wrap(b, 29, 4).putInt(c.getValue.toInt)
+      b
+    }
+    val huge = withIhdr(8192, 2731) // 67,117,056 samples
+    assert(Png.dims(huge).contains((8192, 2731, 3)))
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = mx.getCurrentThreadAllocatedBytes
+    assert(Png.decode(huge).isEmpty)
+    // a 64 MiB raster was never allocated
+    assert(mx.getCurrentThreadAllocatedBytes - before < (8L << 20))
+    assert(Png.decode(withIhdr(Int.MaxValue, Int.MaxValue)).isEmpty)
+    // the same patch at the real size still decodes: the check above
+    // failed on size, not on the rewritten header
+    assert(Png.decode(withIhdr(9, 6)).exists(_.pixels.sameElements(img.pixels)))
   }
 }

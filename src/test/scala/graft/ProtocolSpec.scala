@@ -531,7 +531,7 @@ class ProtocolSpec extends AnyFunSuite {
   }
 
   test("ConfigSpec parses aggregate/filter/history/preprocess") {
-    import graft.core.{ConfigSpec, SecondsHistory}
+    import graft.core.ConfigSpec
     val p = ConfigSpec.parse(
       """! comment
         |aggregate: src_host, dst_port
@@ -963,7 +963,7 @@ class ProtocolSpec extends AnyFunSuite {
 
   test("vlen template persistence round-trips through state/restore") {
     import graft.sources.NetFlowV9
-    import NetFlowV9.{FieldSpec, IE, TemplateX, VarLen}
+    import NetFlowV9.{FieldSpec, TemplateX, VarLen}
     val penF = FieldSpec(5, 2, pen = 9L)
     val t = TemplateX(291, Seq(FieldSpec(96, VarLen), penF))
     val h = NetFlowV9.V9Header(0L, 0L, 0L, 1L)

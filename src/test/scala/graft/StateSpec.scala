@@ -618,7 +618,7 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("Kmv: merge-tree bit-invariance, estimator bands, Spark, SQL") {
-    import graft.plans.{Kmv, KmvAgg}
+    import graft.plans.KmvAgg
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types.StringType

@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.Warc
 
-/** WARC + gzip-member codec: cross-validated against the JDK's
-  * independent gzip implementation in BOTH directions (our member
-  * decode reads GZIPOutputStream's output including its FNAME-free
-  * header; GZIPInputStream decodes our members), RFC 1952 flag-walk
-  * coverage, concatenated members, the WARC record grammar, and
-  * truncation/corruption fuzz (decodable prefix, never a throw). */
+/** WARC + gzip-member codec: our RFC 1952 framing cross-validated
+  * against the JDK's GZIP streams in BOTH directions (our member decode
+  * reads GZIPOutputStream's output; GZIPInputStream decodes our
+  * members) with exact member end offsets, RFC 1952 flag-walk
+  * coverage, the decompression-bomb cap, concatenated members, the
+  * WARC record grammar, and truncation/corruption fuzz (decodable
+  * prefix, never a throw). */
 class WarcSpec extends AnyFunSuite {
 
   private def bytes(n: Int, seed: Long): Array[Byte] = {
@@ -38,7 +39,29 @@ class WarcSpec extends AnyFunSuite {
       jdkOut.write(data); jdkOut.close()
       val Some((back2, end2)) = Warc.gunzipMember(bo.toByteArray, 0): @unchecked
       assert(back2.sameElements(data) && end2 == bo.size())
+      // the deflate stream ends exactly where the CRC trailer starts:
+      // cut there, or one byte into the trailer, the member is refused
+      assert(Warc.gunzipMember(gz.dropRight(8), 0).isEmpty)
+      assert(Warc.gunzipMember(gz.dropRight(1), 0).isEmpty)
+      // trailing garbage and a non-zero start leave the end offset exact
+      val garbage = Array(0x1f, 0x8b, 8, 0, 42, 42, 42).map(_.toByte)
+      val Some((back3, end3)) =
+        Warc.gunzipMember(garbage ++ gz ++ garbage, garbage.length): @unchecked
+      assert(back3.sameElements(data) &&
+        end3 == garbage.length + gz.length)
     }
+  }
+
+  test("gzip bomb guard: a member inflating past maxOut is refused") {
+    val zeros = new Array[Byte](1 << 20)
+    val gz = Warc.gzip(zeros)
+    assert(gz.length < 4096) // a tiny member claiming 1 MiB
+    assert(Warc.gunzipMember(gz, 0, maxOut = 1000).isEmpty)
+    assert(Warc.gunzipMember(gz, 0, maxOut = (1 << 20) - 1).isEmpty)
+    // exactly maxOut bytes is within the cap
+    assert(Warc.gunzipMember(gz, 0, maxOut = 1 << 20)
+      .exists(_._1.sameElements(zeros)))
+    assert(Warc.gunzipAll(gz ++ gz, maxOut = 1000).isEmpty)
   }
 
   test("gzip header flag walk: FEXTRA, FNAME, FCOMMENT, FHCRC") {
