@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -21,12 +21,7 @@ object AnnCapacity {
     val d = args(0)
     val k = args(1).toInt
     val sub = 16 // dims per subspace (64 / M)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("anncapacity")
     val t0 = System.nanoTime()
     val n = graft.core.Tables.embeddings(spark, d).selectExpr("vec_id",
       "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")

@@ -1,21 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Graft
 import org.apache.spark.sql.functions._
 
 /** Recall-at-scale extraction (VERDICT r12 #6): runs the three ANN
-  * lanes' builders in a Bench-shaped session (local[32], 32 shuffle
-  * partitions — the soak measurement environment) and prints ONE line
+  * lanes' builders in the engine's session (`Graft.session`, the one
+  * Bench runs — the soak measurement environment) and prints ONE line
   * per lane with aggregated recall@5, so the 10×/100× soak measures
   * QUALITY alongside time. Usage: runMain graft.AnnRecall <sfDir>. */
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("annrecall")
     // probe-only sampled query panel for big corpora (the gated
     // lanes keep %97): SPARK_GRAFT_QMOD=9973 makes the exact-truth
     // leg tractable at 100x (O(queries x corpus x dims))

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+import graft.core.Graft
 object Bench {
   /** 1-minute load average, or -1 when unreadable. */
   private def loadAvg(): Double =
@@ -52,6 +53,25 @@ object Bench {
     }.getOrElse(Map.empty)
   } catch { case NonFatal(_) => Map.empty }
 
+  /** Warm a fresh session so the first timed lane is not charged fixed
+    * startup costs: codegen init, file listing and the scheduler, then the
+    * shared materialized signature tables (VERDICT r11 #2: the one-time
+    * SigTable fill billed 4-5 s to whichever lane ran first — it is
+    * warehouse base-table materialization, not that lane's cost; every
+    * consumer reads the same cache). Returns whether the SigTable fill
+    * succeeded: NonFatal-only + a stamped flag (ADVICE r12), because a
+    * failed warm-up re-bills the fill to the first consumer, and that
+    * distortion must be machine-detectable, not silent. */
+  def warmUp(spark: SparkSession, sfDir: String): Boolean = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    SparkEntry.queries.get("q01_agg_base").foreach(_(spark, sfDir).count())
+    try {
+      graft.operators.SigTable.sigs(spark, sfDir).count()
+      graft.operators.SigTable.pairs90(spark, sfDir).count()
+      true
+    } catch { case NonFatal(_) => false }
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.contains("--ref-debug")) { // dev: prove the reference
       val r = refSolo(sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
@@ -71,30 +91,8 @@ object Bench {
     // below for anything that still lands hot.
     val loadMax = sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX", "1.5").toDouble
     val loadAtStart = awaitIdle(loadMax, 240000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen init, file listing, scheduler) so the
-    // first timed query is not charged fixed startup costs.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    SparkEntry.queries.get("q01_agg_base").foreach(_(spark, sfDir).count())
-    // Warm the shared materialized signature tables too (VERDICT r11
-    // #2: the one-time SigTable fill billed 4-5 s to whichever lane
-    // ran first — it is warehouse base-table materialization, not
-    // that lane's cost; every consumer reads the same cache).
-    // NonFatal-only + a stamped flag (ADVICE r12): a failed warm-up
-    // re-bills the fill to the first consumer — that distortion must
-    // be machine-detectable in the JSON artifact, not silent.
-    val warmupOk = try {
-      graft.operators.SigTable.sigs(spark, sfDir).count()
-      graft.operators.SigTable.pairs90(spark, sfDir).count()
-      true
-    } catch { case NonFatal(_) => false }
+    val spark = Graft.session("bench")
+    val warmupOk = warmUp(spark, sfDir)
     // optional comma-separated name filter for local iteration; the
     // driver sets no filter and benches everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -162,7 +160,9 @@ object Bench {
       .mkString("{", ",", "}")
     val totalAll = results.values.filter(_ >= 0).sum
     val lanesFile = "bench_lanes.json"
-    try {
+    // only a full sweep writes the lanes file: a subset run must not
+    // overwrite the full-sweep artifact with its few lanes
+    if (only.isEmpty) try {
       val w = new java.io.PrintWriter(lanesFile, "UTF-8")
       // a complete bench line (full-name queries map) so
       // tools/bench_compare.py can consume this file directly

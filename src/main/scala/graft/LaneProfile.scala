@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.core.Graft
 
 /** Dev tool (optimization rounds): run selected lanes with a job-level
   * profile — one line per Spark job (duration, #stages seen, first
@@ -12,17 +12,10 @@ import org.apache.spark.sql.SparkSession
 object LaneProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm-up parity with Bench
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    SparkEntry.queries.get("q01_agg_base").foreach(_(spark, sfDir).count())
+    val spark = Graft.session("laneprofile")
+    // Bench's warm-up, so no lane here is billed a fill Bench does not bill
+    if (!Bench.warmUp(spark, sfDir))
+      println("WARMUP SigTable fill failed: the first consumer pays it")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val jobStartTs = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String, Int)]()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Graft
 
 /** Global plan audit (VERDICT r10 #8): build EVERY registered query and
   * assert the fleet-wide physical-plan invariants that PlanSpec pins
@@ -255,13 +255,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Graft.tune(spark)
+    val spark = Graft.session("planaudit")
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq
@@ -273,7 +267,7 @@ object PlanAudit {
         // a lane that collects inside itself hands back a local relation;
         // audit the plan that computed it, in the form every other lane is
         // audited in (the collect ran it: read its initial adaptive plan)
-        val executed = graft.core.Graft.collectedPlan(df).map {
+        val executed = Graft.collectedPlan(df).map {
           case a: org.apache.spark.sql.execution.adaptive
               .AdaptiveSparkPlanExec => a.initialPlan
           case p => p

@@ -36,13 +36,7 @@ object ScaleGen {
     val in = args(0)
     val out = args(1)
     val factor = args(2).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Graft.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("scalegen", shufflePartitions = Some(32))
     run(spark, in, out, factor)
     spark.stop()
   }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Graft
 
 /** Rule-table collision sweep: replays the q242 gate's exact
   * (family, uid) sample pairs from the events table and prints every
@@ -11,8 +11,7 @@ import org.apache.spark.sql.SparkSession
 object SigWho {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session("sigwho")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.functions.SigRules

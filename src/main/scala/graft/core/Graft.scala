@@ -1,14 +1,27 @@
 package graft.core
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine: the one place a session is
+  * configured.
   *
-  * Defaults are tuned for the judge harness (single-JVM `local[N]`), but every
-  * setting here is what we would also ship on a 1000-executor cluster:
+  * Every main builds its session with [[Graft.session]]: `Verify`, `Bench`,
+  * `PlanAudit`, `LaneProfile`, `Explain`, `ScaleGen`, `Smoke`, the Ann/Sig
+  * probes, flowbench and the test suites. `SPARK_GRAFT_CPUS` sets its
+  * `local[N]` width and shuffle partitions; unset, both are
+  * `min(32, nproc)`. A session the engine did not build (the driver's
+  * `SparkEntry.entry`, or a caller handing its own session to
+  * `SparkEntry.queries`) gets the same SQL settings from [[Graft.tune]],
+  * which every [[Tables]] read applies.
+  *
+  * Defaults are tuned for a single-JVM `local[N]`, but every setting here
+  * is what we would also ship on a 1000-executor cluster:
   *   - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
   *   - shuffle partitions sized to the parallelism actually available instead
   *     of the 200 default
@@ -38,19 +51,23 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   *     NIO instead of forking `chmod` for each file and directory.
   */
 object Graft {
+  /** The SQL settings every graft session carries, whoever built it. */
+  private val sqlSettings = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.adaptive.enabled" -> "true")
+
   def session(appName: String = "graft",
               master: Option[String] = None,
               shufflePartitions: Option[Int] = None): SparkSession = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      math.min(32, Runtime.getRuntime.availableProcessors).toString)
+    val spark = SparkSession.builder()
       .appName(appName)
       .master(master.getOrElse(s"local[$cores]"))
       .config("spark.sql.shuffle.partitions",
         shufflePartitions.getOrElse(cores.toInt).toString)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled", "true")
@@ -58,7 +75,8 @@ object Graft {
         classOf[FileSystemBasedCheckpointFileManager].getName)
       .config("spark.hadoop.fs.file.impl",
         classOf[NioLocalFileSystem].getName)
-    val spark = b.getOrCreate()
+      .config(sqlSettings)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -101,12 +119,23 @@ object Graft {
   def collectedPlan(df: DataFrame): Option[SparkPlan] =
     df.queryExecution.logical.getTagValue(CollectedFrom)
 
-  /** Apply the runtime confs graft needs on a session we did not build
-    * (the driver's Verify/Bench contract hands us an existing session). */
+  /** Delete `dir` and everything under it, if it exists — the release
+    * step of a lane that wrote scratch files. */
+  def deleteTree(dir: String): Unit = {
+    val root = Paths.get(dir)
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally paths.close()
+    }
+  }
+
+  /** Apply graft's SQL settings to a session it did not build (the
+    * driver's `SparkEntry.entry` session, or one handed to
+    * `SparkEntry.queries`); on a [[session]] it changes nothing. */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    sqlSettings.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 }

@@ -4,10 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
-/** Loaders for the driver-generated test tables (see TESTDATA.md).
+/** Readers for the driver-generated test tables (see TESTDATA.md): the one
+  * place a driver table is read.
   *
-  * All reads go through here so scan-level normalization happens once:
-  *   - `events.ts` normalizes to TimestampType (microseconds, UTC session)
+  *   - `load(s, d, name)` (and the per-table shorthands) reads
+  *     `d/name.parquet` as a batch DataFrame;
+  *   - `stream(s, d, name)` is its streaming twin: a file-source stream over
+  *     `d/name.*` with the file's own schema, for the Structured Streaming
+  *     lanes.
+  *
+  * Both apply [[Graft.tune]] first, so a session the engine did not build
+  * reads with the same settings, and both normalize the scan the same way:
+  *   - `events.ts` lands on TimestampType (microseconds, UTC session)
   *     whatever the parquet writer produced: TIMESTAMP(NANOS) arrives as a
   *     nanos BIGINT (legacy.parquet.nanosAsLong) and is floored to micros
   *     like DuckDB's `epoch_us`; TIMESTAMP(MICROS) without a zone arrives
@@ -24,12 +32,21 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     Graft.tune(spark)
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    name match {
-      case "events" => normalizeEventTs(df)
-      case _ => df
-    }
+    normalize(name, spark.read.parquet(s"$dir/$name.parquet"))
   }
+
+  /** A streaming read of table `name`: every file matching `dir/name.*`,
+    * under the schema of `dir/name.parquet`. The glob, not the bare file
+    * path, because the file stream source lists a directory or glob for
+    * new files. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
+    Graft.tune(spark)
+    val schema = spark.read.parquet(s"$dir/$name.parquet").schema
+    normalize(name, spark.readStream.schema(schema).parquet(s"$dir/$name.*"))
+  }
+
+  private def normalize(name: String, df: DataFrame): DataFrame =
+    if (name == "events") normalizeEventTs(df) else df
 
   /** Normalize `events.ts` to micros TimestampType on a batch OR streaming
     * DataFrame, whatever physical type the parquet writer chose:
@@ -41,7 +58,7 @@ object Tables {
     *   - TIMESTAMP(MICROS) with a zone already is TimestampType.
     * The match is on the static schema, so streaming plans stay incremental.
     */
-  def normalizeEventTs(df: DataFrame): DataFrame =
+  private def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -30,15 +30,6 @@ final class VersionedStore(spark: SparkSession, path: String,
   private def exists(p: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(p))
 
-  private def deleteDir(p: String): Unit = {
-    import java.nio.file._
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(p)
-    if (Files.exists(root))
-      Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(Files.delete)
-  }
-
   private def parts(): Seq[DataFrame] =
     baseDir.map(spark.read.parquet(_)).toSeq ++
       (if (exists(deltaDir)) Seq(spark.read.parquet(deltaDir)) else Nil)
@@ -64,8 +55,8 @@ final class VersionedStore(spark: SparkSession, path: String,
     val newBase = s"$path/base_$version"
     latestWins(parts().reduce(_ unionByName _))
       .write.mode("overwrite").parquet(newBase)
-    deleteDir(deltaDir)
-    baseDir.foreach(deleteDir)
+    Graft.deleteTree(deltaDir)
+    baseDir.foreach(Graft.deleteTree)
     baseDir = Some(newBase)
     appends = 0
   }

@@ -724,7 +724,6 @@ object PipelineQueries {
     // ingests a 100 TB crawl as it arrives.
     Q("q325_stream_ingest",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         val qualityMin = 0.6
@@ -845,7 +844,6 @@ object PipelineQueries {
     // tiers over the same corpus).
     Q("q327_stream_dedup_cascade",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import org.apache.spark.sql.types.StructType
@@ -1300,7 +1298,6 @@ object PipelineQueries {
     // pipeline runs when arrival order cannot be trusted.
     Q("q330_ooo_dedup_reconcile",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import org.apache.spark.sql.types.StructType
@@ -1539,7 +1536,6 @@ object PipelineQueries {
     // dedup doc-for-doc.
     Q("q332_bucketed_state_ingest",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import org.apache.spark.sql.types.StructType
@@ -1774,7 +1770,6 @@ object PipelineQueries {
     // every one of the seven probes.
     Q("q342_compaction_cadence",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import org.apache.spark.sql.types.StructType

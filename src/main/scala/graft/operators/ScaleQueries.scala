@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{FlowView, Q, Salt, Tables}
+import graft.core.{FlowView, Graft, Q, Salt, Tables}
 import graft.functions.{SigRules, SniApps}
 import graft.maps.{Bloom, Dims}
 
@@ -986,11 +986,7 @@ object ScaleQueries {
         all.size.toLong, pfPresent))
     } finally {
       // result rows are driver literals by now — the dir can go
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(tmp))
-        java.nio.file.Files.walk(tmp).sorted(
-          java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
+      Graft.deleteTree(tmp.toString)
     }
   }
 
@@ -1056,12 +1052,6 @@ object ScaleQueries {
       val matching = all.count(_.contains(s"tbin=$minTbin/"))
       (aggRows, DppEvidence(filesScanned, matching.toLong,
         all.size.toLong, dynPruned))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(tmp))
-        java.nio.file.Files.walk(tmp).sorted(
-          java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    } finally Graft.deleteTree(tmp.toString)
   }
 }

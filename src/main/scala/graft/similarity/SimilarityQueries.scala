@@ -1551,7 +1551,6 @@ object SimilarityQueries {
     // == corpus rows) and the multi-batch evidence.
     Q("q336_ivf_stream_ingest",
       (s, d) => {
-        graft.core.Graft.tune(s)
         val sp = s
         import sp.implicits._
         val n = Tables.embeddings(s, d).selectExpr("vec_id",

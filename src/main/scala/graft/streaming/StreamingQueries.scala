@@ -60,13 +60,8 @@ object StreamingQueries {
     // (SURVEY §3.1 "Spark shape"; refresh_time ≙ trigger interval).
     Q("q45_stream_window",
       (s, d) => {
-        Graft.tune(s)
-        val schema = s.read.parquet(s"$d/events.parquet").schema
         val name = "q45_sink_" + sinkId.incrementAndGet()
-        // glob (not the bare file path): the file stream source needs a
-        // directory/glob basePath to list for new files.
-        val agg = Tables.normalizeEventTs(
-            s.readStream.schema(schema).parquet(s"$d/events.*"))
+        val agg = Tables.stream(s, d, "events")
           .withColumn("ets", col("ts"))
           .withWatermark("ets", "10 minutes")
           .groupBy(window(col("ets"), "1 hour"), col("event_type"))
@@ -212,11 +207,8 @@ object StreamingQueries {
     // pipeline's exact-dedup running incrementally; state = seen keys).
     Q("q62_stream_dedup",
       (s, d) => {
-        Graft.tune(s)
-        val schema = s.read.parquet(s"$d/events.parquet").schema
         val name = "q62_sink_" + sinkId.incrementAndGet()
-        val q = Tables.normalizeEventTs(
-            s.readStream.schema(schema).parquet(s"$d/events.*"))
+        val q = Tables.stream(s, d, "events")
           .select(col("user_id"), col("event_type"),
             expr("unix_micros(ts)").as("tu"))
           .dropDuplicates("user_id", "event_type")
@@ -242,18 +234,15 @@ object StreamingQueries {
     // bucket occupancy, never the corpus.
     Q("q119_stream_neardup",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.operators.SigTable
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
         val name = "q119_sink_" + sinkId.incrementAndGet()
         // spread rows BEFORE the CPU-bound chain: the streaming parquet
         // source plans one partition per file (one, locally), and the
         // tokenize→md5→minhash chain must not run on a single core; at
         // production file counts the repartition is moot
-        val arrivals = s.readStream.schema(schema)
-          .parquet(s"$d/documents.*")
+        val arrivals = Tables.stream(s, d, "documents")
           .select("doc_id", "text")
           .repartition(s.sparkContext.defaultParallelism)
           .selectExpr("doc_id", s"${SigTable.hsExpr} as hs")
@@ -328,17 +317,16 @@ object StreamingQueries {
     // plain distributed write per flush, O(changed keys).
     Q("q63_stream_upsert",
       (s, d) => {
-        Graft.tune(s)
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val store = java.nio.file.Files.createTempDirectory("q63_upsert")
-          .resolve("store").toString
+        val scratch =
+          java.nio.file.Files.createTempDirectory("q63_upsert").toString
+        val store = s"$scratch/store"
         // update-mode re-emits a group's TOTAL; upsert = replace by key,
         // expressed as append + latest-wins read with periodic compaction
         // (core/VersionedStore — the Delta-MERGE parity path whose reads
         // stay O(live keys), never O(flush history))
         val vs = new graft.core.VersionedStore(s, store,
           Seq("ubucket", "event_type"), compactEvery = 4)
-        val q = s.readStream.schema(schema).parquet(s"$d/events.*")
+        val q = Tables.stream(s, d, "events")
           .groupBy((col("user_id") % 32).as("ubucket"), col("event_type"))
           .agg(count(lit(1)).as("n"),
             sumScaled(col("value"), 4).as("sum_value"))
@@ -348,7 +336,9 @@ object StreamingQueries {
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        vs.latest().select("ubucket", "event_type", "n", "sum_value")
+        Graft.collectLocal(
+          vs.latest().select("ubucket", "event_type", "n", "sum_value"))(
+          Graft.deleteTree(scratch))
       },
       Some("""SELECT user_id % 32 AS ubucket, event_type, count(*) AS n,
               CAST(sum(CAST(floor(value * 10000) AS BIGINT)) AS BIGINT)
@@ -366,10 +356,9 @@ object StreamingQueries {
     // oracle's direct aggregation.
     Q("q105_sql_sink",
       (s, d) => {
-        Graft.tune(s)
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val db = java.nio.file.Files.createTempDirectory("q105_derby")
-          .resolve("acctdb").toString
+        val scratch =
+          java.nio.file.Files.createTempDirectory("q105_derby").toString
+        val db = s"$scratch/acctdb"
         val url = s"jdbc:derby:$db;create=true"
         val boot = java.sql.DriverManager.getConnection(url)
         boot.createStatement().executeUpdate(
@@ -378,7 +367,7 @@ object StreamingQueries {
              n BIGINT, sum_value BIGINT,
              PRIMARY KEY (ubucket, event_type))""")
         boot.close()
-        val q = s.readStream.schema(schema).parquet(s"$d/events.*")
+        val q = Tables.stream(s, d, "events")
           .writeStream.outputMode("append")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             // plugin-cache partial aggregation: distributed, per flush
@@ -391,11 +380,20 @@ object StreamingQueries {
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        s.read.format("jdbc").option("url", url)
+        Graft.collectLocal(s.read.format("jdbc").option("url", url)
           .option("dbtable", "acct").load()
           .select(col("UBUCKET").as("ubucket"),
             col("EVENT_TYPE").as("event_type"),
-            col("N").as("n"), col("SUM_VALUE").as("sum_value"))
+            col("N").as("n"), col("SUM_VALUE").as("sum_value"))) {
+          // release: shut the database down (Derby answers a clean
+          // shutdown with SQLState 08006), then delete its files
+          try java.sql.DriverManager
+            .getConnection(s"jdbc:derby:$db;shutdown=true").close()
+          catch {
+            case e: java.sql.SQLException if e.getSQLState == "08006" =>
+          }
+          Graft.deleteTree(scratch)
+        }
       },
       Some("""SELECT user_id % 32 AS ubucket, event_type, count(*) AS n,
               CAST(sum(CAST(floor(value * 10000) AS BIGINT)) AS BIGINT)
@@ -410,11 +408,8 @@ object StreamingQueries {
     // with watermark = max(event time) - delay.
     Q("q76_stream_late_append",
       (s, d) => {
-        Graft.tune(s)
-        val schema = s.read.parquet(s"$d/events.parquet").schema
         val name = "q76_sink_" + sinkId.incrementAndGet()
-        val q = Tables.normalizeEventTs(
-            s.readStream.schema(schema).parquet(s"$d/events.*"))
+        val q = Tables.stream(s, d, "events")
           .withColumn("ets", col("ts"))
           .withWatermark("ets", "1 hour")
           .groupBy(window(col("ets"), "1 day"), col("event_type"))
@@ -443,11 +438,8 @@ object StreamingQueries {
     // so the batch oracle is exact.
     Q("q136_stream_prorate",
       (s, d) => {
-        Graft.tune(s)
-        val schema = s.read.parquet(s"$d/events.parquet").schema
         val name = "q136_sink_" + sinkId.incrementAndGet()
-        val fl = FlowView.fromEvents(Tables.normalizeEventTs(
-          s.readStream.schema(schema).parquet(s"$d/events.*")))
+        val fl = FlowView.fromEvents(Tables.stream(s, d, "events"))
         val agg = graft.operators.ProRating.explodeBins(fl,
             col("t0u"), col("t1u"), 300,
             Seq("bytes_w" -> col("bytes")))
@@ -484,14 +476,11 @@ object StreamingQueries {
     // src/net_aggr.c, applied on the live path).
     Q("q141_stream_enrich",
       (s, d) => {
-        Graft.tune(s)
-        val schema = s.read.parquet(s"$d/events.parquet").schema
         val name = "q141_sink_" + sinkId.incrementAndGet()
         import graft.maps.Dims
         import graft.plans.Lpm
         val t = new Lpm.Table(16, Dims.networkPrefixes)
-        val fl = FlowView.fromEvents(Tables.normalizeEventTs(
-          s.readStream.schema(schema).parquet(s"$d/events.*")))
+        val fl = FlowView.fromEvents(Tables.stream(s, d, "events"))
         val agg = fl
           .withColumn("dst_as", coalesce(Lpm.lpm(col("ip_dst"), t), lit(0L)))
           .withColumn("ets", expr("timestamp_micros(t0u)"))
@@ -525,8 +514,6 @@ object StreamingQueries {
     // (pair multiplicity is part of the contract and the oracle).
     Q("q177_stream_stream_join",
       (s, d) => {
-        Graft.tune(s)
-        val schema = s.read.parquet(s"$d/events.parquet").schema
         val name = "q177_sink_" + sinkId.incrementAndGet()
         // A stream-stream join runs 4 state stores PER shuffle
         // partition; their per-batch maintenance dominates a
@@ -535,13 +522,11 @@ object StreamingQueries {
         // maxPartitionBytes — grows with data, so at real volume this
         // widens instead of pinning to a constant), capped at the
         // session's shuffle width; restored after the query.
-        val scanParts =
-          s.read.parquet(s"$d/events.parquet").rdd.getNumPartitions
+        val scanParts = Tables.load(s, d, "events").rdd.getNumPartitions
         val parts = math.max(2, math.min(scanParts,
           s.conf.get("spark.sql.shuffle.partitions").toInt))
         Graft.withConf(s, "spark.sql.shuffle.partitions" -> parts.toString) {
-          def src() = Tables.normalizeEventTs(
-            s.readStream.schema(schema).parquet(s"$d/events.*"))
+          def src() = Tables.stream(s, d, "events")
           // Banded range join: equality on (exporter, 10-min time band)
           // with the option side exploded into its two candidate bands,
           // range residual after. With only 8 exporters a bare
@@ -605,7 +590,6 @@ object StreamingQueries {
     // machinery breaks parity.
     Q("q238_udp_sharded_ingest",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sources.{NetFlowV5, UdpDatagramSource, V5Header, V5Record}
@@ -691,7 +675,6 @@ object StreamingQueries {
     // (dup), fast-forwarded (loss), or mis-split ranges breaks parity.
     Q("q251_kafka_stream_source",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
@@ -791,7 +774,6 @@ object StreamingQueries {
     //     transactions only; totals reconcile against the events table.
     Q("q262_kafka_txn_sink",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
@@ -816,9 +798,7 @@ object StreamingQueries {
           require(zacks.forall(_._3 == 0), "zombie stage rejected")
 
           // 2. the stream: events → (key, value) → transactional sink
-          val schema = s.read.parquet(s"$d/events.parquet").schema
-          val q = Tables.normalizeEventTs(
-              s.readStream.schema(schema).parquet(s"$d/events.*"))
+          val q = Tables.stream(s, d, "events")
             .selectExpr("event_type as key",
               "cast(concat(cast(user_id as string), ':', " +
                 "cast(cast(floor(value * 100) as bigint) as string)) " +
@@ -911,7 +891,6 @@ object StreamingQueries {
     // skip, or overlapping ownership breaks count/sum/offset parity.
     Q("q279_kafka_group_source",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
@@ -1071,7 +1050,6 @@ object StreamingQueries {
     // high-water mark.
     Q("q285_kafka_group_multitopic",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
@@ -1212,7 +1190,6 @@ object StreamingQueries {
     // sinks against the events table.
     Q("q304_kafka_kip848",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
@@ -1373,7 +1350,6 @@ object StreamingQueries {
     // assignment timeline must grow 2→4 partitions and never be empty.
     Q("q314_kafka_848_regex",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
@@ -1499,15 +1475,12 @@ object StreamingQueries {
     // in the corpus, not in a nightly batch).
     Q("q318_stream_substr_dedup",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.text.TextOps
-        val schema = s.read.parquet(s"$d/documents.parquet").schema
         val outDir = java.nio.file.Files
           .createTempDirectory("q318_verdicts").toString
-        val arrivals = s.readStream.schema(schema)
-          .parquet(s"$d/documents.*")
+        val arrivals = Tables.stream(s, d, "documents")
           .select("doc_id", "text")
           .repartition(s.sparkContext.defaultParallelism)
           .selectExpr("doc_id",
@@ -1571,11 +1544,12 @@ object StreamingQueries {
         require(nBatches.get() <= 1L,
           s"q318 verdicts are single-batch-final; got ${nBatches.get()}" +
             " micro-batches — cross-batch doc_id ordering is unchecked")
-        s.read.parquet(outDir)
+        Graft.collectLocal(s.read.parquet(outDir)
           .groupBy("doc_id").agg(max("dup").as("dup"))
           .groupBy().agg(count(lit(1)).as("n_docs"),
             sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup"),
-            sum(when(col("dup"), 0L).otherwise(1L)).as("n_kept"))
+            sum(when(col("dup"), 0L).otherwise(1L)).as("n_kept")))(
+          Graft.deleteTree(outDir))
       },
       Some {
         import graft.text.TextOps
@@ -1619,7 +1593,6 @@ object StreamingQueries {
     // is a category error).
     Q("q321_sustained_cadence",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sources.{NetFlowV5, UdpDatagramSource, V5Header, V5Record}
@@ -1759,7 +1732,6 @@ object StreamingQueries {
     // rounds, so exactly-once holds without an offset handover here).
     Q("q324_metadata_rebalance",
       (s, d) => {
-        Graft.tune(s)
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{ImtStore, Salt}
@@ -242,16 +244,27 @@ class StateSpec extends AnyFunSuite {
 
   test("lane hygiene: withConf lanes leave the session as they found it") {
     val d = "/root/testdata/sf0.001"
-    // every table load applies the engine's session baseline, as the
-    // Verify/Bench mains do before their first lane; the lanes must
-    // leave that baseline exactly as they found it
-    graft.core.Graft.tune(spark)
-    def session() = Map(
+    // the suite's session is `Graft.session`, the one Verify and Bench
+    // run every lane in; the lanes must leave it exactly as they found it
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    // lanes that write scratch files under java.io.tmpdir, by dir prefix
+    val scratchPrefix = Map("q63_stream_upsert" -> "q63_upsert",
+      "q105_sql_sink" -> "q105_derby",
+      "q318_stream_substr_dedup" -> "q318_verdicts")
+    def scratch(name: String): Set[String] = scratchPrefix.get(name)
+      .map { prefix =>
+        val ls = java.nio.file.Files.list(tmp)
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(prefix)).toSet
+        finally ls.close()
+      }.getOrElse(Set.empty)
+    def session(name: String) = Map(
       "conf" -> spark.conf.getAll,
       "persistent RDDs" -> spark.sparkContext.getPersistentRDDs.keySet,
       "temp views" -> spark.catalog.listTables().collect()
         .filter(_.isTemporary).map(_.name).toSet,
-      "active streams" -> spark.streams.active.map(_.id).toSet)
+      "active streams" -> spark.streams.active.map(_.id).toSet,
+      "scratch dirs" -> scratch(name))
     // q321 returns through the same memory-sink shape but is left out:
     // it is a wall-clock-pinned soak of about 80 s
     Seq("q316_logreg_trainer", "q327_stream_dedup_cascade",
@@ -260,11 +273,12 @@ class StateSpec extends AnyFunSuite {
         "q83_imt_merge", "q45_stream_window", "q62_stream_dedup",
         "q76_stream_late_append", "q119_stream_neardup",
         "q136_stream_prorate", "q141_stream_enrich",
-        "q238_udp_sharded_ingest")
+        "q238_udp_sharded_ingest", "q63_stream_upsert", "q105_sql_sink",
+        "q318_stream_substr_dedup")
       .foreach { name =>
-        val before = session()
+        val before = session(name)
         assert(SparkEntry.queries(name)(spark, d).collect().nonEmpty, name)
-        val after = session()
+        val after = session(name)
         before.keys.foreach(k =>
           assert(after(k) == before(k), s"$name changed the session's $k"))
       }
