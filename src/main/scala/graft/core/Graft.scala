@@ -49,6 +49,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   *   - `fs.file.impl` = [[NioLocalFileSystem]]: the same checksummed local
   *     filesystem, setting the permission bits Hadoop would set through
   *     NIO instead of forking `chmod` for each file and directory.
+  *
+  * Scratch directories have one owner, this object. [[withScratch]] is the
+  * only place in the engine that creates a directory under
+  * `java.io.tmpdir`, and it deletes the directory, with everything under
+  * it, when its body returns or throws. A lane that writes scratch files
+  * builds its answer inside [[scratchLane]], which collects the answer and
+  * runs the lane's release step before the directory goes. The lane hands
+  * back a local relation that carries the plan that computed it
+  * ([[collectedPlan]]), so nothing it returns reads a deleted file.
   */
 object Graft {
   /** The SQL settings every graft session carries, whoever built it. */
@@ -101,13 +110,13 @@ object Graft {
     * or stores the answer was read from) also when the collect throws, and
     * hand the rows back as a local relation, so the lane leaves no session
     * state behind. The local relation carries the plan that computed the
-    * rows ([[collectedPlan]]). */
+    * rows ([[collectedPlan]]), also when `out` is itself such a relation. */
   def collectLocal(out: DataFrame)(release: => Unit): DataFrame = {
     val rows = try out.collect() finally release
     val local = out.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), out.schema)
     local.queryExecution.logical.setTagValue(CollectedFrom,
-      out.queryExecution.executedPlan)
+      collectedPlan(out).getOrElse(out.queryExecution.executedPlan))
     local
   }
 
@@ -119,8 +128,26 @@ object Graft {
   def collectedPlan(df: DataFrame): Option[SparkPlan] =
     df.queryExecution.logical.getTagValue(CollectedFrom)
 
-  /** Delete `dir` and everything under it, if it exists — the release
-    * step of a lane that wrote scratch files. */
+  /** Run `body` on a fresh directory under `java.io.tmpdir` named
+    * `prefix…`, then delete the directory and everything under it — also
+    * when `body` throws. */
+  def withScratch[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally deleteTree(dir.toString)
+  }
+
+  /** A lane answer built over scratch files: `body` returns the lane's
+    * frame over a fresh directory, [[collectLocal]] collects it, `release`
+    * runs (also when the body or the collect throws: shut a database down,
+    * drop the tables registered over the directory), and then the
+    * directory is deleted ([[withScratch]]). */
+  def scratchLane(prefix: String, release: Path => Unit = _ => ())
+                 (body: Path => DataFrame): DataFrame =
+    withScratch(prefix) { dir =>
+      try collectLocal(body(dir))(()) finally release(dir)
+    }
+
+  /** Delete `dir` and everything under it, if it exists. */
   def deleteTree(dir: String): Unit = {
     val root = Paths.get(dir)
     if (Files.exists(root)) {

@@ -11,11 +11,11 @@ import scala.collection.mutable
   * Sources are the public container and bitstream specs: RIFF framing
   * (WebP Container Specification) and the WebP Lossless Bitstream
   * Specification — LSB-first bit packing, canonical prefix codes
-  * transmitted via code-length codes (the DEFLATE model [[Png]]
-  * already implements), LZ77 over ARGB pixels with 2D "plane-code"
-  * short distances, a color cache (multiplicative hash), optional
-  * meta-prefix tiling, and the four transforms (predictor, color,
-  * subtract-green, color-indexing with sub-byte index packing).
+  * transmitted via code-length codes (DEFLATE's model, decoded here;
+  * [[Png]] inflates through the JDK), LZ77 over ARGB pixels with 2D
+  * "plane-code" short distances, a color cache (multiplicative hash),
+  * optional meta-prefix tiling, and the four transforms (predictor,
+  * color, subtract-green, color-indexing with sub-byte index packing).
   *
   * Decoder scope: the full VP8L lossless profile — all four
   * transforms, both prefix-code forms (simple and code-length-coded),

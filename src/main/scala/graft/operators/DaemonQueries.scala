@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{FlowView, Q, Tables}
+import graft.core.{FlowView, Graft, Q, Tables}
 import graft.maps.Dims
 import graft.plans.Lpm
 
@@ -500,14 +500,13 @@ object DaemonQueries {
     // on top of content parity: a lost batch, a double append, or an
     // offset-rewrite defect breaks it.
     Q("q248_kafka_live",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q248_kafka") { scratch =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val store = java.nio.file.Files.createTempDirectory("q248_kafka")
-          .resolve("landed").toString
+        val store = scratch.resolve("landed").toString
         try {
           val rows = Tables.events(s, d).selectExpr(
               "cast(user_id as bigint) as uid", "event_type",
@@ -578,14 +577,13 @@ object DaemonQueries {
     // per-lane counts — a reconnect that double-logged, a purge that
     // silently lost an up-cycle, or a crash mid-loss breaks parity.
     Q("q249_kafka_conn_loss",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q249_kafka") { scratch =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val store = java.nio.file.Files.createTempDirectory("q249_kafka")
-          .resolve("landed").toString
+        val store = scratch.resolve("landed").toString
         val log = scala.collection.mutable.Buffer[String]()
         try {
           val rows = Tables.events(s, d).selectExpr(
@@ -696,14 +694,13 @@ object DaemonQueries {
     // fetches and commits only ITS partition over its own connection —
     // the per-partition commit discipline a real consumer group runs.
     Q("q268_kafka_group_resume",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q268_kafka") { scratch =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val store = java.nio.file.Files
-          .createTempDirectory("q268_kafka").resolve("landed").toString
+        val store = scratch.resolve("landed").toString
         val group = "graft_cg"
         val nParts = 4
         try {
@@ -800,14 +797,13 @@ object DaemonQueries {
     // one owner per partition. generation rides the output so a
     // double-completed join round also breaks parity.
     Q("q275_kafka_group_assign",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q275_kafka") { scratch =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val store = java.nio.file.Files
-          .createTempDirectory("q275_kafka").resolve("landed").toString
+        val store = scratch.resolve("landed").toString
         val group = "graft_assign"
         try {
           Tables.events(s, d).selectExpr(
@@ -879,14 +875,13 @@ object DaemonQueries {
     // unpoisoned lane proves rejected commits never touched the
     // committed offsets.
     Q("q280_kafka_group_evict",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q280_kafka") { scratch =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val store = java.nio.file.Files
-          .createTempDirectory("q280_kafka").resolve("landed").toString
+        val store = scratch.resolve("landed").toString
         val group = "graft_evict"
         try {
           val rows = Tables.events(s, d).selectExpr(
@@ -1050,14 +1045,13 @@ object DaemonQueries {
     // departed id is fenced exactly like an evicted one (heartbeat 25,
     // stale commit 25, offsets unpoisoned).
     Q("q284_kafka_group_leave",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q284_kafka") { scratch =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val store = java.nio.file.Files
-          .createTempDirectory("q284_kafka").resolve("landed").toString
+        val store = scratch.resolve("landed").toString
         val group = "graft_leave"
         try {
           val rows = Tables.events(s, d).selectExpr(

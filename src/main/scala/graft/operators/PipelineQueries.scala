@@ -59,12 +59,6 @@ object PipelineQueries {
       case other => other.children.flatMap(scansDeep)
     }
 
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach(deleteRec)
-    f.delete(); ()
-  }
-
   /** Smallest power of two >= n, floored at 128 and capped at 4096 —
     * the in-lane bucket-count sizing idiom (production derives B from
     * cluster size; past the cap the cadence bound is the binding
@@ -201,7 +195,7 @@ object PipelineQueries {
       // job label (guide §1.5) — thread-local, so set on the fold's
       // own (possibly Future) thread
       s.sparkContext.setJobDescription(s"fold:$tname")
-      val oldRoot = new java.io.File(root)
+      val oldRoot = root
       val l0 = l0Read
       val touched: Seq[Int] =
         l0.agg(collect_set("pb")).head().getSeq[Int](0)
@@ -239,14 +233,8 @@ object PipelineQueries {
             java.nio.file.Paths.get(nxtBase, f.getName))
         }
       gen += 1; nl0 = 0; folds += 1
-      deleteRec(oldRoot)
-    }
-    /** Lane-end cleanup: the store's current generation is scratch
-      * once its evidence is in memory and any sync consumer has
-      * materialized — delete it (ADVICE r16: the lane's temp
-      * footprint must not accumulate generations). */
-    def close(): Unit = deleteRec(new java.io.File(root))
-  }
+      Graft.deleteTree(oldRoot)
+    }  }
 
   /** Robots ruleset per host (q291's page of decision cases) and the
     * deterministic per-doc path cycling through them. */
@@ -416,12 +404,10 @@ object PipelineQueries {
     //    never see the cascade's join tiers, so the final fact table is
     //    scanned, not recomputed (the q319 47-SMJ lineage lesson).
     Q("q320_training_pipeline",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q320_pipeline") { tmp =>
         val sp = s
         import sp.implicits._
         val qualityMin = 0.6
-        val tmp = java.nio.file.Files
-          .createTempDirectory("q320_pipeline").toString
         val (m1, m2) = (s"$tmp/m1", s"$tmp/m2")
         // Per-stage soak instrumentation (VERDICT r12 #5): with
         // SPARK_GRAFT_STAGE_TIMES set, each stage is FORCED at its
@@ -723,12 +709,10 @@ object PipelineQueries {
     // no ordering assumption, no cross-batch state, the shape that
     // ingests a 100 TB crawl as it arrives.
     Q("q325_stream_ingest",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q325_ingest") { tmp =>
         val sp = s
         import sp.implicits._
         val qualityMin = 0.6
-        val tmp = java.nio.file.Files
-          .createTempDirectory("q325_ingest").toString
         val (staged, m1) = (s"$tmp/staged", s"$tmp/m1")
         Tables.documents(s, d).select("doc_id", "source", "text")
           .repartition(8).write.parquet(staged)
@@ -843,14 +827,12 @@ object PipelineQueries {
     // q320's batch cascade DOC-FOR-DOC (the oracle replays the batch
     // tiers over the same corpus).
     Q("q327_stream_dedup_cascade",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q327_cascade") { tmp =>
         val sp = s
         import sp.implicits._
         import org.apache.spark.sql.types.StructType
         val qualityMin = 0.6
         val C = 2 // compaction cadence, in micro-batches
-        val tmp = java.nio.file.Files
-          .createTempDirectory("q327_cascade").toString
         val staged = s"$tmp/staged"
         val out = s"$tmp/survivors"
         java.nio.file.Files.createDirectories(
@@ -894,14 +876,14 @@ object PipelineQueries {
         val lastMax = new java.util.concurrent.atomic.AtomicLong(-1L)
         val maxFpb = new java.util.concurrent.atomic.AtomicLong(0L)
         val monoOk = new java.util.concurrent.atomic.AtomicBoolean(true)
-        val stE = new TierStore(s, tmp, "ek",
+        val stE = new TierStore(s, tmp.toString, "ek",
           "ek STRING, owner BIGINT, pb INT",
           df => df.groupBy("pb", "ek").agg(min("owner").as("owner")),
           maxFpb)
-        val stB = new TierStore(s, tmp, "band",
+        val stB = new TierStore(s, tmp.toString, "band",
           "bk STRING, doc_id BIGINT, hs ARRAY<BIGINT>, pb INT",
           df => df.select("pb", "bk", "doc_id", "hs"), maxFpb)
-        val stC = new TierStore(s, tmp, "cls",
+        val stC = new TierStore(s, tmp.toString, "cls",
           "ka BIGINT, kb BIGINT, doc_id BIGINT, pb INT",
           df => df.groupBy("pb", "ka", "kb")
             .agg(min("doc_id").as("doc_id")), maxFpb)
@@ -1201,13 +1183,6 @@ object PipelineQueries {
             .trigger(Trigger.AvailableNow()).start()
           q.awaitTermination()
         }
-        // scratch cleanup (ADVICE r16): folds already deleted every
-        // superseded generation; drop the staging dirs and the final
-        // store generations too — only the survivors parquet (the
-        // returned frame's scan) outlives the lane
-        Seq(stE, stB, stC).foreach(_.close())
-        Seq(s"$tmp/slices", staged)
-          .foreach(p => deleteRec(new java.io.File(p)))
         Console.err.println(s"Q327_CADENCE batches=${nBatches.get()} " +
           s"folds=${stE.folds}/${stB.folds}/${stC.folds} " +
           s"B=${stE.B}/${stB.B}/${stC.B} maxFpb=${maxFpb.get()} " +
@@ -1297,13 +1272,11 @@ object PipelineQueries {
     // observed. This is the daily-fold/hourly-ingest split a 100 TB
     // pipeline runs when arrival order cannot be trusted.
     Q("q330_ooo_dedup_reconcile",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q330_ooo") { tmp =>
         val sp = s
         import sp.implicits._
         import org.apache.spark.sql.types.StructType
         val qualityMin = 0.6
-        val tmp = java.nio.file.Files
-          .createTempDirectory("q330_ooo").toString
         val staged = s"$tmp/staged"
         val (clF, clB, clC) = (s"$tmp/claim_feat", s"$tmp/claim_band",
           s"$tmp/claim_cls")
@@ -1535,13 +1508,11 @@ object PipelineQueries {
     // widens as state grows. Survivors must equal the batch exact
     // dedup doc-for-doc.
     Q("q332_bucketed_state_ingest",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q332_bucketed") { tmp =>
         val sp = s
         import sp.implicits._
         import org.apache.spark.sql.types.StructType
         val B = 128
-        val tmp = java.nio.file.Files
-          .createTempDirectory("q332_bucketed").toString
         val staged = s"$tmp/staged"
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(staged))
@@ -1769,13 +1740,11 @@ object PipelineQueries {
     // matching < total, from EXECUTED scan metrics) must hold at
     // every one of the seven probes.
     Q("q342_compaction_cadence",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q342_cadence") { tmp =>
         val sp = s
         import sp.implicits._
         import org.apache.spark.sql.types.StructType
         val C = 2 // compaction cadence, in micro-batches
-        val tmp = java.nio.file.Files
-          .createTempDirectory("q342_cadence").toString
         val staged = s"$tmp/staged"
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(staged))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{FlowView, Q, Tables}
+import graft.core.{FlowView, Graft, Q, Tables}
 import graft.plans.BpfFilter
 import graft.sources.{NetFlowV5, NetFlowV9, SFlowDatagram, SFlowGateway, SFlowIfCounters, SFlowSample, SFlowV2V4Datagram, SFlowV2V4Sample, SFlowV5, V5Header, V5Record}
 
@@ -569,7 +569,7 @@ object ProtocolQueries {
     // schema_id rides the output so the oracle pins the dedupe: any
     // re-registration handing out a second id breaks parity.
     Q("q271_avro_schema_registry",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q271_avro") { scratch =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{AvroSink, KafkaMiniBroker, KafkaWire,
@@ -578,8 +578,7 @@ object ProtocolQueries {
         val regPort = registry.start()
         val broker = new KafkaMiniBroker
         val brokerPort = broker.start()
-        val store = java.nio.file.Files
-          .createTempDirectory("q271_avro").resolve("landed").toString
+        val store = scratch.resolve("landed").toString
         try {
           val proj = Tables.events(s, d).selectExpr(
             "event_type", "cast(user_id as bigint) as user_id",

@@ -561,9 +561,9 @@ object ScaleQueries {
         import graft.functions.SigRules
         val custom = SigRules.Rule("acme",
           Seq(SigRules.Pred.Ascii("ACME/1 ")))
-        val path = java.nio.file.Files.createTempFile("sigmap", ".map")
         val loaded =
-          try {
+          Graft.withScratch("sigmap") { dir =>
+            val path = dir.resolve("rules.map")
             val lines =
               "! user rules first: first-match-wins" +:
                 (SigRules.render(Seq(custom)) ++
@@ -573,7 +573,7 @@ object ScaleQueries {
             SigRules.parse(new String(
               java.nio.file.Files.readAllBytes(path), "UTF-8")
               .split("\n").toSeq)
-          } finally java.nio.file.Files.deleteIfExists(path)
+          }
         val families = ("acme" +: SigRules.sampleFamilies).toIndexedSeq
         val nf = families.size
         val rules = s.sparkContext.broadcast(loaded)
@@ -687,10 +687,9 @@ object ScaleQueries {
     // bucket co-location rather than degenerating to a broadcast at
     // this test SF; PlanSpec asserts no Exchange feeds the join.
     Q("q236_bucket_join",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("graft_bucketed", release = _ =>
+        dropTables(s, "graft_b_orders", "graft_b_lineitem")) { wh =>
         import graft.core.AggregatePlanner.sumScaled
-        val wh = java.nio.file.Files
-          .createTempDirectory("graft_bucketed").toString
         def bucketed(name: String, df: org.apache.spark.sql.DataFrame,
                      key: String): org.apache.spark.sql.DataFrame = {
           val tbl = s"graft_b_$name"
@@ -744,51 +743,9 @@ object ScaleQueries {
     // without ever re-shuffling history: the stream fragments only the
     // newest data, compaction folds it in, queries never re-exchange.
     Q("q239_bucket_stream_compact",
-      (s, d) => {
-        import graft.core.AggregatePlanner.sumScaled
-        import org.apache.spark.sql.streaming.Trigger
-        val wh = java.nio.file.Files
-          .createTempDirectory("graft_bstream").toString
-        // incoming feed: lineitem as 3 arrival files -> 3 micro-batches
-        val src = s"$wh/incoming"
-        Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice")
-          .repartition(3).write.parquet(src)
-        val schema = s.read.parquet(src).schema
-        s.sql("DROP TABLE IF EXISTS graft_bs_orders")
-        Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
-          .write.format("parquet").bucketBy(16, "o_orderkey")
-          .sortBy("o_orderkey").option("path", s"$wh/orders")
-          .mode("overwrite").saveAsTable("graft_bs_orders")
-        s.sql("DROP TABLE IF EXISTS graft_bs_lineitem")
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.format("parquet")
-              .bucketBy(16, "l_orderkey").sortBy("l_orderkey")
-              .option("path", s"$wh/lineitem")
-              .mode("append").saveAsTable("graft_bs_lineitem")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // compaction: one bucket per task -> one sorted file per bucket
-        // (raw-path read, so the bucket shuffle really materializes)
-        s.sql("DROP TABLE IF EXISTS graft_bs_lineitem_c")
-        s.read.parquet(s"$wh/lineitem")
-          .repartition(16, col("l_orderkey"))
-          .sortWithinPartitions("l_orderkey")
-          .write.format("parquet").bucketBy(16, "l_orderkey")
-          .sortBy("l_orderkey").option("path", s"$wh/lineitem_c")
-          .mode("overwrite").saveAsTable("graft_bs_lineitem_c")
-        val o = s.table("graft_bs_orders")
-        val l = s.table("graft_bs_lineitem_c")
-        o.hint("merge")
-          .join(l, o("o_orderkey") === l("l_orderkey"))
-          .groupBy("o_orderpriority")
-          .agg(count(lit(1)).as("n"),
-            sumScaled(col("l_extendedprice"), 2).as("revenue_c"))
-      },
+      (s, d) => Graft.scratchLane("graft_bstream",
+        release = _ => dropTables(s, bucketStreamTables: _*))(
+        bucketStreamCompact(s, d, _)),
       Some("""SELECT o_orderpriority, count(*) AS n,
            CAST(sum(CAST(floor(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
              AS revenue_c
@@ -934,6 +891,65 @@ object ScaleQueries {
         "from executed-plan metrics (scanned == matching < total)")
   )
 
+  /** The catalog tables [[bucketStreamCompact]] registers. */
+  val bucketStreamTables =
+    Seq("graft_bs_orders", "graft_bs_lineitem", "graft_bs_lineitem_c")
+
+  private def dropTables(s: org.apache.spark.sql.SparkSession,
+                         names: String*): Unit =
+    names.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+
+  /** q239's archive loop with its files under `wh`: streams lineitem
+    * into a bucketed table, compacts it to one sorted file per bucket,
+    * registers [[bucketStreamTables]] over those files and returns the
+    * merge join over the compacted table. PlanSpec runs it over a
+    * directory of its own to count the tables' files. */
+  def bucketStreamCompact(s: org.apache.spark.sql.SparkSession, d: String,
+                          wh: java.nio.file.Path)
+      : org.apache.spark.sql.DataFrame = {
+    import graft.core.AggregatePlanner.sumScaled
+    import org.apache.spark.sql.streaming.Trigger
+    // incoming feed: lineitem as 3 arrival files -> 3 micro-batches
+    val src = s"$wh/incoming"
+    Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice")
+      .repartition(3).write.parquet(src)
+    val schema = s.read.parquet(src).schema
+    s.sql("DROP TABLE IF EXISTS graft_bs_orders")
+    Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
+      .write.format("parquet").bucketBy(16, "o_orderkey")
+      .sortBy("o_orderkey").option("path", s"$wh/orders")
+      .mode("overwrite").saveAsTable("graft_bs_orders")
+    s.sql("DROP TABLE IF EXISTS graft_bs_lineitem")
+    val q = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.write.format("parquet")
+          .bucketBy(16, "l_orderkey").sortBy("l_orderkey")
+          .option("path", s"$wh/lineitem")
+          .mode("append").saveAsTable("graft_bs_lineitem")
+        ()
+      }
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    // compaction: one bucket per task -> one sorted file per bucket
+    // (raw-path read, so the bucket shuffle really materializes)
+    s.sql("DROP TABLE IF EXISTS graft_bs_lineitem_c")
+    s.read.parquet(s"$wh/lineitem")
+      .repartition(16, col("l_orderkey"))
+      .sortWithinPartitions("l_orderkey")
+      .write.format("parquet").bucketBy(16, "l_orderkey")
+      .sortBy("l_orderkey").option("path", s"$wh/lineitem_c")
+      .mode("overwrite").saveAsTable("graft_bs_lineitem_c")
+    val o = s.table("graft_bs_orders")
+    val l = s.table("graft_bs_lineitem_c")
+    o.hint("merge")
+      .join(l, o("o_orderkey") === l("l_orderkey"))
+      .groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n"),
+        sumScaled(col("l_extendedprice"), 2).as("revenue_c"))
+  }
+
   /** Partition-pruning evidence for q329 and PlanAudit: writes the
     * (tbin, exp_h)-partitioned archive, runs the time-bounded
     * aggregation, and reports what the executed scan actually read.
@@ -942,10 +958,9 @@ object ScaleQueries {
   final case class PruneEvidence(filesScanned: Long, filesMatching: Long,
       filesTotal: Long, pfPresent: Boolean)
   def pruningEvidence(s: org.apache.spark.sql.SparkSession, d: String)
-      : (Seq[(String, Long, Long)], PruneEvidence) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part")
-    val root = tmp.resolve("facts").toString
-    try {
+      : (Seq[(String, Long, Long)], PruneEvidence) =
+    Graft.withScratch("graft_part") { tmp =>
+      val root = tmp.resolve("facts").toString
       flows(s, d)
         .selectExpr("ip_src % 8 AS exp_h",
           "t0u div 86400000000 AS tbin", "bytes")
@@ -984,11 +999,7 @@ object ScaleQueries {
       val matching = all.count(_.contains(s"tbin=$minTbin/"))
       (aggRows, PruneEvidence(filesScanned, matching.toLong,
         all.size.toLong, pfPresent))
-    } finally {
-      // result rows are driver literals by now — the dir can go
-      Graft.deleteTree(tmp.toString)
     }
-  }
 
   /** Dynamic-partition-pruning evidence for q333 and PlanAudit: writes
     * a tbin-partitioned archive plus a (tbin, tag) dim table, runs the
@@ -998,11 +1009,10 @@ object ScaleQueries {
   final case class DppEvidence(filesScanned: Long, filesMatching: Long,
       filesTotal: Long, dynPruned: Boolean)
   def dppEvidence(s: org.apache.spark.sql.SparkSession, d: String)
-      : (Seq[(String, Long, Long)], DppEvidence) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp")
-    val root = tmp.resolve("facts").toString
-    val dimP = tmp.resolve("dim").toString
-    try {
+      : (Seq[(String, Long, Long)], DppEvidence) =
+    Graft.withScratch("graft_dpp") { tmp =>
+      val root = tmp.resolve("facts").toString
+      val dimP = tmp.resolve("dim").toString
       flows(s, d)
         .selectExpr("ip_src % 8 AS exp_h",
           "t0u div 86400000000 AS tbin", "bytes")
@@ -1052,6 +1062,5 @@ object ScaleQueries {
       val matching = all.count(_.contains(s"tbin=$minTbin/"))
       (aggRows, DppEvidence(filesScanned, matching.toLong,
         all.size.toLong, dynPruned))
-    } finally Graft.deleteTree(tmp.toString)
-  }
+    }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{FlowView, Q, Tables}
+import graft.core.{FlowView, Graft, Q, Tables}
 import graft.functions.Formatters._
 import graft.maps.Dims
 
@@ -94,9 +94,8 @@ object SurfaceQueries {
     // derived day token; reading the directory back recovers the token
     // as a partition column whose value the oracle re-derives from ts.
     Q("q102_print_dynamic",
-      (s, d) => {
-        val out = java.nio.file.Files
-          .createTempDirectory("q102_print").resolve("table").toString
+      (s, d) => Graft.scratchLane("q102_print") { scratch =>
+        val out = scratch.resolve("table").toString
         val src = Tables.events(s, d).selectExpr(
           "event_id", "ts", "cast(floor(value * 100) as bigint) as b")
         graft.sinks.FlowSinks.writePartitionedPrint(src, out, "ts")
@@ -121,9 +120,8 @@ object SurfaceQueries {
     // flush one, the newest day overall after flush two, and that the
     // final target's rows read back whole.
     Q("q202_print_latest",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q202_print") { base =>
         import graft.sinks.FlowSinks
-        val base = java.nio.file.Files.createTempDirectory("q202_print")
         val table = base.resolve("table").toString
         val pointer = base.resolve("latest")
         val src = Tables.events(s, d).selectExpr(

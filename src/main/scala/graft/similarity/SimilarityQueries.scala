@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Graft, Q, Tables}
 
 /** Approximate-nearest-neighbor search over the embedding column
   * (builder brief): brute-force cosine top-k as the exactness baseline,
@@ -1550,14 +1550,12 @@ object SimilarityQueries {
     // probe top-5 per query (rank-for-rank), completeness (index rows
     // == corpus rows) and the multi-batch evidence.
     Q("q336_ivf_stream_ingest",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q336_ivf") { tmp =>
         val sp = s
         import sp.implicits._
         val n = Tables.embeddings(s, d).selectExpr("vec_id",
           "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
             "* 1000000) AS BIGINT)) AS v")
-        val tmp = java.nio.file.Files
-          .createTempDirectory("q336_ivf").toString
         val staged = s"$tmp/staged"
         val idxDir = s"$tmp/index"
         java.nio.file.Files.createDirectories(
@@ -1678,7 +1676,8 @@ object SimilarityQueries {
             if (nBatches.get() >= 4) 1L else 0L),
           ("ingest", "complete", n.count(), idx.count()))
           .toDF("kind", "key", "n", "v")
-        cellStats.unionByName(probe).unionByName(meta)
+        Graft.collectLocal(cellStats.unionByName(probe).unionByName(meta))(
+          Seq(cc1, cbArr).foreach(_.unpersist()))
       },
       Some("""WITH n AS (SELECT vec_id,
               list_transform(embedding,

@@ -316,9 +316,7 @@ object StreamingQueries {
     // ever touches the driver — at production key cardinality this is a
     // plain distributed write per flush, O(changed keys).
     Q("q63_stream_upsert",
-      (s, d) => {
-        val scratch =
-          java.nio.file.Files.createTempDirectory("q63_upsert").toString
+      (s, d) => Graft.scratchLane("q63_upsert") { scratch =>
         val store = s"$scratch/store"
         // update-mode re-emits a group's TOTAL; upsert = replace by key,
         // expressed as append + latest-wins read with periodic compaction
@@ -336,9 +334,7 @@ object StreamingQueries {
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        Graft.collectLocal(
-          vs.latest().select("ubucket", "event_type", "n", "sum_value"))(
-          Graft.deleteTree(scratch))
+        vs.latest().select("ubucket", "event_type", "n", "sum_value")
       },
       Some("""SELECT user_id % 32 AS ubucket, event_type, count(*) AS n,
               CAST(sum(CAST(floor(value * 10000) AS BIGINT)) AS BIGINT)
@@ -355,9 +351,14 @@ object StreamingQueries {
     // table reads back through spark.read.jdbc and must equal the
     // oracle's direct aggregation.
     Q("q105_sql_sink",
-      (s, d) => {
-        val scratch =
-          java.nio.file.Files.createTempDirectory("q105_derby").toString
+      // release: shut the database down (Derby answers a clean shutdown
+      // with SQLState 08006) before its files are deleted
+      (s, d) => Graft.scratchLane("q105_derby", release = scratch =>
+        try java.sql.DriverManager
+          .getConnection(s"jdbc:derby:$scratch/acctdb;shutdown=true").close()
+        catch {
+          case e: java.sql.SQLException if e.getSQLState == "08006" =>
+        }) { scratch =>
         val db = s"$scratch/acctdb"
         val url = s"jdbc:derby:$db;create=true"
         val boot = java.sql.DriverManager.getConnection(url)
@@ -380,20 +381,11 @@ object StreamingQueries {
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        Graft.collectLocal(s.read.format("jdbc").option("url", url)
+        s.read.format("jdbc").option("url", url)
           .option("dbtable", "acct").load()
           .select(col("UBUCKET").as("ubucket"),
             col("EVENT_TYPE").as("event_type"),
-            col("N").as("n"), col("SUM_VALUE").as("sum_value"))) {
-          // release: shut the database down (Derby answers a clean
-          // shutdown with SQLState 08006), then delete its files
-          try java.sql.DriverManager
-            .getConnection(s"jdbc:derby:$db;shutdown=true").close()
-          catch {
-            case e: java.sql.SQLException if e.getSQLState == "08006" =>
-          }
-          Graft.deleteTree(scratch)
-        }
+            col("N").as("n"), col("SUM_VALUE").as("sum_value"))
       },
       Some("""SELECT user_id % 32 AS ubucket, event_type, count(*) AS n,
               CAST(sum(CAST(floor(value * 10000) AS BIGINT)) AS BIGINT)
@@ -674,13 +666,12 @@ object StreamingQueries {
     // Oracle pins both runs' counts and sums; a source that re-read
     // (dup), fast-forwarded (loss), or mis-split ranges breaks parity.
     Q("q251_kafka_stream_source",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q251_kafka") { base =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val base = java.nio.file.Files.createTempDirectory("q251_kafka")
         val ckpt = base.resolve("ckpt").toString
         val store1 = base.resolve("run1").toString
         val store2 = base.resolve("run2").toString
@@ -773,13 +764,12 @@ object StreamingQueries {
     //  5. read_committed: everything consumed comes from committed
     //     transactions only; totals reconcile against the events table.
     Q("q262_kafka_txn_sink",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q262_txn") { base262 =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val base262 = java.nio.file.Files.createTempDirectory("q262_txn")
         val ckpt = base262.resolve("ckpt").toString
         val store = base262.resolve("landed").toString
         val topic = "acct_txn"
@@ -890,13 +880,12 @@ object StreamingQueries {
     // union of both sinks is the topic exactly once; any re-read,
     // skip, or overlapping ownership breaks count/sum/offset parity.
     Q("q279_kafka_group_source",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q279_kafka") { base =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val base = java.nio.file.Files.createTempDirectory("q279_kafka")
         val group = "graft_cgrp"
         val outA = base.resolve("a").toString
         val outB = base.resolve("b").toString
@@ -1049,13 +1038,12 @@ object StreamingQueries {
     // coordinator's committed offset per (topic, partition) equals its
     // high-water mark.
     Q("q285_kafka_group_multitopic",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q285_kafka") { base =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val base = java.nio.file.Files.createTempDirectory("q285_kafka")
         val group = "graft_mtgrp"
         val outA = base.resolve("a").toString
         val outB = base.resolve("b").toString
@@ -1189,14 +1177,13 @@ object StreamingQueries {
     // plus the member-epoch bump and the exactly-once union of both
     // sinks against the events table.
     Q("q304_kafka_kip848",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q304_kafka") { base =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         import graft.sources.KafkaMiniSource
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val base = java.nio.file.Files.createTempDirectory("q304_kafka")
         val group = "graft_848grp"
         KafkaMiniSource.clearAssignmentHistory(group)
         val outA = base.resolve("a").toString
@@ -1349,14 +1336,13 @@ object StreamingQueries {
     // and its records must drain through the SAME subscription. The
     // assignment timeline must grow 2→4 partitions and never be empty.
     Q("q314_kafka_848_regex",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q314_kafka") { base =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         import graft.sources.KafkaMiniSource
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val base = java.nio.file.Files.createTempDirectory("q314_kafka")
         val group = "graft_848re"
         KafkaMiniSource.clearAssignmentHistory(group)
         val outDir = base.resolve("out").toString
@@ -1474,12 +1460,11 @@ object StreamingQueries {
     // shape a training pipeline wants (drop repeats before they land
     // in the corpus, not in a nightly batch).
     Q("q318_stream_substr_dedup",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q318_verdicts") { scratch =>
         val sp = s
         import sp.implicits._
         import graft.text.TextOps
-        val outDir = java.nio.file.Files
-          .createTempDirectory("q318_verdicts").toString
+        val outDir = scratch.toString
         val arrivals = Tables.stream(s, d, "documents")
           .select("doc_id", "text")
           .repartition(s.sparkContext.defaultParallelism)
@@ -1544,12 +1529,11 @@ object StreamingQueries {
         require(nBatches.get() <= 1L,
           s"q318 verdicts are single-batch-final; got ${nBatches.get()}" +
             " micro-batches — cross-batch doc_id ordering is unchecked")
-        Graft.collectLocal(s.read.parquet(outDir)
+        s.read.parquet(outDir)
           .groupBy("doc_id").agg(max("dup").as("dup"))
           .groupBy().agg(count(lit(1)).as("n_docs"),
             sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup"),
-            sum(when(col("dup"), 0L).otherwise(1L)).as("n_kept")))(
-          Graft.deleteTree(outDir))
+            sum(when(col("dup"), 0L).otherwise(1L)).as("n_kept"))
       },
       Some {
         import graft.text.TextOps
@@ -1731,13 +1715,12 @@ object StreamingQueries {
     // (ownership of every data-bearing partition is stable across the
     // rounds, so exactly-once holds without an offset handover here).
     Q("q324_metadata_rebalance",
-      (s, d) => {
+      (s, d) => Graft.scratchLane("q324_kafka") { base =>
         val sp = s
         import sp.implicits._
         import graft.sinks.{KafkaMiniBroker, KafkaWire}
         val broker = new KafkaMiniBroker
         val port = broker.start()
-        val base = java.nio.file.Files.createTempDirectory("q324_kafka")
         val group = "graft_metagrp"
         val outA = base.resolve("a").toString
         val outB = base.resolve("b").toString

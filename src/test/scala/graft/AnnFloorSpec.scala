@@ -38,10 +38,10 @@ class AnnFloorSpec extends AnyFunSuite {
     // soak's generator): the in-plan K must scale with the corpus and
     // the re-ranked recall must still clear the same floor — this is
     // the gated form of the r14 AnnRecall measurement (0.40 at 10x)
-    val out = java.nio.file.Files
-      .createTempDirectory("annfloor10x").toString
-    ScaleGen.run(spark, "/root/testdata/sf0.001", out, 10)
-    val f = floorMap(out)
+    val f = graft.core.Graft.withScratch("annfloor10x") { dir =>
+      ScaleGen.run(spark, "/root/testdata/sf0.001", dir.toString, 10)
+      floorMap(dir.toString)
+    }
     assert(f("queries_nonzero") == 1L, s"degenerate query panel: $f")
     assert(f("rr_ge_20pct") == 1L,
       s"recall floor violated at 10x — capacity regression: $f")

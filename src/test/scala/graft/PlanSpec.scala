@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Graft, Tables}
 
 /** Physical-plan hygiene assertions — the properties that decide whether
   * a query survives a 100× scale-up: column pruning and predicate
@@ -14,6 +14,12 @@ import graft.core.Tables
 class PlanSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   private val d = "/root/testdata/sf0.001"
+
+  /** The final adaptive plan a collecting lane ran ([[Graft.collectedPlan]]):
+    * its AQE dump prints the plan twice, so cut the initial one off. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+    Graft.collectedPlan(df).getOrElse(fail("not a collected lane answer"))
+      .toString.split("== Initial Plan ==")(0)
 
   test("column pruning reaches the parquet scan through the agg planner") {
     val plan = SparkEntry.queries("q01_agg_base")(spark, d)
@@ -79,20 +85,22 @@ class PlanSpec extends AnyFunSuite {
     // matching partitions (partition pruning, not data skipping) — the
     // property that makes a 100 TB multi-year archive queryable for one
     // day. Asserted on the scan's partition count, not plan text.
-    val dir = java.nio.file.Files.createTempDirectory("prune").toString
-    import spark.implicits._
-    (0L until 100L).map(i => (i, i % 10)).toDF("v", "bin")
-      .write.partitionBy("bin").mode("overwrite").parquet(dir)
-    val read = spark.read.parquet(dir).filter(col("bin") === 3)
-    val scan = read.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("no FileSourceScanExec"))
-    assert(scan.relation.location.listFiles(
-      scan.partitionFilters, scan.dataFilters).map(_.files.size).sum ===
-      scan.relation.location.listFiles(Nil, Nil)
-        .map(_.files.size).sum / 10,
-      "bin filter must prune to 1 of 10 partitions")
-    assert(read.count() == 10L)
+    Graft.withScratch("prune") { scratch =>
+      val dir = scratch.toString
+      import spark.implicits._
+      (0L until 100L).map(i => (i, i % 10)).toDF("v", "bin")
+        .write.partitionBy("bin").mode("overwrite").parquet(dir)
+      val read = spark.read.parquet(dir).filter(col("bin") === 3)
+      val scan = read.queryExecution.executedPlan.collectLeaves().collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.getOrElse(fail("no FileSourceScanExec"))
+      assert(scan.relation.location.listFiles(
+        scan.partitionFilters, scan.dataFilters).map(_.files.size).sum ===
+        scan.relation.location.listFiles(Nil, Nil)
+          .map(_.files.size).sum / 10,
+        "bin filter must prune to 1 of 10 partitions")
+      assert(read.count() == 10L)
+    }
   }
 
   test("bucketed tables merge-join with zero exchange below the join") {
@@ -101,11 +109,7 @@ class PlanSpec extends AnyFunSuite {
     // exchange in the whole plan is the final groupBy. At 100 TB this
     // is the difference between re-shuffling both fact tables per join
     // and never shuffling them again after the one-time bucketed write.
-    val q = SparkEntry.queries("q236_bucket_join")(spark, d)
-    q.collect() // run the bucketed writes + finalize AQE
-    val full = q.queryExecution.executedPlan.toString
-    // the AQE dump prints the plan twice; assert on the final plan only
-    val plan = full.split("== Initial Plan ==")(0)
+    val plan = finalPlan(SparkEntry.queries("q236_bucket_join")(spark, d))
     assert(plan.contains("SortMergeJoin"),
       s"bucket co-location demo must keep the merge join:\n$plan")
     val exchanges = plan.split("\n").count(_.contains("Exchange"))
@@ -123,16 +127,23 @@ class PlanSpec extends AnyFunSuite {
     // Spark does not exploit sortBy metadata in merge joins). This is
     // the archive-maintenance loop: only the newest data fragments,
     // history never re-shuffles.
-    val q = SparkEntry.queries("q239_bucket_stream_compact")(spark, d)
-    q.collect()
-    // 3 micro-batch appends fragmented the live table...
-    assert(spark.table("graft_bs_lineitem").inputFiles.length > 16,
-      "appends should land per-batch bucket files")
-    // ...and compaction folded them to exactly one file per bucket
-    assert(spark.table("graft_bs_lineitem_c").inputFiles.length == 16,
-      "compaction must produce exactly one file per bucket")
-    val full = q.queryExecution.executedPlan.toString
-    val plan = full.split("== Initial Plan ==")(0)
+    import graft.operators.ScaleQueries
+    // the lane's body over a directory this test owns, so the tables are
+    // still there to count after the collect
+    val plan = Graft.withScratch("graft_bstream") { wh =>
+      try {
+        val q = Graft.collectLocal(
+          ScaleQueries.bucketStreamCompact(spark, d, wh))(())
+        // 3 micro-batch appends fragmented the live table...
+        assert(spark.table("graft_bs_lineitem").inputFiles.length > 16,
+          "appends should land per-batch bucket files")
+        // ...and compaction folded them to exactly one file per bucket
+        assert(spark.table("graft_bs_lineitem_c").inputFiles.length == 16,
+          "compaction must produce exactly one file per bucket")
+        finalPlan(q)
+      } finally ScaleQueries.bucketStreamTables
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
     assert(plan.contains("SortMergeJoin"),
       s"compacted join must stay a merge join:\n$plan")
     val exchanges = plan.split("\n").count(_.contains("Exchange"))
@@ -219,8 +230,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("IVF stream ingest: serving plan broadcast-only over the index") {
-    val q = SparkEntry.queries("q336_ivf_stream_ingest")(spark, d)
-    val plan = q.queryExecution.executedPlan.toString
+    val plan =
+      finalPlan(SparkEntry.queries("q336_ivf_stream_ingest")(spark, d))
     // the assembled index is the only corpus-scale input to the
     // serving legs: probes and the codebook ride broadcasts; a
     // sort-merge join would mean the index was shuffled against a
@@ -431,7 +442,7 @@ class PlanSpec extends AnyFunSuite {
     Seq("q327_stream_dedup_cascade", "q330_ooo_dedup_reconcile")
       .foreach { name =>
         val df = SparkEntry.queries(name)(spark, d)
-        val plan = df.queryExecution.executedPlan.toString
+        val plan = finalPlan(df)
         assert(!plan.contains("SortMergeJoin") &&
           !plan.contains("BroadcastHashJoin"),
           s"$name must not re-derive the cascade:\n$plan")

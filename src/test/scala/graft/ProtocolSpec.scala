@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Graft
 import graft.plans.BpfFilter
 import graft.sinks.FlowSinks
 import graft.sources.{NetFlowV5, V5Header, V5Record}
@@ -566,16 +566,18 @@ class ProtocolSpec extends AnyFunSuite {
   }
 
   test("partitioned print writer: time-token dirs round-trip") {
-    val dir = Files.createTempDirectory("graft_print").toString
-    val df = Seq(
-      (java.sql.Timestamp.valueOf("2024-03-15 10:00:00"), 6L, 100L),
-      (java.sql.Timestamp.valueOf("2024-03-16 11:00:00"), 17L, 200L))
-      .toDF("ts", "proto", "bytes")
-    FlowSinks.writePartitionedPrint(df, dir, "ts")
-    val back = spark.read.format("json").load(dir)
-    assert(back.select("print_day").as[String].collect().toSet ==
-      Set("20240315", "20240316"))
-    assert(back.count() == 2)
+    Graft.withScratch("graft_print") { scratch =>
+      val dir = scratch.toString
+      val df = Seq(
+        (java.sql.Timestamp.valueOf("2024-03-15 10:00:00"), 6L, 100L),
+        (java.sql.Timestamp.valueOf("2024-03-16 11:00:00"), 17L, 200L))
+        .toDF("ts", "proto", "bytes")
+      FlowSinks.writePartitionedPrint(df, dir, "ts")
+      val back = spark.read.format("json").load(dir)
+      assert(back.select("print_day").as[String].collect().toSet ==
+        Set("20240315", "20240316"))
+      assert(back.count() == 2)
+    }
   }
 
   test("tee assignment is deterministic and in range") {
@@ -706,24 +708,28 @@ class ProtocolSpec extends AnyFunSuite {
 
   test("JDBC upsert merges late flushes into existing rows (Derby)") {
     import graft.sinks.FlowSinks
-    val db = java.nio.file.Files.createTempDirectory("derby_spec")
-      .resolve("db").toString
-    val url = s"jdbc:derby:$db;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    val st = conn.createStatement()
-    st.executeUpdate("""CREATE TABLE acct (k VARCHAR(8) NOT NULL,
-      n BIGINT, bytes BIGINT, PRIMARY KEY (k))""")
-    def flush(rows: Seq[(String, Long, Long)]): Unit =
-      FlowSinks.sqlFlush(rows.toDF("k", "n", "bytes"), url, "acct",
-        Seq("k"), Seq("n", "bytes"))
-    flush(Seq(("a", 1L, 100L), ("b", 2L, 200L))) // INSERT path
-    flush(Seq(("a", 3L, 50L), ("c", 1L, 10L)))   // UPDATE merges 'a'
-    val got = st.executeQuery("SELECT k, n, bytes FROM acct ORDER BY k")
-    val rows = Iterator.continually(got)
-      .takeWhile(_.next()).map(r =>
-        (r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    conn.close()
-    assert(rows == Seq(("a", 4L, 150L), ("b", 2L, 200L), ("c", 1L, 10L)))
+    Graft.withScratch("derby_spec") { scratch =>
+      val db = scratch.resolve("db").toString
+      val url = s"jdbc:derby:$db;create=true"
+      val conn = java.sql.DriverManager.getConnection(url)
+      val st = conn.createStatement()
+      st.executeUpdate("""CREATE TABLE acct (k VARCHAR(8) NOT NULL,
+        n BIGINT, bytes BIGINT, PRIMARY KEY (k))""")
+      def flush(rows: Seq[(String, Long, Long)]): Unit =
+        FlowSinks.sqlFlush(rows.toDF("k", "n", "bytes"), url, "acct",
+          Seq("k"), Seq("n", "bytes"))
+      flush(Seq(("a", 1L, 100L), ("b", 2L, 200L))) // INSERT path
+      flush(Seq(("a", 3L, 50L), ("c", 1L, 10L)))   // UPDATE merges 'a'
+      val got = st.executeQuery("SELECT k, n, bytes FROM acct ORDER BY k")
+      val rows = Iterator.continually(got)
+        .takeWhile(_.next()).map(r =>
+          (r.getString(1), r.getLong(2), r.getLong(3))).toSeq
+      conn.close()
+      // shut the database down before its directory goes
+      intercept[java.sql.SQLException](java.sql.DriverManager
+        .getConnection(s"jdbc:derby:$db;shutdown=true"))
+      assert(rows == Seq(("a", 4L, 150L), ("b", 2L, 200L), ("c", 1L, 10L)))
+    }
   }
 
   test("kafka avro frame carries key + decodable avro body") {

@@ -16,52 +16,56 @@ class ReplaySpec extends AnyFunSuite {
   import spark.implicits._
 
   test("paced replay: maxFilesPerTrigger bounds each micro-batch") {
-    val dir = Files.createTempDirectory("graft_replay").toString
-    // three "capture files" of known sizes
-    Seq(3, 5, 7).zipWithIndex.foreach { case (n, i) =>
-      (0 until n).map(j => (i.toLong, j.toLong)).toDF("f", "v")
-        .coalesce(1).write.parquet(s"$dir/part_$i")
-    }
-    val schema = spark.read.parquet(s"$dir/part_0").schema
-    val batchSizes = scala.collection.mutable.Buffer[Long]()
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/part_*")
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        val c = b.count()
-        if (c > 0) batchSizes.synchronized { batchSizes += c }
-        ()
+    Graft.withScratch("graft_replay") { scratch =>
+      val dir = scratch.toString
+      // three "capture files" of known sizes
+      Seq(3, 5, 7).zipWithIndex.foreach { case (n, i) =>
+        (0 until n).map(j => (i.toLong, j.toLong)).toDF("f", "v")
+          .coalesce(1).write.parquet(s"$dir/part_$i")
       }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // each replayed batch carried exactly one capture file
-    assert(batchSizes.sorted == Seq(3L, 5L, 7L))
+      val schema = spark.read.parquet(s"$dir/part_0").schema
+      val batchSizes = scala.collection.mutable.Buffer[Long]()
+      val q = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$dir/part_*")
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val c = b.count()
+          if (c > 0) batchSizes.synchronized { batchSizes += c }
+          ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      // each replayed batch carried exactly one capture file
+      assert(batchSizes.sorted == Seq(3L, 5L, 7L))
+    }
   }
 
   test("pcap savefile ingests end-to-end via binaryFile scan") {
     import graft.sources.Pcap
-    val dir = Files.createTempDirectory("graft_pcap").toString
-    val tuples = (1 to 25).map(i => Pcap.FlowTuple(
-      0x0A000000L + i, 0x0B000000L + i, if (i % 3 == 0) 17 else 6,
-      1024 + i, 80, 100L + i, 1710000000000000L + i * 1000L))
-    // two capture files on disk, exactly what a recorder would leave
-    Files.write(java.nio.file.Paths.get(s"$dir/cap0.pcap"),
-      Pcap.write(tuples.take(10).map(Pcap.frame)))
-    Files.write(java.nio.file.Paths.get(s"$dir/cap1.pcap"),
-      Pcap.write(tuples.drop(10).map(Pcap.frame)))
-    val decoded = spark.read.format("binaryFile")
-      .load(s"$dir/*.pcap")
-      .select("content").as[Array[Byte]]
-      .mapPartitions(_.flatMap { bytes =>
-        val sf = Pcap.read(bytes)
-        sf.packets.flatMap(p => Pcap.parse(p, sf.linkType))
-      })
-    val got = decoded.collect()
-    assert(got.length == 25)
-    assert(got.map(_.ipLen).sum == tuples.map(_.ipLen).sum)
-    assert(got.count(_.proto == 17) == tuples.count(_.proto == 17))
-    assert(got.map(_.portSrc).toSet == tuples.map(_.portSrc).toSet)
+    Graft.withScratch("graft_pcap") { scratch =>
+      val dir = scratch.toString
+      val tuples = (1 to 25).map(i => Pcap.FlowTuple(
+        0x0A000000L + i, 0x0B000000L + i, if (i % 3 == 0) 17 else 6,
+        1024 + i, 80, 100L + i, 1710000000000000L + i * 1000L))
+      // two capture files on disk, exactly what a recorder would leave
+      Files.write(java.nio.file.Paths.get(s"$dir/cap0.pcap"),
+        Pcap.write(tuples.take(10).map(Pcap.frame)))
+      Files.write(java.nio.file.Paths.get(s"$dir/cap1.pcap"),
+        Pcap.write(tuples.drop(10).map(Pcap.frame)))
+      val decoded = spark.read.format("binaryFile")
+        .load(s"$dir/*.pcap")
+        .select("content").as[Array[Byte]]
+        .mapPartitions(_.flatMap { bytes =>
+          val sf = Pcap.read(bytes)
+          sf.packets.flatMap(p => Pcap.parse(p, sf.linkType))
+        })
+      val got = decoded.collect()
+      assert(got.length == 25)
+      assert(got.map(_.ipLen).sum == tuples.map(_.ipLen).sum)
+      assert(got.count(_.proto == 17) == tuples.count(_.proto == 17))
+      assert(got.map(_.portSrc).toSet == tuples.map(_.portSrc).toSet)
+    }
   }
 
   test("live UDP source: NetFlow v9 datagrams arrive through the stream") {
@@ -214,36 +218,38 @@ class ReplaySpec extends AnyFunSuite {
     val hB = NetFlowV9.V9Header(0L, 0L, 0L, 12L)
     val dataB = NetFlowV9.encodeData(hB, tB,
       Seq(Map(IE.InBytes -> (5L << 33), IE.Protocol -> 17L)))
-    val checkpoint = Files.createTempDirectory("graft_tws_restart")
-    Graft.withConf(spark, RocksDb) {
-      val mem = MemoryStream[Datagram](spark)
-      val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      def run(batches: Seq[Datagram]*): Unit = {
-        val q = NetFlowStream.decodeTws(mem.toDS()).toDF().writeStream
-          .option("checkpointLocation", checkpoint.toString)
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            df.selectExpr(s"fields[${IE.InBytes}]").as[Long].collect()
-              .foreach(got.add)
-            ()
-          }.start()
-        try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-        finally { q.stop(); q.awaitTermination() }
+    Graft.withScratch("graft_tws_restart") { checkpoint =>
+      Graft.withConf(spark, RocksDb) {
+        val mem = MemoryStream[Datagram](spark)
+        val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+        def run(batches: Seq[Datagram]*): Unit = {
+          val q = NetFlowStream.decodeTws(mem.toDS()).toDF().writeStream
+            .option("checkpointLocation", checkpoint.toString)
+            .foreachBatch { (df: DataFrame, _: Long) =>
+              df.selectExpr(s"fields[${IE.InBytes}]").as[Long].collect()
+                .foreach(got.add)
+              ()
+            }.start()
+          try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+          finally { q.stop(); q.awaitTermination() }
+        }
+        run(Seq(Datagram("ex3", NetFlowV9.encodeTemplate(h, t)),
+                Datagram("ex3", data(10L, 20L))),
+            Seq(Datagram("ex3", dataB)),
+            Seq(Datagram("ex3", data(25L))))
+        assert(got.toArray.toSeq == Seq(10L, 20L, 25L))
+        // the commits wrote changelog files: the state the restart reads is
+        // the first snapshot plus the changelogs after it
+        val stateFiles = Files.walk(checkpoint.resolve("state"))
+        val changelogs =
+          try stateFiles.filter(_.toString.endsWith(".changelog")).count()
+          finally stateFiles.close()
+        assert(changelogs > 0)
+        got.clear()
+        run(Seq(Datagram("ex3", data(30L, 40L))),
+            Seq(Datagram("ex3", NetFlowV9.encodeTemplate(hB, tB))))
+        assert(got.toArray.toSeq == Seq(30L, 40L, 5L << 33))
       }
-      run(Seq(Datagram("ex3", NetFlowV9.encodeTemplate(h, t)),
-              Datagram("ex3", data(10L, 20L))),
-          Seq(Datagram("ex3", dataB)),
-          Seq(Datagram("ex3", data(25L))))
-      assert(got.toArray.toSeq == Seq(10L, 20L, 25L))
-      // the commits wrote changelog files: the state the restart reads is
-      // the first snapshot plus the changelogs after it
-      val stateFiles = Files.walk(checkpoint.resolve("state"))
-      val changelogs = try stateFiles.filter(_.toString.endsWith(".changelog"))
-        .count() finally stateFiles.close()
-      assert(changelogs > 0)
-      got.clear()
-      run(Seq(Datagram("ex3", data(30L, 40L))),
-          Seq(Datagram("ex3", NetFlowV9.encodeTemplate(hB, tB))))
-      assert(got.toArray.toSeq == Seq(30L, 40L, 5L << 33))
     }
   }
 
@@ -258,21 +264,22 @@ class ReplaySpec extends AnyFunSuite {
     // Hadoop's own local filesystem, which forks chmod, is the reference
     val stock = new LocalFileSystem()
     stock.initialize(root, conf)
-    val dir = Files.createTempDirectory("graft_fs")
-    def mode(p: String): Int =
-      Files.getAttribute(dir.resolve(p), "unix:mode").asInstanceOf[Int] & 0xfff
-    Seq(fs -> "nio", stock -> "hadoop").foreach { case (f, name) =>
-      assert(f.mkdirs(new Path(s"$dir/$name/d")))
-      f.create(new Path(s"$dir/$name/d/f")).close()
+    Graft.withScratch("graft_fs") { dir =>
+      def mode(p: String): Int = Files.getAttribute(dir.resolve(p),
+        "unix:mode").asInstanceOf[Int] & 0xfff
+      Seq(fs -> "nio", stock -> "hadoop").foreach { case (f, name) =>
+        assert(f.mkdirs(new Path(s"$dir/$name/d")))
+        f.create(new Path(s"$dir/$name/d/f")).close()
+      }
+      // fs.permissions.umask-mode defaults to 022
+      assert(mode("nio/d") == mode("hadoop/d") && mode("nio/d") == 0x1ed)
+      assert(mode("nio/d/f") == mode("hadoop/d/f") && mode("nio/d/f") == 0x1a4)
+      // the sticky bit, which NIO cannot set, still applies
+      fs.setPermission(new Path(s"$dir/nio/d"), new FsPermission(0x3ff.toShort))
+      assert(mode("nio/d") == 0x3ff)
+      assert(CheckpointFileManager.create(new Path(dir.toString), conf)
+        .isInstanceOf[FileSystemBasedCheckpointFileManager])
     }
-    // fs.permissions.umask-mode defaults to 022
-    assert(mode("nio/d") == mode("hadoop/d") && mode("nio/d") == 0x1ed)
-    assert(mode("nio/d/f") == mode("hadoop/d/f") && mode("nio/d/f") == 0x1a4)
-    // the sticky bit, which NIO cannot set, still applies
-    fs.setPermission(new Path(s"$dir/nio/d"), new FsPermission(0x3ff.toShort))
-    assert(mode("nio/d") == 0x3ff)
-    assert(CheckpointFileManager.create(new Path(dir.toString), conf)
-      .isInstanceOf[FileSystemBasedCheckpointFileManager])
   }
 
   test("pcap reader handles little-endian and nanosecond magics") {

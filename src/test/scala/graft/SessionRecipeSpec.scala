@@ -22,15 +22,17 @@ class SessionRecipeSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
 
   private val mainRoot = Paths.get("src/main/scala/graft")
+  private val testRoot = Paths.get("src/test/scala/graft")
 
-  /** Every main source file, keyed by its path under `graft/`. */
-  private def mainSources: Seq[(String, String)] = {
-    val files = Files.walk(mainRoot)
+  /** Every source file under `root`, keyed by its path under `graft/`. */
+  private def sources(root: Path): Seq[(String, String)] = {
+    val files = Files.walk(root)
     try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .map(p => mainRoot.relativize(p).toString -> Files.readString(p))
+      .map(p => root.relativize(p).toString -> Files.readString(p))
       .toSeq
     finally files.close()
   }
+  private def mainSources = sources(mainRoot)
 
   test("sessions are built and driver tables are read in one place each") {
     val srcs = mainSources
@@ -52,6 +54,17 @@ class SessionRecipeSpec extends AnyFunSuite {
     val tables = srcs.toMap.apply("core/Tables.scala")
     assert(tables.contains("private def normalizeEventTs"),
       "normalizeEventTs must stay private to Tables")
+  }
+
+  test("scratch directories are created in Graft alone") {
+    val maker = """createTemp(Directory|File)""".r
+    def makers(srcs: Seq[(String, String)]): Seq[String] =
+      srcs.filter(src => maker.findFirstIn(src._2).nonEmpty).map(_._1).sorted
+    val test = sources(testRoot)
+    assert(test.size > 20, s"source scan found only ${test.size} files")
+    assert(makers(mainSources) == Seq("core/Graft.scala"),
+      "makes scratch around Graft.withScratch / Graft.scratchLane")
+    assert(makers(test).isEmpty, "makes scratch around Graft.withScratch")
   }
 
   /** An `events` table in `dir` whose `ts` column has the physical type
@@ -82,8 +95,7 @@ class SessionRecipeSpec extends AnyFunSuite {
       "TIMESTAMP(NANOS,false)" -> micros.map(_ * 1000L + 789L),
       "TIMESTAMP(MICROS,false)" -> micros)
     forms.foreach { case (tsType, raw) =>
-      val dir = Files.createTempDirectory("graft_tables_stream")
-      try {
+      Graft.withScratch("graft_tables_stream") { dir =>
         writeEvents(dir, tsType, raw.zipWithIndex.map { case (t, i) =>
           (i.toLong, t, if (i % 2 == 0) "view" else "click") })
         val name = "tables_stream_" + math.abs(tsType.hashCode)
@@ -101,7 +113,7 @@ class SessionRecipeSpec extends AnyFunSuite {
             .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
         assert(rows(streamed) == rows(loaded), tsType)
         assert(rows(loaded).map(_(1)) == micros, tsType)
-      } finally Graft.deleteTree(dir.toString)
+      }
     }
   }
 }

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{ImtStore, Salt}
+import graft.core.{Graft, ImtStore, Salt}
 import graft.maps.Bloom
 import graft.plans.Lpm
 
@@ -190,25 +190,26 @@ class StateSpec extends AnyFunSuite {
   test("VersionedStore: bounded storage, latest-wins reads across " +
       "compaction") {
     import graft.core.VersionedStore
-    val path = java.nio.file.Files.createTempDirectory("vstore")
-      .resolve("s").toString
-    val vs = new VersionedStore(spark, path, Seq("k"), compactEvery = 3)
-    // 10 flushes re-emitting totals for the same 4 keys
-    (1 to 10).foreach { v =>
-      vs.append(Seq(("a", v * 10L), ("b", v * 20L), ("c", v * 30L),
-        ("d", v * 40L)).toDF("k", "n"), v.toLong)
+    Graft.withScratch("vstore") { scratch =>
+      val path = scratch.resolve("s").toString
+      val vs = new VersionedStore(spark, path, Seq("k"), compactEvery = 3)
+      // 10 flushes re-emitting totals for the same 4 keys
+      (1 to 10).foreach { v =>
+        vs.append(Seq(("a", v * 10L), ("b", v * 20L), ("c", v * 30L),
+          ("d", v * 40L)).toDF("k", "n"), v.toLong)
+      }
+      val got = vs.latest().as[(String, Long)].collect().toMap
+      assert(got == Map("a" -> 100L, "b" -> 200L, "c" -> 300L, "d" -> 400L))
+      // bounded: base holds one version per key; delta holds at most
+      // (compactEvery - 1) flushes — NOT 10 flushes × 4 keys = 40 rows
+      assert(vs.storedRows() <= 4 * 3,
+        s"store grew with history: ${vs.storedRows()} rows")
+      // keys absent from later flushes must survive compaction
+      vs.append(Seq(("e", 1L)).toDF("k", "n"), 11L)
+      vs.compact(12L)
+      val after = vs.latest().as[(String, Long)].collect().toMap
+      assert(after("a") == 100L && after("e") == 1L && after.size == 5)
     }
-    val got = vs.latest().as[(String, Long)].collect().toMap
-    assert(got == Map("a" -> 100L, "b" -> 200L, "c" -> 300L, "d" -> 400L))
-    // bounded: base holds one version per key; delta holds at most
-    // (compactEvery - 1) flushes — NOT 10 flushes × 4 keys = 40 rows
-    assert(vs.storedRows() <= 4 * 3,
-      s"store grew with history: ${vs.storedRows()} rows")
-    // keys absent from later flushes must survive compaction
-    vs.append(Seq(("e", 1L)).toDF("k", "n"), 11L)
-    vs.compact(12L)
-    val after = vs.latest().as[(String, Long)].collect().toMap
-    assert(after("a") == 100L && after("e") == 1L && after.size == 5)
   }
 
   test("LPM default route (len 0) catches uncovered space") {
@@ -218,7 +219,6 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("withConf restores every touched key when the body throws") {
-    import graft.core.Graft
     val setKey = "spark.sql.shuffle.partitions"
     val unsetSql = "spark.sql.adaptive.optimizer.excludedRules"
     val unsetCustom = "spark.graft.test.withConf"
@@ -242,45 +242,69 @@ class StateSpec extends AnyFunSuite {
       assert(after.get(k) == before.get(k), k))
   }
 
-  test("lane hygiene: withConf lanes leave the session as they found it") {
+  test("lane hygiene: lanes leave the session and tmpdir as they found " +
+      "them") {
     val d = "/root/testdata/sf0.001"
     // the suite's session is `Graft.session`, the one Verify and Bench
     // run every lane in; the lanes must leave it exactly as they found it
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    // lanes that write scratch files under java.io.tmpdir, by dir prefix
-    val scratchPrefix = Map("q63_stream_upsert" -> "q63_upsert",
-      "q105_sql_sink" -> "q105_derby",
-      "q318_stream_substr_dedup" -> "q318_verdicts")
-    def scratch(name: String): Set[String] = scratchPrefix.get(name)
-      .map { prefix =>
-        val ls = java.nio.file.Files.list(tmp)
-        try ls.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith(prefix)).toSet
-        finally ls.close()
-      }.getOrElse(Set.empty)
-    def session(name: String) = Map(
-      "conf" -> spark.conf.getAll,
-      "persistent RDDs" -> spark.sparkContext.getPersistentRDDs.keySet,
-      "temp views" -> spark.catalog.listTables().collect()
-        .filter(_.isTemporary).map(_.name).toSet,
-      "active streams" -> spark.streams.active.map(_.id).toSet,
-      "scratch dirs" -> scratch(name))
-    // q321 returns through the same memory-sink shape but is left out:
-    // it is a wall-clock-pinned soak of about 80 s
-    Seq("q316_logreg_trainer", "q327_stream_dedup_cascade",
-        "q330_ooo_dedup_reconcile", "q332_bucketed_state_ingest",
-        "q342_compaction_cadence", "q177_stream_stream_join",
+    // what Spark, the JVM and Derby put in java.io.tmpdir on their own,
+    // by name prefix: Spark's local root and block-manager dirs, the JVM's
+    // perf data, and the native libraries that Spark's codecs and RocksDB
+    // unpack on first use
+    val foreign = Seq("spark-", "blockmgr-", "hsperfdata_",
+      "librocksdbjni", "snappy-", "liblz4-java", "libzstd-jni")
+    def tmpdir: Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(n => foreign.exists(n.startsWith)).toSet
+      finally ls.close()
+    }
+    def session(): Map[String, Set[Any]] = {
+      val tables = spark.catalog.listTables().collect()
+      Map(
+        "conf" -> spark.conf.getAll.toSet[Any],
+        "persistent RDDs" ->
+          spark.sparkContext.getPersistentRDDs.keySet.toSet[Any],
+        "temp views" -> tables.filter(_.isTemporary).map(_.name).toSet[Any],
+        "catalog tables" ->
+          tables.filterNot(_.isTemporary).map(_.name).toSet[Any],
+        "active streams" -> spark.streams.active.map(_.id).toSet[Any],
+        "tmpdir" -> tmpdir.toSet[Any])
+    }
+    // memory-sink and withConf lanes, then every lane that writes scratch
+    // through Graft.scratchLane or Graft.withScratch; q321 returns through
+    // the same memory-sink shape but is left out: it is a wall-clock-pinned
+    // soak of about 80 s
+    Seq("q316_logreg_trainer", "q177_stream_stream_join",
         "q83_imt_merge", "q45_stream_window", "q62_stream_dedup",
         "q76_stream_late_append", "q119_stream_neardup",
         "q136_stream_prorate", "q141_stream_enrich",
-        "q238_udp_sharded_ingest", "q63_stream_upsert", "q105_sql_sink",
-        "q318_stream_substr_dedup")
+        "q238_udp_sharded_ingest",
+        "q63_stream_upsert", "q105_sql_sink", "q251_kafka_stream_source",
+        "q262_kafka_txn_sink", "q279_kafka_group_source",
+        "q285_kafka_group_multitopic", "q304_kafka_kip848",
+        "q314_kafka_848_regex", "q318_stream_substr_dedup",
+        "q324_metadata_rebalance", "q248_kafka_live",
+        "q249_kafka_conn_loss", "q268_kafka_group_resume",
+        "q275_kafka_group_assign", "q280_kafka_group_evict",
+        "q284_kafka_group_leave", "q320_training_pipeline",
+        "q325_stream_ingest", "q327_stream_dedup_cascade",
+        "q330_ooo_dedup_reconcile", "q332_bucketed_state_ingest",
+        "q342_compaction_cadence", "q236_bucket_join",
+        "q239_bucket_stream_compact", "q102_print_dynamic",
+        "q202_print_latest", "q271_avro_schema_registry",
+        "q336_ivf_stream_ingest", "q242_l7_rule_file",
+        "q329_partition_pruning", "q333_dpp_dim_prune")
       .foreach { name =>
-        val before = session(name)
+        val before = session()
         assert(SparkEntry.queries(name)(spark, d).collect().nonEmpty, name)
-        val after = session(name)
-        before.keys.foreach(k =>
-          assert(after(k) == before(k), s"$name changed the session's $k"))
+        val after = session()
+        before.keys.foreach { k =>
+          val (added, gone) = (after(k) -- before(k), before(k) -- after(k))
+          assert(added.isEmpty && gone.isEmpty,
+            s"$name changed the session's $k: added $added, removed $gone")
+        }
       }
   }
 
@@ -381,31 +405,32 @@ class StateSpec extends AnyFunSuite {
     // the §9 at-rest knob made concrete: facts bucketed by exporter join
     // a bucketed dim with ZERO Exchange operators — the co-location that
     // at 100 TB removes the dominant shuffle entirely
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucket")
-    spark.sql("DROP TABLE IF EXISTS bkt_flows")
-    spark.sql("DROP TABLE IF EXISTS bkt_rates")
-    val flows = (1 to 2000).map(i => (i % 16L, i.toLong, i * 10L))
-      .toDF("exporter", "event_id", "bytes")
-    val rates = (0 until 16).map(e => (e.toLong, 1L + e % 4))
-      .toDF("exporter", "rate")
-    flows.write.bucketBy(8, "exporter").sortBy("exporter")
-      .option("path", s"$dir/flows").saveAsTable("bkt_flows")
-    rates.write.bucketBy(8, "exporter").sortBy("exporter")
-      .option("path", s"$dir/rates").saveAsTable("bkt_rates")
-    val joined = spark.table("bkt_flows")
-      .hint("merge") // force SMJ so bucketing (not broadcast) is proven
-      .join(spark.table("bkt_rates"), "exporter")
-      .groupBy("exporter")
-      .agg(sum(col("bytes") * col("rate")).as("renorm"))
-    val total = joined.agg(sum("renorm")).as[Long].head()
-    val expected = (1 to 2000).map(i => i * 10L * (1L + (i % 16) % 4)).sum
-    assert(total == expected)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("SortMergeJoin"))
-    assert(!plan.contains("Exchange hashpartitioning"),
-      "bucketed join must not shuffle either side")
-    spark.sql("DROP TABLE IF EXISTS bkt_flows")
-    spark.sql("DROP TABLE IF EXISTS bkt_rates")
+    Graft.withScratch("graft_bucket") { dir =>
+      spark.sql("DROP TABLE IF EXISTS bkt_flows")
+      spark.sql("DROP TABLE IF EXISTS bkt_rates")
+      val flows = (1 to 2000).map(i => (i % 16L, i.toLong, i * 10L))
+        .toDF("exporter", "event_id", "bytes")
+      val rates = (0 until 16).map(e => (e.toLong, 1L + e % 4))
+        .toDF("exporter", "rate")
+      flows.write.bucketBy(8, "exporter").sortBy("exporter")
+        .option("path", s"$dir/flows").saveAsTable("bkt_flows")
+      rates.write.bucketBy(8, "exporter").sortBy("exporter")
+        .option("path", s"$dir/rates").saveAsTable("bkt_rates")
+      val joined = spark.table("bkt_flows")
+        .hint("merge") // force SMJ so bucketing (not broadcast) is proven
+        .join(spark.table("bkt_rates"), "exporter")
+        .groupBy("exporter")
+        .agg(sum(col("bytes") * col("rate")).as("renorm"))
+      val total = joined.agg(sum("renorm")).as[Long].head()
+      val expected = (1 to 2000).map(i => i * 10L * (1L + (i % 16) % 4)).sum
+      assert(total == expected)
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin"))
+      assert(!plan.contains("Exchange hashpartitioning"),
+        "bucketed join must not shuffle either side")
+      spark.sql("DROP TABLE IF EXISTS bkt_flows")
+      spark.sql("DROP TABLE IF EXISTS bkt_rates")
+    }
   }
 
   test("query inventory: unique names, oracle coverage, naming scheme") {
