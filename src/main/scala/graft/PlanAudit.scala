@@ -78,8 +78,8 @@ object PlanAudit {
                                // corpus reads via element_at (never a
                                // join) — repeated through the
                                // recall/alloc/balance/book legs'
-                               // lineage of the not-yet-materialized
-                               // alloc/codebook caches
+                               // reads of the alloc/codebook caches'
+                               // build plans
   )
 
   /** Row-local PQ/k-means lanes whose BNLJ waiver is structurally
@@ -266,7 +266,11 @@ object PlanAudit {
         val df = SparkEntry.queries(n)(spark, sfDir)
         // a lane that collects inside itself hands back a local relation;
         // audit the plan that computed it, in the form every other lane is
-        // audited in (the collect ran it: read its initial adaptive plan)
+        // audited in (the collect ran it: read its initial adaptive plan).
+        // A frame the lane cached prints inside it as its cache was built:
+        // an adaptive plan that ran lists its final and initial plans, so
+        // the PQ lanes (Pq.answer) and q338, which collect before the audit
+        // reads them, count each cache's operators twice
         val executed = Graft.collectedPlan(df).map {
           case a: org.apache.spark.sql.execution.adaptive
               .AdaptiveSparkPlanExec => a.initialPlan

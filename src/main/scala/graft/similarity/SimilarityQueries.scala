@@ -4,14 +4,21 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Graft, Q, Tables}
 
-/** Approximate-nearest-neighbor search over the embedding column
-  * (builder brief): brute-force cosine top-k as the exactness baseline,
-  * an IVF-style cell-probe variant and random-hyperplane LSH bucketing as
-  * the scale paths. Query set is always the broadcast side; candidates
-  * stream — the shape that survives a 100 TB corpus.
+/** Nearest-neighbor search over the embedding column: brute-force cosine
+  * top-k as the exactness baseline; IVF cell probes, random-hyperplane
+  * LSH and k-means as the coarse scale paths; and the product-quantization
+  * family (flat ADC q266, scaled K q331, shortlist re-rank q335, both
+  * q339 and its recall floor q341, IVF+PQ q286, OPQ permutation q343),
+  * each composed from the one pipeline in [[Pq]], which also owns and
+  * releases the model frames a lane persists. q336/q338 maintain and
+  * retract an IVF index built from a frozen coarse quantizer. The query
+  * set is always the broadcast side and candidates stream, the shape that
+  * survives a 100 TB corpus.
   *
-  * Dot products are sequential double folds (identical IEEE-754 result in
-  * Spark and DuckDB), so ranks are deterministic across engines.
+  * Cosine lanes fold dot products sequentially in doubles (the identical
+  * IEEE-754 result in Spark and DuckDB); the quantizer lanes run on
+  * floor(x·10^6) int64 coordinates. Either way ranks are deterministic
+  * across engines.
   */
 object SimilarityQueries {
 
@@ -177,12 +184,13 @@ object SimilarityQueries {
               (col("x.nrm") * col("y.nrm")))
           .filter(col("psim") >= 0.35)
           .select(col("y.vec_id").as("vec_id")).distinct()
-        assigned
+        Graft.collectLocal(assigned
           .join(drops.withColumn("dropped", lit(1L)), Seq("vec_id"), "left")
           .groupBy("cid")
           .agg(count(lit(1)).as("n_members"),
             sum(coalesce(col("dropped"), lit(0L))).as("n_dropped"))
-          .withColumn("n_kept", col("n_members") - col("n_dropped"))
+          .withColumn("n_kept", col("n_members") - col("n_dropped")))(
+          assigned.unpersist())
       },
       Some(s"""WITH $duckVecs,
             cents AS (SELECT vec_id AS cid, v AS qv, nrm AS qn
@@ -304,10 +312,7 @@ object SimilarityQueries {
     // distributed-Lloyd shape.
     Q("q245_kmeans_embeddings",
       (s, d) => {
-        val n = Tables.embeddings(s, d)
-          .selectExpr("vec_id",
-            "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-              "* 1000000) AS BIGINT)) AS v")
+        val n = Pq.vectors(s, d)
         // ROW-LOCAL assign (optimization r17, the q331 shape): the
         // K centroids collapse to a ONE-ROW broadcast array and the
         // (dist asc, cid asc) argmin runs inside each vector's row —
@@ -325,15 +330,11 @@ object SimilarityQueries {
           n.crossJoin(broadcast(cArr(cents)))
             .selectExpr("vec_id", "v", s"($bestExpr) AS mn")
             .selectExpr("vec_id", "v", "mn.bc AS cid", "mn.bd AS dist")
-        def update(asg: org.apache.spark.sql.DataFrame) = asg
-          .selectExpr("cid", "posexplode(v) AS (pos, x)")
-          .groupBy("cid", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("cid", "pos",
-            "(sx - ((sx % c) + c) % c) DIV c AS m")
-          .groupBy("cid")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, m)))," +
-            " t -> t.m) AS cv"))
+        def update(asg: org.apache.spark.sql.DataFrame) =
+          Pq.mean(asg.selectExpr("cid", "posexplode(v) AS (pos, x)"), "cid")
+            .groupBy("cid")
+            .agg(expr("transform(array_sort(collect_list(" +
+              "struct(pos, cm))), t -> t.cm) AS cv"))
         val c0 = n.filter(col("vec_id") < 8)
           .selectExpr("vec_id AS cid", "v AS cv")
         // every intermediate is consumed exactly once (c1 feeds one
@@ -474,89 +475,10 @@ object SimilarityQueries {
     // deterministic ties) and scores ADC top-5 against exact top-5.
     Q("q266_pq_adc",
       (s, d) => {
-        val sub = 16 // dims per subspace (64 / M)
-        val n = Tables.embeddings(s, d).selectExpr("vec_id",
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-            "* 1000000) AS BIGINT)) AS v")
-        // longF is the corpus-scale exploded long-form (64 rows per
-        // vector): deliberately NOT persisted — caching corpus-scale
-        // rows outlives the query and pressures the whole session
-        // (q255's cache-leak lesson; only model-sized tables persist).
-        // Each downstream pass re-runs the cheap codegen'd
-        // scan+posexplode instead.
-        val longF = n.selectExpr("vec_id", "posexplode(v) AS (pos, x)")
-          .withColumn("m", expr(s"pos DIV $sub"))
-        val c0 = longF.filter(col("vec_id") < 8)
-          .selectExpr("m", "vec_id AS cid", "pos", "x AS cm")
-        // ROW-LOCAL assign (optimization r17, the q331 shape): the
-        // model-sized codebook collapses to a ONE-ROW broadcast array
-        // and the (dist asc, cid asc) argmin runs inside each vector's
-        // row — no corpus×M×K join rows, no per-assign exchanges;
-        // identical selection to the former join + struct-min agg.
-        // r18: the per-subspace argmin is the native graft_pq_codes
-        // kernel — one codegen'd node instead of the interpreted
-        // ~200-node HOF tree whose per-run parse/analyze/first-eval
-        // cost the cold bench billed (VERDICT r17 #1b); selection
-        // identical, PqKernelsSpec.
-        def cbArr(c: org.apache.spark.sql.DataFrame) =
-          c.groupBy("m", "cid")
-            .agg(expr("transform(sort_array(collect_list(" +
-              "struct(pos, cm))), e -> e.cm)").as("cms"))
-            .groupBy()
-            .agg(collect_list(struct(col("m"), col("cid"),
-              col("cms"))).as("cb"))
-        val codesExpr = s"graft_pq_codes(v, cb, $sub)"
-        def assign(c: org.apache.spark.sql.DataFrame) =
-          n.crossJoin(broadcast(cbArr(c)))
-            .selectExpr("vec_id",
-              s"posexplode($codesExpr) AS (m, cid)")
-        // the trained codebook IS the persisted table: M*K*sub = 512
-        // rows (model-sized, like q255's cAb) — every downstream
-        // branch (codes, LUT) reuses it without re-running training.
-        // The update keeps the vector alongside its codes so the
-        // per-(m,cid,pos) means need no join back onto the long form.
-        val c1 = n.crossJoin(broadcast(cbArr(c0)))
-          .selectExpr("v", s"posexplode($codesExpr) AS (m, cid)")
-          .selectExpr("m", "cid",
-            s"posexplode(slice(v, m * $sub + 1, $sub)) AS (p, x)")
-          .selectExpr("m", "cid", s"m * $sub + p AS pos", "x")
-          .groupBy("m", "cid", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("m", "cid", "pos",
-            "(sx - ((sx % c) + c) % c) DIV c AS cm")
-          .persist()
-        val codes = assign(c1)
-        val qs = longF.filter(col("vec_id") % 97 === 0)
-          .selectExpr("vec_id AS qid", "m", "pos", "x AS qx")
-        // ADC lookup table: query-to-centroid partial distances
-        val lut = qs.join(broadcast(c1), Seq("m", "pos"))
-          .groupBy("qid", "m", "cid")
-          .agg(sum(expr("(qx - cm) * (qx - cm)")).as("pd"))
-        val wTop = Window.partitionBy("qid")
-          .orderBy(col("dist").asc, col("vec_id").asc)
-        val adcTop = codes.join(broadcast(lut), Seq("m", "cid"))
-          .groupBy("qid", "vec_id").agg(sum("pd").as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val exactTop = longF.join(
-            broadcast(qs.withColumnRenamed("m", "qm")),
-            Seq("pos"))
-          .groupBy("qid", "vec_id")
-          .agg(sum(expr("(x - qx) * (x - qx)")).as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val hits = exactTop.join(broadcast(adcTop), Seq("qid", "vec_id"))
-          .groupBy("qid").agg(count(lit(1)).as("h"))
-        val recall = qs.select("qid").distinct()
-          .join(broadcast(hits), Seq("qid"), "left")
-          .selectExpr("'recall' AS kind", "CAST(qid AS STRING) AS key",
-            "CAST(5 AS BIGINT) AS n",
-            "coalesce(h, CAST(0 AS BIGINT)) AS v")
-        val book = codes.groupBy("m")
-          .agg(countDistinct("cid").as("n"), count(lit(1)).as("v"))
-          .selectExpr("'codebook' AS kind", "CAST(m AS STRING) AS key",
-            "n", "v")
-        recall.unionByName(book)
+        val pq = new Pq(s, d)
+        val (codes, q, ranked) = pq.flat(scaled = false, 97)
+        pq.answer(pq.recall(q, ranked)
+          .unionByName(pq.codebookRows(codes)))
       },
       Some("""WITH n AS (SELECT vec_id,
               list_transform(embedding,
@@ -648,16 +570,10 @@ object SimilarityQueries {
     // cell misses to the coarse quantizer like q246 does.
     Q("q286_ivf_pq",
       (s, d) => {
-        val sub = 16
-        val n = Tables.embeddings(s, d).selectExpr("vec_id",
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-            "* 1000000) AS BIGINT)) AS v")
-        // corpus-scale long form: NOT persisted (q255's cache-leak
-        // lesson) — only the two codebooks below persist
-        val longF = n.selectExpr("vec_id", "posexplode(v) AS (pos, x)")
-        val floorMean = "(sx - ((sx % c) + c) % c) DIV c AS cm"
+        val pq = new Pq(s, d)
+        val n = pq.n
         // ---- coarse quantizer: 4 cells over full vectors ----------
-        val cc0 = longF.filter(col("vec_id") < 4)
+        val cc0 = pq.long.filter(col("vec_id") < 4)
           .selectExpr("vec_id AS cell", "pos", "x AS cm")
         // ROW-LOCAL coarse assign (optimization r17, the q331 shape):
         // the 4-cell codebook collapses to a ONE-ROW broadcast array
@@ -674,17 +590,11 @@ object SimilarityQueries {
             .agg(collect_list(struct(col("cell"), col("cms")))
               .as("ccb"))
         val cellExpr = "graft_argmin_l2(v, ccb).bc"
-        def assignCell(c: org.apache.spark.sql.DataFrame) =
-          n.crossJoin(broadcast(ccArr(c)))
-            .selectExpr("vec_id", s"($cellExpr) AS cell")
-        val cc1 = n.crossJoin(broadcast(ccArr(cc0)))
+        val cc1 = pq.keep(Pq.mean(n.crossJoin(broadcast(ccArr(cc0)))
           .selectExpr("v", s"($cellExpr) AS cell")
-          .selectExpr("cell", "posexplode(v) AS (pos, x)")
-          .groupBy("cell", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("cell", "pos", floorMean)
-          .persist() // 4 * 64 = 256 rows: model-sized
-        val cells = assignCell(cc1)
+          .selectExpr("cell", "posexplode(v) AS (pos, x)"), "cell"))
+        val cells = n.crossJoin(broadcast(ccArr(cc1)))
+          .selectExpr("vec_id", s"($cellExpr) AS cell")
         // ---- residual vector IN-ROW (vs the assigned cell's
         // centroid) + PQ codebook on residuals ----------------------
         val rvDf = n.crossJoin(broadcast(ccArr(cc1)))
@@ -694,70 +604,27 @@ object SimilarityQueries {
               "e -> e.cell = cell), 1).cms, (a, b) -> a - b) AS rv")
         val p0 = rvDf.filter(col("vec_id") < 8)
           .selectExpr("vec_id AS cid", "posexplode(rv) AS (pos, r)")
-          .selectExpr(s"pos DIV $sub AS m", "cid", "pos", "r AS pm")
-        def pqArr(c: org.apache.spark.sql.DataFrame) =
-          c.groupBy("m", "cid")
-            .agg(expr("transform(sort_array(collect_list(" +
-              "struct(pos, pm))), e -> e.pm)").as("cms"))
-            .groupBy()
-            .agg(collect_list(struct(col("m"), col("cid"),
-              col("cms"))).as("cb"))
-        val pqExpr = s"graft_pq_codes(rv, cb, $sub)"
-        def assignPq(c: org.apache.spark.sql.DataFrame) =
-          rvDf.crossJoin(broadcast(pqArr(c)))
-            .selectExpr("vec_id", "cell",
-              s"posexplode($pqExpr) AS (m, cid)")
-        val p1 = rvDf.crossJoin(broadcast(pqArr(p0)))
-          .selectExpr("rv", s"posexplode($pqExpr) AS (m, cid)")
-          .selectExpr("m", "cid",
-            s"posexplode(slice(rv, m * $sub + 1, $sub)) AS (p, r)")
-          .selectExpr("m", "cid", s"m * $sub + p AS pos", "r")
-          .groupBy("m", "cid", "pos")
-          .agg(sum("r").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("m", "cid", "pos",
-            floorMean.replace("cm", "pm"))
-          .persist() // 4 * 8 * 16 = 512 rows: model-sized
-        val codes = assignPq(p1) // (vec_id, cell, m, cid)
+          .selectExpr(s"pos DIV ${Pq.sub} AS m", "cid", "pos", "r AS cm")
+        val p1 = pq.train(rvDf, "rv", p0)
+        val codes = pq.assign(rvDf, "rv", p1, "cell")
         // ---- queries: nprobe=2 cells, residual LUT, in-cell ADC ---
-        val qs = longF.filter(col("vec_id") % 89 === 0)
-          .selectExpr("vec_id AS qid", "pos", "x AS qx")
+        val q = pq.queries(pq.natural, 89)
         val wProbe = Window.partitionBy("qid")
           .orderBy(col("dist").asc, col("cell").asc)
-        val probes = qs.join(broadcast(cc1), Seq("pos"))
+        val probes = q.join(broadcast(cc1), Seq("pos"))
           .groupBy("qid", "cell")
           .agg(sum(expr("(qx - cm) * (qx - cm)")).as("dist"))
           .withColumn("rn", row_number().over(wProbe))
           .filter(col("rn") <= 2).select("qid", "cell")
-        val qRes = qs.join(broadcast(probes), Seq("qid"))
+        val qRes = q.join(broadcast(probes), Seq("qid"))
           .join(broadcast(cc1), Seq("cell", "pos"))
-          .selectExpr("qid", "cell", "pos", s"pos DIV $sub AS m",
-            "qx - cm AS qr")
-        val lut = qRes.join(broadcast(p1), Seq("m", "pos"))
-          .groupBy("qid", "cell", "m", "cid")
-          .agg(sum(expr("(qr - pm) * (qr - pm)")).as("pd"))
-        val wTop = Window.partitionBy("qid")
-          .orderBy(col("dist").asc, col("vec_id").asc)
-        val adcTop = codes.join(broadcast(lut), Seq("cell", "m", "cid"))
-          .groupBy("qid", "vec_id").agg(sum("pd").as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val exactTop = longF.join(broadcast(qs), Seq("pos"))
-          .groupBy("qid", "vec_id")
-          .agg(sum(expr("(x - qx) * (x - qx)")).as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val hits = exactTop.join(broadcast(adcTop), Seq("qid", "vec_id"))
-          .groupBy("qid").agg(count(lit(1)).as("h"))
-        val recall = qs.select("qid").distinct()
-          .join(broadcast(hits), Seq("qid"), "left")
-          .selectExpr("'recall' AS kind", "CAST(qid AS STRING) AS key",
-            "CAST(5 AS BIGINT) AS n",
-            "coalesce(h, CAST(0 AS BIGINT)) AS v")
+          .selectExpr("qid", "cell", "m", "pos", "qx - cm AS qx")
         val cellRows = cells.groupBy("cell")
           .agg(count(lit(1)).as("v"))
           .selectExpr("'cell' AS kind", "CAST(cell AS STRING) AS key",
             "CAST(4 AS BIGINT) AS n", "v")
-        recall.unionByName(cellRows)
+        pq.answer(pq.recall(q, pq.adc(codes, pq.lut(qRes, p1, "cell"), "cell"))
+          .unionByName(cellRows))
       },
       Some("""WITH n AS (SELECT vec_id,
               list_transform(embedding,
@@ -1138,9 +1005,10 @@ object SimilarityQueries {
     // PQ-ADC pipeline with the codebook size DERIVED from corpus
     // cardinality instead of pinned at K=8. The r13 soak measured the
     // fixed-capacity collapse (recall@5 0.248 → 0.0002 at 100× under
-    // K=8) and graft.AnnCapacity measured the remedy (K∝N restores the
-    // 1× baseline: K=128 → 0.234 at 10×); this lane converts that
-    // probe into gated behavior. The rule is
+    // K=8) and a parameterized-K probe measured the remedy (K∝N
+    // restores the 1× baseline: K=128 → 0.234 at 10×, BENCH_NOTES
+    // r14); this lane converts that probe into gated behavior. The
+    // rule is
     //   K = clamp(N DIV 128, 8, 256)
     // — linear in the corpus until the FAISS-standard 8-bit code
     // ceiling (K=256), past which capacity scaling moves to the coarse
@@ -1156,87 +1024,10 @@ object SimilarityQueries {
     // gate.
     Q("q331_pq_scaled_k",
       (s, d) => {
-        val sub = 16 // dims per subspace (64 / M)
-        val n = Tables.embeddings(s, d).selectExpr("vec_id",
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-            "* 1000000) AS BIGINT)) AS v")
-        // codebook capacity from corpus cardinality — a 1-row frame
-        // that rides a broadcast nested-loop into the seed filter
-        val kdf = n.agg(expr("greatest(CAST(8 AS BIGINT), " +
-          "least(CAST(256 AS BIGINT), count(1) DIV 128)) AS kk"))
-        // corpus-scale long form: NOT persisted (q255's cache-leak
-        // lesson) — only the trained codebook below persists
-        val longF = n.selectExpr("vec_id", "posexplode(v) AS (pos, x)")
-          .withColumn("m", expr(s"pos DIV $sub"))
-        val c0 = longF.join(broadcast(kdf), col("vec_id") < col("kk"))
-          .selectExpr("m", "vec_id AS cid", "pos", "x AS cm")
-        // ROW-LOCAL assign (optimization r17, guide §2.4/§1.2): the
-        // model-sized codebook collapses to a ONE-ROW array
-        // (m, cid, cms[pos-ordered]) that rides a broadcast into a
-        // per-vector higher-order expression — argmin by (dist asc,
-        // cid asc) computed inside the row, no corpus×M×K join rows,
-        // no per-assign exchanges. Identical selection to the former
-        // join + min(struct(dist, cid)) aggregation (exact integer
-        // distances, explicit lexicographic tie-break).
-        def cbArr(c: org.apache.spark.sql.DataFrame) =
-          c.groupBy("m", "cid")
-            .agg(expr("transform(sort_array(collect_list(" +
-              "struct(pos, cm))), e -> e.cm)").as("cms"))
-            .groupBy()
-            .agg(collect_list(struct(col("m"), col("cid"),
-              col("cms"))).as("cb"))
-        val codesExpr = s"graft_pq_codes(v, cb, $sub)"
-        def assign(c: org.apache.spark.sql.DataFrame) =
-          n.crossJoin(broadcast(cbArr(c)))
-            .selectExpr("vec_id",
-              s"posexplode($codesExpr) AS (m, cid)")
-        // trained codebook: M*K*sub rows — ≤ 16384 at the K=256
-        // ceiling, model-sized at any corpus scale. The update keeps
-        // the vector alongside its codes so the per-(m,cid,pos) means
-        // need no join back onto the long form.
-        val c1 = n.crossJoin(broadcast(cbArr(c0)))
-          .selectExpr("v", s"posexplode($codesExpr) AS (m, cid)")
-          .selectExpr("m", "cid",
-            s"posexplode(slice(v, m * $sub + 1, $sub)) AS (p, x)")
-          .selectExpr("m", "cid", s"m * $sub + p AS pos", "x")
-          .groupBy("m", "cid", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("m", "cid", "pos",
-            "(sx - ((sx % c) + c) % c) DIV c AS cm")
-          .persist()
-        val codes = assign(c1)
-        val qs = longF.filter(col("vec_id") % 97 === 0)
-          .selectExpr("vec_id AS qid", "m", "pos", "x AS qx")
-        val lut = qs.join(broadcast(c1), Seq("m", "pos"))
-          .groupBy("qid", "m", "cid")
-          .agg(sum(expr("(qx - cm) * (qx - cm)")).as("pd"))
-        val wTop = Window.partitionBy("qid")
-          .orderBy(col("dist").asc, col("vec_id").asc)
-        val adcTop = codes.join(broadcast(lut), Seq("m", "cid"))
-          .groupBy("qid", "vec_id").agg(sum("pd").as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val exactTop = longF.join(
-            broadcast(qs.withColumnRenamed("m", "qm")),
-            Seq("pos"))
-          .groupBy("qid", "vec_id")
-          .agg(sum(expr("(x - qx) * (x - qx)")).as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val hits = exactTop.join(broadcast(adcTop), Seq("qid", "vec_id"))
-          .groupBy("qid").agg(count(lit(1)).as("h"))
-        val recall = qs.select("qid").distinct()
-          .join(broadcast(hits), Seq("qid"), "left")
-          .selectExpr("'recall' AS kind", "CAST(qid AS STRING) AS key",
-            "CAST(5 AS BIGINT) AS n",
-            "coalesce(h, CAST(0 AS BIGINT)) AS v")
-        val book = codes.groupBy("m")
-          .agg(countDistinct("cid").as("n"), count(lit(1)).as("v"))
-          .selectExpr("'codebook' AS kind", "CAST(m AS STRING) AS key",
-            "n", "v")
-        val kRow = kdf.selectExpr("'k' AS kind", "'k' AS key",
-          "kk AS n", "kk AS v")
-        recall.unionByName(book).unionByName(kRow)
+        val pq = new Pq(s, d)
+        val (codes, q, ranked) = pq.flat(scaled = true, 97)
+        pq.answer(pq.recall(q, ranked)
+          .unionByName(pq.codebookRows(codes)).unionByName(pq.kRow))
       },
       Some("""WITH n AS (SELECT vec_id,
               list_transform(embedding,
@@ -1339,100 +1130,10 @@ object SimilarityQueries {
     // bit-for-bit.
     Q("q335_pq_rerank",
       (s, d) => {
-        val sub = 16
-        val n = Tables.embeddings(s, d).selectExpr("vec_id",
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-            "* 1000000) AS BIGINT)) AS v")
-        // corpus-scale long form NOT persisted (q255's cache-leak
-        // lesson); only the trained codebook persists
-        val longF = n.selectExpr("vec_id", "posexplode(v) AS (pos, x)")
-          .withColumn("m", expr(s"pos DIV $sub"))
-        val c0 = longF.filter(col("vec_id") < 8)
-          .selectExpr("m", "vec_id AS cid", "pos", "x AS cm")
-        // ROW-LOCAL assign (optimization r17, the q331 shape): one-row
-        // broadcast codebook array, in-row (dist asc, cid asc) argmin —
-        // no corpus×M×K join rows, no per-assign exchanges; identical
-        // selection to the former join + struct-min agg.
-        def cbArr(c: org.apache.spark.sql.DataFrame) =
-          c.groupBy("m", "cid")
-            .agg(expr("transform(sort_array(collect_list(" +
-              "struct(pos, cm))), e -> e.cm)").as("cms"))
-            .groupBy()
-            .agg(collect_list(struct(col("m"), col("cid"),
-              col("cms"))).as("cb"))
-        val codesExpr = s"graft_pq_codes(v, cb, $sub)"
-        def assign(c: org.apache.spark.sql.DataFrame) =
-          n.crossJoin(broadcast(cbArr(c)))
-            .selectExpr("vec_id",
-              s"posexplode($codesExpr) AS (m, cid)")
-        val c1 = n.crossJoin(broadcast(cbArr(c0)))
-          .selectExpr("v", s"posexplode($codesExpr) AS (m, cid)")
-          .selectExpr("m", "cid",
-            s"posexplode(slice(v, m * $sub + 1, $sub)) AS (p, x)")
-          .selectExpr("m", "cid", s"m * $sub + p AS pos", "x")
-          .groupBy("m", "cid", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("m", "cid", "pos",
-            "(sx - ((sx % c) + c) % c) DIV c AS cm")
-          .persist() // M*K*sub = 512 rows: model-sized
-        val codes = assign(c1)
-        val qs = longF.filter(col("vec_id") % 97 === 0)
-          .selectExpr("vec_id AS qid", "m", "pos", "x AS qx")
-        val lut = qs.join(broadcast(c1), Seq("m", "pos"))
-          .groupBy("qid", "m", "cid")
-          .agg(sum(expr("(qx - cm) * (qx - cm)")).as("pd"))
-        val wTop = Window.partitionBy("qid")
-          .orderBy(col("dist").asc, col("vec_id").asc)
-        // shortlist: the ADC scan's top-50 per query (rn kept so the
-        // top-5 derives by filter) — queries x 50 rows, model-sized at
-        // any corpus scale, so it PERSISTS: the coded scan + window is
-        // paid exactly once and every verification leg reads the
-        // 50-row-per-query cache instead of re-expanding the corpus
-        // lineage (the repeated-scan invariant this lane must honor)
-        val short = codes.join(broadcast(lut), Seq("m", "cid"))
-          .groupBy("qid", "vec_id").agg(sum("pd").as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 50).select("qid", "vec_id", "rn")
-          .persist()
-        val adcTop = short.filter(col("rn") <= 5)
-          .select("qid", "vec_id")
-        // exact re-rank over the shortlist ONLY: fetch raw vectors
-        // via a broadcast join (at scale: a broadcast semi-join prune
-        // of the vector table), exact integer L2, top-5
-        val rr = longF.join(broadcast(short.select("qid", "vec_id")),
-            Seq("vec_id"))
-          .join(broadcast(qs.select("qid", "pos", "qx")),
-            Seq("qid", "pos"))
-          .groupBy("qid", "vec_id")
-          .agg(sum(expr("(x - qx) * (x - qx)")).as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        // exact top-5 truth: queries x 5 rows — model-sized, persisted
-        // (referenced once per compared method)
-        val exactTop = longF.join(
-            broadcast(qs.withColumnRenamed("m", "qm")), Seq("pos"))
-          .groupBy("qid", "vec_id")
-          .agg(sum(expr("(x - qx) * (x - qx)")).as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-          .persist()
-        def hitsOf(t: org.apache.spark.sql.DataFrame) =
-          exactTop.join(broadcast(t), Seq("qid", "vec_id"))
-            .groupBy("qid").agg(count(lit(1)).as("h"))
-        val qids = qs.select("qid").distinct().persist()
-        def recallRows(t: org.apache.spark.sql.DataFrame,
-            kind: String) =
-          qids.join(broadcast(hitsOf(t)), Seq("qid"), "left")
-            .selectExpr(s"'$kind' AS kind",
-              "CAST(qid AS STRING) AS key", "CAST(5 AS BIGINT) AS n",
-              "coalesce(h, CAST(0 AS BIGINT)) AS v")
-        val shortSz = short.groupBy("qid")
-          .agg(count(lit(1)).as("v"))
-          .selectExpr("'short' AS kind", "CAST(qid AS STRING) AS key",
-            "CAST(50 AS BIGINT) AS n", "v")
-        recallRows(rr, "recall_rr")
-          .unionByName(recallRows(adcTop, "recall_adc"))
-          .unionByName(shortSz)
+        val pq = new Pq(s, d)
+        val (_, q, ranked) = pq.flat(scaled = false, 97)
+        val short = pq.shortlist(ranked)
+        pq.answer(pq.refine(q, short).unionByName(pq.shortRows(short)))
       },
       Some("""WITH n AS (SELECT vec_id,
               list_transform(embedding,
@@ -1553,9 +1254,7 @@ object SimilarityQueries {
       (s, d) => Graft.scratchLane("q336_ivf") { tmp =>
         val sp = s
         import sp.implicits._
-        val n = Tables.embeddings(s, d).selectExpr("vec_id",
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-            "* 1000000) AS BIGINT)) AS v")
+        val n = Pq.vectors(s, d)
         val staged = s"$tmp/staged"
         val idxDir = s"$tmp/index"
         java.nio.file.Files.createDirectories(
@@ -1601,11 +1300,7 @@ object SimilarityQueries {
           .groupBy("vec_id")
           .agg(min(struct(col("dist"), col("cell"))).as("mn"))
           .selectExpr("vec_id", "mn.cell AS cell")
-        val cc1 = a1.join(longSeed, Seq("vec_id"))
-          .groupBy("cell", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("cell", "pos",
-            "(sx - ((sx % c) + c) % c) DIV c AS cm")
+        val cc1 = Pq.mean(a1.join(longSeed, Seq("vec_id")), "cell")
           .persist() // 4 cells x 64 dims = 256 rows: model-sized
         val cbArr = cc1.groupBy("cell")
           .agg(expr("transform(sort_array(collect_list(" +
@@ -1765,9 +1460,7 @@ object SimilarityQueries {
     // just can never be RETURNED.
     Q("q338_ann_retraction",
       (s, d) => {
-        val n = Tables.embeddings(s, d).selectExpr("vec_id",
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-            "* 1000000) AS BIGINT)) AS v")
+        val n = Pq.vectors(s, d)
         val maxId = n.agg(max("vec_id")).head().getLong(0)
         val width = maxId / 8 + 1
         // the deployed frozen quantizer — q336's bootstrap model
@@ -1783,11 +1476,7 @@ object SimilarityQueries {
           .groupBy("vec_id")
           .agg(min(struct(col("dist"), col("cell"))).as("mn"))
           .selectExpr("vec_id", "mn.cell AS cell")
-        val cc1 = a1.join(longSeed, Seq("vec_id"))
-          .groupBy("cell", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("cell", "pos",
-            "(sx - ((sx % c) + c) % c) DIV c AS cm")
+        val cc1 = Pq.mean(a1.join(longSeed, Seq("vec_id")), "cell")
           .persist()
         val cbArr = cc1.groupBy("cell")
           .agg(expr("transform(sort_array(collect_list(" +
@@ -1838,7 +1527,9 @@ object SimilarityQueries {
           .filter(col("rank") <= 5)
           .selectExpr("'probe' AS kind", "CAST(qid AS STRING) AS key",
             "CAST(rank AS BIGINT) AS n", "vec_id AS v")
-        cellRows.unionByName(tombRows).unionByName(probe)
+        Graft.collectLocal(
+          cellRows.unionByName(tombRows).unionByName(probe))(
+          Seq(cc1, cbArr, cellAgg).foreach(_.unpersist()))
       },
       Some("""WITH n AS (SELECT vec_id,
               list_transform(embedding,
@@ -2058,23 +1749,8 @@ object SimilarityQueries {
       (s, d) => {
         val sp = s
         import sp.implicits._
-        // the shared builder persists model-sized frames (c1, short,
-        // exactTop, qids) and this lane is the second invocation in a
-        // Verify/PlanAudit sweep (after q339); everything is fully
-        // materialized by the collect below, so unpersist exactly
-        // those frames — otherwise they can be substituted into later
-        // lanes' executed plans (the AnnFloorSpec hazard) and
-        // accumulate executor memory across the 343-lane sweep.
-        // TARGETED unpersists, not clearCache(): a blanket clear also
-        // drops SigTable's shared sigs/pairs90 caches, and the next
-        // consumer (q72 in sweep order) re-derives its pair table as
-        // a fresh SMJ self-join — the full-sweep PlanAudit caught
-        // exactly that on the first cut of this cleanup
-        val cached =
-          scala.collection.mutable.ArrayBuffer[org.apache.spark.sql
-            .DataFrame]()
-        val rows = scaledRerankRows(s, d, cached = cached).collect()
-        cached.foreach(_.unpersist())
+        // the builder collects q339's rows and releases what it cached
+        val rows = scaledRerankRows(s, d).collect()
         def agg(kind: String, col: Int) =
           rows.filter(_.getString(0) == kind).map(_.getLong(col)).sum
         val rrh = agg("recall_rr", 3)
@@ -2241,231 +1917,88 @@ object SimilarityQueries {
         "recall all oracle-pinned")
   )
 
-  /** The q343 OPQ-permutation plan, extracted so big-corpus
-    * probes (AnnRecall under SPARK_GRAFT_QMOD) can sample the query
-    * panel: the exact-truth leg is O(queries x corpus x dims), so at
-    * 100x the %97 panel is the bottleneck, not the index. The GATED
-    * lane always uses the default 97 (the oracle mirrors it). */
+  /** The q343 OPQ-permutation plan. qmod is the query-panel modulus:
+    * the gated lane uses 97 (the oracle mirrors it); AnnRecall's
+    * big-corpus probes (SPARK_GRAFT_QMOD) pass a larger one, because the
+    * exact-truth leg is O(queries × corpus × dims) and at 100× the %97
+    * panel, not the index, is the bottleneck. */
   private[graft] def opqPermutationRows(
       s: org.apache.spark.sql.SparkSession, d: String,
       qmod: Long = 97L)
       : org.apache.spark.sql.DataFrame = {
-        val mSub = 4 // subspaces (64 dims / 16 per subspace)
-        val n = Tables.embeddings(s, d).selectExpr("vec_id",
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-            "* 1000000) AS BIGINT)) AS v")
-        val kdf = n.agg(expr("greatest(CAST(8 AS BIGINT), " +
-          "least(CAST(256 AS BIGINT), count(1) DIV 128)) AS kk"))
-        val longN = n.selectExpr("vec_id", "posexplode(v) AS (pos, x)")
-        val alloc = longN
-          .selectExpr("pos",
-            "(x - (((x % 1024) + 1024) % 1024)) DIV 1024 AS cx")
-          .groupBy("pos")
-          .agg(count(lit(1)).as("nn"), sum(expr("cx * cx")).as("s2"),
-            sum("cx").as("s1"))
-          .withColumn("r", row_number().over(Window.orderBy(
-            expr("CAST(nn AS DECIMAL(38,0)) * CAST(s2 AS " +
-              "DECIMAL(38,0)) - CAST(s1 AS DECIMAL(38,0)) * " +
-              "CAST(s1 AS DECIMAL(38,0))").desc,
-            col("pos").asc)) - 1)
-          .selectExpr("pos", "r", s"CASE WHEN (r DIV $mSub) % 2 = 0 " +
-            s"THEN r % $mSub ELSE ($mSub - 1) - (r % $mSub) END AS m")
-          .persist() // 64 rows: model-sized
-        // the permutation rides into the corpus as ONE broadcast row
-        // holding a pos-indexed array — an element_at lookup per row,
-        // never a join against the corpus (the q331 in-plan-K idiom,
-        // one rung up: a 64-slot model instead of a 1-value model)
-        val pm = alloc.agg(expr("transform(array_sort(" +
-          "collect_list(struct(pos AS p, m AS mm))), e -> e.mm) AS pm"))
-        val longF = longN.crossJoin(broadcast(pm))
-          .selectExpr("vec_id", "pos", "x",
-            "element_at(pm, CAST(pos + 1 AS INT)) AS m")
-        val c0 = longF.join(broadcast(kdf), col("vec_id") < col("kk"))
-          .selectExpr("m", "vec_id AS cid", "pos", "x AS cm")
-        // ROW-LOCAL assign (optimization r17, the q331 shape, with
-        // POSITION-CARRYING codebook entries because the OPQ
-        // permutation scatters a subspace's dims across v — each
-        // entry gathers its own positions instead of a contiguous
-        // slice). Identical (dist asc, cid asc) selection. r18: native
-        // graft_opq_codes kernel instead of the interpreted HOF tree
-        // (VERDICT r17 #1b); the m cast only normalizes the broadcast
-        // struct for the kernel (subspace ids are 0..3 either way).
-        def cbArr(c: org.apache.spark.sql.DataFrame) =
-          c.groupBy("m", "cid")
-            .agg(expr("sort_array(collect_list(struct(pos, cm)))")
-              .as("pcs"))
-            .groupBy()
-            .agg(collect_list(struct(
-              col("m").cast("long").as("m"), col("cid"),
-              col("pcs"))).as("cb"))
-        val codesExpr = s"graft_opq_codes(v, cb, $mSub)"
-        def assign(c: org.apache.spark.sql.DataFrame) =
-          n.crossJoin(broadcast(cbArr(c)))
-            .selectExpr("vec_id",
-              s"posexplode($codesExpr) AS (m, cid)")
-        val c1 = n.crossJoin(broadcast(pm))
-          .crossJoin(broadcast(cbArr(c0)))
-          .selectExpr("v", "pm", s"$codesExpr AS codes")
-          .selectExpr("pm", "codes", "posexplode(v) AS (pos, x)")
-          .selectExpr("element_at(pm, CAST(pos + 1 AS INT)) AS m",
-            "codes", "pos", "x")
-          .selectExpr("m",
-            "element_at(codes, CAST(m + 1 AS INT)) AS cid", "pos", "x")
-          .groupBy("m", "cid", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-          .selectExpr("m", "cid", "pos",
-            "(sx - ((sx % c) + c) % c) DIV c AS cm")
-          .persist() // ≤ M*256*16 rows: model-sized at the K ceiling
-        val codes = assign(c1)
-        val qs = longF.filter(col("vec_id") % qmod === 0)
-          .selectExpr("vec_id AS qid", "m", "pos", "x AS qx")
-        val lut = qs.join(broadcast(c1), Seq("m", "pos"))
-          .groupBy("qid", "m", "cid")
-          .agg(sum(expr("(qx - cm) * (qx - cm)")).as("pd"))
-        val wTop = Window.partitionBy("qid")
-          .orderBy(col("dist").asc, col("vec_id").asc)
-        val adcTop = codes.join(broadcast(lut), Seq("m", "cid"))
-          .groupBy("qid", "vec_id").agg(sum("pd").as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val exactTop = longN.join(
-            broadcast(qs.select("qid", "pos", "qx")), Seq("pos"))
-          .groupBy("qid", "vec_id")
-          .agg(sum(expr("(x - qx) * (x - qx)")).as("dist"))
-          .withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val hits = exactTop
-          .join(broadcast(adcTop), Seq("qid", "vec_id"))
-          .groupBy("qid").agg(count(lit(1)).as("h"))
-        val recall = qs.select("qid").distinct()
-          .join(broadcast(hits), Seq("qid"), "left")
-          .selectExpr("'recall' AS kind", "CAST(qid AS STRING) AS key",
-            "CAST(5 AS BIGINT) AS n",
-            "coalesce(h, CAST(0 AS BIGINT)) AS v")
-        val allocRows = alloc.selectExpr("'alloc' AS kind",
-          "CAST(pos AS STRING) AS key", "CAST(r AS BIGINT) AS n",
-          "CAST(m AS BIGINT) AS v")
-        val balance = alloc.groupBy("m")
-          .agg(count(lit(1)).as("n"), sum("r").as("v"))
-          .selectExpr("'balance' AS kind", "CAST(m AS STRING) AS key",
-            "n", "v")
-        val book = codes.groupBy("m")
-          .agg(countDistinct("cid").as("n"), count(lit(1)).as("v"))
-          .selectExpr("'codebook' AS kind", "CAST(m AS STRING) AS key",
-            "n", "v")
-        val kRow = kdf.selectExpr("'k' AS kind", "'k' AS key",
-          "kk AS n", "kk AS v")
-        recall.unionByName(allocRows).unionByName(balance)
-          .unionByName(book).unionByName(kRow)
-  }
-
-  /** The q339 operating-configuration plan (corpus-scaled-K
-    * codebook, ADC top-50 shortlist, exact integer re-rank),
-    * extracted so the q341 recall-FLOOR gate scores exactly the
-    * plan it gates. qmod is the query-panel modulus: the GATED lanes
-    * always use the default 97; big-corpus probes (AnnRecall at
-    * 100×) pass a larger modulus because the exact-truth leg is
-    * O(queries × corpus × dims) — at 200k vectors the %97 panel's
-    * 2062 queries build ~26B intermediate rows and the probe, not
-    * the index, becomes the bottleneck. */
-  private[graft] def scaledRerankRows(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      qmod: Long = 97L,
-      cached: scala.collection.mutable.Buffer[
-        org.apache.spark.sql.DataFrame] = null)
-      : org.apache.spark.sql.DataFrame = {
-    // every persisted (model-sized) frame is registered with the
-    // caller's buffer when one is supplied, so q341 can unpersist
-    // exactly what this builder cached (see the q341 comment)
-    def reg(df: org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame = {
-      if (cached != null) cached += df
-      df
-    }
-    val sub = 16
-    val n = Tables.embeddings(s, d).selectExpr("vec_id",
-      "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) " +
-        "* 1000000) AS BIGINT)) AS v")
-    val kdf = n.agg(expr("greatest(CAST(8 AS BIGINT), " +
-      "least(CAST(256 AS BIGINT), count(1) DIV 128)) AS kk"))
-    val longF = n.selectExpr("vec_id", "posexplode(v) AS (pos, x)")
-      .withColumn("m", expr(s"pos DIV $sub"))
-    val c0 = longF.join(broadcast(kdf), col("vec_id") < col("kk"))
-      .selectExpr("m", "vec_id AS cid", "pos", "x AS cm")
-    // ROW-LOCAL assign (optimization r17, the q331 shape): one-row
-    // broadcast codebook array, in-row (dist asc, cid asc) argmin —
-    // no corpus×M×K join rows, no per-assign exchanges; identical
-    // selection to the former join + struct-min agg.
+    val mSub = 4 // subspaces (64 dims / 16 per subspace)
+    val pq = new Pq(s, d)
+    val alloc = pq.keep(pq.long
+      .selectExpr("pos",
+        "(x - (((x % 1024) + 1024) % 1024)) DIV 1024 AS cx")
+      .groupBy("pos")
+      .agg(count(lit(1)).as("nn"), sum(expr("cx * cx")).as("s2"),
+        sum("cx").as("s1"))
+      .withColumn("r", row_number().over(Window.orderBy(
+        expr("CAST(nn AS DECIMAL(38,0)) * CAST(s2 AS " +
+          "DECIMAL(38,0)) - CAST(s1 AS DECIMAL(38,0)) * " +
+          "CAST(s1 AS DECIMAL(38,0))").desc,
+        col("pos").asc)) - 1)
+      .selectExpr("pos", "r", s"CASE WHEN (r DIV $mSub) % 2 = 0 " +
+        s"THEN r % $mSub ELSE ($mSub - 1) - (r % $mSub) END AS m"))
+    // the permutation rides into the corpus as ONE broadcast row
+    // holding a pos-indexed array — an element_at lookup per row,
+    // never a join against the corpus (the q331 in-plan-K idiom,
+    // one rung up: a 64-slot model instead of a 1-value model)
+    val pm = alloc.agg(expr("transform(array_sort(" +
+      "collect_list(struct(pos AS p, m AS mm))), e -> e.mm) AS pm"))
+    val lf = pq.long.crossJoin(broadcast(pm))
+      .selectExpr("vec_id", "pos", "x",
+        "element_at(pm, CAST(pos + 1 AS INT)) AS m")
+    // ROW-LOCAL assign with POSITION-CARRYING codebook entries: the
+    // permutation scatters a subspace's dims across v, so each entry
+    // gathers its own positions instead of a contiguous slice (native
+    // graft_opq_codes kernel, the same (dist asc, cid asc) selection as
+    // graft_pq_codes). The m cast only normalizes the broadcast struct
+    // for the kernel (subspace ids are 0..3 either way).
     def cbArr(c: org.apache.spark.sql.DataFrame) =
       c.groupBy("m", "cid")
-        .agg(expr("transform(sort_array(collect_list(" +
-          "struct(pos, cm))), e -> e.cm)").as("cms"))
+        .agg(expr("sort_array(collect_list(struct(pos, cm)))").as("pcs"))
         .groupBy()
-        .agg(collect_list(struct(col("m"), col("cid"),
-          col("cms"))).as("cb"))
-    val codesExpr = s"graft_pq_codes(v, cb, $sub)"
-    def assign(c: org.apache.spark.sql.DataFrame) =
-      n.crossJoin(broadcast(cbArr(c)))
-        .selectExpr("vec_id",
-          s"posexplode($codesExpr) AS (m, cid)")
-    val c1 = reg(n.crossJoin(broadcast(cbArr(c0)))
-      .selectExpr("v", s"posexplode($codesExpr) AS (m, cid)")
-      .selectExpr("m", "cid",
-        s"posexplode(slice(v, m * $sub + 1, $sub)) AS (p, x)")
-      .selectExpr("m", "cid", s"m * $sub + p AS pos", "x")
-      .groupBy("m", "cid", "pos")
-      .agg(sum("x").as("sx"), count(lit(1)).as("c"))
-      .selectExpr("m", "cid", "pos",
-        "(sx - ((sx % c) + c) % c) DIV c AS cm")
-      .persist()) // ≤ M*256*sub rows: model-sized at the K ceiling
-    val codes = assign(c1)
-    val qs = longF.filter(col("vec_id") % qmod === 0)
-      .selectExpr("vec_id AS qid", "m", "pos", "x AS qx")
-    val lut = qs.join(broadcast(c1), Seq("m", "pos"))
-      .groupBy("qid", "m", "cid")
-      .agg(sum(expr("(qx - cm) * (qx - cm)")).as("pd"))
-    val wTop = Window.partitionBy("qid")
-      .orderBy(col("dist").asc, col("vec_id").asc)
-    val short = reg(codes.join(broadcast(lut), Seq("m", "cid"))
-      .groupBy("qid", "vec_id").agg(sum("pd").as("dist"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 50).select("qid", "vec_id", "rn")
-      .persist()) // queries × 50: model-sized
-    val adcTop = short.filter(col("rn") <= 5)
-      .select("qid", "vec_id")
-    val rr = longF.join(broadcast(short.select("qid", "vec_id")),
-        Seq("vec_id"))
-      .join(broadcast(qs.select("qid", "pos", "qx")),
-        Seq("qid", "pos"))
-      .groupBy("qid", "vec_id")
-      .agg(sum(expr("(x - qx) * (x - qx)")).as("dist"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 5).select("qid", "vec_id")
-    val exactTop = reg(longF.join(
-        broadcast(qs.withColumnRenamed("m", "qm")), Seq("pos"))
-      .groupBy("qid", "vec_id")
-      .agg(sum(expr("(x - qx) * (x - qx)")).as("dist"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 5).select("qid", "vec_id")
-      .persist())
-    def hitsOf(t: org.apache.spark.sql.DataFrame) =
-      exactTop.join(broadcast(t), Seq("qid", "vec_id"))
-        .groupBy("qid").agg(count(lit(1)).as("h"))
-    val qids = reg(qs.select("qid").distinct().persist())
-    def recallRows(t: org.apache.spark.sql.DataFrame,
-        kind: String) =
-      qids.join(broadcast(hitsOf(t)), Seq("qid"), "left")
-        .selectExpr(s"'$kind' AS kind",
-          "CAST(qid AS STRING) AS key", "CAST(5 AS BIGINT) AS n",
-          "coalesce(h, CAST(0 AS BIGINT)) AS v")
-    val book = codes.groupBy("m")
-      .agg(countDistinct("cid").as("n"), count(lit(1)).as("v"))
-      .selectExpr("'codebook' AS kind", "CAST(m AS STRING) AS key",
+        .agg(collect_list(struct(col("m").cast("long").as("m"), col("cid"),
+          col("pcs"))).as("cb"))
+    val codesExpr = s"graft_opq_codes(v, cb, $mSub)"
+    val book = pq.keep(Pq.mean(pq.n.crossJoin(broadcast(pm))
+      .crossJoin(broadcast(cbArr(pq.seed(lf, scaled = true))))
+      .selectExpr("v", "pm", s"$codesExpr AS codes")
+      .selectExpr("pm", "codes", "posexplode(v) AS (pos, x)")
+      .selectExpr("element_at(pm, CAST(pos + 1 AS INT)) AS m",
+        "codes", "pos", "x")
+      .selectExpr("m",
+        "element_at(codes, CAST(m + 1 AS INT)) AS cid", "pos", "x"),
+      "m", "cid"))
+    val codes = pq.n.crossJoin(broadcast(cbArr(book)))
+      .selectExpr("vec_id", s"posexplode($codesExpr) AS (m, cid)")
+    val q = pq.queries(lf, qmod)
+    val allocRows = alloc.selectExpr("'alloc' AS kind",
+      "CAST(pos AS STRING) AS key", "CAST(r AS BIGINT) AS n",
+      "CAST(m AS BIGINT) AS v")
+    val balance = alloc.groupBy("m")
+      .agg(count(lit(1)).as("n"), sum("r").as("v"))
+      .selectExpr("'balance' AS kind", "CAST(m AS STRING) AS key",
         "n", "v")
-    val kRow = kdf.selectExpr("'k' AS kind", "'k' AS key",
-      "kk AS n", "kk AS v")
-    recallRows(rr, "recall_rr")
-      .unionByName(recallRows(adcTop, "recall_adc"))
-      .unionByName(book).unionByName(kRow)
+    pq.answer(pq.recall(q, pq.adc(codes, pq.lut(q, book)))
+      .unionByName(allocRows).unionByName(balance)
+      .unionByName(pq.codebookRows(codes)).unionByName(pq.kRow))
+  }
+
+  /** The q339 operating configuration (scaled-K codebook, ADC top-50
+    * shortlist, exact integer re-rank), shared with the q341 recall
+    * floor so the floor scores exactly the plan q339 gates. qmod as in
+    * [[opqPermutationRows]]: 97 for the gated lanes, larger for
+    * AnnRecall's big-corpus probes. */
+  private[graft] def scaledRerankRows(
+      s: org.apache.spark.sql.SparkSession, d: String,
+      qmod: Long = 97L)
+      : org.apache.spark.sql.DataFrame = {
+    val pq = new Pq(s, d)
+    val (codes, q, ranked) = pq.flat(scaled = true, qmod)
+    pq.answer(pq.refine(q, pq.shortlist(ranked))
+      .unionByName(pq.codebookRows(codes)).unionByName(pq.kRow))
   }
 }

@@ -14,16 +14,10 @@ class AnnFloorSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import spark.implicits._
 
-  private def floorMap(d: String): Map[String, Long] = {
-    val m = SparkEntry.queries("q341_ann_recall_floor")(spark, d)
+  private def floorMap(d: String): Map[String, Long] =
+    SparkEntry.queries("q341_ann_recall_floor")(spark, d)
       .as[(String, String, Long, Long)].collect()
       .map(r => r._2 -> r._4).toMap
-    // the shared session's cache manager would otherwise substitute
-    // q339's persisted frames into later suites' plans (PlanSpec pins
-    // plan SHAPES on the same sf0.001 data) — drop them here
-    spark.catalog.clearCache()
-    m
-  }
 
   test("q341 recall floor holds at base scale") {
     val f = floorMap("/root/testdata/sf0.001")

@@ -175,8 +175,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("PQ/ADC scans the coded corpus with broadcast-only joins") {
-    val q = SparkEntry.queries("q266_pq_adc")(spark, d)
-    val plan = q.queryExecution.executedPlan.toString
+    val plan = finalPlan(SparkEntry.queries("q266_pq_adc")(spark, d))
     // centroids, codes-side LUT and the query set are all broadcast;
     // a sort-merge join would mean the corpus (raw or coded) was
     // shuffled against model-sized tables — the cost ADC exists to
@@ -188,8 +187,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("scaled-K PQ: in-plan K derivation, broadcast-only model joins") {
-    val q = SparkEntry.queries("q331_pq_scaled_k")(spark, d)
-    val plan = q.queryExecution.executedPlan.toString
+    val plan = finalPlan(SparkEntry.queries("q331_pq_scaled_k")(spark, d))
     // same contract as q266 — centroids, LUT and query set broadcast,
     // the corpus never shuffled against a model table — plus the K
     // derivation must ride a broadcast into the seed filter (one 1-row
@@ -214,8 +212,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("PQ re-rank: broadcast-only model joins, ≤2 executing corpus scans") {
-    val q = SparkEntry.queries("q335_pq_rerank")(spark, d)
-    val plan = q.queryExecution.executedPlan.toString
+    val plan = finalPlan(SparkEntry.queries("q335_pq_rerank")(spark, d))
     // the refine stage's contract: the shortlist (queries×50) and the
     // exact-truth table are broadcast/cached, the raw-vector fetch for
     // re-ranking rides a broadcast semi-join — the corpus is never
@@ -250,9 +247,11 @@ class PlanSpec extends AnyFunSuite {
     // request-sized and broadcast — the corpus is never shuffled
     // against them. q338: same for the tombstone filter and the
     // 4-row codebook; probes ride broadcasts into the index scan.
-    Seq("q337_dedup_retraction", "q338_ann_retraction").foreach { nm =>
-      val plan = SparkEntry.queries(nm)(spark, d)
-        .queryExecution.executedPlan.toString
+    Seq("q337_dedup_retraction" -> SparkEntry.queries("q337_dedup_retraction")(
+        spark, d).queryExecution.executedPlan.toString,
+      "q338_ann_retraction" ->
+        finalPlan(SparkEntry.queries("q338_ann_retraction")(spark, d)))
+      .foreach { case (nm, plan) =>
       assert(plan.contains("BroadcastHashJoin") ||
         plan.contains("BroadcastNestedLoopJoin"),
         s"$nm reconciliation joins must broadcast:\n$plan")
@@ -263,8 +262,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("IVF+PQ: model joins broadcast; shuffles only on corpus keys") {
-    val q = SparkEntry.queries("q286_ivf_pq")(spark, d)
-    val plan = q.queryExecution.executedPlan.toString
+    val plan = finalPlan(SparkEntry.queries("q286_ivf_pq")(spark, d))
     // coarse centroids, PQ codebook, probes and LUTs are all
     // broadcast-sized. The ONE legitimate shuffle join is Lloyd's
     // rejoin of the argmin assignment with the residual long form —

@@ -272,10 +272,10 @@ class StateSpec extends AnyFunSuite {
         "active streams" -> spark.streams.active.map(_.id).toSet[Any],
         "tmpdir" -> tmpdir.toSet[Any])
     }
-    // memory-sink and withConf lanes, then every lane that writes scratch
-    // through Graft.scratchLane or Graft.withScratch; q321 returns through
-    // the same memory-sink shape but is left out: it is a wall-clock-pinned
-    // soak of about 80 s
+    // memory-sink and withConf lanes, every lane that writes scratch
+    // through Graft.scratchLane or Graft.withScratch, and the lanes that
+    // persist model frames; q321 returns through the same memory-sink
+    // shape but is left out: it is a wall-clock-pinned soak of about 80 s
     Seq("q316_logreg_trainer", "q177_stream_stream_join",
         "q83_imt_merge", "q45_stream_window", "q62_stream_dedup",
         "q76_stream_late_append", "q119_stream_neardup",
@@ -295,7 +295,11 @@ class StateSpec extends AnyFunSuite {
         "q239_bucket_stream_compact", "q102_print_dynamic",
         "q202_print_latest", "q271_avro_schema_registry",
         "q336_ivf_stream_ingest", "q242_l7_rule_file",
-        "q329_partition_pruning", "q333_dpp_dim_prune")
+        "q329_partition_pruning", "q333_dpp_dim_prune",
+        "q116_semantic_dedup", "q266_pq_adc", "q286_ivf_pq",
+        "q331_pq_scaled_k", "q335_pq_rerank", "q338_ann_retraction",
+        "q339_pq_scaled_rerank", "q341_ann_recall_floor",
+        "q343_opq_permutation")
       .foreach { name =>
         val before = session()
         assert(SparkEntry.queries(name)(spark, d).collect().nonEmpty, name)
