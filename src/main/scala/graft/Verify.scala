@@ -38,6 +38,13 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (dev iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // a misspelt lane would otherwise verify nothing and exit 0
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[verify] no such lane: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
     val spark = Graft.session("verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -385,14 +385,14 @@ object CorpusQueries {
             sum(when(col("lang") === "en", col("n")).otherwise(0L))
               .as("tg"))
           .select(col("b"), expr("tg * 1000000 div r").as("w"))
-        db.join(broadcast(w), Seq("b"))
+        Graft.collectLocal(db.join(broadcast(w), Seq("b"))
           .groupBy("doc_id", "source", "lang")
           .agg(expr("sum(w * n) div sum(n)").as("score"))
           .groupBy("source", "lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(when(col("score") >= 435000L, 1L).otherwise(0L))
               .as("n_selected"),
-            sum("score").as("sum_score"))
+            sum("score").as("sum_score")))(db.unpersist())
       },
       Some(s"""WITH toks AS (SELECT doc_id, source, lang,
               regexp_extract_all(lower(text), '[a-z0-9]+') AS t
@@ -616,11 +616,11 @@ object CorpusQueries {
               " AS BIGINT) AS lp")
           .groupBy("doc_id", "source")
           .agg(sum("cnt").as("n_bi"), sum("lp").as("lp_sum"))
-        scored.groupBy("source")
+        Graft.collectLocal(scored.groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             count(when(col("lp_sum") >= col("n_bi") * -33900L, 1))
               .as("n_keep"),
-            sum("lp_sum").as("lp_total"))
+            sum("lp_sum").as("lp_total")))(biDoc.unpersist())
       },
       Some(s"""WITH t AS (SELECT doc_id, source,
               ${TextOps.duckToks} AS toks FROM documents),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Graft, Q, Tables}
 import graft.text.TextOps._
 
 /** Deduplication operators for the training-data pipeline: exact hash,
@@ -332,11 +332,8 @@ object DedupQueries {
         val out = labels.groupBy("root").agg(count(lit(1)).as("sz"))
           .groupBy().agg(count(lit(1)).as("n_clusters"),
             sum("sz").as("n_clustered_docs"), max("sz").as("max_cluster"))
-          .persist()
-        out.count() // materialize, then free the loop state
-        labels.unpersist()
-        undirected.unpersist()
-        out
+        // collect, then free the loop state
+        Graft.collectLocal(out) { labels.unpersist(); undirected.unpersist() }
       },
       Some(s"""WITH RECURSIVE t AS (SELECT doc_id, $hsDuck AS hs
               FROM documents),
@@ -1068,8 +1065,10 @@ object DedupQueries {
             coalesce(sum("post_owner"), lit(0L)).cast("long").as("v"))
           .selectExpr("'recon' AS kind", "'resurrected' AS key",
             "n", "v")
-        preRow.unionByName(bucket).unionByName(tdRow)
-          .unionByName(affRow).unionByName(resRow)
+        Graft.collectLocal(preRow.unionByName(bucket).unionByName(tdRow)
+            .unionByName(affRow).unionByName(resRow)) {
+          takedown.unpersist(); affected.unpersist(); recon.unpersist()
+        }
       },
       Some(s"""WITH d AS (SELECT doc_id,
               array_to_string(($duckToks)[1:3], ' ') AS ek

@@ -16,6 +16,19 @@ object ProtocolQueries {
   private def flows(s: org.apache.spark.sql.SparkSession, d: String) =
     FlowView.fromEvents(Tables.events(s, d))
 
+  /** One exporter's datagrams in arrival order with `late` (a template
+    * or option record) placed after the `k`-th data datagram, or closing
+    * the run when it has fewer — the records before it must wait in the
+    * collector. Lazy: the run streams as the decode reads it. */
+  private def after(k: Int, late: Array[Byte])(
+      data: Iterator[Array[Byte]]): Iterator[Array[Byte]] = {
+    var n = 0
+    data.flatMap { dg =>
+      n += 1
+      if (n == k) Iterator(dg, late) else Iterator.single(dg)
+    } ++ (if (n < k) Iterator.single(late) else Iterator.empty)
+  }
+
   val all: Seq[Q] = Seq(
 
     // aggregate_filter: tcpdump-subset text compiled to one Catalyst
@@ -115,10 +128,11 @@ object ProtocolQueries {
             col("ip_proto"), col("port_dst"),
             (col("bytes") % 4294967296L).as("octets"), col("packets"))
           .as[(Long, Long, Long, Long, Long, Long)]
-        // secondary-sort walk: datagrams build from 20-record batches
-        // as the run streams, decode through the template cache as they
-        // form, and the per-(proto, port) stats FOLD — task memory is
-        // O(batch + distinct keys), never the exporter's record set
+        // secondary-sort walk: each exporter run streams through
+        // 20-record datagrams and the template cache as one lazy
+        // pipeline, and Spark's partial aggregate folds the decoded
+        // records — task memory is O(batch), never the exporter's
+        // record set
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (ex, run) =>
             val tmpl = NetFlowV9.Template(260, Seq(
@@ -129,47 +143,23 @@ object ProtocolQueries {
             // nfacctd accepts both concurrently (SURVEY §2.8)
             val ipfix = ex % 2 == 1
             val cache = new NetFlowV9.TemplateCache
-            // (proto, port) -> (n, octets, packets)
-            val agg = scala.collection.mutable.LinkedHashMap[(Long, Long),
-              (Long, Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observe(dg).foreach { m =>
-                val k = (m(IE.Protocol), m(IE.L4DstPort))
-                val (n, o, p) = agg.getOrElse(k, (0L, 0L, 0L))
-                agg(k) = (n + 1, o + m(IE.InBytes), p + m(IE.InPkts))
-              }
-            val batch = scala.collection.mutable.Buffer[Map[Int, Long]]()
-            var nDataDgs = 0
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              val rs = batch.toSeq
-              observe(if (ipfix) NetFlowV9.encodeDataIpfix(h, tmpl, rs)
-                else NetFlowV9.encodeData(h, tmpl, rs))
-              batch.clear()
-              nDataDgs += 1
-              // template deliberately arrives after two data datagrams
-              // — the cache buffers the early records until then
-              if (nDataDgs == 2)
-                observe(if (ipfix) NetFlowV9.encodeTemplateIpfix(h, tmpl)
-                  else NetFlowV9.encodeTemplate(h, tmpl))
+            val data = run.grouped(20).map { b =>
+              val rs = b.map(r => Map(IE.Protocol -> r._3,
+                IE.L4DstPort -> r._4, IE.InBytes -> r._5, IE.InPkts -> r._6))
+              if (ipfix) NetFlowV9.encodeDataIpfix(h, tmpl, rs)
+              else NetFlowV9.encodeData(h, tmpl, rs)
             }
-            run.foreach { r =>
-              batch += Map(
-                IE.Protocol -> r._3, IE.L4DstPort -> r._4,
-                IE.InBytes -> r._5, IE.InPkts -> r._6)
-              if (batch.size == 20) flushBatch()
-            }
-            flushBatch()
-            if (nDataDgs < 2)
-              observe(if (ipfix) NetFlowV9.encodeTemplateIpfix(h, tmpl)
-                else NetFlowV9.encodeTemplate(h, tmpl))
-            agg.iterator.map { case ((proto, port), (n, o, p)) =>
-              (ex, proto, port, n, o, p) }.toSeq
+            // template deliberately arrives after two data datagrams
+            // — the cache buffers the early records until then
+            after(2, if (ipfix) NetFlowV9.encodeTemplateIpfix(h, tmpl)
+                else NetFlowV9.encodeTemplate(h, tmpl))(data)
+              .flatMap(cache.observe)
+              .map(m => (m(IE.Protocol), m(IE.InBytes), m(IE.InPkts)))
           }
         }
-        decoded.toDF("exporter", "proto", "port_dst", "n", "octets",
-            "packets")
+        decoded.toDF("proto", "octets", "packets")
           .groupBy("proto")
-          .agg(sum("n").as("n"), sum("octets").as("octets"),
+          .agg(count(lit(1)).as("n"), sum("octets").as("octets"),
             sum("packets").as("packets"))
       },
       Some(FlowView.cte(
@@ -212,51 +202,39 @@ object ProtocolQueries {
             IE.Protocol -> 1, IE.L4DstPort -> 2,
             IE.InitiatorOctets -> 4, IE.ResponderOctets -> 4))
           val cache = new NetFlowV9.TemplateCache
-          cache.observe(NetFlowV9.encodeTemplate(h, stdT))
-          cache.observe(NetFlowV9.encodeTemplate(h, asaT))
-          // (lane, kind) -> (n, sum_bytes, sum_pkts)
-          val agg = scala.collection.mutable.LinkedHashMap[
-            (String, String), (Long, Long, Long)]()
-          def fold(m: Map[Int, Long]): Unit = {
-            val kind = if (m.contains(IE.InBytes)) "std" else "asa"
-            Seq(true, false).foreach { knob =>
-              val (b, p) = NetFlowV9.counters(m, asaBiFlow = knob)
-              val lane = if (knob) "on" else "off"
-              val (n, sb, sp0) = agg.getOrElse((lane, kind), (0L, 0L, 0L))
-              agg((lane, kind)) = (n + 1, sb + b, sp0 + p)
+          // every 20 records split into one ASA and one standard data
+          // set, each on its own template
+          val data = it.grouped(20).flatMap { b =>
+            val (asa, std) = b.partition(_._1 % 2 == 0)
+            Seq(
+              asaT -> asa.map { case (_, proto, port, octets, pkts) =>
+                Map(IE.Protocol -> proto, IE.L4DstPort -> port,
+                  IE.InitiatorOctets -> octets,
+                  IE.ResponderOctets -> (pkts * 131 + 7)) },
+              stdT -> std.map { case (_, proto, port, octets, pkts) =>
+                Map(IE.Protocol -> proto, IE.L4DstPort -> port,
+                  IE.InBytes -> octets, IE.InPkts -> pkts,
+                  // decoy ASA counters: precedence must ignore them
+                  IE.InitiatorOctets -> 12345L,
+                  IE.ResponderOctets -> 54321L) })
+              .collect { case (t, rs) if rs.nonEmpty =>
+                NetFlowV9.encodeData(h, t, rs) }
+          }
+          (Iterator(NetFlowV9.encodeTemplate(h, stdT),
+              NetFlowV9.encodeTemplate(h, asaT)) ++ data)
+            .flatMap(cache.observe)
+            .flatMap { m =>
+              val kind = if (m.contains(IE.InBytes)) "std" else "asa"
+              Seq(true, false).map { knob =>
+                val (b, p) = NetFlowV9.counters(m, asaBiFlow = knob)
+                (if (knob) "on" else "off", kind, b, p)
+              }
             }
-          }
-          val std = scala.collection.mutable.Buffer[Map[Int, Long]]()
-          val asa = scala.collection.mutable.Buffer[Map[Int, Long]]()
-          def flush(t: NetFlowV9.Template,
-                    b: scala.collection.mutable.Buffer[Map[Int, Long]])
-              : Unit = if (b.nonEmpty) {
-            cache.observe(NetFlowV9.encodeData(h, t, b.toSeq))
-              .foreach(fold)
-            b.clear()
-          }
-          it.foreach { case (eid, proto, port, octets, pkts) =>
-            if (eid % 2 == 0)
-              asa += Map(IE.Protocol -> proto, IE.L4DstPort -> port,
-                IE.InitiatorOctets -> octets,
-                IE.ResponderOctets -> (pkts * 131 + 7))
-            else
-              std += Map(IE.Protocol -> proto, IE.L4DstPort -> port,
-                IE.InBytes -> octets, IE.InPkts -> pkts,
-                // decoy ASA counters: precedence must ignore them
-                IE.InitiatorOctets -> 12345L,
-                IE.ResponderOctets -> 54321L)
-            if (asa.size == 20) flush(asaT, asa)
-            if (std.size == 20) flush(stdT, std)
-          }
-          flush(asaT, asa); flush(stdT, std)
-          agg.iterator.map { case ((lane, kind), (n, sb, sp0)) =>
-            (lane, kind, n, sb, sp0) }
         }
-        decoded.toDF("lane", "kind", "n", "sum_bytes", "sum_pkts")
+        decoded.toDF("lane", "kind", "b", "p")
           .groupBy("lane", "kind")
-          .agg(sum("n").as("n"), sum("sum_bytes").as("sum_bytes"),
-            sum("sum_pkts").as("sum_pkts"))
+          .agg(count(lit(1)).as("n"), sum("b").as("sum_bytes"),
+            sum("p").as("sum_pkts"))
       },
       Some(FlowView.cte(
         """, base AS (SELECT event_id % 2 AS m,
@@ -310,47 +288,30 @@ object ProtocolQueries {
             val r1 = 1L + (ex % 4) * 50L
             val r2 = r1 + 100L
             val cache = new NetFlowV9.TemplateCache
+            val r = run.buffered
+            val half = ((r.head._5 + 1) / 2).toInt
+            def data(rs: Iterator[(Long, Long, Long, Long, Long)]) =
+              rs.grouped(20).map(b => NetFlowV9.encodeData(h, dataT,
+                b.map(x => Map(IE.Protocol -> x._3, IE.InBytes -> x._4))))
             var rate = 1L
-            // proto -> (n, renormalized bytes) folds as datagrams decode
-            val agg = scala.collection.mutable.LinkedHashMap[Long,
-              (Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observe(dg).foreach { m =>
-                if (m.contains(IE.SamplingInterval))
-                  rate = m(IE.SamplingInterval)
-                else {
-                  val (n, b) = agg.getOrElse(m(IE.Protocol), (0L, 0L))
-                  agg(m(IE.Protocol)) =
-                    (n + 1, b + m(IE.InBytes) * rate)
-                }
+            // the rate option precedes the data and changes right after
+            // the halfway record: `take(half)` reads exactly the first
+            // half of the run, the rest of `r` the second
+            (Iterator(NetFlowV9.encodeOptionTemplate(h, optT, 1),
+                optRecord(r1), NetFlowV9.encodeTemplate(h, dataT)) ++
+              data(r.take(half)) ++ Iterator.single(optRecord(r2)) ++
+              data(r))
+              .flatMap(cache.observe)
+              .flatMap { m =>
+                if (m.contains(IE.SamplingInterval)) {
+                  rate = m(IE.SamplingInterval); None
+                } else Some((ex, m(IE.Protocol), m(IE.InBytes) * rate))
               }
-            val batch = scala.collection.mutable.Buffer[Map[Int, Long]]()
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              observe(NetFlowV9.encodeData(h, dataT, batch.toSeq))
-              batch.clear()
-            }
-            var seen = 0L
-            var half = -1L
-            run.foreach { case (_, _, proto, b, cnt) =>
-              if (half < 0) {
-                half = (cnt + 1) / 2
-                observe(NetFlowV9.encodeOptionTemplate(h, optT, 1))
-                observe(optRecord(r1))
-                observe(NetFlowV9.encodeTemplate(h, dataT))
-              }
-              batch += Map(IE.Protocol -> proto, IE.InBytes -> b)
-              seen += 1
-              if (batch.size == 20) flushBatch()
-              if (seen == half) { flushBatch(); observe(optRecord(r2)) }
-            }
-            flushBatch()
-            agg.iterator.map { case (proto, (n, b)) =>
-              (ex, proto, n, b) }.toSeq
           }
         }
-        decoded.toDF("exporter", "proto", "n", "bytes_renorm")
+        decoded.toDF("exporter", "proto", "b")
           .groupBy("exporter", "proto")
-          .agg(sum("n").as("n"), sum("bytes_renorm").as("bytes_renorm"))
+          .agg(count(lit(1)).as("n"), sum("b").as("bytes_renorm"))
       },
       Some(FlowView.cte(
         """SELECT exporter, proto, count(*) AS n,
@@ -397,44 +358,21 @@ object ProtocolQueries {
               FieldSpec(96, VarLen), FieldSpec(IE.InBytes, 4), penF))
             val h = NetFlowV9.V9Header(0L, 0L, 0L, ex)
             val cache = new NetFlowV9.TemplateCache
-            // app -> (n, bytes, sum_uid) folds as datagrams decode
-            val agg = scala.collection.mutable.LinkedHashMap[String,
-              (Long, Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observeX(dg).foreach { m =>
-                val app = m(appK).asInstanceOf[String]
-                val (n, b, u) = agg.getOrElse(app, (0L, 0L, 0L))
-                agg(app) = (n + 1,
-                  b + m(IE.InBytes.toLong).asInstanceOf[Long],
-                  u + m(penF.key).asInstanceOf[Long])
-              }
-            val batch =
-              scala.collection.mutable.Buffer[Map[Long, Any]]()
-            var nDataDgs = 0
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              observe(NetFlowV9.encodeDataIpfixX(h, tmpl, batch.toSeq))
-              batch.clear()
-              nDataDgs += 1
-              // template deliberately arrives after the first data set
-              if (nDataDgs == 1)
-                observe(NetFlowV9.encodeTemplateIpfixX(h, tmpl))
-            }
-            run.foreach { r =>
-              batch += Map(appK -> r._3, IE.InBytes.toLong -> r._4,
-                penF.key -> r._5)
-              if (batch.size == 20) flushBatch()
-            }
-            flushBatch()
-            if (nDataDgs < 1)
-              observe(NetFlowV9.encodeTemplateIpfixX(h, tmpl))
-            agg.iterator.map { case (app, (n, b, u)) =>
-              (app, n, b, u) }.toSeq
+            val data = run.grouped(20).map(b => NetFlowV9.encodeDataIpfixX(
+              h, tmpl, b.map(r => Map[Long, Any](appK -> r._3,
+                IE.InBytes.toLong -> r._4, penF.key -> r._5))))
+            // template deliberately arrives after the first data set
+            after(1, NetFlowV9.encodeTemplateIpfixX(h, tmpl))(data)
+              .flatMap(cache.observeX)
+              .map(m => (m(appK).asInstanceOf[String],
+                m(IE.InBytes.toLong).asInstanceOf[Long],
+                m(penF.key).asInstanceOf[Long]))
           }
         }
-        decoded.toDF("app", "n", "bytes", "sum_uid")
+        decoded.toDF("app", "bytes", "uid")
           .groupBy("app")
-          .agg(sum("n").as("n"), sum("bytes").as("bytes"),
-            sum("sum_uid").as("sum_uid"))
+          .agg(count(lit(1)).as("n"), sum("bytes").as("bytes"),
+            sum("uid").as("sum_uid"))
       },
       Some("""SELECT event_type AS app, count(*) AS n,
               CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
@@ -475,44 +413,22 @@ object ProtocolQueries {
               tagF, tag2F, labelF, FieldSpec(IE.InBytes, 4)))
             val h = NetFlowV9.V9Header(0L, 0L, 0L, ex)
             val cache = new NetFlowV9.TemplateCache
-            // label -> (n, sum_tag, sum_tag2, bytes) folds per datagram
-            val agg = scala.collection.mutable.LinkedHashMap[String,
-              (Long, Long, Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observeX(dg).foreach { m =>
-                val lbl = m(labelF.key).asInstanceOf[String]
-                val (n, t, t2, b) = agg.getOrElse(lbl, (0L, 0L, 0L, 0L))
-                agg(lbl) = (n + 1,
-                  t + m(tagF.key).asInstanceOf[Long],
-                  t2 + m(tag2F.key).asInstanceOf[Long],
-                  b + m(IE.InBytes.toLong).asInstanceOf[Long])
-              }
-            val batch =
-              scala.collection.mutable.Buffer[Map[Long, Any]]()
-            var nDataDgs = 0
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              observe(NetFlowV9.encodeDataIpfixX(h, tmpl, batch.toSeq))
-              batch.clear()
-              nDataDgs += 1
-              if (nDataDgs == 1)
-                observe(NetFlowV9.encodeTemplateIpfixX(h, tmpl))
-            }
-            run.foreach { r =>
-              batch += Map(tagF.key -> r._3, tag2F.key -> r._4,
-                labelF.key -> r._5, IE.InBytes.toLong -> r._6)
-              if (batch.size == 25) flushBatch()
-            }
-            flushBatch()
-            if (nDataDgs < 1)
-              observe(NetFlowV9.encodeTemplateIpfixX(h, tmpl))
-            agg.iterator.map { case (lbl, (n, t, t2, b)) =>
-              (lbl, n, t, t2, b) }.toSeq
+            val data = run.grouped(25).map(b => NetFlowV9.encodeDataIpfixX(
+              h, tmpl, b.map(r => Map[Long, Any](tagF.key -> r._3,
+                tag2F.key -> r._4, labelF.key -> r._5,
+                IE.InBytes.toLong -> r._6))))
+            after(1, NetFlowV9.encodeTemplateIpfixX(h, tmpl))(data)
+              .flatMap(cache.observeX)
+              .map(m => (m(labelF.key).asInstanceOf[String],
+                m(tagF.key).asInstanceOf[Long],
+                m(tag2F.key).asInstanceOf[Long],
+                m(IE.InBytes.toLong).asInstanceOf[Long]))
           }
         }
-        decoded.toDF("label", "n", "sum_tag", "sum_tag2", "bytes")
+        decoded.toDF("label", "tag", "tag2", "bytes")
           .groupBy("label")
-          .agg(sum("n").as("n"), sum("sum_tag").as("sum_tag"),
-            sum("sum_tag2").as("sum_tag2"), sum("bytes").as("bytes"))
+          .agg(count(lit(1)).as("n"), sum("tag").as("sum_tag"),
+            sum("tag2").as("sum_tag2"), sum("bytes").as("bytes"))
       },
       Some("""SELECT event_type AS label, count(*) AS n,
               CAST(sum(user_id % 100) AS BIGINT) AS sum_tag,
@@ -1316,23 +1232,16 @@ object ProtocolQueries {
             val b = new NetFlowV9.TemplateCache
             var aN = 0L; var aBytes = 0L; var bBefore = 0L
             a.observeX(NetFlowV9.encodeTemplateIpfixX(h, tmpl))
-            val batch =
-              scala.collection.mutable.Buffer[Map[Long, Any]]()
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              val dg = NetFlowV9.encodeDataIpfixX(h, tmpl, batch.toSeq)
-              batch.clear()
+            run.grouped(25).foreach { rs =>
+              val dg = NetFlowV9.encodeDataIpfixX(h, tmpl,
+                rs.map(r => Map[Long, Any](
+                  IE.L4SrcPort.toLong -> r._3, IE.InBytes.toLong -> r._4)))
               a.observeX(dg).foreach { m =>
                 aN += 1
                 aBytes += m(IE.InBytes.toLong).asInstanceOf[Long]
               }
               bBefore += b.observeX(dg).size
             }
-            run.foreach { r =>
-              batch += Map(
-                IE.L4SrcPort.toLong -> r._3, IE.InBytes.toLong -> r._4)
-              if (batch.size == 25) flushBatch()
-            }
-            flushBatch()
             // receiver feed: A re-encodes its cache; B drains on it
             val feed = a.templatesSnapshot.map(t =>
               NetFlowV9.encodeTemplateIpfixX(
@@ -1612,39 +1521,23 @@ object ProtocolQueries {
               IE.PostNatSrcPort -> 2, IE.InBytes -> 4))
             val h = NetFlowV9.V9Header(0L, 0L, 0L, ex)
             val cache = new NetFlowV9.TemplateCache
-            // (event, post-NAT ip, post-NAT port) -> (n, octets): the
-            // key space is the NAT pool, bounded by the pool size, not
-            // the record count — distinct counting stays downstream
-            val agg = scala.collection.mutable.LinkedHashMap[
-              (Long, Long, Long), (Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observe(dg).foreach { m =>
-                val k = (m(IE.NatEvent), m(IE.PostNatSrcAddr),
-                  m(IE.PostNatSrcPort))
-                val (n, o) = agg.getOrElse(k, (0L, 0L))
-                agg(k) = (n + 1, o + m(IE.InBytes))
-              }
-            observe(NetFlowV9.encodeTemplate(h, tmpl))
-            val batch = scala.collection.mutable.Buffer[Map[Int, Long]]()
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              observe(NetFlowV9.encodeData(h, tmpl, batch.toSeq))
-              batch.clear()
-            }
-            run.foreach { r =>
-              batch += Map(IE.NatEvent -> 1L, IE.PostNatSrcAddr -> r._3,
-                IE.PostNatSrcPort -> r._4, IE.InBytes -> 0L)
-              batch += Map(IE.NatEvent -> 2L, IE.PostNatSrcAddr -> r._3,
-                IE.PostNatSrcPort -> r._4, IE.InBytes -> r._5)
-              if (batch.size >= 24) flushBatch()
-            }
-            flushBatch()
-            agg.iterator.map { case ((ev, pns, pnp), (n, o)) =>
-              (ev, pns, pnp, n, o) }.toSeq
+            // each flow logs a create (event 1, no octets) and a delete
+            // (event 2) record: 12 flows fill one 24-record datagram
+            val data = run.grouped(12).map(b => NetFlowV9.encodeData(h, tmpl,
+              b.flatMap(r => Seq(
+                Map(IE.NatEvent -> 1L, IE.PostNatSrcAddr -> r._3,
+                  IE.PostNatSrcPort -> r._4, IE.InBytes -> 0L),
+                Map(IE.NatEvent -> 2L, IE.PostNatSrcAddr -> r._3,
+                  IE.PostNatSrcPort -> r._4, IE.InBytes -> r._5)))))
+            (Iterator.single(NetFlowV9.encodeTemplate(h, tmpl)) ++ data)
+              .flatMap(cache.observe)
+              .map(m => (m(IE.NatEvent), m(IE.PostNatSrcAddr),
+                m(IE.PostNatSrcPort), m(IE.InBytes)))
           }
         }
-        decoded.toDF("nat_event", "pns", "pnp", "n", "octets")
+        decoded.toDF("nat_event", "pns", "pnp", "octets")
           .groupBy("nat_event")
-          .agg(sum("n").as("n"),
+          .agg(count(lit(1)).as("n"),
             countDistinct(col("pns")).as("n_pool_ips"),
             countDistinct(col("pnp")).as("n_pool_ports"),
             sum("octets").as("octets"))
@@ -1691,39 +1584,23 @@ object ProtocolQueries {
               IE.FwEvent -> 1, IE.FwdStatus -> 1, IE.InBytes -> 4))
             val h = NetFlowV9.V9Header(0L, 0L, 0L, ex)
             val cache = new NetFlowV9.TemplateCache
-            // (fw_event, fwd_status) spans ≤ 6 classes — the fold is
-            // O(1); distinct reason counting stays downstream
-            val agg = scala.collection.mutable.LinkedHashMap[
-              (Long, Long), (Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observe(dg).foreach { m =>
-                val k = (m(IE.FwEvent), m(IE.FwdStatus))
-                val (n, o) = agg.getOrElse(k, (0L, 0L))
-                agg(k) = (n + 1, o + m(IE.InBytes))
-              }
-            observe(NetFlowV9.encodeTemplate(h, tmpl))
-            val batch = scala.collection.mutable.Buffer[Map[Int, Long]]()
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              observe(NetFlowV9.encodeData(h, tmpl, batch.toSeq))
-              batch.clear()
-            }
-            run.foreach { r =>
-              val fwd = if (r._3 == 3L) 128L + r._4 % 4 // dropped + reason
-                        else 64L + r._4 % 2             // forwarded
-              batch += Map(IE.FwEvent -> r._3, IE.FwdStatus -> fwd,
-                IE.InBytes -> r._5)
-              if (batch.size == 30) flushBatch()
-            }
-            flushBatch()
-            agg.iterator.map { case ((ev, fwd), (n, o)) =>
-              (ev, fwd, n, o) }.toSeq
+            val data = run.grouped(30).map(b => NetFlowV9.encodeData(h, tmpl,
+              b.map { r =>
+                val fwd = if (r._3 == 3L) 128L + r._4 % 4 // dropped + reason
+                          else 64L + r._4 % 2             // forwarded
+                Map(IE.FwEvent -> r._3, IE.FwdStatus -> fwd,
+                  IE.InBytes -> r._5)
+              }))
+            (Iterator.single(NetFlowV9.encodeTemplate(h, tmpl)) ++ data)
+              .flatMap(cache.observe)
+              .map(m => (m(IE.FwEvent), m(IE.FwdStatus), m(IE.InBytes)))
           }
         }
-        decoded.toDF("fw_event", "fwd_status", "n", "octets")
+        decoded.toDF("fw_event", "fwd_status", "octets")
           .groupBy(col("fw_event"),
             (col("fwd_status").cast("long") / 64).cast("long")
               .as("fwd_class"))
-          .agg(sum("n").as("n"), sum("octets").as("octets"),
+          .agg(count(lit(1)).as("n"), sum("octets").as("octets"),
             countDistinct(col("fwd_status")).as("n_reasons"))
       },
       Some(FlowView.cte(
@@ -1816,40 +1693,22 @@ object ProtocolQueries {
               IE.Ipv4SrcAddr -> 4, IE.Ipv4DstAddr -> 4, IE.Protocol -> 1,
               IE.InBytes -> 4, IE.InPkts -> 4))
             val h = NetFlowV9.V9Header(0L, 0L, 0L, ex)
+            val tDg = NetFlowV9.encodeTemplate(h, tmpl)
             val cache = new NetFlowV9.TemplateCache
-            val agg = scala.collection.mutable.LinkedHashMap[Long,
-              (Long, Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observe(dg).foreach { m =>
-                val (n, o, p) = agg.getOrElse(m(IE.Protocol), (0L, 0L, 0L))
-                agg(m(IE.Protocol)) =
-                  (n + 1, o + m(IE.InBytes), p + m(IE.InPkts))
-              }
             // template before the first data packet, then refreshed
             // every 4 data packets (pkts_until_template semantics)
-            val batch = scala.collection.mutable.Buffer[Map[Int, Long]]()
-            var nDataDgs = 0
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              if (nDataDgs % 4 == 0)
-                observe(NetFlowV9.encodeTemplate(h, tmpl))
-              observe(NetFlowV9.encodeData(h, tmpl, batch.toSeq))
-              batch.clear()
-              nDataDgs += 1
-            }
-            run.foreach { r =>
-              batch += Map(IE.Ipv4SrcAddr -> r._2, IE.Ipv4DstAddr -> r._3,
-                IE.Protocol -> r._4, IE.InBytes -> r._5,
-                IE.InPkts -> r._6)
-              if (batch.size == 20) flushBatch()
-            }
-            flushBatch()
-            agg.iterator.map { case (proto, (n, o, p)) =>
-              (proto, n, o, p) }.toSeq
+            run.grouped(20).zipWithIndex.flatMap { case (b, i) =>
+              val dg = NetFlowV9.encodeData(h, tmpl, b.map(r => Map(
+                IE.Ipv4SrcAddr -> r._2, IE.Ipv4DstAddr -> r._3,
+                IE.Protocol -> r._4, IE.InBytes -> r._5, IE.InPkts -> r._6)))
+              if (i % 4 == 0) Iterator(tDg, dg) else Iterator.single(dg)
+            }.flatMap(cache.observe)
+              .map(m => (m(IE.Protocol), m(IE.InBytes), m(IE.InPkts)))
           }
         }
-        decoded.toDF("proto", "n_flows", "octets", "packets")
+        decoded.toDF("proto", "octets", "packets")
           .groupBy("proto")
-          .agg(sum("n_flows").as("n_flows"), sum("octets").as("octets"),
+          .agg(count(lit(1)).as("n_flows"), sum("octets").as("octets"),
             sum("packets").as("packets"))
       },
       Some(FlowView.cte(
@@ -2066,25 +1925,18 @@ object ProtocolQueries {
                 nDecoded += 1; octets += m(IE.InBytes)
               }
             observe(NetFlowV9.encodeTemplate(h, tmpl))
-            // corrupt records batch separately and their datagrams
-            // truncate to 12 bytes — the decoder must drop them whole
-            val good = scala.collection.mutable.Buffer[Map[Int, Long]]()
-            val bad = scala.collection.mutable.Buffer[Map[Int, Long]]()
-            def flush(b: scala.collection.mutable.Buffer[Map[Int, Long]],
-                      truncate: Boolean): Unit = if (b.nonEmpty) {
-              val dg = NetFlowV9.encodeData(h, tmpl, b.toSeq)
-              observe(if (truncate) dg.take(12) else dg)
-              b.clear()
+            // corrupt records ride their own datagrams, truncated to 12
+            // bytes — the decoder must drop them whole
+            run.grouped(20).foreach { b =>
+              nSent += b.size
+              val (bad, good) = b.partition(_._5)
+              for ((rs, truncate) <- Seq(good -> false, bad -> true)
+                   if rs.nonEmpty) {
+                val dg = NetFlowV9.encodeData(h, tmpl,
+                  rs.map(r => Map(IE.Protocol -> r._3, IE.InBytes -> r._4)))
+                observe(if (truncate) dg.take(12) else dg)
+              }
             }
-            run.foreach { r =>
-              nSent += 1
-              val b = if (r._5) bad else good
-              b += Map(IE.Protocol -> r._3, IE.InBytes -> r._4)
-              if (good.size == 20) flush(good, truncate = false)
-              if (bad.size == 20) flush(bad, truncate = true)
-            }
-            flush(good, truncate = false)
-            flush(bad, truncate = true)
             Iterator.single((ex, nSent, nDecoded, nSent - nDecoded,
               octets))
           }
@@ -2128,36 +1980,20 @@ object ProtocolQueries {
               IE.InBytes -> 4))
             val h = NetFlowV9.V9Header(0L, 0L, 0L, ex)
             val cache = new NetFlowV9.TemplateCache
-            // 5-minute bin -> (n, octets, duration): the fold key space
-            // is the time range, not the record count
-            val agg = scala.collection.mutable.LinkedHashMap[Long,
-              (Long, Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observe(dg).foreach { m =>
-                val bin = (m(IE.FirstSwitchedMsec) / 300000L) * 300L
-                val (n, o, du) = agg.getOrElse(bin, (0L, 0L, 0L))
-                agg(bin) = (n + 1, o + m(IE.InBytes),
-                  du + m(IE.LastSwitchedMsec) - m(IE.FirstSwitchedMsec))
-              }
-            observe(NetFlowV9.encodeTemplate(h, tmpl))
-            val batch = scala.collection.mutable.Buffer[Map[Int, Long]]()
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              observe(NetFlowV9.encodeData(h, tmpl, batch.toSeq))
-              batch.clear()
-            }
-            run.foreach { r =>
-              batch += Map(IE.FirstSwitchedMsec -> r._3,
-                IE.LastSwitchedMsec -> r._4, IE.InBytes -> r._5)
-              if (batch.size == 20) flushBatch()
-            }
-            flushBatch()
-            agg.iterator.map { case (bin, (n, o, du)) =>
-              (bin, n, o, du) }.toSeq
+            val data = run.grouped(20).map(b => NetFlowV9.encodeData(h, tmpl,
+              b.map(r => Map(IE.FirstSwitchedMsec -> r._3,
+                IE.LastSwitchedMsec -> r._4, IE.InBytes -> r._5))))
+            // 5-minute bins on the DECODED epoch milliseconds
+            (Iterator.single(NetFlowV9.encodeTemplate(h, tmpl)) ++ data)
+              .flatMap(cache.observe)
+              .map(m => ((m(IE.FirstSwitchedMsec) / 300000L) * 300L,
+                m(IE.InBytes),
+                m(IE.LastSwitchedMsec) - m(IE.FirstSwitchedMsec)))
           }
         }
-        decoded.toDF("bin_start", "n", "octets", "dur_ms")
+        decoded.toDF("bin_start", "octets", "dur_ms")
           .groupBy("bin_start")
-          .agg(sum("n").as("n"), sum("octets").as("octets"),
+          .agg(count(lit(1)).as("n"), sum("octets").as("octets"),
             sum("dur_ms").as("dur_ms"))
       },
       Some(FlowView.cte(
@@ -2248,47 +2084,31 @@ object ProtocolQueries {
               revB, revP))
             val h = NetFlowV9.V9Header(0L, 0L, 0L, ex)
             val cache = new NetFlowV9.TemplateCache
-            // proto -> (n, fwd_b, fwd_p, rev_b, rev_p, n_oneway)
-            val agg = scala.collection.mutable.LinkedHashMap[Long,
-              (Long, Long, Long, Long, Long, Long)]()
-            def observe(dg: Array[Byte]): Unit =
-              cache.observeX(dg).foreach { m =>
-                val proto = m(IE.Protocol.toLong).asInstanceOf[Long]
-                val fb = m(IE.InBytes.toLong).asInstanceOf[Long]
-                val fp = m(IE.InPkts.toLong).asInstanceOf[Long]
-                val rb = m(revB.key).asInstanceOf[Long]
-                val rp = m(revP.key).asInstanceOf[Long]
-                val (n, a, b, c, e, ow) =
-                  agg.getOrElse(proto, (0L, 0L, 0L, 0L, 0L, 0L))
-                agg(proto) = (n + 1, a + fb, b + fp, c + rb, e + rp,
-                  ow + (if (rb == 0L) 1L else 0L))
-              }
-            observe(NetFlowV9.encodeTemplateIpfixX(h, tmpl))
-            val batch =
-              scala.collection.mutable.Buffer[Map[Long, Any]]()
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              observe(NetFlowV9.encodeDataIpfixX(h, tmpl, batch.toSeq))
-              batch.clear()
-            }
-            run.foreach { r =>
-              batch += Map(
+            val data = run.grouped(25).map(b => NetFlowV9.encodeDataIpfixX(
+              h, tmpl, b.map(r => Map[Long, Any](
                 IE.Protocol.toLong -> r._3, IE.L4DstPort.toLong -> r._4,
                 IE.InBytes.toLong -> r._5, IE.InPkts.toLong -> r._6,
-                revB.key -> r._7, revP.key -> r._8)
-              if (batch.size == 25) flushBatch()
-            }
-            flushBatch()
-            agg.iterator.map { case (proto, (n, fb, fp, rb, rp, ow)) =>
-              (proto, n, fb, fp, rb, rp, ow) }.toSeq
+                revB.key -> r._7, revP.key -> r._8))))
+            (Iterator.single(NetFlowV9.encodeTemplateIpfixX(h, tmpl)) ++
+              data)
+              .flatMap(cache.observeX)
+              .map { m =>
+                val rb = m(revB.key).asInstanceOf[Long]
+                (m(IE.Protocol.toLong).asInstanceOf[Long],
+                  m(IE.InBytes.toLong).asInstanceOf[Long],
+                  m(IE.InPkts.toLong).asInstanceOf[Long],
+                  rb, m(revP.key).asInstanceOf[Long],
+                  if (rb == 0L) 1L else 0L)
+              }
           }
         }
-        decoded.toDF("proto", "n", "fwd_b", "fwd_p", "rev_b", "rev_p",
-            "n_oneway")
+        decoded.toDF("proto", "fwd_b", "fwd_p", "rev_b", "rev_p",
+            "oneway")
           .groupBy("proto")
-          .agg(sum("n").as("n"),
+          .agg(count(lit(1)).as("n"),
             sum("fwd_b").as("fwd_bytes"), sum("rev_b").as("rev_bytes"),
             sum("fwd_p").as("fwd_pkts"), sum("rev_p").as("rev_pkts"),
-            sum("n_oneway").as("n_oneway"))
+            sum("oneway").as("n_oneway"))
       },
       Some(FlowView.cte(
         """SELECT ip_proto AS proto, count(*) AS n,
@@ -2369,7 +2189,7 @@ object ProtocolQueries {
     // every 4 data sets (NF9_DEFAULT_TEMPLATE_INTERVAL rhythm, id 1024 /
     // 4096 per netflow9.c:199-201); re-registration must stay idempotent.
     // SessionWalk shape: 64 session keys, lazy run iterator, O(chunk +
-    // distinct (proto,label)) task memory.
+    // flows held for the option record) task memory.
     Q("q247_nfprobe_ipfix",
       (s, d) => {
         val sp = s
@@ -2399,90 +2219,62 @@ object ProtocolQueries {
               scopeCount = 1)
             val interval = 1L + ex % 3
             val h = NetFlowV9.V9Header(0L, 0L, 0L, ex)
-            val cache = new NetFlowV9.TemplateCache
+            val templates = Seq(NetFlowV9.encodeTemplateIpfixX(h, tmpl),
+              NetFlowV9.encodeOptionsTemplateIpfix(h, optTmpl))
+            val option = NetFlowV9.encodeDataIpfixX(h, optTmpl,
+              Seq(Map[Long, Any](48L -> 1L, 49L -> 2L, 50L -> interval)))
+            // both templates ride ahead of every 4th data set; the option
+            // DATA record lands only after the second, or closes a
+            // shorter run — early flows must buffer, then renorm
+            var n = 0
+            val dgs = run.grouped(20).flatMap { b =>
+              n += 1
+              val dg = NetFlowV9.encodeDataIpfixX(h, tmpl, b.map(r =>
+                Map[Long, Any](
+                  IE.Ipv4SrcAddr.toLong -> r._2,
+                  IE.Ipv4DstAddr.toLong -> r._3,
+                  IE.Protocol.toLong -> r._4, IE.InBytes.toLong -> r._5,
+                  IE.InPkts.toLong -> r._6, 48L -> 1L, tagF.key -> r._7,
+                  labF.key -> (s"et${r._4}" + "\u0000"))))
+              (if (n % 4 == 1) templates else Nil) ++ Seq(dg) ++
+                (if (n == 2) Seq(option) else Nil)
+            } ++ (if (n < 2) Iterator.single(option) else Iterator.empty)
             // sampler table + pre-option buffer, as the collector keeps
+            val cache = new NetFlowV9.TemplateCache
             val samplers = scala.collection.mutable.Map[Long, Long]()
+            // (samplerId, (proto, label, octets, packets, tag))
             val held = scala.collection.mutable.ArrayBuffer[
-              (Long, String, Long, Long, Long, Long)]()
-            val agg = scala.collection.mutable.LinkedHashMap[
-              (Long, String), (Long, Long, Long, Long)]()
-            def fold(proto: Long, label: String, oc: Long, pk: Long,
-                     tag: Long, ivl: Long): Unit = {
-              val k = (proto, label)
-              val (n, o, p, t) = agg.getOrElse(k, (0L, 0L, 0L, 0L))
-              agg(k) = (n + 1, o + oc * ivl, p + pk * ivl, t + tag)
-            }
-            def observe(dg: Array[Byte]): Unit =
-              cache.observeX(dg).foreach { m =>
-                if (m.contains(50L)) {
-                  // option record: register sampler, renorm held flows
-                  val sid = m(48L).asInstanceOf[Long]
-                  val ivl = m(50L).asInstanceOf[Long]
-                  samplers(sid) = ivl
-                  held.foreach { case (pr, lb, oc, pk, tg, s2) =>
-                    if (s2 == sid) fold(pr, lb, oc, pk, tg, ivl) }
-                  held.filterInPlace(_._6 != sid)
-                } else {
-                  // C-string vlen: strip the wire's trailing NUL
-                  val label = m(labF.key).asInstanceOf[String]
-                    .stripSuffix("\u0000")
-                  val proto = m(IE.Protocol.toLong).asInstanceOf[Long]
-                  val oc = m(IE.InBytes.toLong).asInstanceOf[Long]
-                  val pk = m(IE.InPkts.toLong).asInstanceOf[Long]
-                  val tag = m(tagF.key).asInstanceOf[Long]
-                  val sid = m(48L).asInstanceOf[Long]
-                  samplers.get(sid) match {
-                    case Some(ivl) => fold(proto, label, oc, pk, tag, ivl)
-                    case None => held += ((proto, label, oc, pk, tag, sid))
-                  }
-                }
-              }
-            val batch = scala.collection.mutable.Buffer[Map[Long, Any]]()
-            var nDataDgs = 0
-            def sendTemplates(): Unit = {
-              observe(NetFlowV9.encodeTemplateIpfixX(h, tmpl))
-              observe(NetFlowV9.encodeOptionsTemplateIpfix(h, optTmpl))
-            }
-            def flushBatch(): Unit = if (batch.nonEmpty) {
-              if (nDataDgs % 4 == 0) sendTemplates()
-              observe(NetFlowV9.encodeDataIpfixX(h, tmpl, batch.toSeq))
-              batch.clear()
-              nDataDgs += 1
-            }
-            var optionSent = false
-            run.foreach { r =>
-              batch += Map[Long, Any](
-                IE.Ipv4SrcAddr.toLong -> r._2, IE.Ipv4DstAddr.toLong -> r._3,
-                IE.Protocol.toLong -> r._4, IE.InBytes.toLong -> r._5,
-                IE.InPkts.toLong -> r._6, 48L -> 1L,
-                tagF.key -> r._7,
-                labF.key -> (s"et${r._4}" + "\u0000"))
-              if (batch.size == 20) {
-                flushBatch()
-                // the option DATA record lands only after the first two
-                // data sets — early flows must buffer, then renorm
-                if (!optionSent && nDataDgs >= 2) {
-                  observe(NetFlowV9.encodeDataIpfixX(h, optTmpl,
-                    Seq(Map[Long, Any](48L -> 1L, 49L -> 2L,
-                      50L -> interval))))
-                  optionSent = true
+              (Long, (Long, String, Long, Long, Long))]()
+            def renorm(f: (Long, String, Long, Long, Long), ivl: Long) =
+              (f._1, f._2, f._3 * ivl, f._4 * ivl, f._5)
+            dgs.flatMap(cache.observeX).flatMap { m =>
+              val sid = m(48L).asInstanceOf[Long]
+              if (m.contains(50L)) {
+                // option record: register sampler, renorm held flows
+                val ivl = m(50L).asInstanceOf[Long]
+                samplers(sid) = ivl
+                val now = held.filter(_._1 == sid)
+                held.filterInPlace(_._1 != sid)
+                now.map(f => renorm(f._2, ivl))
+              } else {
+                // C-string vlen: strip the wire's trailing NUL
+                val f = (m(IE.Protocol.toLong).asInstanceOf[Long],
+                  m(labF.key).asInstanceOf[String].stripSuffix("\u0000"),
+                  m(IE.InBytes.toLong).asInstanceOf[Long],
+                  m(IE.InPkts.toLong).asInstanceOf[Long],
+                  m(tagF.key).asInstanceOf[Long])
+                samplers.get(sid) match {
+                  case Some(ivl) => Seq(renorm(f, ivl))
+                  case None => held += (sid -> f); Nil
                 }
               }
             }
-            flushBatch()
-            if (!optionSent)
-              observe(NetFlowV9.encodeDataIpfixX(h, optTmpl,
-                Seq(Map[Long, Any](48L -> 1L, 49L -> 2L,
-                  50L -> interval))))
-            agg.iterator.map { case ((proto, label), (n, o, p, t)) =>
-              (proto, label, n, o, p, t) }.toSeq
           }
         }
-        decoded.toDF("proto", "label", "n_flows", "octets", "packets",
-            "sum_tag")
+        decoded.toDF("proto", "label", "octets", "packets", "tag")
           .groupBy("proto", "label")
-          .agg(sum("n_flows").as("n_flows"), sum("octets").as("octets"),
-            sum("packets").as("packets"), sum("sum_tag").as("sum_tag"))
+          .agg(count(lit(1)).as("n_flows"), sum("octets").as("octets"),
+            sum("packets").as("packets"), sum("tag").as("sum_tag"))
       },
       Some(FlowView.cte(
         """SELECT ip_proto AS proto, 'et' || ip_proto AS label,

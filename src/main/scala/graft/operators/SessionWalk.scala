@@ -13,11 +13,14 @@ import org.apache.spark.sql.functions.col
   *
   * The shuffle's external sort delivers each partition ordered by
   * (key, seq) with spill-to-disk, and [[mapRuns]] walks consecutive
-  * equal-key runs handing the session handler a LAZY sub-iterator — task
-  * memory is O(record) + whatever running state the handler keeps (seen
-  * sets, counters), never O(group). Per-session serial decode is inherent
-  * (a TCP byte stream is ordered); what scales is the number of sessions,
-  * so callers fan out over 64 keys.
+  * equal-key runs handing the session handler a LAZY sub-iterator. The
+  * handler may fold the run eagerly or return a lazy iterator over it
+  * (encode → decode → rows, folded downstream by Spark's partial
+  * aggregate); either way task memory is O(record) + whatever running
+  * state the handler keeps (seen sets, counters, a batch), never
+  * O(group). Per-session serial decode is inherent (a TCP byte stream is
+  * ordered); what scales is the number of sessions, so callers fan out
+  * over 64 keys.
   */
 object SessionWalk {
 
@@ -41,27 +44,31 @@ object SessionWalk {
   }
 
   /** Walk runs of equal keys over an already-sorted iterator. The handler
-    * receives each run as a lazy sub-iterator it must consume before the
-    * next run begins (any leftover is drained defensively). The handler's
-    * result must not retain the sub-iterator. */
+    * receives each run as a lazy sub-iterator and may return a lazy
+    * iterator over it: the run's rows are read as the handler's output
+    * is, and whatever rows it left unread are skipped only once that
+    * output runs out, so the next run always starts at the next key. */
   def mapRuns[T, R](sorted: Iterator[T])(key: T => Long)(
       handle: (Long, Iterator[T]) => IterableOnce[R]): Iterator[R] =
     new Iterator[R] {
       private val buf = sorted.buffered
+      private var run: Iterator[T] = Iterator.empty
       private var out: Iterator[R] = Iterator.empty
 
       @annotation.tailrec
       private def advance(): Unit =
-        if (!out.hasNext && buf.hasNext) {
-          val k = key(buf.head)
-          val run = new Iterator[T] {
-            def hasNext: Boolean = buf.hasNext && key(buf.head) == k
-            def next(): T =
-              if (hasNext) buf.next() else Iterator.empty.next()
+        if (!out.hasNext) {
+          while (run.hasNext) run.next() // rows the handler left unread
+          if (buf.hasNext) {
+            val k = key(buf.head)
+            run = new Iterator[T] {
+              def hasNext: Boolean = buf.hasNext && key(buf.head) == k
+              def next(): T =
+                if (hasNext) buf.next() else Iterator.empty.next()
+            }
+            out = handle(k, run).iterator
+            advance()
           }
-          out = handle(k, run).iterator
-          while (run.hasNext) run.next() // handler must not depend on rest
-          advance()
         }
 
       def hasNext: Boolean = { advance(); out.hasNext }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Graft, Q, Tables}
 import graft.text.TextOps._
 
 /** Text-analysis operators for the training-data pipeline (builder brief:
@@ -809,14 +809,15 @@ object TextQueries {
             sum(when((col("cnt") - col("est")) * k >
               col("n"), 1L).otherwise(0L)).as("bound_viol"),
             count(lit(1)).as("n_counters"))
-        heavy.groupBy("source").agg(count(lit(1)).as("n_heavy"))
-          .join(heavyFound, Seq("source"), "left")
-          .join(verdicts, Seq("source"))
-          .select(col("source"), col("n_heavy"),
-            coalesce(col("heavy_found"), lit(0L)).as("heavy_found"),
-            (col("over_viol") + col("bound_viol")).as("violations"),
-            when(col("n_counters") <= k - 1, 1L).otherwise(0L)
-              .as("size_ok"))
+        Graft.collectLocal(
+          heavy.groupBy("source").agg(count(lit(1)).as("n_heavy"))
+            .join(heavyFound, Seq("source"), "left")
+            .join(verdicts, Seq("source"))
+            .select(col("source"), col("n_heavy"),
+              coalesce(col("heavy_found"), lit(0L)).as("heavy_found"),
+              (col("over_viol") + col("bound_viol")).as("violations"),
+              when(col("n_counters") <= k - 1, 1L).otherwise(0L)
+                .as("size_ok")))(exact.unpersist())
       },
       Some(s"""WITH toks AS (SELECT source,
                 unnest(${duckToks}) AS tok FROM documents),
@@ -1140,9 +1141,9 @@ object TextQueries {
            when(abs(col("i_est") - col("inter_exact")) >
             greatest(lit(10.0), col("u_exact") * 0.15), 1L)
             .otherwise(0L)).as("v"))
-        cardRows.unionByName(pairRows)
+        Graft.collectLocal(cardRows.unionByName(pairRows)
           .select(col("key0").as("kind"), col("key"), col("n"),
-            col("v"))
+            col("v")))(sk.unpersist())
       },
       Some("""WITH d AS (SELECT DISTINCT event_type,
                 CAST(user_id AS VARCHAR) AS u FROM events),

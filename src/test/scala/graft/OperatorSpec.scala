@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.maps.PreTagMap
 import graft.maps.PreTagMap.TagRule
-import graft.operators.{Preprocess, ProRating}
+import graft.operators.{Preprocess, ProRating, SessionWalk}
 
 /** The engine's own session (`Graft.session`), so every spec — the
   * streaming ones included — runs under the settings the engine ships. */
@@ -138,5 +138,42 @@ class OperatorSpec extends AnyFunSuite {
     val sl = SparkEntry.queries("q123_srv6_seglist")(spark, sf)
       .selectExpr("sum(n)").as[Long].head()
     assert(sl == nSegs)
+  }
+
+  // SessionWalk.mapRuns alone, no Spark: (key, seq) rows already sorted
+  private def walk(rows: Seq[(Long, Int)])(
+      handle: (Long, Iterator[(Long, Int)]) => IterableOnce[(Long, Int)])
+      : Seq[(Long, Int)] =
+    SessionWalk.mapRuns(rows.iterator)(_._1)(handle).toSeq
+
+  test("mapRuns: a lazy handler reads every row of its run") {
+    val rows = Seq((1L, 1), (1L, 2), (2L, 3), (2L, 4), (2L, 5), (3L, 6))
+    assert(walk(rows)((k, run) => run.map(r => (k, r._2 * 10))) ==
+      rows.map(r => (r._1, r._2 * 10)))
+  }
+
+  test("mapRuns: rows a handler leaves unread never reach the next run") {
+    val rows = Seq((1L, 1), (1L, 2), (1L, 3), (1L, 4), (2L, 5),
+      (3L, 6), (3L, 7))
+    val keys = Seq.newBuilder[Long]
+    // half of each run, read lazily; the first row each handler sees
+    // must carry its own key
+    val out = walk(rows) { (k, run) =>
+      keys += k
+      val n = rows.count(_._1 == k)
+      run.take((n + 1) / 2).map { r => assert(r._1 == k); r }
+    }
+    assert(keys.result() == Seq(1L, 2L, 3L))
+    assert(out == Seq((1L, 1), (1L, 2), (2L, 5), (3L, 6)))
+  }
+
+  test("mapRuns: empty input never calls the handler") {
+    assert(walk(Nil)((_, _) => fail("handler called")).isEmpty)
+  }
+
+  test("mapRuns: runs of one row each") {
+    val rows = Seq((4L, 1), (5L, 2), (6L, 3))
+    assert(walk(rows)((k, run) => Iterator.single((k, run.size))) ==
+      Seq((4L, 1), (5L, 1), (6L, 1)))
   }
 }

@@ -247,8 +247,8 @@ class PlanSpec extends AnyFunSuite {
     // request-sized and broadcast — the corpus is never shuffled
     // against them. q338: same for the tombstone filter and the
     // 4-row codebook; probes ride broadcasts into the index scan.
-    Seq("q337_dedup_retraction" -> SparkEntry.queries("q337_dedup_retraction")(
-        spark, d).queryExecution.executedPlan.toString,
+    Seq("q337_dedup_retraction" ->
+        finalPlan(SparkEntry.queries("q337_dedup_retraction")(spark, d)),
       "q338_ann_retraction" ->
         finalPlan(SparkEntry.queries("q338_ann_retraction")(spark, d)))
       .foreach { case (nm, plan) =>
@@ -379,13 +379,39 @@ class PlanSpec extends AnyFunSuite {
       s"q281 verification probe must broadcast the digests:\n$p281")
   }
 
+  test("NetFlow wire lanes: one decode drive, no join, no extra shuffle") {
+    // each exporter run streams encode → template cache → records into
+    // the lane's own aggregate, so the plan is the session shuffle (if
+    // any) plus Spark's partial/final aggregate: no join may grow in,
+    // and the shuffle count stays at the hand-folded version's
+    val maxShuffles = Map("q57_nfv9_templates" -> 2, "q73_nfv9_options" -> 3,
+      "q91_ipfix_vlen" -> 2, "q120_nat_event" -> 3, "q121_fw_event" -> 3,
+      "q125_nfprobe_v9" -> 3, "q139_abs_timestamps" -> 2,
+      "q154_ipfix_biflow" -> 2, "q167_pen_tag_label" -> 2,
+      "q247_nfprobe_ipfix" -> 3, "q283_asa_bi_flow" -> 1,
+      "q137_collector_health" -> 1, "q189_templates_receiver" -> 1,
+      "q241_bad_datagram_accounting" -> 2)
+    maxShuffles.foreach { case (name, max) =>
+      val plan = SparkEntry.queries(name)(spark, d)
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("SortMergeJoin"),
+        s"$name grew a sort-merge join:\n$plan")
+      assert(!plan.contains("CartesianProduct"),
+        s"$name grew a cartesian product:\n$plan")
+      val shuffles = "(?<!Broadcast)(?<!Reused)Exchange".r
+        .findAllIn(plan).size
+      assert(shuffles <= max, s"$name shuffles $shuffles times:\n$plan")
+    }
+  }
+
   test("q278 gate reads the exploded corpus at most twice") {
     // the MG sketch pass and the ground-truth exact pass are the two
     // irreducible corpus reads; totals/heavy derive from the CACHED
     // exact aggregate, so no third explode of the token stream may
     // appear outside the cache (the r8 review's triple-scan finding)
     val q = SparkEntry.queries("q278_misra_gries")(spark, d)
-    val plan = q.queryExecution.executedPlan
+    val plan = Graft.collectedPlan(q)
+      .getOrElse(fail("q278 no longer collects"))
     import org.apache.spark.sql.execution.SparkPlan
     def liveScans(p: SparkPlan): Int = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

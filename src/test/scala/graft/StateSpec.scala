@@ -274,8 +274,12 @@ class StateSpec extends AnyFunSuite {
     }
     // memory-sink and withConf lanes, every lane that writes scratch
     // through Graft.scratchLane or Graft.withScratch, and the lanes that
-    // persist model frames; q321 returns through the same memory-sink
-    // shape but is left out: it is a wall-clock-pinned soak of about 80 s
+    // persist model or request-sized frames; q321 returns through the
+    // same memory-sink shape but is left out: it is a wall-clock-pinned
+    // soak of about 80 s. SigTable's signature and pair tables stay
+    // cached for the session by design (Bench.warmUp fills them too), so
+    // they are filled before q85 reads them.
+    graft.operators.SigTable.pairs90(spark, d).count()
     Seq("q316_logreg_trainer", "q177_stream_stream_join",
         "q83_imt_merge", "q45_stream_window", "q62_stream_dedup",
         "q76_stream_late_append", "q119_stream_neardup",
@@ -299,7 +303,9 @@ class StateSpec extends AnyFunSuite {
         "q116_semantic_dedup", "q266_pq_adc", "q286_ivf_pq",
         "q331_pq_scaled_k", "q335_pq_rerank", "q338_ann_retraction",
         "q339_pq_scaled_rerank", "q341_ann_recall_floor",
-        "q343_opq_permutation")
+        "q343_opq_permutation", "q85_dedup_clusters",
+        "q166_dsir_importance", "q243_lm_perplexity_filter",
+        "q278_misra_gries", "q297_kmv_sketch", "q337_dedup_retraction")
       .foreach { name =>
         val before = session()
         assert(SparkEntry.queries(name)(spark, d).collect().nonEmpty, name)
@@ -456,16 +462,16 @@ class StateSpec extends AnyFunSuite {
     SparkEntry.queries("q85_dedup_clusters")(spark, d).count()
     val after = spark.sparkContext.getPersistentRDDs.size
     // Intentional residents: the two shared SigTable materializations
-    // (signature table + verified pair table) and q85's 1-row result.
-    // Every band index leg and label-loop generation must be unpersisted.
-    assert(after <= before + 3,
+    // (signature table + verified pair table). Every band index leg,
+    // label-loop generation and q85's result must be unpersisted.
+    assert(after <= before + 2,
       s"persistent RDDs grew $before -> $after: a loop generation leaked")
     // The real leak test is idempotency: a re-run must reuse the shared
-    // tables and free its own loop state, adding at most its 1-row result.
+    // tables and free its own loop state, adding nothing.
     SparkEntry.queries("q74_incremental_dedup")(spark, d).count()
     SparkEntry.queries("q85_dedup_clusters")(spark, d).count()
     val again = spark.sparkContext.getPersistentRDDs.size
-    assert(again <= after + 1,
+    assert(again <= after,
       s"persistent RDDs grew $after -> $again on re-run: generation leak")
   }
 

@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [lane,lane,...]
 
 Runs each oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB against
 the parquet tables in <sfDir>, reads the Spark result parquet from
 <verifyOutDir>/<name>/, sorts columns by name and rows by all columns, and
-compares cell-by-cell. Dev tool only — the shipped Scala library does not
-depend on this.
+compares cell-by-cell. Exits 1 on any mismatch, on a requested lane that
+is not in oracle_sql.json, and when nothing was checked. Dev tool only —
+the shipped Scala library does not depend on this.
 """
 import duckdb
 import json
@@ -33,7 +34,10 @@ def main(sfdir, outdir, only=None):
             f"read_parquet('{sfdir}/{t}.parquet')")
     with open(f"{outdir}/oracle_sql.json") as f:
         oracle = json.load(f)
-    n_pass = n_fail = 0
+    missing = sorted(only - oracle.keys()) if only else []
+    for name in missing:
+        print(f"FAIL {name}: no such lane in oracle_sql.json")
+    n_pass, n_fail = 0, len(missing)
     for name in sorted(oracle):
         if only and name not in only:
             continue
@@ -104,7 +108,9 @@ def main(sfdir, outdir, only=None):
             print(f"PASS {name} ({exp.shape[0]} rows)")
             n_pass += 1
     print(f"== {n_pass} pass / {n_fail} fail ==")
-    return 1 if n_fail else 0
+    if n_pass + n_fail == 0:
+        print("FAIL: nothing was checked")
+    return 1 if n_fail or not n_pass else 0
 
 
 if __name__ == "__main__":
