@@ -15,11 +15,30 @@ class PlanSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   private val d = "/root/testdata/sf0.001"
 
-  /** The final adaptive plan a collecting lane ran ([[Graft.collectedPlan]]):
-    * its AQE dump prints the plan twice, so cut the initial one off. */
-  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
-    Graft.collectedPlan(df).getOrElse(fail("not a collected lane answer"))
-      .toString.split("== Initial Plan ==")(0)
+  /** The whole plan a collecting lane ran ([[Graft.collectedPlan]]), one
+    * operator a line: every adaptive plan by its final plan, every query
+    * stage by its exchange, and every cached frame's scan followed by the
+    * plan that filled the cache. AQE's text dump also prints each
+    * adaptive plan's initial plan, cached frames' included, so the plan
+    * is walked rather than printed. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{
+      AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def walk(p: SparkPlan, depth: Int): Seq[String] = {
+      val below = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case other => other.children
+      }
+      ("  " * depth + p.verboseString(Int.MaxValue)) +:
+        (below ++ p.subqueries).flatMap(walk(_, depth + 1))
+    }
+    walk(Graft.collectedPlan(df).getOrElse(fail("not a collected lane answer")),
+      0).mkString("\n")
+  }
 
   test("column pruning reaches the parquet scan through the agg planner") {
     val plan = SparkEntry.queries("q01_agg_base")(spark, d)
@@ -201,9 +220,9 @@ class PlanSpec extends AnyFunSuite {
     // nested-loop joins in this plan are 1-ROW broadcasts only: the K
     // seed filter plus the row-local assign's one-row codebook arrays
     // (r17 — each assign crossJoins a single collect_list row instead
-    // of joining the corpus against the codebook). The plan STRING
-    // repeats them once per leg that reads the not-yet-materialized
-    // codebook cache's build lineage, so the ceiling is the lineage
+    // of joining the corpus against the codebook). The walked plan
+    // repeats them once per scan of the codebook cache (each scan is
+    // followed by the plan that filled it), so the ceiling is that
     // repetition bound, not a join-count budget.
     assert(
       "BroadcastNestedLoopJoin".r.findAllIn(plan).size <= 12,
