@@ -8,38 +8,43 @@ import org.apache.spark.sql.functions.col
   * buffers AND sorts the whole group in one task — with the classic
   * secondary-sort shape:
   *
-  *   repartition(parts, key) . sortWithinPartitions(key, seq)
+  *   repartition(Parts, key) . sortWithinPartitions(key, seq)
   *     . mapPartitions { mapRuns(...) }
   *
   * The shuffle's external sort delivers each partition ordered by
   * (key, seq) with spill-to-disk, and [[mapRuns]] walks consecutive
   * equal-key runs handing the session handler a LAZY sub-iterator. The
   * handler may fold the run eagerly or return a lazy iterator over it
-  * (encode → decode → rows, folded downstream by Spark's partial
-  * aggregate); either way task memory is O(record) + whatever running
-  * state the handler keeps (seen sets, counters, a batch), never
-  * O(group). Per-session serial decode is inherent (a TCP byte stream is
-  * ordered); what scales is the number of sessions, so callers fan out
-  * over 64 keys.
+  * (encode → [[chunks]] → decode → rows, folded or compacted downstream
+  * by Spark's partial aggregate); either way task memory is O(chunk) +
+  * whatever running state the handler keeps (seen sets, counters),
+  * never O(group). Per-session serial decode is inherent (a TCP byte
+  * stream is ordered); what scales is the number of sessions, so
+  * callers fan out over 64 keys.
   */
 object SessionWalk {
+
+  /** Shuffle partitions of a session walk. */
+  private val Parts = 64
+
+  /** Smallest wire chunk [[chunks]] hands to a decoder. */
+  val ChunkBytes: Int = 1 << 16
 
   /** Shuffle the tuple dataset so each partition arrives sorted by its
     * first two columns — session key, then sequence (positional: `.as[T]`
     * keeps the source column names). */
-  def sessions[T: Encoder](ds: Dataset[T], parts: Int = 64): Dataset[T] = {
+  def sessions[T: Encoder](ds: Dataset[T]): Dataset[T] = {
     val c = ds.columns
-    ds.repartition(parts, col(c(0)))
+    ds.repartition(Parts, col(c(0)))
       .sortWithinPartitions(col(c(0)), col(c(1)))
   }
 
   /** Like [[sessions]] but sorted by EVERY column (key first) — for
     * handlers whose in-run order is a composite of several fields rather
     * than a single sequence column. */
-  def sessionsAll[T: Encoder](ds: Dataset[T], parts: Int = 64)
-      : Dataset[T] = {
+  def sessionsAll[T: Encoder](ds: Dataset[T]): Dataset[T] = {
     val c = ds.columns
-    ds.repartition(parts, col(c(0)))
+    ds.repartition(Parts, col(c(0)))
       .sortWithinPartitions(c.map(col).toIndexedSeq: _*)
   }
 
@@ -75,22 +80,21 @@ object SessionWalk {
       def next(): R = { advance(); out.next() }
     }
 
-  /** Bounded wire accumulation: encoded messages append until the buffer
-    * crosses `maxBytes`, then the chunk decodes as one contiguous stream
-    * (chunk boundaries are message-aligned because only whole encoded
-    * messages are written). Multi-message stream framing is still
-    * exercised on every chunk, but task memory is O(chunk), not
-    * O(session wire). */
-  final class ChunkedWire(decodeChunk: Array[Byte] => Unit,
-                          maxBytes: Int = 1 << 16) {
-    private val buf = new java.io.ByteArrayOutputStream(maxBytes + 4096)
-    def write(msg: Array[Byte]): Unit = {
-      buf.write(msg, 0, msg.length)
-      if (buf.size >= maxBytes) flush()
+  /** A session's wire, pulled as decodable chunks: whole encoded
+    * messages join until a chunk holds at least [[ChunkBytes]], so every
+    * chunk boundary is a message boundary (a message is never split; a
+    * larger one closes its chunk). Each chunk decodes as one stream, so
+    * multi-message framing is exercised, and a chunk reads only the
+    * messages it holds: task memory is O(chunk), not O(session wire). */
+  def chunks(msgs: Iterator[Array[Byte]]): Iterator[Array[Byte]] =
+    new Iterator[Array[Byte]] {
+      private val buf = new java.io.ByteArrayOutputStream(ChunkBytes + 4096)
+      def hasNext: Boolean = msgs.hasNext
+      def next(): Array[Byte] = {
+        if (!msgs.hasNext) Iterator.empty.next()
+        buf.reset()
+        while (buf.size < ChunkBytes && msgs.hasNext) buf.write(msgs.next())
+        buf.toByteArray
+      }
     }
-    def flush(): Unit = if (buf.size > 0) {
-      decodeChunk(buf.toByteArray)
-      buf.reset()
-    }
-  }
 }

@@ -220,41 +220,33 @@ object SurfaceQueries {
             col("user_id").cast("long").as("nh"))
           .as[(Long, Long, Long, Boolean, Long, Long, Long)]
         // secondary-sort walk (SessionWalk): the shuffle delivers each
-        // session ordered by event_id, the handler encodes and decodes
-        // INCREMENTALLY through a bounded chunk buffer, and the decoded
-        // routes compact in-handler into the per-session RIB — task
-        // memory is O(chunk + distinct prefixes), never the session's
-        // full event set or wire
+        // session ordered by event_id, and the handler streams it
+        // encode → chunks → decode as one lazy pipeline, one row per
+        // decoded route; the max_by aggregate below is the RIB
+        // compaction, and Spark's partial aggregate runs it before the
+        // shuffle — task memory is O(chunk), never the session's event
+        // set or wire. seq is the decoded message's index in its
+        // session (keys are session-local); a message's withdrawals
+        // take 2i and its announcements 2i + 1, so a key withdrawn and
+        // re-announced in one message ends announced.
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (sess, run) =>
             val peer = sess % 2
-            // pfx -> (last seq, op, med, oas, nh); latest-wins like the
-            // downstream max_by — the key space is session-local
-            val rib = scala.collection.mutable.LinkedHashMap[Long,
-              (Long, String, Long, Long, Long)]()
-            var seq = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk).foreach { u =>
-                seq += 1
-                u.withdrawn.foreach(r =>
-                  rib(r.prefix >> 8) = (seq, "withdraw", 0L, 0L, 0L))
-                u.nlri.foreach(r =>
-                  rib(r.prefix >> 8) = (seq, "update",
-                    u.med.getOrElse(0L),
-                    u.asPath.headOption.getOrElse(0L),
-                    u.nextHop.getOrElse(0L)))
-              })
-            run.foreach { case (_, _, pfx, wd, med, oas, nh) =>
+            val wire = run.map { case (_, _, pfx, wd, med, oas, nh) =>
               val route = BgpMsg.Route(pfx << 8, 24)
-              wire.write(
-                if (wd) BgpMsg.encode(BgpMsg.Update(withdrawn = Seq(route)))
-                else BgpMsg.encode(BgpMsg.Update(nlri = Seq(route),
-                  origin = Some(0), asPath = Seq(oas, oas + 1),
-                  nextHop = Some(nh), med = Some(med))))
+              if (wd) BgpMsg.encode(BgpMsg.Update(withdrawn = Seq(route)))
+              else BgpMsg.encode(BgpMsg.Update(nlri = Seq(route),
+                origin = Some(0), asPath = Seq(oas, oas + 1),
+                nextHop = Some(nh), med = Some(med)))
             }
-            wire.flush()
-            rib.iterator.map { case (pfx, (sq, op, med, oas, nh)) =>
-              (peer, pfx, sq, op, med, oas, nh) }.toSeq
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .zipWithIndex.flatMap { case (u, i) =>
+                u.withdrawn.map(r =>
+                  (peer, r.prefix >> 8, 2L * i, "withdraw", 0L, 0L, 0L)) ++
+                u.nlri.map(r => (peer, r.prefix >> 8, 2L * i + 1, "update",
+                  u.med.getOrElse(0L), u.asPath.headOption.getOrElse(0L),
+                  u.nextHop.getOrElse(0L)))
+              }
           }
         }
         decoded
@@ -339,32 +331,21 @@ object SurfaceQueries {
             require(fsm.addPathNegotiated, "ADD-PATH must negotiate")
             val ap = fsm.addPathNegotiated
             val peer = sess % 2
-            // the ADD-PATH RIB key widens to (pfx, path_id); compaction
-            // happens in-handler as chunks decode — O(chunk + keys)
-            val rib = scala.collection.mutable.LinkedHashMap[(Long, Long),
-              (Long, String, Long)]()
-            var seq = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk, ap).foreach { u =>
-                seq += 1
-                u.withdrawn.foreach(r =>
-                  rib((r.prefix >> 8, r.pathId)) = (seq, "withdraw", 0L))
-                u.nlri.foreach(r =>
-                  rib((r.prefix >> 8, r.pathId)) =
-                    (seq, "update", u.med.getOrElse(0L)))
-              })
-            run.foreach { case (_, _, pfx, pid, wd, med, _) =>
+            // the ADD-PATH RIB key widens to (pfx, path_id); seq as in q93
+            val wire = run.map { case (_, _, pfx, pid, wd, med, _) =>
               val route = BgpMsg.Route(pfx << 8, 24, pid)
-              wire.write(
-                if (wd) BgpMsg.encode(
-                  BgpMsg.Update(withdrawn = Seq(route)), ap)
-                else BgpMsg.encode(BgpMsg.Update(nlri = Seq(route),
-                  origin = Some(0), asPath = Seq(65000L + sess),
-                  nextHop = Some(sess), med = Some(med)), ap))
+              if (wd) BgpMsg.encode(BgpMsg.Update(withdrawn = Seq(route)), ap)
+              else BgpMsg.encode(BgpMsg.Update(nlri = Seq(route),
+                origin = Some(0), asPath = Seq(65000L + sess),
+                nextHop = Some(sess), med = Some(med)), ap)
             }
-            wire.flush()
-            rib.iterator.map { case ((pfx, pid), (sq, op, med)) =>
-              (peer, pfx, pid, sq, op, med) }.toSeq
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_, ap))
+              .zipWithIndex.flatMap { case (u, i) =>
+                u.withdrawn.map(r =>
+                  (peer, r.prefix >> 8, r.pathId, 2L * i, "withdraw", 0L)) ++
+                u.nlri.map(r => (peer, r.prefix >> 8, r.pathId, 2L * i + 1,
+                  "update", u.med.getOrElse(0L)))
+              }
           }
         }
         decoded
@@ -432,35 +413,26 @@ object SurfaceQueries {
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (sess, run) =>
             val peer = sess % 2
-            val rib = scala.collection.mutable.LinkedHashMap[Long,
-              (Long, String, Long, Long)]()
-            var seq = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk).foreach { u =>
-                seq += 1
-                u.withdrawn6.foreach(r =>
-                  rib((r.hi >> 16) & 0xffffffL) =
-                    (seq, "withdraw", 0L, 0L))
-                u.nlri6.foreach(r =>
-                  rib((r.hi >> 16) & 0xffffffL) = (seq, "update",
-                    u.med.getOrElse(0L),
-                    u.nextHop6.map(_._2).getOrElse(0L)))
-              })
-            run.foreach { case (_, _, pfx, wd, med) =>
+            val wire = run.map { case (_, _, pfx, wd, med) =>
               // 2001:db8::/32-rooted prefixes, /48: pfx occupies the
               // 16 bits below the /32 root, lo half zero
               val r6 = BgpMsg.Route6(0x20010DB800000000L | (pfx << 16),
                 0L, 48)
-              wire.write(
-                if (wd) BgpMsg.encode(BgpMsg.Update(withdrawn6 = Seq(r6)))
-                else BgpMsg.encode(BgpMsg.Update(
-                  nlri6 = Seq(r6), origin = Some(0),
-                  asPath = Seq(65000L + sess), med = Some(med),
-                  nextHop6 = Some((0xFE80L << 48, sess)))))
+              if (wd) BgpMsg.encode(BgpMsg.Update(withdrawn6 = Seq(r6)))
+              else BgpMsg.encode(BgpMsg.Update(
+                nlri6 = Seq(r6), origin = Some(0),
+                asPath = Seq(65000L + sess), med = Some(med),
+                nextHop6 = Some((0xFE80L << 48, sess))))
             }
-            wire.flush()
-            rib.iterator.map { case (pfx, (sq, op, med, nh)) =>
-              (peer, pfx, sq, op, med, nh) }.toSeq
+            // seq as in q93
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .zipWithIndex.flatMap { case (u, i) =>
+                u.withdrawn6.map(r => (peer, (r.hi >> 16) & 0xffffffL,
+                  2L * i, "withdraw", 0L, 0L)) ++
+                u.nlri6.map(r => (peer, (r.hi >> 16) & 0xffffffL,
+                  2L * i + 1, "update", u.med.getOrElse(0L),
+                  u.nextHop6.map(_._2).getOrElse(0L)))
+              }
           }
         }
         decoded
@@ -526,33 +498,23 @@ object SurfaceQueries {
           .as[(Long, Long, Long, Long, Boolean)]
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (sess, run) =>
-            // (vrf, prefix) keys are session-local (the prefix embeds
-            // the session), so the in-handler compaction is exact
-            val rib = scala.collection.mutable.LinkedHashMap[(Long, Long),
-              (Long, String, Long, Long)]()
-            var seq = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk).foreach { u =>
-                seq += 1
-                u.withdrawnVpn.foreach(r =>
-                  rib((r.rdVal, r.prefix >> 8)) =
-                    (seq, "withdraw", 0L, 0L))
-                u.nlriVpn.foreach(r =>
-                  rib((r.rdVal, r.prefix >> 8)) = (seq, "update",
-                    r.label, u.nextHopVpn.getOrElse(0L)))
-              })
-            run.foreach { case (_, _, pfx, vrf, wd) =>
+            val wire = run.map { case (_, _, pfx, vrf, wd) =>
               val rv = BgpMsg.RouteVpn(1000L + pfx % 100, 0, 65000L, vrf,
                 pfx << 8, 24)
-              wire.write(
-                if (wd) BgpMsg.encode(BgpMsg.Update(withdrawnVpn = Seq(rv)))
-                else BgpMsg.encode(BgpMsg.Update(nlriVpn = Seq(rv),
-                  origin = Some(0), asPath = Seq(65000L + sess),
-                  nextHopVpn = Some(sess))))
+              if (wd) BgpMsg.encode(BgpMsg.Update(withdrawnVpn = Seq(rv)))
+              else BgpMsg.encode(BgpMsg.Update(nlriVpn = Seq(rv),
+                origin = Some(0), asPath = Seq(65000L + sess),
+                nextHopVpn = Some(sess)))
             }
-            wire.flush()
-            rib.iterator.map { case ((vrf, pfx), (sq, op, lbl, nh)) =>
-              (vrf, pfx, sq, op, lbl, nh) }.toSeq
+            // (vrf, prefix) keys are session-local (the prefix embeds
+            // the session), so seq as in q93 orders them exactly
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .zipWithIndex.flatMap { case (u, i) =>
+                u.withdrawnVpn.map(r => (r.rdVal, r.prefix >> 8, 2L * i,
+                  "withdraw", 0L, 0L)) ++
+                u.nlriVpn.map(r => (r.rdVal, r.prefix >> 8, 2L * i + 1,
+                  "update", r.label, u.nextHopVpn.getOrElse(0L)))
+              }
           }
         }
         decoded
@@ -628,26 +590,26 @@ object SurfaceQueries {
             var nRoutes = 0L; var nLooped = 0L; var nLc = 0L
             var lcSum = 0L
             val origs = scala.collection.mutable.Set[Long]()
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk).foreach { u =>
+            val wire = run.map {
+              case (_, eid, orig, looped, hasLc, lc1, lc2) =>
+                val cl = Seq(sess * 10 + 1) ++
+                  (if (looped) Seq(OwnCluster) else Nil)
+                BgpMsg.encode(BgpMsg.Update(
+                  nlri = Seq(BgpMsg.Route(eid % 65536, 32)),
+                  origin = Some(0), asPath = Seq(65100L + sess),
+                  nextHop = Some(sess), originatorId = Some(orig),
+                  clusterList = cl,
+                  largeCommunities =
+                    if (hasLc) Seq((64512L, lc1, lc2)) else Nil))
+            }
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .foreach { u =>
                 nRoutes += 1
                 if (u.clusterList.contains(OwnCluster)) nLooped += 1
                 u.originatorId.foreach(origs += _)
                 nLc += u.largeCommunities.size
                 lcSum += u.largeCommunities.map(lc => lc._2 + lc._3).sum
-              })
-            run.foreach { case (_, eid, orig, looped, hasLc, lc1, lc2) =>
-              val cl = Seq(sess * 10 + 1) ++
-                (if (looped) Seq(OwnCluster) else Nil)
-              wire.write(BgpMsg.encode(BgpMsg.Update(
-                nlri = Seq(BgpMsg.Route(eid % 65536, 32)),
-                origin = Some(0), asPath = Seq(65100L + sess),
-                nextHop = Some(sess), originatorId = Some(orig),
-                clusterList = cl,
-                largeCommunities =
-                  if (hasLc) Seq((64512L, lc1, lc2)) else Nil)))
-            }
-            wire.flush()
+              }
             Seq((sess, nRoutes, nLooped, origs.size.toLong, nLc, lcSum))
           }
         }
@@ -696,35 +658,33 @@ object SurfaceQueries {
           SessionWalk.mapRuns(it)(_._1) { (sess, run) =>
             val peer = BmpMsg.PeerHeader(0, 0, 0L, sess, 65000L + sess,
               sess, 0L, 0L)
+            val wire = Iterator.single(
+                BmpMsg.encodeInitiation(Seq(1 -> s"monitor-$sess"))) ++
+              run.flatMap { case (_, _, pfx, mirror, lost) =>
+                val u = BgpMsg.Update(nlri = Seq(BgpMsg.Route(pfx, 32)),
+                  origin = Some(0), asPath = Seq(65000L + sess),
+                  nextHop = Some(sess))
+                BmpMsg.encodeRouteMonitoring(peer, u) +: (
+                  if (!mirror) Nil
+                  else if (lost) Seq(BmpMsg.encodeRouteMirror(peer, None,
+                    Some(1)))
+                  else Seq(BmpMsg.encodeRouteMirror(peer,
+                    Some(BgpMsg.encode(u)), None)))
+              } ++
+              Iterator.single(BmpMsg.encodeTermination((sess % 3).toInt,
+                Seq(0 -> "bye")))
             // station accounting folds as chunks decode — O(1) state
             var nRoutes = 0L; var nPdus = 0L; var nLost = 0L
             var reason = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BmpMsg.decodeStream(chunk).foreach {
-                case _: BmpMsg.RouteMonitoring => nRoutes += 1
-                case m: BmpMsg.RouteMirror =>
-                  if (m.mirrored.nonEmpty) nPdus += 1
-                  if (m.infoCode.contains(1)) nLost += 1
-                case BmpMsg.Termination(r) =>
-                  if (reason < 0) reason = r.toLong
-                case _ => ()
-              })
-            def w(b: Array[Byte]): Unit = wire.write(b)
-            w(BmpMsg.encodeInitiation(Seq(1 -> s"monitor-$sess")))
-            run.foreach { case (_, _, pfx, mirror, lost) =>
-              val u = BgpMsg.Update(nlri = Seq(BgpMsg.Route(pfx, 32)),
-                origin = Some(0), asPath = Seq(65000L + sess),
-                nextHop = Some(sess))
-              w(BmpMsg.encodeRouteMonitoring(peer, u))
-              if (mirror) {
-                if (lost) w(BmpMsg.encodeRouteMirror(peer, None, Some(1)))
-                else w(BmpMsg.encodeRouteMirror(peer,
-                  Some(BgpMsg.encode(u)), None))
-              }
+            SessionWalk.chunks(wire).flatMap(BmpMsg.decodeStream).foreach {
+              case _: BmpMsg.RouteMonitoring => nRoutes += 1
+              case m: BmpMsg.RouteMirror =>
+                if (m.mirrored.nonEmpty) nPdus += 1
+                if (m.infoCode.contains(1)) nLost += 1
+              case BmpMsg.Termination(r) =>
+                if (reason < 0) reason = r.toLong
+              case _ => ()
             }
-            w(BmpMsg.encodeTermination((sess % 3).toInt,
-              Seq(0 -> "bye")))
-            wire.flush()
             Iterator.single((sess, nRoutes, nPdus, nLost, reason))
           }
         }
@@ -762,37 +722,26 @@ object SurfaceQueries {
           SessionWalk.mapRuns(it)(_._1) { (sess, run) =>
             val peer = BmpMsg.PeerHeader(0, 0, sess % 4, sess,
               65000L + sess, sess, 0L, 0L)
-            // per-peer RIB compacts in-handler as chunks decode —
-            // O(chunk + session-local prefixes)
-            val rib = scala.collection.mutable.LinkedHashMap[(Long, Long),
-              (Long, String, Long)]()
-            var seq = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BmpMsg.decodeStream(chunk).foreach {
-                case BmpMsg.RouteMonitoring(p, u) =>
-                  seq += 1
-                  u.withdrawn.foreach(r =>
-                    rib((p.peerAs, r.prefix >> 8)) =
-                      (seq, "withdraw", 0L))
-                  u.nlri.foreach(r =>
-                    rib((p.peerAs, r.prefix >> 8)) = (seq, "update",
-                      u.med.getOrElse(0L)))
-                case _ => seq += 1
-              })
-            def w(b: Array[Byte]): Unit = wire.write(b)
-            w(BmpMsg.encodeInitiation(Seq(1 -> "graft-monitor")))
-            w(BmpMsg.encodePeerUp(peer))
-            run.foreach { case (_, _, pfx, wd, med) =>
-              val route = BgpMsg.Route(pfx << 8, 24)
-              val u =
-                if (wd) BgpMsg.Update(withdrawn = Seq(route))
-                else BgpMsg.Update(nlri = Seq(route), origin = Some(0),
-                  med = Some(med))
-              w(BmpMsg.encodeRouteMonitoring(peer, u))
-            }
-            wire.flush()
-            rib.iterator.map { case ((as, pfx), (sq, op, med)) =>
-              (as, pfx, sq, op, med) }.toSeq
+            val wire = Iterator(BmpMsg.encodeInitiation(
+                Seq(1 -> "graft-monitor")), BmpMsg.encodePeerUp(peer)) ++
+              run.map { case (_, _, pfx, wd, med) =>
+                val route = BgpMsg.Route(pfx << 8, 24)
+                BmpMsg.encodeRouteMonitoring(peer,
+                  if (wd) BgpMsg.Update(withdrawn = Seq(route))
+                  else BgpMsg.Update(nlri = Seq(route), origin = Some(0),
+                    med = Some(med)))
+              }
+            // one row per monitored route into the per-peer RIB's
+            // max_by; seq as in q93 over every decoded BMP message
+            SessionWalk.chunks(wire).flatMap(BmpMsg.decodeStream)
+              .zipWithIndex.flatMap {
+                case (BmpMsg.RouteMonitoring(p, u), i) =>
+                  u.withdrawn.map(r =>
+                    (p.peerAs, r.prefix >> 8, 2L * i, "withdraw", 0L)) ++
+                  u.nlri.map(r => (p.peerAs, r.prefix >> 8, 2L * i + 1,
+                    "update", u.med.getOrElse(0L)))
+                case _ => Nil
+              }
           }
         }
         decoded.toDF("peer_as", "prefix", "seq", "op", "med")
@@ -1051,30 +1000,22 @@ object SurfaceQueries {
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (sess, run) =>
             val peer = sess % 2
-            val rib = scala.collection.mutable.LinkedHashMap[Long,
-              (Long, String, Long, Long)]()
-            var seq = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk).foreach { u =>
-                seq += 1
-                u.withdrawn.foreach(r =>
-                  rib(r.prefix >> 8) = (seq, "withdraw", 0L, 0L))
-                u.nlri.foreach(r =>
-                  rib(r.prefix >> 8) = (seq, "update",
-                    u.aigp.getOrElse(0L), u.labelIndex.getOrElse(0L)))
-              })
-            run.foreach { case (_, _, pfx, wd, aigp) =>
+            val wire = run.map { case (_, _, pfx, wd, aigp) =>
               val route = BgpMsg.Route(pfx << 8, 24)
-              wire.write(
-                if (wd) BgpMsg.encode(BgpMsg.Update(withdrawn = Seq(route)))
-                else BgpMsg.encode(BgpMsg.Update(nlri = Seq(route),
-                  origin = Some(0), asPath = Seq(65000L + sess),
-                  nextHop = Some(sess), aigp = Some(aigp),
-                  labelIndex = Some(pfx % 1024))))
+              if (wd) BgpMsg.encode(BgpMsg.Update(withdrawn = Seq(route)))
+              else BgpMsg.encode(BgpMsg.Update(nlri = Seq(route),
+                origin = Some(0), asPath = Seq(65000L + sess),
+                nextHop = Some(sess), aigp = Some(aigp),
+                labelIndex = Some(pfx % 1024)))
             }
-            wire.flush()
-            rib.iterator.map { case (pfx, (sq, op, aigp, li)) =>
-              (peer, pfx, sq, op, aigp, li) }.toSeq
+            // seq as in q93
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .zipWithIndex.flatMap { case (u, i) =>
+                u.withdrawn.map(r =>
+                  (peer, r.prefix >> 8, 2L * i, "withdraw", 0L, 0L)) ++
+                u.nlri.map(r => (peer, r.prefix >> 8, 2L * i + 1, "update",
+                  u.aigp.getOrElse(0L), u.labelIndex.getOrElse(0L)))
+              }
           }
         }
         decoded
@@ -1136,44 +1077,32 @@ object SurfaceQueries {
           .as[(Long, Long, Long, Boolean, Long, Long)]
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (local, run) =>
-            // topology RIB per (local, remote) link compacts in-handler
-            val rib = scala.collection.mutable.LinkedHashMap[(Long, Long),
-              (Long, String, Long, Long, String)]()
-            var seq = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk).foreach { u =>
-                seq += 1
-                val a = u.lsAttr.getOrElse(BgpMsg.LsAttr())
-                u.withdrawnLs.foreach {
-                  case l: BgpMsg.LsLink =>
-                    rib((l.localId, l.remoteId)) =
-                      (seq, "withdraw", 0L, 0L, "")
-                  case _ => ()
-                }
-                u.nlriLs.foreach {
-                  case l: BgpMsg.LsLink =>
-                    rib((l.localId, l.remoteId)) = (seq, "update",
-                      a.igpMetric.getOrElse(0L), a.teMetric.getOrElse(0L),
-                      a.nodeName.getOrElse(""))
-                  case _ => ()
-                }
-              })
-            run.foreach { case (_, _, remote, wd, igp, te) =>
+            val wire = run.map { case (_, _, remote, wd, igp, te) =>
               val link = BgpMsg.LsLink(2, 65000L + local, local,
                 65000L + remote, remote,
                 167772160L + (local * 24 + remote) % 256,
                 167772161L + (local * 24 + remote) % 256)
-              wire.write(
-                if (wd) BgpMsg.encode(BgpMsg.Update(withdrawnLs = Seq(link)))
-                else BgpMsg.encode(BgpMsg.Update(nlriLs = Seq(link),
-                  nextHop = Some(local),
-                  lsAttr = Some(BgpMsg.LsAttr(
-                    nodeName = Some(s"node$local"),
-                    igpMetric = Some(igp), teMetric = Some(te))))))
+              if (wd) BgpMsg.encode(BgpMsg.Update(withdrawnLs = Seq(link)))
+              else BgpMsg.encode(BgpMsg.Update(nlriLs = Seq(link),
+                nextHop = Some(local),
+                lsAttr = Some(BgpMsg.LsAttr(
+                  nodeName = Some(s"node$local"),
+                  igpMetric = Some(igp), teMetric = Some(te)))))
             }
-            wire.flush()
-            rib.iterator.map { case ((l, r), (sq, op, igp, te, nm)) =>
-              (l, r, sq, op, igp, te, nm) }.toSeq
+            // one row per decoded link into the topology RIB's max_by
+            // per (local, remote); seq as in q93
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .zipWithIndex.flatMap { case (u, i) =>
+                val a = u.lsAttr.getOrElse(BgpMsg.LsAttr())
+                u.withdrawnLs.collect { case l: BgpMsg.LsLink =>
+                  (l.localId, l.remoteId, 2L * i, "withdraw", 0L, 0L, "")
+                } ++
+                u.nlriLs.collect { case l: BgpMsg.LsLink =>
+                  (l.localId, l.remoteId, 2L * i + 1, "update",
+                    a.igpMetric.getOrElse(0L), a.teMetric.getOrElse(0L),
+                    a.nodeName.getOrElse(""))
+                }
+              }
           }
         }
         decoded
@@ -1227,29 +1156,15 @@ object SurfaceQueries {
             (col("event_id") % 100).as("metric"),
             (col("event_id") % 3).as("mt"))
           .as[(Long, Long, Long, Long, Long)]
-        // prefixes compact per (node, hi) in-handler; link MT counts
-        // FOLD into three counters and ride out in the metric column —
-        // O(chunk + distinct prefixes), never the session's events
+        // every update carries one /64 prefix and one MT-tagged link,
+        // so one decode emits one row per update: max_by keeps the
+        // latest metric per (node, hi), the same pass counts each
+        // link's MT-ID, and the per-node rollup sums both — one lazy
+        // pipeline per session, task memory O(chunk)
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (local, run) =>
-            val pfxRib = scala.collection.mutable.LinkedHashMap[
-              (Long, Long), (Long, Long)]()
-            val mtCnt = new Array[Long](3)
-            var seq = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk).foreach { u =>
-                seq += 1
-                val metric = u.lsAttr.flatMap(_.pfxMetric).getOrElse(0L)
-                u.nlriLs.foreach {
-                  case p: BgpMsg.LsPrefix6 if p.plen == 64 =>
-                    pfxRib((p.localId, p.hi)) = (seq, metric)
-                  case l: BgpMsg.LsLink =>
-                    if (l.mtId >= 0 && l.mtId < 3) mtCnt(l.mtId.toInt) += 1
-                  case _ => ()
-                }
-              })
-            run.foreach { case (_, eid, hi, metric, mt) =>
-              wire.write(BgpMsg.encode(BgpMsg.Update(
+            val wire = run.map { case (_, eid, hi, metric, mt) =>
+              BgpMsg.encode(BgpMsg.Update(
                 nlriLs = Seq(
                   BgpMsg.LsPrefix6(2, 65000L + local, local, hi, 0L, 64),
                   BgpMsg.LsLink(2, 65000L + local, local,
@@ -1257,29 +1172,29 @@ object SurfaceQueries {
                     167772160L + eid % 256, 167772161L + eid % 256,
                     mtId = mt)),
                 nextHop = Some(local),
-                lsAttr = Some(BgpMsg.LsAttr(pfxMetric = Some(metric))))))
+                lsAttr = Some(BgpMsg.LsAttr(pfxMetric = Some(metric)))))
             }
-            wire.flush()
-            pfxRib.iterator.map { case ((nd, hi), (sq, metric)) =>
-              ("pfx", nd, hi, sq, metric, -1L) }.toSeq ++
-              (0 until 3).map(mt =>
-                ("link", local, 0L, 0L, mtCnt(mt), mt.toLong))
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .zipWithIndex.flatMap { case (u, i) =>
+                for {
+                  p <- u.nlriLs.collectFirst {
+                    case p: BgpMsg.LsPrefix6 if p.plen == 64 => p }
+                  l <- u.nlriLs.collectFirst { case l: BgpMsg.LsLink => l }
+                } yield (p.localId, p.hi, i.toLong,
+                  u.lsAttr.flatMap(_.pfxMetric).getOrElse(0L), l.mtId)
+              }
           }
-        }.toDF("kind", "local_nd", "hi", "seq", "metric", "mt")
-        val rib = decoded.filter(col("kind") === "pfx")
+        }
+        def mtCount(mt: Long) = sum(when(col("mt") === mt, 1L).otherwise(0L))
+        decoded.toDF("local_nd", "hi", "seq", "metric", "mt")
           .groupBy("local_nd", "hi")
-          .agg(expr("max_by(metric, seq)").as("metric"))
+          .agg(expr("max_by(metric, seq)").as("metric"),
+            mtCount(0L).as("n_mt0"), mtCount(1L).as("n_mt1"),
+            mtCount(2L).as("n_mt2"))
           .groupBy("local_nd")
-          .agg(count(lit(1)).as("n_pfx"), sum("metric").as("sum_metric"))
-        val links = decoded.filter(col("kind") === "link")
-          .groupBy("local_nd")
-          .agg(sum(when(col("mt") === 0L, col("metric")).otherwise(0L))
-              .as("n_mt0"),
-            sum(when(col("mt") === 1L, col("metric")).otherwise(0L))
-              .as("n_mt1"),
-            sum(when(col("mt") === 2L, col("metric")).otherwise(0L))
-              .as("n_mt2"))
-        rib.join(links, Seq("local_nd"))
+          .agg(count(lit(1)).as("n_pfx"), sum("metric").as("sum_metric"),
+            sum("n_mt0").as("n_mt0"), sum("n_mt1").as("n_mt1"),
+            sum("n_mt2").as("n_mt2"))
       },
       Some("""WITH m AS (SELECT user_id % 24 AS local_nd,
                 event_id AS seq,
@@ -1318,8 +1233,8 @@ object SurfaceQueries {
         import sp.implicits._
         import graft.sources.{BgpMsg, BmpMsg}
         // 64 router sessions through the secondary-sort walk: the shuffle
-        // delivers each session ordered by event_id, the handler encodes
-        // and decodes INCREMENTALLY through a bounded chunk buffer —
+        // delivers each session ordered by event_id, and the handler
+        // pulls encode → chunks → decode lazily into its seen-sets —
         // memory is O(chunk + distinct prefixes), never the session's
         // full event set (the r5 "weak" fix).
         val rows = Tables.events(s, d).select(
@@ -1331,36 +1246,36 @@ object SurfaceQueries {
           .as[(Long, Long, Long, Boolean)]
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (router, run) =>
-            val adjSeen = scala.collection.mutable.Set[Long]()
-            val locSeen = scala.collection.mutable.Set[Long]()
-            var g8 = -1L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BmpMsg.decodeStream(chunk).foreach {
-                case m: BmpMsg.RouteMonitoring if m.peer.peerType == 0 =>
-                  m.update.nlri.foreach(r => adjSeen += (r.prefix >> 8))
-                case m: BmpMsg.RouteMonitoring if m.peer.peerType == 3 &&
-                    (m.peer.flags & 0x80) != 0 =>
-                  m.update.nlri.foreach(r => locSeen += (r.prefix >> 8))
-                case m: BmpMsg.StatsReport if m.peer.peerType == 3 =>
-                  g8 = m.stats.getOrElse(8, -1L)
-                case _ => ()
-              })
-            def mon(peerType: Int, flags: Int, pfx: Long): Unit =
-              wire.write(BmpMsg.encodeRouteMonitoring(
+            def mon(peerType: Int, flags: Int, pfx: Long) =
+              BmpMsg.encodeRouteMonitoring(
                 BmpMsg.PeerHeader(peerType, flags, 0L, router,
                   65000 + router, router, 0L, 0L),
                 BgpMsg.Update(nlri = Seq(BgpMsg.Route(pfx << 8, 24)),
-                  origin = Some(0), nextHop = Some(router))))
+                  origin = Some(0), nextHop = Some(router)))
             val encLoc = scala.collection.mutable.Set[Long]()
-            run.foreach { case (_, _, pfx, pass) =>
-              mon(0, 0, pfx)                    // adj-rib-in
-              if (pass) { mon(3, 0x80, pfx); encLoc += pfx } // loc-rib
+            // `++` is lazy: the stats report encodes once the run is spent
+            val wire = run.flatMap { case (_, _, pfx, pass) =>
+                if (pass) encLoc += pfx
+                mon(0, 0, pfx) +:                 // adj-rib-in
+                  (if (pass) Seq(mon(3, 0x80, pfx)) else Nil) // loc-rib
+              } ++
+              Iterator.single(BmpMsg.encodeStatsReport(
+                BmpMsg.PeerHeader(3, 0x80, 0L, router, 65000 + router,
+                  router, 0L, 0L),
+                Map(8 -> encLoc.size.toLong)))
+            val adjSeen = scala.collection.mutable.Set[Long]()
+            val locSeen = scala.collection.mutable.Set[Long]()
+            var g8 = -1L
+            SessionWalk.chunks(wire).flatMap(BmpMsg.decodeStream).foreach {
+              case m: BmpMsg.RouteMonitoring if m.peer.peerType == 0 =>
+                m.update.nlri.foreach(r => adjSeen += (r.prefix >> 8))
+              case m: BmpMsg.RouteMonitoring if m.peer.peerType == 3 &&
+                  (m.peer.flags & 0x80) != 0 =>
+                m.update.nlri.foreach(r => locSeen += (r.prefix >> 8))
+              case m: BmpMsg.StatsReport if m.peer.peerType == 3 =>
+                g8 = m.stats.getOrElse(8, -1L)
+              case _ => ()
             }
-            wire.write(BmpMsg.encodeStatsReport(
-              BmpMsg.PeerHeader(3, 0x80, 0L, router, 65000 + router,
-                router, 0L, 0L),
-              Map(8 -> encLoc.size.toLong)))
-            wire.flush()
             Iterator((router, adjSeen.size.toLong, locSeen.size.toLong,
               g8, if (locSeen.size.toLong == g8) 1L else 0L))
           }
@@ -1409,46 +1324,44 @@ object SurfaceQueries {
             val ownAs = 65000L + router
             val peer = BmpMsg.PeerHeader(0, 0, 0L, router, ownAs,
               router, 0L, 0L)
+            // router side: running counters while encoding; `++` is lazy,
+            // so the stats report encodes once the run is spent
+            var (nAsloop, nCloop, nDup, nEvs) = (0L, 0L, 0L, 0L)
+            val wire = run.flatMap { case (_, eid, asloop, cloop, dup) =>
+                val path =
+                  if (asloop) Seq(64900L, ownAs, 64800L)
+                  else Seq(64900L, 64800L + eid % 16)
+                val cl = if (cloop) Seq(router, 999L) else Seq(999L)
+                val m = BmpMsg.encodeRouteMonitoring(peer, BgpMsg.Update(
+                  nlri = Seq(BgpMsg.Route(eid << 8, 24)),
+                  origin = Some(0), asPath = path, nextHop = Some(router),
+                  clusterList = cl))
+                nEvs += 1
+                if (asloop) nAsloop += 1
+                if (cloop) nCloop += 1
+                if (dup) nDup += 1
+                if (dup) Seq(m, m) else Seq(m) // exact re-advertise
+              } ++
+              Iterator.single(BmpMsg.encodeStatsReport(peer,
+                Map(1 -> nDup, 3 -> nCloop, 4 -> nAsloop,
+                  7 -> (nEvs - nAsloop - nCloop))))
             // collector side: recompute every counter from the decoded
-            // stream as chunks flush (seen-set = the distinct-count
-            // state any exact dup check needs; 8-byte keys only)
+            // stream (seen-set = the distinct-count state any exact dup
+            // check needs; 8-byte keys only)
             val seen = scala.collection.mutable.Set[Long]()
             var (rDup, rCloop, rAsloop) = (0L, 0L, 0L)
             var rep: Map[Int, Long] = Map.empty
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BmpMsg.decodeStream(chunk).foreach {
-                case m: BmpMsg.RouteMonitoring =>
-                  val u = m.update
-                  val pfx = u.nlri.head.prefix
-                  if (u.asPath.contains(ownAs)) rAsloop += 1
-                  else if (u.clusterList.contains(router)) rCloop += 1
-                  else if (seen.contains(pfx)) rDup += 1
-                  else seen += pfx
-                case m: BmpMsg.StatsReport => rep = m.stats
-                case _ => ()
-              })
-            // router side: running counters while encoding
-            var (nAsloop, nCloop, nDup, nEvs) = (0L, 0L, 0L, 0L)
-            run.foreach { case (_, eid, asloop, cloop, dup) =>
-              val path =
-                if (asloop) Seq(64900L, ownAs, 64800L)
-                else Seq(64900L, 64800L + eid % 16)
-              val cl = if (cloop) Seq(router, 999L) else Seq(999L)
-              val m = BmpMsg.encodeRouteMonitoring(peer, BgpMsg.Update(
-                nlri = Seq(BgpMsg.Route(eid << 8, 24)),
-                origin = Some(0), asPath = path, nextHop = Some(router),
-                clusterList = cl))
-              wire.write(m)
-              if (dup) wire.write(m) // exact re-advertise
-              nEvs += 1
-              if (asloop) nAsloop += 1
-              if (cloop) nCloop += 1
-              if (dup) nDup += 1
+            SessionWalk.chunks(wire).flatMap(BmpMsg.decodeStream).foreach {
+              case m: BmpMsg.RouteMonitoring =>
+                val u = m.update
+                val pfx = u.nlri.head.prefix
+                if (u.asPath.contains(ownAs)) rAsloop += 1
+                else if (u.clusterList.contains(router)) rCloop += 1
+                else if (seen.contains(pfx)) rDup += 1
+                else seen += pfx
+              case m: BmpMsg.StatsReport => rep = m.stats
+              case _ => ()
             }
-            wire.write(BmpMsg.encodeStatsReport(peer,
-              Map(1 -> nDup, 3 -> nCloop, 4 -> nAsloop,
-                7 -> (nEvs - nAsloop - nCloop))))
-            wire.flush()
             val ok = rep.get(1).contains(rDup) &&
               rep.get(3).contains(rCloop) && rep.get(4).contains(rAsloop) &&
               rep.get(7).contains(seen.size.toLong)
@@ -1501,27 +1414,24 @@ object SurfaceQueries {
           .as[(Long, Long, Long, Long, Boolean)]
         val decoded = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (router, run) =>
-            val nIn = scala.collection.mutable.Map[Long, Long]()
-            val nOut = scala.collection.mutable.Map[Long, Long]()
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BmpMsg.decodeStream(chunk).foreach {
-                case m: BmpMsg.RouteMonitoring =>
-                  val tgt = if ((m.peer.flags & 0x10) != 0) nOut else nIn
-                  tgt(m.peer.peerAddr) =
-                    tgt.getOrElse(m.peer.peerAddr, 0L) + 1L
-                case _ => ()
-              })
-            def mon(peer: Long, flags: Int, pfx: Long): Unit =
-              wire.write(BmpMsg.encodeRouteMonitoring(
+            def mon(peer: Long, flags: Int, pfx: Long) =
+              BmpMsg.encodeRouteMonitoring(
                 BmpMsg.PeerHeader(0, flags, 0L, peer, 65100 + peer,
                   peer, 0L, 0L),
                 BgpMsg.Update(nlri = Seq(BgpMsg.Route(pfx << 8, 24)),
-                  origin = Some(0), nextHop = Some(router))))
-            run.foreach { case (_, _, peer, pfx, adv) =>
-              mon(peer, 0x00, pfx)              // Adj-RIB-In
-              if (adv) mon(peer, 0x10, pfx)     // Adj-RIB-Out (O flag)
+                  origin = Some(0), nextHop = Some(router)))
+            val wire = run.flatMap { case (_, _, peer, pfx, adv) =>
+              mon(peer, 0x00, pfx) +:           // Adj-RIB-In
+                (if (adv) Seq(mon(peer, 0x10, pfx)) else Nil) // O flag
             }
-            wire.flush()
+            val nIn = scala.collection.mutable.Map[Long, Long]()
+            val nOut = scala.collection.mutable.Map[Long, Long]()
+            SessionWalk.chunks(wire).flatMap(BmpMsg.decodeStream).foreach {
+              case m: BmpMsg.RouteMonitoring =>
+                val tgt = if ((m.peer.flags & 0x10) != 0) nOut else nIn
+                tgt(m.peer.peerAddr) = tgt.getOrElse(m.peer.peerAddr, 0L) + 1L
+              case _ => ()
+            }
             nIn.keysIterator.map { peer =>
               val i = nIn(peer); val o = nOut.getOrElse(peer, 0L)
               (router, peer, i, o, i - o)
@@ -1560,28 +1470,7 @@ object SurfaceQueries {
           .as[(Long, Long)]
         val rib = SessionWalk.sessions(rows).mapPartitions { it =>
           SessionWalk.mapRuns(it)(_._1) { (k, run) =>
-            // one prefix per session — latest-wins post-processed attrs
-            // fold to a single record as chunks decode
-            var seq = -1L
-            var last: Option[(Long, Long, Long, Long)] = None
-            // collector post-processing on the decoded attributes
-            def skipSubAs(p: Seq[Long]): Long =
-              p.find(a => a < 64512L || a > 65534L).getOrElse(p.head)
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              BgpMsg.decodeStream(chunk).foreach { u =>
-                seq += 1
-                val pat = u.communities
-                  .map(c => (c >>> 16, c & 0xffffL))
-                  .find(_._1 == 65123L) // stdcomm_pattern "65123:*"
-                val peerAs = pat.map(_._1)
-                  .getOrElse(skipSubAs(u.asPath))
-                val originAs = pat.map(_._2)
-                  .getOrElse(u.asPath.last)
-                val trimmed = u.asPath.take(3) // aspath_radius = 3
-                u.nlri.foreach(_ => last = Some((seq,
-                  peerAs, originAs, trimmed.size.toLong)))
-              })
-            run.foreach { case (_, eid) =>
+            val wire = run.map { case (_, eid) =>
               val priv = eid % 3 == 0
               val short = !priv && eid % 7 == 0
               val path =
@@ -1594,13 +1483,28 @@ object SurfaceQueries {
                 if (eid % 5 == 0)
                   Seq((65123L << 16) | (7000L + eid % 100))
                 else Seq((65000L << 16) | 1L)
-              wire.write(BgpMsg.encode(BgpMsg.Update(
+              BgpMsg.encode(BgpMsg.Update(
                 nlri = Seq(BgpMsg.Route(k << 24, 8)), origin = Some(0),
-                asPath = path, nextHop = Some(k), communities = comms)))
+                asPath = path, nextHop = Some(k), communities = comms))
             }
-            wire.flush()
-            last.iterator.map { case (sq, peerAs, originAs, rl) =>
-              (k, sq, peerAs, originAs, rl) }.toSeq
+            // collector post-processing on the decoded attributes, one
+            // row per announced route; one prefix per session, so the
+            // max_by below keeps the latest post-processed attrs
+            def skipSubAs(p: Seq[Long]): Long =
+              p.find(a => a < 64512L || a > 65534L).getOrElse(p.head)
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .zipWithIndex.flatMap { case (u, i) =>
+                val pat = u.communities
+                  .map(c => (c >>> 16, c & 0xffffL))
+                  .find(_._1 == 65123L) // stdcomm_pattern "65123:*"
+                val peerAs = pat.map(_._1)
+                  .getOrElse(skipSubAs(u.asPath))
+                val originAs = pat.map(_._2)
+                  .getOrElse(u.asPath.last)
+                val trimmed = u.asPath.take(3) // aspath_radius = 3
+                u.nlri.map(_ =>
+                  (k, i.toLong, peerAs, originAs, trimmed.size.toLong))
+              }
           }
         }.toDF("k", "seq", "peer_as", "origin_as", "radius_len")
           .groupBy("k")
@@ -1655,39 +1559,31 @@ object SurfaceQueries {
           SessionWalk.mapRuns(it)(_._1) { (router, run) =>
             val origIp = 0x0A000000L + router
             val proxyIp = 0xC0A80001L
-            // the PROXY header leads the stream; the FIRST flushed chunk
-            // carries it, exactly like the first recv() on the socket
-            var attributed = proxyIp
-            var first = true
-            var n = 0L
-            val wire = new SessionWalk.ChunkedWire(chunk => {
-              val body = if (first) {
-                first = false
-                val parsed = ProxyHdr.decode(chunk).getOrElse(
-                  ProxyHdr.Parsed(None, 0))
-                parsed.src.foreach { case (ip, _) => attributed = ip }
-                chunk.drop(parsed.consumed)
-              } else chunk
-              n += BmpMsg.decodeStream(body).count {
-                case _: BmpMsg.RouteMonitoring => true
-                case _ => false
-              }
-            })
-            wire.write((router % 3) match {
+            val hdr = (router % 3) match {
               case 0 => ProxyHdr.encodeV1(origIp, proxyIp, 40000, 5000)
               case 1 => ProxyHdr.encodeV2(proxyCmd = true, origIp,
                 proxyIp, 40000, 5000)
               case _ => ProxyHdr.encodeV2(proxyCmd = false, 0L, 0L, 0, 0)
-            })
-            run.foreach { case (_, eid) =>
-              wire.write(BmpMsg.encodeRouteMonitoring(
-                BmpMsg.PeerHeader(0, 0, 0L, router, 65000 + router,
-                  router, 0L, 0L),
-                BgpMsg.Update(nlri = Seq(BgpMsg.Route(eid << 8, 24)),
-                  origin = Some(0), nextHop = Some(router))))
             }
-            wire.flush()
-            Iterator((attributed, router, n))
+            val chunks = SessionWalk.chunks(Iterator.single(hdr) ++
+              run.map { case (_, eid) =>
+                BmpMsg.encodeRouteMonitoring(
+                  BmpMsg.PeerHeader(0, 0, 0L, router, 65000 + router,
+                    router, 0L, 0L),
+                  BgpMsg.Update(nlri = Seq(BgpMsg.Route(eid << 8, 24)),
+                    origin = Some(0), nextHop = Some(router)))
+              })
+            // the PROXY header leads the stream; the FIRST chunk carries
+            // it, exactly like the first recv() on the socket
+            val first = chunks.next()
+            val parsed = ProxyHdr.decode(first).getOrElse(
+              ProxyHdr.Parsed(None, 0))
+            val n = (Iterator.single(first.drop(parsed.consumed)) ++ chunks)
+              .map(BmpMsg.decodeStream(_).count {
+                case _: BmpMsg.RouteMonitoring => true
+                case _ => false
+              }.toLong).sum
+            Iterator((parsed.src.fold(proxyIp)(_._1), router, n))
           }
         }
         decoded.toDF("src_ip", "router", "n_routes")
@@ -1795,15 +1691,13 @@ object SurfaceQueries {
               if (peer < 8) 0xC0A80000L + peer
               else if (peer < 32) 0xC0A80A00L + (peer - 8)
               else 0xAC100000L + peer // no map entry
-            var n = 0L
-            val wire = new SessionWalk.ChunkedWire(chunk =>
-              n += BgpMsg.decodeStream(chunk).size.toLong)
-            run.foreach { case (_, eid) =>
-              wire.write(BgpMsg.encode(BgpMsg.Update(
+            val wire = run.map { case (_, eid) =>
+              BgpMsg.encode(BgpMsg.Update(
                 nlri = Seq(BgpMsg.Route(eid << 8, 24)), origin = Some(0),
-                asPath = Seq(65000L + peer), nextHop = Some(peer))))
+                asPath = Seq(65000L + peer), nextHop = Some(peer)))
             }
-            wire.flush()
+            val n = SessionWalk.chunks(wire)
+              .map(BgpMsg.decodeStream(_).size.toLong).sum
             xmap.lookup(peerIp) match {
               case Long.MinValue => Iterator((-1L, -1L, 1L, n))
               case v if v == 1000L =>
@@ -1923,37 +1817,32 @@ object SurfaceQueries {
           .as[(Long, Long, Long, Long, Long, Boolean)]
         // the secondary-sort walk delivers each key's updates in seq
         // order, so the decoded RIB's last-write-wins entry falls out of
-        // the incremental walk directly — no per-update rows, no max_by
+        // the pulled decode directly — no per-update rows, no max_by
         // shuffle, O(chunk) task memory
         val rib = SessionWalk.sessions(rows).mapPartitions { it =>
-          SessionWalk.mapRuns(it)(_._1) {
-            (k, run: Iterator[(Long, Long, Long, Long, Long, Boolean)]) =>
-              var (lTpe, lAdm, lV, lBh) = (-1L, -1L, -1L, 0L)
-              val wire = new SessionWalk.ChunkedWire(chunk =>
-                BgpMsg.decodeStream(chunk).foreach { u =>
-                  val rt = u.extCommunities.find(_.sub == 2)
-                  if (u.nlri.nonEmpty) {
-                    lTpe = rt.map(_.tpe.toLong).getOrElse(-1L)
-                    lAdm = rt.map(_.admin).getOrElse(-1L)
-                    lV = rt.map(_.value).getOrElse(-1L)
-                    lBh = if (u.communities.contains(0xFFFF029AL)) 1L
-                      else 0L
-                  }
-                })
-              run.foreach { case (_, _, tpe, adm, v, bh) =>
-                val admin =
-                  if (tpe == 0) 65000L + adm else 167772160L + adm
-                wire.write(BgpMsg.encode(BgpMsg.Update(
-                  nlri = Seq(BgpMsg.Route(k << 24, 8)),
-                  origin = Some(0), nextHop = Some(k),
-                  communities =
-                    if (bh) Seq(0xFFFF029AL) else Seq(65000L << 16 | 1L),
-                  extCommunities = Seq(
-                    BgpMsg.ExtCommunity(tpe.toInt, 2, admin, v),
-                    BgpMsg.ExtCommunity(0, 3, 64999L, 7L)))))
+          SessionWalk.mapRuns(it)(_._1) { (k, run) =>
+            val wire = run.map { case (_, _, tpe, adm, v, bh) =>
+              val admin =
+                if (tpe == 0) 65000L + adm else 167772160L + adm
+              BgpMsg.encode(BgpMsg.Update(
+                nlri = Seq(BgpMsg.Route(k << 24, 8)),
+                origin = Some(0), nextHop = Some(k),
+                communities =
+                  if (bh) Seq(0xFFFF029AL) else Seq(65000L << 16 | 1L),
+                extCommunities = Seq(
+                  BgpMsg.ExtCommunity(tpe.toInt, 2, admin, v),
+                  BgpMsg.ExtCommunity(0, 3, 64999L, 7L))))
+            }
+            var (lTpe, lAdm, lV, lBh) = (-1L, -1L, -1L, 0L)
+            SessionWalk.chunks(wire).flatMap(BgpMsg.decodeStream(_))
+              .filter(_.nlri.nonEmpty).foreach { u =>
+                val rt = u.extCommunities.find(_.sub == 2)
+                lTpe = rt.map(_.tpe.toLong).getOrElse(-1L)
+                lAdm = rt.map(_.admin).getOrElse(-1L)
+                lV = rt.map(_.value).getOrElse(-1L)
+                lBh = if (u.communities.contains(0xFFFF029AL)) 1L else 0L
               }
-              wire.flush()
-              Iterator((k, lTpe, lAdm, lV, lBh))
+            Iterator((k, lTpe, lAdm, lV, lBh))
           }
         }.toDF("k", "rt_type", "rt_admin", "rt_value", "last_bh")
         val fl = flows(s, d)

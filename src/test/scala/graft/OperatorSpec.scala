@@ -176,4 +176,34 @@ class OperatorSpec extends AnyFunSuite {
     assert(walk(rows)((k, run) => Iterator.single((k, run.size))) ==
       Seq((4L, 1), (5L, 1), (6L, 1)))
   }
+
+  test("chunks: whole messages, at least ChunkBytes each, pulled lazily") {
+    import SessionWalk.{ChunkBytes, chunks}
+    // sizes straddle the threshold; one message alone exceeds it
+    val rnd = new scala.util.Random(7)
+    val msgs = (0 until 400).map { i =>
+      val n = if (i == 150) ChunkBytes + 999 else 1 + rnd.nextInt(2000)
+      Array.fill[Byte](n)(i.toByte)
+    }
+    var pulled = 0
+    val counted = msgs.iterator.map { m => pulled += 1; m }
+    val it = chunks(counted)
+    val first = it.next()
+    // the first chunk read exactly the messages it holds
+    assert(msgs.take(pulled).map(_.length).sum == first.length)
+    assert(first.length >= ChunkBytes &&
+      msgs.take(pulled - 1).map(_.length).sum < ChunkBytes)
+    val all = first +: it.toSeq
+    assert(all.flatten == msgs.flatten)
+    // every boundary is a message boundary
+    val ends = msgs.scanLeft(0)(_ + _.length).toSet
+    assert(all.scanLeft(0)(_ + _.length).forall(ends))
+    assert(all.init.forall(_.length >= ChunkBytes))
+    // a message is never split: one past ChunkBytes closes its chunk,
+    // and lands alone when the chunk before it is full
+    val big = chunks(Iterator(Array.fill[Byte](ChunkBytes)(1),
+      Array.fill[Byte](ChunkBytes + 1)(2), Array[Byte](3))).toSeq
+    assert(big.map(_.length) == Seq(ChunkBytes, ChunkBytes + 1, 1))
+    assert(chunks(Iterator.empty).isEmpty)
+  }
 }

@@ -398,18 +398,27 @@ class PlanSpec extends AnyFunSuite {
       s"q281 verification probe must broadcast the digests:\n$p281")
   }
 
-  test("NetFlow wire lanes: one decode drive, no join, no extra shuffle") {
-    // each exporter run streams encode → template cache → records into
-    // the lane's own aggregate, so the plan is the session shuffle (if
-    // any) plus Spark's partial/final aggregate: no join may grow in,
-    // and the shuffle count stays at the hand-folded version's
+  test("wire lanes: one decode drive, no join, no extra shuffle") {
+    // each exporter or BGP/BMP session run streams encode → decode into
+    // the lane's own aggregate (or one row per session), so the plan is
+    // the session shuffle plus Spark's partial/final aggregate: no
+    // shuffled join may grow in (q164 and q184 broadcast their RIB into
+    // the flows), and the shuffle count stays at the hand-folded version's
+    // (q180's at its one-decode count: two decodes and a join took 5)
     val maxShuffles = Map("q57_nfv9_templates" -> 2, "q73_nfv9_options" -> 3,
       "q91_ipfix_vlen" -> 2, "q120_nat_event" -> 3, "q121_fw_event" -> 3,
       "q125_nfprobe_v9" -> 3, "q139_abs_timestamps" -> 2,
       "q154_ipfix_biflow" -> 2, "q167_pen_tag_label" -> 2,
       "q247_nfprobe_ipfix" -> 3, "q283_asa_bi_flow" -> 1,
       "q137_collector_health" -> 1, "q189_templates_receiver" -> 1,
-      "q241_bad_datagram_accounting" -> 2)
+      "q241_bad_datagram_accounting" -> 2,
+      "q93_bgp_wire" -> 3, "q97_bmp_wire" -> 3, "q112_bgp_addpath" -> 4,
+      "q118_bgp_mp_ipv6" -> 3, "q153_bgp_vpnv4" -> 3,
+      "q161_bgp_aigp_psid" -> 3, "q162_bgp_ls" -> 3,
+      "q180_bgp_ls_v6mt" -> 3, "q184_aspath_post" -> 3,
+      "q185_bmp_proxy" -> 3, "q132_bgp_rr" -> 2, "q164_ecomm_blackhole" -> 2,
+      "q188_bgp_xconnect" -> 2, "q133_bmp_mirror" -> 1,
+      "q163_bmp_locrib" -> 1, "q174_bmp_stats" -> 1, "q181_bmp_ribout" -> 1)
     maxShuffles.foreach { case (name, max) =>
       val plan = SparkEntry.queries(name)(spark, d)
         .queryExecution.executedPlan.toString
@@ -420,6 +429,13 @@ class PlanSpec extends AnyFunSuite {
       val shuffles = "(?<!Broadcast)(?<!Reused)Exchange".r
         .findAllIn(plan).size
       assert(shuffles <= max, s"$name shuffles $shuffles times:\n$plan")
+    }
+    // the two RIBs that flows look up stay broadcast
+    Seq("q164_ecomm_blackhole", "q184_aspath_post").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, d)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"),
+        s"$name no longer broadcasts its RIB:\n$plan")
     }
   }
 
